@@ -224,6 +224,19 @@ object Bench {
       emb2.select(graft.functions.VectorExprs
         .vecCosine(spark, emb2("embedding"), emb2("embedding"))).count(): Unit
     }
+    // a 2-row `events.parquet` (a click, then `second`) staged as the
+    // literal FILE the streaming harnesses read, under
+    // target/graft_stream/<name>/src
+    def warmEvents(name: String, second: String): java.nio.file.Path = {
+      import spark.implicits._
+      val srcDir = java.nio.file.Paths.get("target", "graft_stream", name, "src")
+      graft.streaming.Streams.stageFile(
+        Seq((1L, 1000000000000000L, 1L, "click", 0.0, "{}"),
+            (2L, 1000000001000000L, 1L, second, 0.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        srcDir.resolve("events.parquet"), 0)
+      srcDir
+    }
     warm("events scan")(graft.Tables.events(spark, sfDir).count(): Unit)
     // tiny block-mode generate: compiles the generator's codegen path so
     // gen_block_1m (alphabetically the run-first query) doesn't absorb
@@ -235,31 +248,15 @@ object Bench {
     }
     // 2-row stream-stream join: the symmetric-hash-join machinery
     // (state-store formats, per-side key/index stores, codegen) loads on
-    // the FIRST stream-stream join in a session, and q96 is the only
-    // query using one — without this slice its timed number is class
-    // loading + join, ~2× the steady-state join alone (measured: 8.5 s
-    // cold vs 2.7 s warm at sf0.1)
+    // the FIRST stream-stream join in a session, and five queries use
+    // one (q96 inner, q117 left-outer, q178 right-outer, q126
+    // full-outer, q161 left-semi) — without this slice the first of
+    // them to run times class loading + join, ~2× the steady-state join
+    // alone (measured on q96: 8.5 s cold vs 2.7 s warm at sf0.1)
     warm("stream-stream join") {
-      import spark.implicits._
       // identical pipeline on a 2-row source so the codegen cache is hot
-      // for q96's exact query shape, not just the join classes; the file
-      // source needs a literal `events.parquet` FILE, so write one part
-      // file and rename it
-      val root = java.nio.file.Paths.get("target", "graft_stream", "warm_ss")
-      val srcDir = root.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val tmp = root.resolve("tmp").toString
-      Seq((1L, 1000000000000000L, 1L, "click", 0.0, "{}"),
-          (2L, 1000000001000000L, 1L, "purchase", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { l =>
-        l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst.get
-      }
-      java.nio.file.Files.move(part, srcDir.resolve("events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // for q96's exact query shape, not just the join classes
+      val srcDir = warmEvents("warm_ss", "purchase")
       graft.streaming.Streams
         .attributionCounts(spark, srcDir.toString).count(): Unit
       // the OUTER variant loads its own operator classes (outer state
@@ -296,22 +293,7 @@ object Bench {
     // + store machinery — without this slice q112's timed number is
     // JNI loading + query, not the processor
     warm("transformWithState slice") {
-      import spark.implicits._
-      val root = java.nio.file.Paths.get("target", "graft_stream", "warm_tws")
-      val srcDir = root.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val tmp = root.resolve("tmp").toString
-      Seq((1L, 1000000000000000L, 1L, "click", 0.0, "{}"),
-          (2L, 1000000001000000L, 1L, "view", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(tmp))) { l =>
-        l.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst.get
-      }
-      java.nio.file.Files.move(part, srcDir.resolve("events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val srcDir = warmEvents("warm_tws", "view")
       graft.streaming.Streams
         .sessionStatsTws(spark, srcDir.toString).count(): Unit
       // same staged 2-row table through the event-time TIMER path: q113

@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 /** Structured Streaming surface: the reference's "streamable" goal
   * (`eventstream.py:9`, iterator sink `:429-432`) re-expressed as
   * event-time streaming — replay a generated tick stream as a wall-clock
@@ -93,63 +97,106 @@ object Streams {
         col("n"),
       )
 
-  /** Run a streaming query to completion, sinking every microbatch to a
-    * throwaway parquet dir via `foreachBatch`, and return that dir. This
-    * is the 100×-safe verification harness shape: results land on
-    * (distributed) storage, never in a driver-resident memory sink, and
-    * nothing is registered in the session catalog — so one query's
-    * harness can't leak state into the next one's timing (the round-4
-    * bench showed up to 3.8× cross-query interference from accumulated
-    * memory-sink tables). Complete-mode queries overwrite (each batch
-    * carries the full result); update-mode queries append (the caller
-    * reduces, e.g. per-key `max` over monotone emissions — the keyed-
-    * sink upsert a production job performs instead is demonstrated by
-    * q107's `upsertMerge` harness).
+  /** What [[runStream]] runs: the streaming `query` in output `mode`;
+    * `result`, the read side, built once the query has stopped; the
+    * `sink` each microbatch goes to (default: one `coalesce(1)` file per
+    * batch under [[outDir]] — overwritten in Complete mode, where each
+    * batch carries the full result, appended otherwise, the caller
+    * reducing the deltas — a production job would upsert into a keyed
+    * sink instead, q107's [[upsertMerge]]); and the `steps` between runs (sentinel
+    * appends, pointer swaps, phase stages), after each of which the
+    * query runs to completion again.
     */
-  private def runToParquet(agg: DataFrame, mode: OutputMode): String = {
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream",
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      .toString
-    // Complete mode re-emits the full result each batch → overwrite;
-    // Update/Append emit deltas → accumulate (the caller reduces or
-    // reads the union).
-    val saveMode = if (mode == OutputMode.Complete) "overwrite" else "append"
-    withFewStatePartitions(agg.sparkSession) {
-      val q = agg.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+  private[graft] final case class StreamRun(
+      query: DataFrame,
+      mode: OutputMode,
+      result: () => DataFrame,
+      sink: Option[(Dataset[Row], Long) => Unit] = None,
+      steps: Seq[() => Unit] = Nil)
+
+  /** The default sink dir of the run rooted at `root`. */
+  private def outDir(root: Path): String = root.resolve("out").toString
+
+  /** THE streaming harness: stage a source, run the query to completion,
+    * read its sink. `plan` gets a fresh root `target/graft_stream/<tag>_
+    * <uuid>`, stages its sources under it (by convention `root/src`) and
+    * returns the [[StreamRun]]; the query checkpoints to `root/ck`.
+    * Results land on (distributed) storage, never in a driver-resident
+    * memory sink, and nothing is registered in the session catalog — so
+    * one query's harness can't leak state into the next one's timing
+    * (the round-4 bench showed up to 3.8× cross-query interference from
+    * accumulated memory-sink tables). Whatever happens, the query is
+    * stopped, the session confs are restored, and every child of the
+    * root the result does not read (staged sources, the checkpoint,
+    * dead sinks) is deleted — the root itself too when the result reads
+    * nothing under it. A result must therefore read its files directly
+    * or materialize them (`localCheckpoint`) before it is returned.
+    *
+    * `statePartitions` pins `spark.sql.shuffle.partitions` for the run
+    * (`None`: session default). Stateful streaming pins the state-store
+    * partition count from this conf at the query's FIRST batch, and
+    * every microbatch then commits one state file (plus logs) per
+    * partition per store — at the bench's bounded result cardinalities
+    * (hours × types, one row per user) the run cost is DOMINATED by that
+    * per-partition commit fan-out, not by compute: round 6 measured q94
+    * at 6.8 s clean under 32-way state, round 7 got 3.5 s under 4-way,
+    * and round 8 measured 4-way → 1-way saving a further ~0.9 s on q96
+    * and ~1.1 s on the 4-batch upsert q107. On a real cluster this knob
+    * is sized to state VOLUME, not left at the session default; the
+    * harness owns its checkpoint, so the pinned value never conflicts
+    * across runs. `rocksDb` runs staging and query under
+    * [[withRocksDbStore]] (transformWithState requires it).
+    */
+  private[graft] def runStream(
+      spark: SparkSession,
+      tag: String,
+      statePartitions: Option[Int] = Some(1),
+      rocksDb: Boolean = false,
+  )(plan: Path => StreamRun): DataFrame = {
+    val root = Paths.get("target", "graft_stream",
+      tag + "_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    def stateStore[T](body: => T): T =
+      if (rocksDb) withRocksDbStore(spark)(body) else body
+    def pinned[T](body: => T): T =
+      statePartitions.fold(body)(n => withShufflePartitions(spark, n)(body))
+    var result: Option[DataFrame] = None
+    try {
+      val run = stateStore {
+        val r = plan(root)
+        val saveMode = if (r.mode == OutputMode.Complete) "overwrite" else "append"
+        val sink = r.sink.getOrElse { (batch: Dataset[Row], _: Long) =>
           // each emitted batch is a small rollup/delta; one file per
           // batch beats shuffle.partitions near-empty files per batch
-          batch.coalesce(1).write.mode(saveMode).parquet(out)
+          batch.coalesce(1).write.mode(saveMode).parquet(outDir(root))
         }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        pinned {
+          val q = r.query.writeStream
+            .outputMode(r.mode)
+            .option("checkpointLocation", root.resolve("ck").toString)
+            .foreachBatch(sink)
+            .start()
+          // the first run to completion, then one more after each step
+          try ((() => ()) +: r.steps).foreach { step =>
+            step()
+            q.processAllAvailable()
+          } finally q.stop()
+        }
+        r
+      }
+      result = Some(run.result())
+      result.get
+    } finally {
+      val abs = root.toAbsolutePath.normalize
+      val read = result.toSeq.flatMap(_.inputFiles)
+        .map(f => Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath))
+        .filter(_.startsWith(abs))
+        .map(p => abs.relativize(p).getName(0).toString).toSet
+      if (read.isEmpty) deleteStaged(root)
+      else Using.resource(Files.list(root))(_.iterator().asScala.toList)
+        .filterNot(c => read(c.getFileName.toString))
+        .foreach(deleteStaged)
     }
-    out
   }
-
-  /** Run `body` (which must define AND finish a streaming query) with
-    * `spark.sql.shuffle.partitions = 1`. Stateful streaming pins the
-    * state-store partition count from this conf at the query's FIRST
-    * batch, and every microbatch then commits one state file (plus logs)
-    * per partition per store — at the bench's bounded result
-    * cardinalities (hours × types, one row per user) the run cost is
-    * DOMINATED by that per-partition commit fan-out, not by compute:
-    * round 6 measured q94 at 6.8 s clean under 32-way state, round 7 got
-    * 3.5 s under 4-way, and round 8 measured 4-way → 1-way saving a
-    * further ~0.9 s on q96 and ~1.1 s on the 4-batch upsert q107. On a
-    * real cluster this knob is sized to state VOLUME (fit each
-    * partition's state in an executor's memory), not left at the
-    * session default; these harnesses own their (throwaway) checkpoints,
-    * so the pinned value never conflicts across runs. The session
-    * default is restored before returning — batch plans created AFTER
-    * the harness (including the read-back of the sunk result) are
-    * unaffected.
-    */
-  private def withFewStatePartitions[T](spark: SparkSession)(body: => T): T =
-    withShufflePartitions(spark, 1)(body)
 
   /** Run `body` with `n` shuffle partitions, session default restored
     * after. Stateful streams pin n = 1 (state partitions = shuffle
@@ -199,16 +246,67 @@ object Streams {
     * `target/graft_stream` AFTER the stream that read them stopped;
     * the returned result DataFrame must never point inside `p`.
     */
-  private[graft] def deleteStaged(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
+  private[graft] def deleteStaged(p: Path): Unit =
+    if (Files.exists(p)) {
       // Files.walk holds directory handles until the stream is CLOSED —
       // a bench run calls this per streaming query, so rely on Using,
       // not on GC, to release them
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { w =>
+      Using.resource(Files.walk(p)) { w =>
         w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
+          .forEach(f => Files.deleteIfExists(f))
       }
     }
+
+  /** Pin `file` to arrival slot `i`: the file source replays oldest
+    * modification time first, so under `maxFilesPerTrigger=1` staged
+    * files trigger in slot order. Slots sit a minute apart from a fixed
+    * epoch — arrival order is a pure function of the staging, and a
+    * file appended while the stream runs (a sentinel) arrives last.
+    */
+  private def pinArrival(file: Path, i: Int): Unit =
+    Files.setLastModifiedTime(file,
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+
+  /** Stage `df` as ONE parquet file at `dst`, pinned to arrival slot
+    * `seq` — the single-file staging device shared by q304's time
+    * travel, q330's tombstone stream (arrival order must be a pure
+    * function of the data or "before version k" means nothing
+    * cross-engine) and Bench's 2-row warm-up tables (the readers name a
+    * literal `events.parquet` FILE). The part file is written next to
+    * `dst`'s dir, so a stream over that dir never lists it.
+    */
+  private[graft] def stageFile(df: DataFrame, dst: Path, seq: Int): Unit = {
+    val tmp = dst.getParent.resolveSibling(s"stage$seq")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = Using.resource(Files.list(tmp)) { fs =>
+      fs.iterator().asScala.find { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".parquet")
+      }.get
+    }
+    Files.createDirectories(dst.getParent)
+    Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    pinArrival(dst, seq)
+    deleteStaged(tmp)
+  }
+
+  /** Stage `df` (µs event time in column `us`) under `src` as TWO
+    * TIME-DISJOINT part files in one pass — range-partitioned on `us`,
+    * so part-00000 is the low range — pinned to arrive in time order:
+    * under `maxFilesPerTrigger=1` batch order is then time order, so no
+    * row is ever below the watermark and the oracle comparison stays
+    * exact. Returns max(us) (one cheap scan of the staged projection, a
+    * bounded 1-row collect) to place the watermark-clearing sentinel.
+    */
+  private[graft] def stageTimeSlices(df: DataFrame, src: Path): Long = {
+    df.repartitionByRange(2, col("us")).write.parquet(src.toString)
+    Using.resource(Files.list(src))(_.iterator().asScala.toList)
+      .filter(_.toString.endsWith(".parquet"))
+      .sortBy(_.getFileName.toString)
+      .zipWithIndex.foreach { case (p, i) => pinArrival(p, i) }
+    df.sparkSession.read.parquet(src.toString)
+      .agg(max(col("us"))).head.getLong(0)
+  }
 
   /** Streaming twin of the batch hourly rollup (`ops/Events` q22): read
     * the driver `events` table as a file-source STREAM, aggregate in
@@ -238,8 +336,9 @@ object Streams {
         col("event_type"),
       )
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    val out = runToParquet(agg, OutputMode.Complete)
-    spark.read.parquet(out).orderBy(col("hour_us"), col("event_type"))
+    runStream(spark, "hourly")(root => StreamRun(agg, OutputMode.Complete,
+      () => spark.read.parquet(outDir(root))
+        .orderBy(col("hour_us"), col("event_type"))))
   }
 
   /** Append-mode watermarked hourly rollup under the driver's oracle
@@ -259,7 +358,7 @@ object Streams {
     * emits all finalized real windows. The sentinels' own window never
     * closes (the watermark trails it by the lateness), so only real
     * windows land in the sink; the read-back filter is belt-and-braces.
-    * Two `processAllAvailable` rounds total — batch emission uses the
+    * Two runs to completion total — batch emission uses the
     * watermark computed from PRIOR batches, which is also why sentinel
     * #1 can ride with the real data but #2 cannot. The value sum is on
     * the 2-decimal money grid (same argument as q22/q73), so incremental
@@ -269,58 +368,42 @@ object Streams {
     val tsLong = eventsTsIsLong(spark, dir)
     val schema = eventsSchema(tsLong)
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = java.nio.file.Paths.get("target", "graft_stream", s"src_$uuid")
-    java.nio.file.Files.createDirectories(src)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(dir, "events.parquet"),
-      src.resolve("events.parquet"))
-    // nanos (converted to the staged layout at write), epoch + ~126 yr;
-    // both sentinels land in ONE far-future hour window
-    val far = 4000000000000000000L
-    def writeSentinel(ts: Long): Unit =
-      sentinelTs(Seq((-1L, ts, -1L, "__sentinel__", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
-        tsLong)
-        .coalesce(1).write.mode("append").parquet(src.toString)
-    writeSentinel(far) // rides with the real data in batch 0
-    val agg = spark.readStream
-      .schema(schema)
-      .parquet(src.toString)
-      .withColumn("wts", wtsExpr(tsLong))
-      .withWatermark("wts", "1 hour")
-      .groupBy(window(col("wts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(
-        unix_micros(col("window.start")).as("hour_us"),
-        col("event_type"),
-        col("n"),
-        col("sum_value"),
-      )
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream", uuid).toString
-    withFewStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(out)
-        }
-        .start()
-      try {
-        // batch 0: all real data + sentinel #1 through the aggregate —
-        // emits nothing (watermark starts at 0) but advances the
-        // watermark past every real window
-        q.processAllAvailable()
-        // batch 1: sentinel #2 (same far-future hour) — emits every
-        // finalized real window under the batch-0 watermark
-        writeSentinel(far + 1000000000L)
-        q.processAllAvailable()
-      } finally q.stop()
+    runStream(spark, "append") { root =>
+      val src = root.resolve("src")
+      Files.createDirectories(src)
+      Files.copy(Paths.get(dir, "events.parquet"), src.resolve("events.parquet"))
+      // nanos (converted to the staged layout at write), epoch + ~126 yr;
+      // both sentinels land in ONE far-future hour window
+      val far = 4000000000000000000L
+      def writeSentinel(ts: Long): Unit =
+        sentinelTs(Seq((-1L, ts, -1L, "__sentinel__", 0.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+          tsLong)
+          .coalesce(1).write.mode("append").parquet(src.toString)
+      writeSentinel(far) // rides with the real data in batch 0
+      val agg = spark.readStream
+        .schema(schema)
+        .parquet(src.toString)
+        .withColumn("wts", wtsExpr(tsLong))
+        .withWatermark("wts", "1 hour")
+        .groupBy(window(col("wts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+        .select(
+          unix_micros(col("window.start")).as("hour_us"),
+          col("event_type"),
+          col("n"),
+          col("sum_value"),
+        )
+      // batch 0: all real data + sentinel #1 through the aggregate — emits
+      // nothing (watermark starts at 0) but advances the watermark past
+      // every real window; batch 1: sentinel #2 (same far-future hour) —
+      // emits every finalized real window under the batch-0 watermark
+      StreamRun(agg, OutputMode.Append,
+        steps = Seq(() => writeSentinel(far + 1000000000L)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter(col("event_type") =!= "__sentinel__")
+          .orderBy(col("hour_us"), col("event_type")))
     }
-    deleteStaged(src) // stream stopped; the result reads `out` only
-    spark.read.parquet(out)
-      .filter(col("event_type") =!= "__sentinel__")
-      .orderBy(col("hour_us"), col("event_type"))
   }
 
   /** MULTIPLE STATEFUL OPERATORS chained in one streaming query under
@@ -346,56 +429,42 @@ object Streams {
     val tsLong = eventsTsIsLong(spark, dir)
     val schema = eventsSchema(tsLong)
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = java.nio.file.Paths.get("target", "graft_stream", s"dup_$uuid")
-    java.nio.file.Files.createDirectories(src)
-    // two byte-identical copies: every event arrives exactly twice
-    Seq("events_a.parquet", "events_b.parquet").foreach { name =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(dir, "events.parquet"), src.resolve(name))
+    runStream(spark, "dup") { root =>
+      val src = root.resolve("src")
+      Files.createDirectories(src)
+      // two byte-identical copies: every event arrives exactly twice
+      Seq("events_a.parquet", "events_b.parquet").foreach { name =>
+        Files.copy(Paths.get(dir, "events.parquet"), src.resolve(name))
+      }
+      val far = 4000000000000000000L
+      def writeSentinel(id: Long, ts: Long): Unit =
+        sentinelTs(Seq((id, ts, -1L, "__sentinel__", 0.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+          tsLong)
+          .coalesce(1).write.mode("append").parquet(src.toString)
+      writeSentinel(-1L, far)
+      val agg = spark.readStream
+        .schema(schema)
+        .parquet(src.toString)
+        .withColumn("wts", wtsExpr(tsLong))
+        .withWatermark("wts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(window(col("wts"), "1 hour"), col("event_type"))
+        .agg(
+          count(lit(1)).as("n"),
+          sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"))
+        .select(
+          unix_micros(col("window.start")).as("hour_us"),
+          col("event_type"),
+          col("n"),
+          col("value_cents"),
+        )
+      StreamRun(agg, OutputMode.Append,
+        steps = Seq(() => writeSentinel(-2L, far + 1000000000L)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter(col("event_type") =!= "__sentinel__")
+          .orderBy(col("hour_us"), col("event_type")))
     }
-    val far = 4000000000000000000L
-    def writeSentinel(id: Long, ts: Long): Unit =
-      sentinelTs(Seq((id, ts, -1L, "__sentinel__", 0.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
-        tsLong)
-        .coalesce(1).write.mode("append").parquet(src.toString)
-    writeSentinel(-1L, far)
-    val agg = spark.readStream
-      .schema(schema)
-      .parquet(src.toString)
-      .withColumn("wts", wtsExpr(tsLong))
-      .withWatermark("wts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(window(col("wts"), "1 hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"))
-      .select(
-        unix_micros(col("window.start")).as("hour_us"),
-        col("event_type"),
-        col("n"),
-        col("value_cents"),
-      )
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream", s"dupout_$uuid").toString
-    withFewStatePartitions(spark) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(out)
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        writeSentinel(-2L, far + 1000000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    deleteStaged(src)
-    spark.read.parquet(out)
-      .filter(col("event_type") =!= "__sentinel__")
-      .orderBy(col("hour_us"), col("event_type"))
   }
 
   /** Stream-static enrichment join under the driver's oracle gate: the
@@ -429,8 +498,8 @@ object Streams {
         count(lit(1)).as("n_events"),
         sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"),
       )
-    val out = runToParquet(agg, OutputMode.Complete)
-    spark.read.parquet(out).orderBy(col("n_name"))
+    runStream(spark, "enrich")(root => StreamRun(agg, OutputMode.Complete,
+      () => spark.read.parquet(outDir(root)).orderBy(col("n_name"))))
   }
 
   /** Stream-static LEFT ANTI join under the driver's oracle gate (q165)
@@ -460,8 +529,8 @@ object Streams {
         count(lit(1)).as("n_events"),
         sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"),
       )
-    val out = runToParquet(clean, OutputMode.Complete)
-    spark.read.parquet(out).orderBy(col("event_type"))
+    runStream(spark, "anti")(root => StreamRun(clean, OutputMode.Complete,
+      () => spark.read.parquet(outDir(root)).orderBy(col("event_type"))))
   }
 
   /** Built-in session windows (dynamic-gap session_window aggregation):
@@ -511,13 +580,15 @@ object Streams {
     * watermark passes `lts + horizon` — the property that keeps a
     * stream-stream join's buffer finite on an unbounded feed. Column
     * names are caller-chosen; the contract is (`luser`, `lts`) ×
-    * (`ruser`, `rts`).
+    * (`ruser`, `rts`). `joinType` is any stream-stream join type the
+    * engine supports (inner, the outer variants, left semi).
     */
   def intervalJoin(
       left: DataFrame,
       right: DataFrame,
       horizon: String = "1 hour",
       lateness: String = "10 minutes",
+      joinType: String = "inner",
   ): DataFrame =
     left
       .withWatermark("lts", lateness)
@@ -526,6 +597,7 @@ object Streams {
         expr(
           s"""luser = ruser AND
              |rts >= lts AND rts <= lts + interval $horizon""".stripMargin),
+        joinType,
       )
 
   /** Streaming exact dedup under the driver's oracle gate (q95): run
@@ -555,11 +627,46 @@ object Streams {
       .parquet(dir)
       .withColumn("wts", timestamp_seconds(lit(1000000000L)))
     val survivors = dedupStream(docs).select(col("fp"))
-    val out = runToParquet(survivors, OutputMode.Append)
-    spark.read.parquet(out)
-      .groupBy(col("fp"))
-      .agg(count(lit(1)).as("n_rows"))
-      .orderBy(col("fp"))
+    runStream(spark, "dedup")(root => StreamRun(survivors, OutputMode.Append,
+      () => spark.read.parquet(outDir(root))
+        .groupBy(col("fp"))
+        .agg(count(lit(1)).as("n_rows"))
+        .orderBy(col("fp"))))
+  }
+
+  /** Shared staging for the stream-stream join matrix (q96 inner, q117
+    * left-outer, q178 right-outer, q126 full-outer, q161 left-semi).
+    * Stage the click/purchase feed ONCE into `src` as a single file
+    * (q94's pattern): only the two event types the joins consume, only
+    * the three columns they key on (the wide props JSON never enters the
+    * stream), ts NORMALIZED to LONG epoch-µs so the streamed schema is
+    * layout-independent. Both join branches derive from ONE readStream
+    * — one listing, one scan, two filters per microbatch (two
+    * independent sources over the shared sf dir would list and scan it
+    * twice). Returns the (clicks, purchases) branches.
+    */
+  private def attributionFeed(
+      spark: SparkSession, dir: String, src: Path): (DataFrame, DataFrame) = {
+    val tsLong = eventsTsIsLong(spark, dir)
+    spark.read.schema(eventsSchema(tsLong))
+      .parquet(s"$dir/events.parquet")
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(col("event_id"), usExpr(tsLong).as("ts_us"), col("user_id"),
+        col("event_type"))
+      .coalesce(1)
+      .write.parquet(src.toString)
+    val feed = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id LONG, ts_us LONG, user_id LONG, event_type STRING"))
+      .parquet(src.toString)
+      .withColumn("wts", timestamp_micros(col("ts_us")))
+    val clicks = feed.filter(col("event_type") === "click")
+      .select(col("user_id").as("luser"), col("wts").as("lts"),
+        col("event_id").as("levent"))
+    val buys = feed.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("ruser"), col("wts").as("rts"),
+        col("event_id").as("revent"))
+    (clicks, buys)
   }
 
   /** Stream-stream interval join under the driver's oracle gate (q96):
@@ -572,88 +679,61 @@ object Streams {
     * dropped matches. Timestamps compare at exact integer microseconds
     * on both sides.
     */
-  /** Shared staging + branch scaffolding for the stream-stream join
-    * matrix (q96 inner, q117 left-outer, q126 full-outer, q161
-    * left-semi). Stage the click/purchase feed ONCE into a private
-    * single-file dir (q94's pattern): only the two event types the
-    * joins consume, only the three columns they key on (the wide props
-    * JSON never enters the stream), ts NORMALIZED to LONG epoch-µs so
-    * the streamed schema is layout-independent. Both join branches
-    * derive from ONE readStream — one listing, one scan, two filters
-    * per microbatch (two independent sources over the shared sf dir
-    * would list and scan it twice). `hiUs` is the bounded 1-row collect
-    * the outer variants use to size their watermark-clearing sentinel;
-    * thunked so harnesses that need no sentinel never pay the scan, and
-    * it must run BEFORE sentinels are appended to the staged dir.
-    */
-  private final case class AttributionFeed(
-      src0: java.nio.file.Path,
-      clicks: DataFrame,
-      buys: DataFrame,
-      hiUs: () => Long) {
-    /** One far-future click+purchase pair on a reserved key: advances
-      * both sides' watermarks past every real row's eviction bound so
-      * still-buffered orphans release. The pair matches only itself and
-      * readbacks filter the reserved negative ids.
-      */
-    def writeSentinelPair(spark: SparkSession, sentUs: Long): Unit = {
-      import spark.implicits._
-      Seq((-1L, sentUs, -1L, "click"), (-2L, sentUs, -1L, "purchase"))
-        .toDF("event_id", "ts_us", "user_id", "event_type")
-        .coalesce(1).write.mode("append").parquet(src0.toString)
+  def attributionCounts(spark: SparkSession, dir: String): DataFrame =
+    runStream(spark, "attr") { root =>
+      val (clicks, buys) = attributionFeed(spark, dir, root.resolve("src"))
+      val pairs = intervalJoin(clicks, buys, horizon = "1 hour")
+        .select(col("luser"), col("levent"), col("revent"))
+      // ~3 s clean is this harness's floor and the plan is the honest
+      // shape: ONE staged pre-filtered single-file source, two branch
+      // scans (a streaming self-join physically scans per side), one data
+      // microbatch, 1-partition state. Measured dead ends: RocksDB +
+      // changelog for the join state LOSES ~1.5 s here (four store
+      // instances' JNI overhead vs tiny heap deltas — the opposite
+      // trade-off from q112/q113's single keyed store), and the branches
+      // already share one projection, so there is no second scan to
+      // remove without replacing the built-in stream-stream join this
+      // query exists to exercise.
+      StreamRun(pairs, OutputMode.Append, () =>
+        spark.read.parquet(outDir(root))
+          .groupBy(col("luser").as("user_id"))
+          .agg(count(lit(1)).as("n_pairs"),
+            countDistinct(col("revent")).as("n_purchases"))
+          .orderBy(col("user_id")))
     }
-  }
 
-  private def attributionFeed(
-      spark: SparkSession, dir: String, tag: String): AttributionFeed = {
-    val tsLong = eventsTsIsLong(spark, dir)
-    val src0 = java.nio.file.Paths.get("target", "graft_stream",
-      tag + "_" + java.util.UUID.randomUUID().toString.replace("-", ""))
-    spark.read.schema(eventsSchema(tsLong))
-      .parquet(s"$dir/events.parquet")
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), usExpr(tsLong).as("ts_us"), col("user_id"),
-        col("event_type"))
-      .coalesce(1)
-      .write.parquet(src0.toString)
-    val src = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id LONG, ts_us LONG, user_id LONG, event_type STRING"))
-      .parquet(src0.toString)
-      .withColumn("wts", timestamp_micros(col("ts_us")))
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("user_id").as("luser"), col("wts").as("lts"),
-        col("event_id").as("levent"))
-    val buys = src.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("ruser"), col("wts").as("rts"),
-        col("event_id").as("revent"))
-    val hiUs = () => spark.read.parquet(src0.toString)
-      .agg(max(col("ts_us"))).head.getLong(0)
-    AttributionFeed(src0, clicks, buys, hiUs)
-  }
-
-  def attributionCounts(spark: SparkSession, dir: String): DataFrame = {
-    val feed = attributionFeed(spark, dir, "attr")
-    val pairs = intervalJoin(feed.clicks, feed.buys, horizon = "1 hour")
-      .select(col("luser"), col("levent"), col("revent"))
-    // ~3 s clean is this harness's floor and the plan is the honest
-    // shape: ONE staged pre-filtered single-file source, two branch
-    // scans (a streaming self-join physically scans per side), one data
-    // microbatch, 1-partition state. Measured dead ends: RocksDB +
-    // changelog for the join state LOSES ~1.5 s here (four store
-    // instances' JNI overhead vs tiny heap deltas — the opposite
-    // trade-off from q112/q113's single keyed store), and the branches
-    // already share one projection, so there is no second scan to
-    // remove without replacing the built-in stream-stream join this
-    // query exists to exercise.
-    val out = runToParquet(pairs, OutputMode.Append)
-    deleteStaged(feed.src0) // stream stopped; the result reads `out` only
-    spark.read.parquet(out)
-      .groupBy(col("luser").as("user_id"))
-      .agg(count(lit(1)).as("n_pairs"),
-        countDistinct(col("revent")).as("n_purchases"))
-      .orderBy(col("user_id"))
-  }
+  /** The outer variants' harness (q117, q178, q126): one data batch —
+    * pairs emit, orphans buffer — then one far-future click+purchase
+    * sentinel pair on a reserved key advances BOTH sides' watermarks
+    * past `max(ts) + horizon`, so the eviction batch releases every
+    * still-buffered orphan. The pair matches only itself; `read` gets
+    * the sunk `cols` and filters the reserved negative ids. 1 state
+    * partition like every bounded-result harness here: measured 4-way
+    * at sf0.1, the four join stores' extra per-partition commits cost
+    * ~1.5 s more than the added task parallelism recovers.
+    */
+  private def outerAttribution(
+      spark: SparkSession, dir: String, tag: String, joinType: String,
+      cols: Seq[String])(read: DataFrame => DataFrame): DataFrame =
+    runStream(spark, tag) { root =>
+      import spark.implicits._
+      val src = root.resolve("src")
+      val (clicks, buys) = attributionFeed(spark, dir, src)
+      // bounded 1-row collect, before the sentinel lands in `src`: the
+      // sentinel must clear every click's outer-eviction bound,
+      // max(ts) + horizon, plus the watermark delay (+ 2 s)
+      val sentUs = spark.read.parquet(src.toString)
+        .agg(max(col("ts_us"))).head.getLong(0) +
+        (3600L + 600L + 2L) * 1000000L
+      StreamRun(
+        intervalJoin(clicks, buys, joinType = joinType).select(cols.map(col): _*),
+        OutputMode.Append,
+        steps = Seq(() =>
+          Seq((-1L, sentUs, -1L, "click"), (-2L, sentUs, -1L, "purchase"))
+            .toDF("event_id", "ts_us", "user_id", "event_type")
+            .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () => read(spark.read.parquet(outDir(root))))
+    }
 
   /** Keyed upsert of an update-mode delta into a snapshot: delete-and-
     * replace by key (anti-join the delta's keys out of the current
@@ -801,44 +881,41 @@ object Streams {
   ): DataFrame = {
     val tsLong = eventsTsIsLong(spark, dir)
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream", s"${tag}_$uuid")
-    val srcDir = root.resolve("src").toString
-    // Stage the input as 4 part files → 4 genuine cross-batch
-    // microbatches, projecting away the wide props JSON the aggregate
-    // never touches (the staging shuffle would otherwise move and
-    // rewrite it 1:1 — column pruning belongs at the WRITE when the
-    // writer owns the layout). Staging normalizes ts to LONG epoch-µs
-    // so the streamed schema is layout-independent.
-    val upsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, " +
-        "value DOUBLE")
-    spark.read.schema(eventsSchema(tsLong))
-      .parquet(s"$dir/events.parquet")
-      .select($"event_id", usExpr(tsLong).as("ts_us"), $"user_id",
-        $"event_type", $"value")
-      .repartition(4)
-      .write.parquet(srcDir)
-    val aggDf = agg(spark.readStream
-      .schema(upsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .withColumn("wts", timestamp_micros(col("ts_us"))))
-    // Sink recovery reads the sink itself, never driver memory: the
-    // v<batchId> commit dirs ARE the log ([[StoreLog]] — r15 factored
-    // the four hand-rolled chains into it). A batch replayed after
-    // checkpoint recovery re-derives the same predecessor
-    // (`latestBefore` — its own prior attempt is superseded output,
-    // not input), rewrites its own commit via temp-dir + atomic
-    // rename, and lands byte-identical content because upsertMerge is
-    // idempotent. Retention is 2 (snapshot + predecessor) so a
-    // single-batch replay always finds its true predecessor; older
-    // snapshots are vacuumed.
-    val log = new StoreLog(root.resolve("sink"), "v", retention = 2)
-    withFewStatePartitions(spark) {
-      val q = aggDf.writeStream
-        .outputMode(OutputMode.Update)
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+    runStream(spark, tag) { root =>
+      val srcDir = root.resolve("src").toString
+      // Stage the input as 4 part files → 4 genuine cross-batch
+      // microbatches, projecting away the wide props JSON the aggregate
+      // never touches (the staging shuffle would otherwise move and
+      // rewrite it 1:1 — column pruning belongs at the WRITE when the
+      // writer owns the layout). Staging normalizes ts to LONG epoch-µs
+      // so the streamed schema is layout-independent.
+      val upsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, " +
+          "value DOUBLE")
+      spark.read.schema(eventsSchema(tsLong))
+        .parquet(s"$dir/events.parquet")
+        .select($"event_id", usExpr(tsLong).as("ts_us"), $"user_id",
+          $"event_type", $"value")
+        .repartition(4)
+        .write.parquet(srcDir)
+      val aggDf = agg(spark.readStream
+        .schema(upsSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(srcDir)
+        .withColumn("wts", timestamp_micros(col("ts_us"))))
+      // Sink recovery reads the sink itself, never driver memory: the
+      // v<batchId> commit dirs ARE the log ([[StoreLog]] — r15 factored
+      // the four hand-rolled chains into it). A batch replayed after
+      // checkpoint recovery re-derives the same predecessor
+      // (`latestBefore` — its own prior attempt is superseded output,
+      // not input), rewrites its own commit via temp-dir + atomic
+      // rename, and lands byte-identical content because upsertMerge is
+      // idempotent. Retention is 2 (snapshot + predecessor) so a
+      // single-batch replay always finds its true predecessor; older
+      // snapshots are vacuumed.
+      val log = new StoreLog(root.resolve("sink"), "v", retention = 2)
+      StreamRun(aggDf, OutputMode.Update,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
           val sp = batch.sparkSession
           val merged = merge(
             log.latestBefore(id).map(p => sp.read.parquet(log.path(p))),
@@ -846,15 +923,13 @@ object Streams {
           // the merge plan lazily READS v<prev>, so the write target is
           // always a fresh temp dir, moved into place only once durable
           log.commitTable(id, merged)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        },
+        result = { () =>
+          val out = log.readLatest(spark)
+          require(out.nonEmpty, s"$tag: no sink snapshot was written")
+          out.get.orderBy(col("user_id"))
+        })
     }
-    deleteStaged(root.resolve("src")) // stream stopped; staged copy is dead
-    val out = log.readLatest(spark)
-    require(out.nonEmpty, s"$tag: no sink snapshot was written")
-    out.get.orderBy(col("user_id"))
   }
 
   /** Install one sink's slice of a microbatch as an immutable
@@ -896,31 +971,29 @@ object Streams {
   def streamFanout(spark: SparkSession, dir: String): DataFrame = {
     val tsLong = eventsTsIsLong(spark, dir)
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"fan_$uuid")
-    val srcDir = root.resolve("src").toString
-    val slimSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, " +
-        "value DOUBLE")
-    spark.read.schema(eventsSchema(tsLong))
-      .parquet(s"$dir/events.parquet")
-      .select($"event_id", usExpr(tsLong).as("ts_us"), $"user_id",
-        $"event_type", $"value")
-      .repartition(4)
-      .write.parquet(srcDir)
-    val stream = spark.readStream
-      .schema(slimSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .withColumn("cents", expr("CAST(ROUND(value * 100) AS LONG)"))
-      .withColumn("blocked", $"user_id" % 13 === 0)
-    val clean = root.resolve("clean")
-    val quar = root.resolve("quar")
-    withFewStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+    runStream(spark, "fan") { root =>
+      val srcDir = root.resolve("src").toString
+      val slimSchema = org.apache.spark.sql.types.StructType.fromDDL(
+        "event_id LONG, ts_us LONG, user_id LONG, event_type STRING, " +
+          "value DOUBLE")
+      spark.read.schema(eventsSchema(tsLong))
+        .parquet(s"$dir/events.parquet")
+        .select($"event_id", usExpr(tsLong).as("ts_us"), $"user_id",
+          $"event_type", $"value")
+        .repartition(4)
+        .write.parquet(srcDir)
+      val stream = spark.readStream
+        .schema(slimSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(srcDir)
+        .withColumn("cents", expr("CAST(ROUND(value * 100) AS LONG)"))
+        .withColumn("blocked", $"user_id" % 13 === 0)
+      val clean = root.resolve("clean")
+      val quar = root.resolve("quar")
+      def readSink(p: Path): DataFrame =
+        spark.read.option("recursiveFileLookup", "true").parquet(p.toString)
+      StreamRun(stream, OutputMode.Append,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
           // both slices derive from one cached pass over the batch —
           // a file-source batch is re-readable, but don't scan it twice
           val b = batch.persist()
@@ -930,27 +1003,23 @@ object Streams {
             fanoutInstall(b.filter(col("blocked")).drop("blocked"),
               quar, id)
           } finally { b.unpersist(); () }
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        },
+        result = { () =>
+          val cleanAgg = readSink(clean)
+            .groupBy($"event_type")
+            .agg(count(lit(1)).as("n_clean"), sum($"cents").as("clean_cents"))
+          val quarAgg = readSink(quar)
+            .groupBy($"event_type")
+            .agg(count(lit(1)).as("n_quar"))
+          cleanAgg
+            .join(quarAgg, Seq("event_type"), "full_outer")
+            .select($"event_type",
+              coalesce($"n_clean", lit(0L)).as("n_clean"),
+              coalesce($"clean_cents", lit(0L)).as("clean_cents"),
+              coalesce($"n_quar", lit(0L)).as("n_quar"))
+            .orderBy($"event_type")
+        })
     }
-    deleteStaged(root.resolve("src"))
-    def readSink(p: java.nio.file.Path): DataFrame =
-      spark.read.option("recursiveFileLookup", "true").parquet(p.toString)
-    val cleanAgg = readSink(clean)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_clean"), sum($"cents").as("clean_cents"))
-    val quarAgg = readSink(quar)
-      .groupBy($"event_type")
-      .agg(count(lit(1)).as("n_quar"))
-    cleanAgg
-      .join(quarAgg, Seq("event_type"), "full_outer")
-      .select($"event_type",
-        coalesce($"n_clean", lit(0L)).as("n_clean"),
-        coalesce($"clean_cents", lit(0L)).as("clean_cents"),
-        coalesce($"n_quar", lit(0L)).as("n_quar"))
-      .orderBy($"event_type")
   }
 
   /** LEFT OUTER stream-stream interval join under the driver's oracle
@@ -965,60 +1034,21 @@ object Streams {
     * orphan set must be exact: a dropped orphan, a duplicate null row,
     * or an orphan emitted despite a live match all break the hash.
     *
-    * Harness: q96's staged single-file source (clicks+purchases only,
-    * three join columns), one data batch; then one far-future
-    * click+purchase sentinel pair on a reserved key advances BOTH
-    * sides' watermarks past `max(ts) + horizon`, flushing every
-    * still-buffered orphan. Sentinel rows join only each other and are
-    * filtered at readback.
+    * Harness: [[outerAttribution]] — q96's staged single-file source,
+    * one data batch, then a sentinel pair flushes every buffered orphan.
     */
-  def attributionOuter(spark: SparkSession, dir: String): DataFrame = {
-    val feed = attributionFeed(spark, dir, "outer")
-    // bounded 1-row collect: the sentinel must clear every click's
-    // outer-eviction bound, max(ts) + horizon, plus the watermark delay
-    val hiUs = feed.hiUs()
-    val joined = feed.clicks
-      .withWatermark("lts", "10 minutes")
-      .join(
-        feed.buys.withWatermark("rts", "10 minutes"),
-        expr(
-          """luser = ruser AND
-            |rts >= lts AND rts <= lts + interval 1 hour""".stripMargin),
-        "leftOuter")
-      .select(col("luser"), col("levent"), col("revent"))
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream",
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      .toString
-    // 1 state partition like every bounded-result harness here:
-    // measured 4-way at sf0.1 and the four join stores' extra
-    // per-partition commits cost ~1.5 s more than the added task
-    // parallelism recovers
-    withFewStatePartitions(spark) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(out)
-        }
-        .start()
-      try {
-        q.processAllAvailable() // data batch: pairs emit, orphans buffer
-        // sentinel pair: watermark → max + 1h + 10min + 2s on both sides
-        feed.writeSentinelPair(spark, hiUs + (3600L + 600L + 2L) * 1000000L)
-        q.processAllAvailable() // eviction batch: orphans release
-      } finally q.stop()
+  def attributionOuter(spark: SparkSession, dir: String): DataFrame =
+    outerAttribution(spark, dir, "outer", "leftOuter",
+      Seq("luser", "levent", "revent")) {
+      _.filter(col("luser") >= 0L)
+        .groupBy(col("luser").as("user_id"))
+        .agg(
+          count(col("revent")).as("n_pairs"),
+          sum(when(col("revent").isNull, 1L).otherwise(0L)).as("n_orphans"),
+          countDistinct(col("revent")).as("n_purchases"),
+        )
+        .orderBy(col("user_id"))
     }
-    deleteStaged(feed.src0) // stream stopped; the result reads `out` only
-    spark.read.parquet(out)
-      .filter(col("luser") >= 0L)
-      .groupBy(col("luser").as("user_id"))
-      .agg(
-        count(col("revent")).as("n_pairs"),
-        sum(when(col("revent").isNull, 1L).otherwise(0L)).as("n_orphans"),
-        countDistinct(col("revent")).as("n_purchases"),
-      )
-      .orderBy(col("user_id"))
-  }
 
   /** RIGHT OUTER stream-stream interval join under the driver's oracle
     * gate (q178) — the symmetric twin of q117 that completes the join
@@ -1035,50 +1065,20 @@ object Streams {
     * Round11Spec pins that, q126's discipline), so a dropped or
     * duplicated null row breaks the per-user hash.
     *
-    * Harness: identical to q117 — staged single-file source, one data
-    * batch, then the far-future sentinel pair advances both watermarks
-    * past every real row's eviction bound to flush buffered orphans.
+    * Harness: [[outerAttribution]], identical to q117.
     */
-  def attributionRightOuter(spark: SparkSession, dir: String): DataFrame = {
-    val feed = attributionFeed(spark, dir, "router")
-    val hiUs = feed.hiUs()
-    val joined = feed.clicks
-      .withWatermark("lts", "10 minutes")
-      .join(
-        feed.buys.withWatermark("rts", "10 minutes"),
-        expr(
-          """luser = ruser AND
-            |rts >= lts AND rts <= lts + interval 1 hour""".stripMargin),
-        "rightOuter")
-      .select(col("ruser"), col("levent"), col("revent"))
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream",
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      .toString
-    withFewStatePartitions(spark) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(out)
-        }
-        .start()
-      try {
-        q.processAllAvailable() // data batch: pairs emit, orphans buffer
-        feed.writeSentinelPair(spark, hiUs + (3600L + 600L + 2L) * 1000000L)
-        q.processAllAvailable() // eviction batch: right orphans release
-      } finally q.stop()
+  def attributionRightOuter(spark: SparkSession, dir: String): DataFrame =
+    outerAttribution(spark, dir, "router", "rightOuter",
+      Seq("ruser", "levent", "revent")) {
+      _.filter(col("ruser") >= 0L)
+        .groupBy(col("ruser").as("user_id"))
+        .agg(
+          count(col("levent")).as("n_pairs"),
+          sum(when(col("levent").isNull, 1L).otherwise(0L)).as("n_orphans"),
+          countDistinct(col("levent")).as("n_clicks"),
+        )
+        .orderBy(col("user_id"))
     }
-    deleteStaged(feed.src0)
-    spark.read.parquet(out)
-      .filter(col("ruser") >= 0L)
-      .groupBy(col("ruser").as("user_id"))
-      .agg(
-        count(col("levent")).as("n_pairs"),
-        sum(when(col("levent").isNull, 1L).otherwise(0L)).as("n_orphans"),
-        countDistinct(col("levent")).as("n_clicks"),
-      )
-      .orderBy(col("user_id"))
-  }
 
   /** FULL OUTER stream-stream interval join under the driver's oracle
     * gate (q126) — completes the outer matrix (q96 inner, q117 left):
@@ -1092,55 +1092,25 @@ object Streams {
     * orphan on either side, a duplicate null-row, or a pair double-
     * counted across the eviction batches all break the hash.
     *
-    * Harness identical to q117's: staged single-file source, one data
-    * batch, then one sentinel click+purchase pair on a reserved key
-    * advances both watermarks past `max(ts) + horizon`, flushing every
-    * buffered orphan on both sides. The sentinels match each other, so
-    * they surface as one filtered pair, never as orphans.
+    * Harness: [[outerAttribution]], identical to q117's; the sentinels
+    * match each other, so they surface as one filtered pair, never as
+    * orphans.
     */
-  def attributionFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val feed = attributionFeed(spark, dir, "fouter")
-    val hiUs = feed.hiUs()
-    val joined = feed.clicks
-      .withWatermark("lts", "10 minutes")
-      .join(
-        feed.buys.withWatermark("rts", "10 minutes"),
-        expr(
-          """luser = ruser AND
-            |rts >= lts AND rts <= lts + interval 1 hour""".stripMargin),
-        "fullOuter")
-      .select(col("luser"), col("ruser"), col("levent"), col("revent"))
-    val out = java.nio.file.Paths
-      .get("target", "graft_stream",
-        java.util.UUID.randomUUID().toString.replace("-", ""))
-      .toString
-    withFewStatePartitions(spark) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(out)
-        }
-        .start()
-      try {
-        q.processAllAvailable() // data batch: pairs emit, orphans buffer
-        feed.writeSentinelPair(spark, hiUs + (3600L + 600L + 2L) * 1000000L)
-        q.processAllAvailable() // eviction batch: both sides' orphans
-      } finally q.stop()
+  def attributionFullOuter(spark: SparkSession, dir: String): DataFrame =
+    outerAttribution(spark, dir, "fouter", "fullOuter",
+      Seq("luser", "ruser", "levent", "revent")) {
+      _.filter(coalesce(col("luser"), col("ruser")) >= 0L)
+        .groupBy(coalesce(col("luser"), col("ruser")).as("user_id"))
+        .agg(
+          sum(when(col("levent").isNotNull && col("revent").isNotNull, 1L)
+            .otherwise(0L)).as("n_pairs"),
+          sum(when(col("revent").isNull, 1L).otherwise(0L))
+            .as("n_left_orphans"),
+          sum(when(col("levent").isNull, 1L).otherwise(0L))
+            .as("n_right_orphans"),
+        )
+        .orderBy(col("user_id"))
     }
-    deleteStaged(feed.src0)
-    spark.read.parquet(out)
-      .filter(coalesce(col("luser"), col("ruser")) >= 0L)
-      .groupBy(coalesce(col("luser"), col("ruser")).as("user_id"))
-      .agg(
-        sum(when(col("levent").isNotNull && col("revent").isNotNull, 1L)
-          .otherwise(0L)).as("n_pairs"),
-        sum(when(col("revent").isNull, 1L).otherwise(0L))
-          .as("n_left_orphans"),
-        sum(when(col("levent").isNull, 1L).otherwise(0L))
-          .as("n_right_orphans"),
-      )
-      .orderBy(col("user_id"))
-  }
 
   /** LEFT SEMI stream-stream interval join under the driver's oracle
     * gate (q161) — completes the join matrix (q96 inner, q117 left
@@ -1155,24 +1125,17 @@ object Streams {
     * so a duplicate (inner-join-like) emission or a dropped match both
     * break the per-user click counts.
     */
-  def attributionSemi(spark: SparkSession, dir: String): DataFrame = {
-    val feed = attributionFeed(spark, dir, "semi")
-    val matched = feed.clicks
-      .withWatermark("lts", "10 minutes")
-      .join(
-        feed.buys.withWatermark("rts", "10 minutes"),
-        expr(
-          """luser = ruser AND
-            |rts >= lts AND rts <= lts + interval 1 hour""".stripMargin),
-        "leftSemi")
-    val out = runToParquet(matched, OutputMode.Append)
-    deleteStaged(feed.src0)
-    spark.read.parquet(out)
-      .groupBy(col("luser").as("user_id"))
-      .agg(count(lit(1)).as("n_matched"),
-        countDistinct(col("levent")).as("n_distinct"))
-      .orderBy(col("user_id"))
-  }
+  def attributionSemi(spark: SparkSession, dir: String): DataFrame =
+    runStream(spark, "semi") { root =>
+      val (clicks, buys) = attributionFeed(spark, dir, root.resolve("src"))
+      StreamRun(intervalJoin(clicks, buys, joinType = "leftSemi"),
+        OutputMode.Append, () =>
+          spark.read.parquet(outDir(root))
+            .groupBy(col("luser").as("user_id"))
+            .agg(count(lit(1)).as("n_matched"),
+              countDistinct(col("levent")).as("n_distinct"))
+            .orderBy(col("user_id")))
+    }
 
   final case class TypeCount(user_id: Long, event_type: String, n: Long)
 
@@ -1232,7 +1195,7 @@ object Streams {
   def typeCountsTws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
+    runStream(spark, "twstypes", rocksDb = true) { root =>
       implicit val outEnc = Encoders.product[TypeCount]
       val updates = spark.readStream
         .schema(eventsSchema(tsLong))
@@ -1244,11 +1207,11 @@ object Streams {
         .transformWithState(new TypeCountProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
-      spark.read.parquet(out)
-        .groupBy($"user_id", $"event_type")
-        .agg(max($"n").as("n"))
-        .orderBy($"user_id", $"event_type")
+      StreamRun(updates.toDF(), OutputMode.Update, () =>
+        spark.read.parquet(outDir(root))
+          .groupBy($"user_id", $"event_type")
+          .agg(max($"n").as("n"))
+          .orderBy($"user_id", $"event_type"))
     }
   }
 
@@ -1279,8 +1242,9 @@ object Streams {
         unix_micros(col("s_end")).as("s_end_us"),
         col("session_events"),
       )
-    val out = runToParquet(sessions, OutputMode.Complete)
-    spark.read.parquet(out).orderBy(col("user_id"), col("s_start_us"))
+    runStream(spark, "sessw")(root => StreamRun(sessions, OutputMode.Complete,
+      () => spark.read.parquet(outDir(root))
+        .orderBy(col("user_id"), col("s_start_us"))))
   }
 
   final case class DetectState(tail: Array[Int], nextSeq: Long,
@@ -1401,8 +1365,15 @@ object Streams {
           Iterator.single(
             SessStatRow(user, st.sessions, st.events, st.maxEvents))
       }
-    val out = runToParquet(updates.toDF(), OutputMode.Update)
-    spark.read.parquet(out)
+    runStream(spark, "sessions")(root => StreamRun(updates.toDF(),
+      OutputMode.Update, () => maxSessionStats(spark.read.parquet(outDir(root)))))
+  }
+
+  /** The q85/q112 read side: every emitted measure is monotone
+    * non-decreasing, so the final value per user is a `max` over the
+    * sunk rows. */
+  private def maxSessionStats(emitted: DataFrame): DataFrame =
+    emitted
       .groupBy(col("user_id"))
       .agg(
         max(col("n_sessions")).as("n_sessions"),
@@ -1410,7 +1381,6 @@ object Streams {
         max(col("max_session_events")).as("max_session_events"),
       )
       .orderBy(col("user_id"))
-  }
 
   /** Per-user session stats as a [[org.apache.spark.sql.streaming.
     * StatefulProcessor]] — the transformWithState successor of the
@@ -1638,7 +1608,7 @@ object Streams {
   ): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
+    runStream(spark, "twssess", rocksDb = true) { root =>
       implicit val outEnc = Encoders.product[SessStatRow]
       val updates = spark.readStream
         .schema(eventsSchema(tsLong))
@@ -1650,15 +1620,8 @@ object Streams {
         .transformWithState(new SessStatProcessor(gapUs),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
-      spark.read.parquet(out)
-        .groupBy(col("user_id"))
-        .agg(
-          max(col("n_sessions")).as("n_sessions"),
-          max(col("n_events")).as("n_events"),
-          max(col("max_session_events")).as("max_session_events"),
-        )
-        .orderBy(col("user_id"))
+      StreamRun(updates.toDF(), OutputMode.Update,
+        () => maxSessionStats(spark.read.parquet(outDir(root))))
     }
   }
 
@@ -1673,9 +1636,9 @@ object Streams {
     * bit-for-bit.
     *
     * Harness: the events table is staged as two TIME-RANGED slices
-    * appended while the stream runs (batch order = time order, so
-    * nothing is ever below the 10-minute watermark and the oracle
-    * comparison stays exact), then one far-future sentinel on a
+    * ([[stageTimeSlices]]: batch order = time order, so nothing is ever
+    * below the 10-minute watermark and the oracle comparison stays
+    * exact), then one far-future sentinel on a
     * reserved key whose arrival advances the final watermark past every
     * real session's `last + gap` — the timers fire, the last open
     * sessions close, and the sentinel's own (still-open) session is the
@@ -1691,45 +1654,17 @@ object Streams {
   ): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"sess_$uuid")
-      val srcDir = root.resolve("src").toString
-      // Stage in ONE pass: range-partition the 2-column projection on
-      // `us` into two time-disjoint part files (batch order can then be
-      // time order, so no row is ever below the 10-minute watermark and
-      // the oracle comparison stays exact). The file source replays
-      // oldest-modification-time first, so the files' modtimes are
-      // pinned to their time ranges — part-00000 IS the low range by
-      // the range partitioner's ordering.
-      spark.read.schema(eventsSchema(tsLong))
+    runStream(spark, "sess", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val hi = stageTimeSlices(spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
-        .select($"user_id", usExpr(tsLong).as("us"))
-        .repartitionByRange(2, $"us")
-        .write.parquet(srcDir)
-      val parts = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toAbsolutePath)
-          .filter(_.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-      }
-      val now = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - 60000L + i * 10000L))
-      }
-      // sentinel time: one cheap scan of the staged 1-column projection
-      // (a bounded 1-row collect, same class as q111's literal cut)
-      val hi = spark.read.parquet(srcDir).agg(max($"us")).head.getLong(0)
+        .select($"user_id", usExpr(tsLong).as("us")), src)
       val delayUs = 600L * 1000000L
       implicit val outEnc = Encoders.product[ClosedSession]
       val closed = spark.readStream
         .schema("user_id LONG, us LONG")
         .option("maxFilesPerTrigger", "1") // one time-slice per microbatch
-        .parquet(srcDir)
+        .parquet(src.toString)
         .withColumn("wts", timestamp_micros($"us"))
         .withWatermark("wts", "10 minutes")
         .select($"user_id", $"us")
@@ -1738,28 +1673,16 @@ object Streams {
         .transformWithState(new SessionCloser(gapUs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val out = root.resolve("out").toString
-      withFewStatePartitions(spark) {
-        val q = closed.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.coalesce(1).write.mode("append").parquet(out)
-          }
-          .start()
-        try {
-          // two data batches (cross-batch open sessions, early timers)
-          q.processAllAvailable()
-          // sentinel: watermark → hi + gap + 2 s > every real expiry
-          Seq((-1L, hi + gapUs + delayUs + 2000000L))
-            .toDF("user_id", "us")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable() // remaining timers fire (no-data batch)
-        } finally q.stop()
-      }
-      deleteStaged(root.resolve("src"))
-      spark.read.parquet(out)
-        .filter($"user_id" >= 0L) // sentinel key never emits; belt-and-braces
-        .orderBy($"user_id", $"s_start_us")
+      // two data batches (cross-batch open sessions, early timers), then
+      // the sentinel: watermark → hi + gap + 2 s > every real expiry, the
+      // remaining timers fire (no-data batch)
+      StreamRun(closed.toDF(), OutputMode.Update,
+        steps = Seq(() => Seq((-1L, hi + gapUs + delayUs + 2000000L))
+          .toDF("user_id", "us")
+          .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter($"user_id" >= 0L) // sentinel key never emits; belt-and-braces
+          .orderBy($"user_id", $"s_start_us"))
     }
   }
 
@@ -1922,36 +1845,17 @@ object Streams {
         "greedy steps) or a mandatory single-row final step; an " +
         "un-timed trailing variable step would hold matches forever")
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"match_$uuid")
-      val srcDir = root.resolve("src").toString
-      spark.read.schema(eventsSchema(tsLong))
+    runStream(spark, "match", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val hi = stageTimeSlices(spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
         .select($"user_id", usExpr(tsLong).as("us"), $"event_id",
-          $"event_type")
-        .repartitionByRange(2, $"us")
-        .write.parquet(srcDir)
-      val parts = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toAbsolutePath)
-          .filter(_.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-      }
-      val now = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - 60000L + i * 10000L))
-      }
-      val hi = spark.read.parquet(srcDir).agg(max($"us")).head.getLong(0)
+          $"event_type"), src)
       implicit val outEnc = Encoders.product[Sequence.SeqMatch]
       val matches = spark.readStream
         .schema("user_id LONG, us LONG, event_id LONG, event_type STRING")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+        .parquet(src.toString)
         .withColumn("wts", timestamp_micros($"us"))
         .withWatermark("wts", "10 minutes")
         .select($"user_id", $"us", $"event_id", $"event_type")
@@ -1960,36 +1864,22 @@ object Streams {
         .transformWithState(new PatternProcessor(pattern),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val out = root.resolve("out").toString
-      withFewStatePartitions(spark) {
-        val q = matches.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.coalesce(1).write.mode("append").parquet(out)
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          // sentinel: watermark → past every real row's maturity
-          // past every row's maturity AND, for a timed pattern, past
-          // the last possible attempt deadline (anchor + within), so
-          // the final timers resolve every held match
-          Seq((-1L,
-            hi + (if (pattern.withinUs != Sequence.Unbounded)
-              pattern.withinUs
-            else 0L) + 1200L * 1000000L + 2000000L,
-            -1L, "none"))
-            .toDF("user_id", "us", "event_id", "event_type")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      deleteStaged(root.resolve("src"))
-      spark.read.parquet(out)
-        .filter($"user_id" >= 0L)
-        .select($"user_id", $"start_us", $"end_us",
-          $"n_plus".as(plusAlias))
-        .orderBy($"user_id", $"start_us")
+      // sentinel: watermark → past every real row's maturity AND, for a
+      // timed pattern, past the last possible attempt deadline (anchor +
+      // within), so the final timers resolve every held match
+      StreamRun(matches.toDF(), OutputMode.Update,
+        steps = Seq(() => Seq((-1L,
+          hi + (if (pattern.withinUs != Sequence.Unbounded)
+            pattern.withinUs
+          else 0L) + 1200L * 1000000L + 2000000L,
+          -1L, "none"))
+          .toDF("user_id", "us", "event_id", "event_type")
+          .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter($"user_id" >= 0L)
+          .select($"user_id", $"start_us", $"end_us",
+            $"n_plus".as(plusAlias))
+          .orderBy($"user_id", $"start_us"))
     }
   }
 
@@ -2102,37 +1992,18 @@ object Streams {
   def streamCusum(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"cusum_$uuid")
-      val srcDir = root.resolve("src").toString
-      spark.read.schema(eventsSchema(tsLong))
+    runStream(spark, "cusum", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val hi = stageTimeSlices(spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
         .select($"event_type", usExpr(tsLong).as("us"),
-          expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
-        .repartitionByRange(2, $"us")
-        .write.parquet(srcDir)
-      val parts = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toAbsolutePath)
-          .filter(_.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-      }
-      val now = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - 60000L + i * 10000L))
-      }
-      val hi = spark.read.parquet(srcDir).agg(max($"us")).head.getLong(0)
+          expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents")), src)
       implicit val outEnc =
         Encoders.product[graft.ops.Events.CusumState]
       val states = spark.readStream
         .schema("event_type STRING, us LONG, cents LONG")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+        .parquet(src.toString)
         .withColumn("wts", timestamp_micros($"us"))
         .withWatermark("wts", "10 minutes")
         .select($"event_type", $"us", $"cents")
@@ -2141,36 +2012,23 @@ object Streams {
         .transformWithState(new CusumProcessor(48),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val out = root.resolve("out").toString
-      withFewStatePartitions(spark) {
-        val q = states.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.coalesce(1).write.mode("append").parquet(out)
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          // sentinel: watermark → past every real hour's end
-          Seq(("__sentinel__", hi + 4800L * 1000000L, 0L))
-            .toDF("event_type", "us", "cents")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      deleteStaged(root.resolve("src"))
-      spark.read.parquet(out)
-        .filter($"event_type" =!= "__sentinel__")
-        .groupBy($"event_type")
-        .agg(
-          max($"n_hours").as("n_hours"),
-          max($"burnin_mean_cents").as("burnin_mean_cents"),
-          max($"max_cusum_up").as("max_cusum_up"),
-          max($"max_cusum_dn").as("max_cusum_dn"),
-          max($"alarm_up_hour").as("alarm_up_hour"),
-          max($"alarm_dn_hour").as("alarm_dn_hour"),
-        )
-        .orderBy($"event_type")
+      StreamRun(states.toDF(), OutputMode.Update,
+        // sentinel: watermark → past every real hour's end
+        steps = Seq(() => Seq(("__sentinel__", hi + 4800L * 1000000L, 0L))
+          .toDF("event_type", "us", "cents")
+          .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter($"event_type" =!= "__sentinel__")
+          .groupBy($"event_type")
+          .agg(
+            max($"n_hours").as("n_hours"),
+            max($"burnin_mean_cents").as("burnin_mean_cents"),
+            max($"max_cusum_up").as("max_cusum_up"),
+            max($"max_cusum_dn").as("max_cusum_dn"),
+            max($"alarm_up_hour").as("alarm_up_hour"),
+            max($"alarm_dn_hour").as("alarm_dn_hour"),
+          )
+          .orderBy($"event_type"))
     }
   }
 
@@ -2327,19 +2185,16 @@ object Streams {
       spark: SparkSession, dir: String, nFiles: Int = 4): DataFrame = {
     import spark.implicits._
     val k = 200
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"aes_$uuid")
-    val srcDir = root.resolve("src").toString
-    // stage (doc_id, es_key) as nFiles part files → genuine cross-batch
-    // microbatches; the wide text column never enters the stream
-    graft.Tables.documents(spark, dir)
-      .select($"doc_id",
-        graft.ops.Corpus.aesKey($"doc_id",
-          size(split($"text", " ")).cast("long")).as("es"))
-      .repartition(nFiles)
-      .write.parquet(srcDir)
-    val out = withRocksDbStore(spark) {
+    runStream(spark, "aes", rocksDb = true) { root =>
+      val srcDir = root.resolve("src").toString
+      // stage (doc_id, es_key) as nFiles part files → genuine cross-batch
+      // microbatches; the wide text column never enters the stream
+      graft.Tables.documents(spark, dir)
+        .select($"doc_id",
+          graft.ops.Corpus.aesKey($"doc_id",
+            size(split($"text", " ")).cast("long")).as("es"))
+        .repartition(nFiles)
+        .write.parquet(srcDir)
       implicit val outEnc = Encoders.product[AesRow]
       val updates = spark.readStream
         .schema("doc_id LONG, es DOUBLE")
@@ -2366,17 +2221,18 @@ object Streams {
         .transformWithState(new AesReservoirProcessor(k),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      runToParquet(updates.toDF(), OutputMode.Update)
+      StreamRun(updates.toDF(), OutputMode.Update, { () =>
+        val emitted = spark.read.parquet(outDir(root))
+        val last = emitted.agg(max($"ver")).as[Long].collect().head
+        val docs = graft.Tables.documents(spark, dir)
+          .select($"doc_id", $"lang",
+            size(split($"text", " ")).cast("long").as("n_tokens"))
+        emitted.filter($"ver" === last).select($"doc_id")
+          .join(docs, "doc_id")
+          .select($"doc_id", $"lang", $"n_tokens")
+          .orderBy($"doc_id")
+      })
     }
-    val emitted = spark.read.parquet(out)
-    val last = emitted.agg(max($"ver")).as[Long].collect().head
-    val docs = graft.Tables.documents(spark, dir)
-      .select($"doc_id", $"lang",
-        size(split($"text", " ")).cast("long").as("n_tokens"))
-    emitted.filter($"ver" === last).select($"doc_id")
-      .join(docs, "doc_id")
-      .select($"doc_id", $"lang", $"n_tokens")
-      .orderBy($"doc_id")
   }
 
   /** q207: [[KmvSketchProcessor]] run to completion under the driver's
@@ -2392,7 +2248,7 @@ object Streams {
     import spark.implicits._
     val k = 64
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
+    runStream(spark, "kmv", rocksDb = true) { root =>
       implicit val outEnc = Encoders.product[KmvRow]
       val updates = spark.readStream
         .schema(eventsSchema(tsLong))
@@ -2405,25 +2261,25 @@ object Streams {
         .transformWithState(new KmvSketchProcessor(k),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
       val uInt = (1 to 8)
         .map(i =>
           s"(instr('0123456789abcdef', substr(theta, $i, 1)) - 1) * " +
             s"${math.pow(16, 8 - i).toLong}L")
         .mkString(" + ")
-      spark.read.parquet(out)
-        .groupBy($"event_type")
-        .agg(
-          expr("max_by(n_sketch, ver)").as("n_sketch"),
-          expr("max_by(theta, ver)").as("theta"),
-        )
-        .withColumn("est",
-          when($"n_sketch" < k, $"n_sketch".cast("double"))
-            .otherwise(lit((k - 1).toDouble) * 4294967296.0 /
-              expr(uInt)))
-        .select($"event_type", $"n_sketch", $"theta",
-          round($"est", 2).as("est_distinct"))
-        .orderBy($"event_type")
+      StreamRun(updates.toDF(), OutputMode.Update, () =>
+        spark.read.parquet(outDir(root))
+          .groupBy($"event_type")
+          .agg(
+            expr("max_by(n_sketch, ver)").as("n_sketch"),
+            expr("max_by(theta, ver)").as("theta"),
+          )
+          .withColumn("est",
+            when($"n_sketch" < k, $"n_sketch".cast("double"))
+              .otherwise(lit((k - 1).toDouble) * 4294967296.0 /
+                expr(uInt)))
+          .select($"event_type", $"n_sketch", $"theta",
+            round($"est", 2).as("est_distinct"))
+          .orderBy($"event_type"))
     }
   }
 
@@ -2444,30 +2300,25 @@ object Streams {
     */
   def streamAnalyze(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"ana_$uuid")
-    val srcDir = root.resolve("src").toString
-    val storeDir = root.resolve("store").toString
-    // exact-canonical-string column subset (integer keys, a double with
-    // the proven sub-1e7 print parity, a flag, a timestamp — q346's
-    // parity classes)
-    graft.Tables.lineitem(spark, dir)
-      .select($"l_orderkey", $"l_partkey", $"l_quantity",
-        $"l_returnflag", $"l_shipdate")
-      .repartition(3)
-      .write.parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
     // per-batch partials are |cols|-row rollups of one staged file —
     // 4-way shuffles beat 32 near-empty state files per microbatch
-    withShufflePartitions(spark, 4) {
-      val q = spark.readStream
-        .schema(schema)
+    runStream(spark, "ana", statePartitions = Some(4)) { root =>
+      val srcDir = root.resolve("src").toString
+      val storeDir = root.resolve("store").toString
+      // exact-canonical-string column subset (integer keys, a double with
+      // the proven sub-1e7 print parity, a flag, a timestamp — q346's
+      // parity classes)
+      graft.Tables.lineitem(spark, dir)
+        .select($"l_orderkey", $"l_partkey", $"l_quantity",
+          $"l_returnflag", $"l_shipdate")
+        .repartition(3)
+        .write.parquet(srcDir)
+      val stream = spark.readStream
+        .schema(spark.read.parquet(srcDir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+      StreamRun(stream, OutputMode.Append,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
           // maxFilesPerTrigger=1 means every microbatch is ONE staged
           // file = ONE scan split, so the per-row-heavy melt + partial
           // aggregation upstream of the first exchange ran on one core
@@ -2493,13 +2344,9 @@ object Streams {
             .parquet(s"$storeDir/partials/batch=$id")
           sk.drop("batch").coalesce(1).write.mode("overwrite")
             .parquet(s"$storeDir/sketch/batch=$id")
-        }
-        .option("checkpointLocation", root.resolve("ck").toString)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        },
+        result = () => graft.ops.Analyze.mergedStatsReadout(spark, storeDir))
     }
-    graft.ops.Analyze.mergedStatsReadout(spark, storeDir)
   }
 
   // ---- q256: streaming anytime-valid mSPRT monitor ------------------
@@ -2642,37 +2489,18 @@ object Streams {
   def streamMsprt(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"msprt_$uuid")
-      val srcDir = root.resolve("src").toString
-      spark.read.schema(eventsSchema(tsLong))
+    runStream(spark, "msprt", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val hi = stageTimeSlices(spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
         .select($"event_type", usExpr(tsLong).as("us"),
           ($"user_id" % 2 === 0L).as("arm_a"),
-          expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
-        .repartitionByRange(2, $"us")
-        .write.parquet(srcDir)
-      val parts = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toAbsolutePath)
-          .filter(_.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-      }
-      val now = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - 60000L + i * 10000L))
-      }
-      val hi = spark.read.parquet(srcDir).agg(max($"us")).head.getLong(0)
+          expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents")), src)
       implicit val outEnc = Encoders.product[MsprtDayOut]
       val days = spark.readStream
         .schema("event_type STRING, us LONG, arm_a BOOLEAN, cents LONG")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+        .parquet(src.toString)
         .withColumn("wts", timestamp_micros($"us"))
         .withWatermark("wts", "10 minutes")
         .select($"event_type", $"us", $"arm_a", $"cents")
@@ -2681,37 +2509,25 @@ object Streams {
         .transformWithState(new MsprtProcessor,
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val out = root.resolve("out").toString
-      withFewStatePartitions(spark) {
-        val q = days.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.coalesce(1).write.mode("append").parquet(out)
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          // sentinel: watermark → past the last real day's end
+      StreamRun(days.toDF(), OutputMode.Update,
+        // sentinel: watermark → past the last real day's end
+        steps = Seq(() =>
           Seq(("__sentinel__", hi + 2L * 86400000000L, true, 0L))
             .toDF("event_type", "us", "arm_a", "cents")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      deleteStaged(root.resolve("src"))
-      spark.read.parquet(out)
-        .filter($"event_type" =!= "__sentinel__")
-        // each (type, day) is emitted once; the aggregate is replay
-        // armor only (identical values if a batch ever re-runs)
-        .groupBy($"event_type", $"day_id")
-        .agg(max($"na").as("na"), max($"nb").as("nb"),
-          max($"ln_lambda").as("lnl"),
-          max($"ln_lambda_max").as("lnlm"))
-        .select($"event_type", $"day_id", $"na", $"nb",
-          round($"lnl", 6).as("ln_lambda"),
-          round($"lnlm", 6).as("ln_lambda_max"),
-          ($"lnlm" >= 2.995732273553991).as("crossed"))
-        .orderBy($"event_type", $"day_id")
+            .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () => spark.read.parquet(outDir(root))
+          .filter($"event_type" =!= "__sentinel__")
+          // each (type, day) is emitted once; the aggregate is replay
+          // armor only (identical values if a batch ever re-runs)
+          .groupBy($"event_type", $"day_id")
+          .agg(max($"na").as("na"), max($"nb").as("nb"),
+            max($"ln_lambda").as("lnl"),
+            max($"ln_lambda_max").as("lnlm"))
+          .select($"event_type", $"day_id", $"na", $"nb",
+            round($"lnl", 6).as("ln_lambda"),
+            round($"lnlm", 6).as("ln_lambda_max"),
+            ($"lnlm" >= 2.995732273553991).as("crossed"))
+          .orderBy($"event_type", $"day_id"))
     }
   }
 
@@ -2888,37 +2704,18 @@ object Streams {
       minLen: Int, maxLen: Int): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"epmine_$uuid")
-      val srcDir = root.resolve("src").toString
-      spark.read.schema(eventsSchema(tsLong))
+    runStream(spark, "epmine", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val hi = stageTimeSlices(spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
         .select($"user_id", usExpr(tsLong).as("us"), $"event_id",
-          $"event_type")
-        .repartitionByRange(2, $"us")
-        .write.parquet(srcDir)
-      val parts = scala.util.Using.resource(
-        java.nio.file.Files.list(java.nio.file.Paths.get(srcDir))) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toAbsolutePath)
-          .filter(_.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.getFileName.toString)
-      }
-      val now = System.currentTimeMillis()
-      parts.zipWithIndex.foreach { case (p, i) =>
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(
-            now - 60000L + i * 10000L))
-      }
-      val hi = spark.read.parquet(srcDir).agg(max($"us")).head.getLong(0)
+          $"event_type"), src)
       implicit val outEnc = Encoders.product[EpRow]
       val updates = spark.readStream
         .schema("user_id LONG, us LONG, event_id LONG, " +
           "event_type STRING")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir)
+        .parquet(src.toString)
         .withColumn("wts", timestamp_micros($"us"))
         .withWatermark("wts", "10 minutes")
         .select($"user_id", $"us", $"event_id", $"event_type")
@@ -2927,25 +2724,13 @@ object Streams {
         .transformWithState(new EpisodeMineProcessor(minLen, maxLen),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
-      val out = root.resolve("out").toString
-      withFewStatePartitions(spark) {
-        val q = updates.toDF().writeStream
-          .outputMode(OutputMode.Update)
-          .foreachBatch { (batch: Dataset[Row], _: Long) =>
-            batch.coalesce(1).write.mode("append").parquet(out)
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          // sentinel: watermark → past every real event's timestamp
-          Seq((-1L, hi + 4800L * 1000000L, 0L, "__sentinel__"))
-            .toDF("user_id", "us", "event_id", "event_type")
-            .coalesce(1).write.mode("append").parquet(srcDir)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
-      deleteStaged(root.resolve("src"))
-      spark.read.parquet(out).filter($"user_id" =!= -1L)
+      StreamRun(updates.toDF(), OutputMode.Update,
+        // sentinel: watermark → past every real event's timestamp
+        steps = Seq(() => Seq((-1L, hi + 4800L * 1000000L, 0L, "__sentinel__"))
+          .toDF("user_id", "us", "event_id", "event_type")
+          .coalesce(1).write.mode("append").parquet(src.toString)),
+        result = () =>
+          spark.read.parquet(outDir(root)).filter($"user_id" =!= -1L))
     }
   }
 
@@ -3017,10 +2802,7 @@ object Streams {
     import spark.implicits._
     val k = 200
     val buckets = 16
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"mg_$uuid")
+    runStream(spark, "mg", rocksDb = true) { root =>
       val srcDir = root.resolve("src").toString
       // stage the corpus as 4 arrival batches so the state genuinely
       // carries counters across microbatches (q222's harness device)
@@ -3042,26 +2824,26 @@ object Streams {
         .transformWithState(new MisraGriesProcessor(k),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
-      deleteStaged(root.resolve("src"))
-      val cands = spark.read.parquet(out)
-        .groupBy($"bucket")
-        .agg(expr("max_by(toks, ver)").as("toks"))
-        .select(explode(split($"toks", "\u0001")).as("tok"))
-        .where(length($"tok") > 0)
-        .distinct()
-      // pass 2: exact recount of the bounded candidate set — q238's
-      // closing move, applied to the stream's final state
-      val tokens = graft.Tables.documents(spark, dir)
-        .select(explode(split($"text", " ")).as("tok"))
-        .where(length($"tok") > 0)
-      val total = tokens.count()
-      tokens
-        .join(broadcast(cands), Seq("tok"))
-        .groupBy($"tok")
-        .agg(count(lit(1)).as("cnt"))
-        .where($"cnt" * (k + 1) > total)
-        .orderBy($"cnt".desc, $"tok")
+      StreamRun(updates.toDF(), OutputMode.Update, { () =>
+        val cands = spark.read.parquet(outDir(root))
+          .groupBy($"bucket")
+          .agg(expr("max_by(toks, ver)").as("toks"))
+          .select(explode(split($"toks", "\u0001")).as("tok"))
+          .where(length($"tok") > 0)
+          .distinct()
+        // pass 2: exact recount of the bounded candidate set — q238's
+        // closing move, applied to the stream's final state
+        val tokens = graft.Tables.documents(spark, dir)
+          .select(explode(split($"text", " ")).as("tok"))
+          .where(length($"tok") > 0)
+        val total = tokens.count()
+        tokens
+          .join(broadcast(cands), Seq("tok"))
+          .groupBy($"tok")
+          .agg(count(lit(1)).as("cnt"))
+          .where($"cnt" * (k + 1) > total)
+          .orderBy($"cnt".desc, $"tok")
+      })
     }
   }
 
@@ -3133,10 +2915,7 @@ object Streams {
   def streamPsi(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    withRocksDbStore(spark) {
-      val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-      val root = java.nio.file.Paths.get("target", "graft_stream",
-        s"psi_$uuid")
+    runStream(spark, "psi", rocksDb = true) { root =>
       val srcDir = root.resolve("src").toString
       spark.read.schema(eventsSchema(tsLong))
         .parquet(s"$dir/events.parquet")
@@ -3156,14 +2935,12 @@ object Streams {
         .transformWithState(new PsiHistProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
-      deleteStaged(root.resolve("src"))
-      val binned = spark.read.parquet(out)
-        .groupBy($"event_type", $"bin")
-        .agg(
-          expr("max_by(a, ver)").as("a"),
-          expr("max_by(b, ver)").as("b"))
-      graft.ops.Eval.psiFromBinned(binned)
+      StreamRun(updates.toDF(), OutputMode.Update, () =>
+        graft.ops.Eval.psiFromBinned(spark.read.parquet(outDir(root))
+          .groupBy($"event_type", $"bin")
+          .agg(
+            expr("max_by(a, ver)").as("a"),
+            expr("max_by(b, ver)").as("b"))))
     }
   }
 
@@ -3186,36 +2963,30 @@ object Streams {
   def timeTravelDiff(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"tt_$uuid")
-    val srcDir = root.resolve("src")
-    val raw = spark.read.schema(eventsSchema(tsLong))
-      .parquet(s"$dir/events.parquet")
-      .select($"event_id", $"user_id",
-        expr("CAST(ROUND(value * 100) AS LONG)").as("cents"))
-    // arrival buckets = event_id RANGE quarters (one max + a codegen
-    // filter — deterministic like ntile but with NO global sort, so
-    // the staging stays scan-shaped at any corpus size)
-    val maxId = raw.agg(max($"event_id")).as[Long].collect().head
-    val ev = raw.withColumn("bkt",
-      expr(s"least(3L, (event_id * 4) DIV ${maxId + 1}L) + 1L"))
-    java.nio.file.Files.createDirectories(srcDir)
-    for (k <- 1 to 4)
-      stageArrivalBatch(
-        ev.filter($"bkt" === k).select($"user_id", $"cents"),
-        root, srcDir, k)
-    val log = new StoreLog(root.resolve("sink"), "v") // full retention
-    withFewStatePartitions(spark) {
+    runStream(spark, "tt") { root =>
+      val src = root.resolve("src")
+      val raw = spark.read.schema(eventsSchema(tsLong))
+        .parquet(s"$dir/events.parquet")
+        .select($"event_id", $"user_id",
+          expr("CAST(ROUND(value * 100) AS LONG)").as("cents"))
+      // arrival buckets = event_id RANGE quarters (one max + a codegen
+      // filter — deterministic like ntile but with NO global sort, so
+      // the staging stays scan-shaped at any corpus size)
+      val maxId = raw.agg(max($"event_id")).as[Long].collect().head
+      val ev = raw.withColumn("bkt",
+        expr(s"least(3L, (event_id * 4) DIV ${maxId + 1}L) + 1L"))
+      for (k <- 1 to 4)
+        stageFile(ev.filter($"bkt" === k).select($"user_id", $"cents"),
+          src.resolve(s"b$k.parquet"), k)
+      val log = new StoreLog(root.resolve("sink"), "v") // full retention
       val agg = spark.readStream
         .schema("user_id LONG, cents LONG")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
+        .parquet(src.toString)
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_events"), sum($"cents").as("sum_cents"))
-      val q = agg.writeStream
-        .outputMode(OutputMode.Update)
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
+      StreamRun(agg, OutputMode.Update,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
           val sp = batch.sparkSession
           val merged = log.latestBefore(id)
             .map(p => sp.read.parquet(log.path(p))) match {
@@ -3223,27 +2994,25 @@ object Streams {
             case Some(prev) => upsertMerge(prev, batch.toDF(), "user_id")
           }
           log.commitTable(id, merged)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        },
+        result = { () =>
+          val v1 = log.asOf(spark, 1L)
+            .getOrElse(sys.error("timeTravelDiff: no commit at or below v1"))
+          val now = log.readLatest(spark)
+            .getOrElse(sys.error("timeTravelDiff: empty commit log"))
+          // keys only ever grow in this aggregate, so v1 ⊆ latest and a
+          // left join from the latest state covers the whole diff
+          now.as("n").join(v1.as("o"), Seq("user_id"), "left")
+            .select($"user_id",
+              coalesce($"o.n_events", lit(0L)).as("n_v1"),
+              coalesce($"o.sum_cents", lit(0L)).as("cents_v1"),
+              $"n.n_events".as("n_now"), $"n.sum_cents".as("cents_now"),
+              when($"o.n_events".isNull, "added")
+                .when($"o.n_events" =!= $"n.n_events", "grown")
+                .otherwise("same").as("status"))
+            .orderBy($"user_id")
+        })
     }
-    deleteStaged(srcDir)
-    val v1 = log.asOf(spark, 1L)
-      .getOrElse(sys.error("timeTravelDiff: no commit at or below v1"))
-    val now = log.readLatest(spark)
-      .getOrElse(sys.error("timeTravelDiff: empty commit log"))
-    // keys only ever grow in this aggregate, so v1 ⊆ latest and a left
-    // join from the latest state covers the whole diff
-    now.as("n").join(v1.as("o"), Seq("user_id"), "left")
-      .select($"user_id",
-        coalesce($"o.n_events", lit(0L)).as("n_v1"),
-        coalesce($"o.sum_cents", lit(0L)).as("cents_v1"),
-        $"n.n_events".as("n_now"), $"n.sum_cents".as("cents_now"),
-        when($"o.n_events".isNull, "added")
-          .when($"o.n_events" =!= $"n.n_events", "grown")
-          .otherwise("same").as("status"))
-      .orderBy($"user_id")
   }
 
   /** q291: STREAMING TRIANGLE MAINTENANCE — q290 LIVE, the streaming
@@ -3286,37 +3055,6 @@ object Streams {
         lit(graft.ops.Graph.incCut).cast("timestamp"))
       .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
       .cache()
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"tri_$uuid")
-    val srcDir = root.resolve("src").toString
-    // two post-cut time slices (the file source triggers oldest-
-    // written-first), so maintenance genuinely crosses a microbatch
-    // boundary; the pre-cut history is NOT streamed — it is the
-    // snapshot the stream resumes from
-    val lines = spark.read.parquet(s"$dir/lineitem.parquet")
-      .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"),
-        $"l_shipdate".cast("string").as("sd"))
-    val cutS = graft.ops.Graph.incCut.take(10)
-    for (
-      (lo, hi) <- Seq((cutS, Some("2001-10-01")),
-        ("2001-10-01", None))
-    ) lines
-      .filter($"sd" >= lo &&
-        hi.map($"sd" < _).getOrElse(lit(true)))
-      .select($"ok", $"pk")
-      .coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    // the graph store is APPEND-ONLY (lines and edges only ever grow),
-    // so the commit log holds per-batch DELTAS ([[StoreLog]], full
-    // retention) — state at batch id = the union of all installed
-    // b<id' ≤ id> commits; a full copy-on-write rewrite (q107's shape,
-    // for stores that UPDATE in place) measured 4× slower here because
-    // each batch re-wrote the whole growing edge table
-    val log = new StoreLog(root.resolve("sink"), "b")
-    def readAll(sp: SparkSession, ids: Seq[Long], sub: String,
-        orElse: => DataFrame): DataFrame =
-      log.readMany(sp, ids, sub).getOrElse(orElse)
     // NOTE (r18, measured): trimming shuffle partitions to 8 for the
     // tick jobs was tried for the q291 floor and made the harness
     // ~70% SLOWER (15.8–16.8 s vs 9.2 s at 32 partitions, same code
@@ -3324,86 +3062,113 @@ object Streams {
     // task-overhead-bound: the delta pair derivation and the
     // adjacency-probe scoring at sf0.1 want the cores. The session
     // default stays; the floor's composition is itemized in SCALE.md.
-    val q = spark.readStream
-      .schema("ok LONG, pk LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val sp = batch.sparkSession
-        import sp.implicits._
-        val b = batch.toDF().distinct().localCheckpoint()
-        val prevIds = log.versions().filter(_ < id)
-        // prior state = the handed-off batch snapshot ∪ installed ticks
-        val prevLines = baseLines.unionByName(
-          readAll(sp, prevIds, "lines",
-            sp.emptyDataset[(Long, Long)].toDF("ok", "pk")))
-        val prevEdges = storeEdges.unionByName(
-          readAll(sp, prevIds, "edges",
-            sp.emptyDataset[(Long, Long)].toDF("a", "b")))
-        // an (order, part) re-observed across ticks re-derives pairs
-        // the store already holds — the edge anti-join below removes
-        // them, so no line-level dedup pass against the store is needed
-        // (the rare duplicate line row only re-offers already-present
-        // candidate pairs)
-        val bb = b.as("x")
-          .join(b.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
-          .select($"x.pk".as("a"), $"y.pk".as("b"))
-        // the tick side is microbatch-sized; broadcast it so the line
-        // history is scanned, never shuffled (a checkpointed frame has
-        // no size stats, so the planner won't pick the broadcast itself)
-        val bp = broadcast(b.as("n"))
-          .join(prevLines.as("o"), $"n.ok" === $"o.ok" && $"n.pk" =!= $"o.pk")
-          .select(least($"n.pk", $"o.pk").as("a"),
-            greatest($"n.pk", $"o.pk").as("b"))
-        val delta = bb.unionAll(bp).distinct()
-          .join(prevEdges, Seq("a", "b"), "left_anti")
-          .localCheckpoint()
-        // base index = the CACHED snapshot adjacency, untouched; the
-        // small RECENT index covers installed tick edges (old flags)
-        // and this tick's delta (new flags) — the two merge per scoring
-        // row, never as a table
-        val tickEdges = readAll(sp, prevIds, "edges",
-          sp.emptyDataset[(Long, Long)].toDF("a", "b"))
-        val recent = graft.ops.Graph.adjacencyFlagged(
-          tickEdges.select($"a", $"b", lit(false).as("nw"))
-            .unionByName(delta.select($"a", $"b", lit(true).as("nw"))))
-        val dTri = graft.ops.Graph
-          .triangleDeltaOnAdj(snapAdj, recent, delta)
-        val dCnt = delta.agg(count(lit(1)).as("d_edges"))
-        val census = readAll(sp, prevIds.lastOption.toSeq, "census",
-          storeStats.select($"n_edges", $"n_triangles"))
-          .crossJoin(dCnt).crossJoin(dTri)
-          .select(($"n_edges" + $"d_edges").as("n_edges"),
-            ($"n_triangles" + $"d_triangles").as("n_triangles"))
-        // delta-only install: a multi-table StoreLog commit (temp dir +
-        // ONE atomic move keyed by batch id), so a replayed batch
-        // (derived from the same b<prev> set) overwrites its own
-        // attempt with identical content
-        log.commit(id) { tmp =>
-          b.coalesce(4).write.parquet(s"$tmp/lines")
-          delta.coalesce(4).write.parquet(s"$tmp/edges")
-          census.coalesce(1).write.parquet(s"$tmp/census")
-        }
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    deleteStaged(root.resolve("src"))
-    baseLines.unpersist()
-    val ids = log.versions()
-    require(ids.nonEmpty, "streamTriangles: no sink delta installed")
-    val edges = storeEdges.unionByName(readAll(spark, ids, "edges",
-      spark.emptyDataset[(Long, Long)].toDF("a", "b")))
-    val out = edges.select($"a").unionAll(edges.select($"b"))
-      .agg(count_distinct($"a").as("n_nodes"))
-      .crossJoin(log.readLatest(spark, "census").get)
-      .select($"n_nodes", $"n_edges", $"n_triangles")
-      .localCheckpoint()
-    snapAdj.unpersist()
-    storeEdges.unpersist()
-    out
+    runStream(spark, "tri", statePartitions = None) { root =>
+      val srcDir = root.resolve("src").toString
+      // two post-cut time slices (the file source triggers oldest-
+      // written-first), so maintenance genuinely crosses a microbatch
+      // boundary; the pre-cut history is NOT streamed — it is the
+      // snapshot the stream resumes from
+      val lines = spark.read.parquet(s"$dir/lineitem.parquet")
+        .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"),
+          $"l_shipdate".cast("string").as("sd"))
+      val cutS = graft.ops.Graph.incCut.take(10)
+      for (
+        (lo, hi) <- Seq((cutS, Some("2001-10-01")),
+          ("2001-10-01", None))
+      ) lines
+        .filter($"sd" >= lo &&
+          hi.map($"sd" < _).getOrElse(lit(true)))
+        .select($"ok", $"pk")
+        .coalesce(1)
+        .write.mode("append").parquet(srcDir)
+      // the graph store is APPEND-ONLY (lines and edges only ever grow),
+      // so the commit log holds per-batch DELTAS ([[StoreLog]], full
+      // retention) — state at batch id = the union of all installed
+      // b<id' ≤ id> commits; a full copy-on-write rewrite (q107's shape,
+      // for stores that UPDATE in place) measured 4× slower here because
+      // each batch re-wrote the whole growing edge table
+      val log = new StoreLog(root.resolve("sink"), "b")
+      def readAll(sp: SparkSession, ids: Seq[Long], sub: String,
+          orElse: => DataFrame): DataFrame =
+        log.readMany(sp, ids, sub).getOrElse(orElse)
+      val ticks = spark.readStream
+        .schema("ok LONG, pk LONG")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(srcDir)
+      StreamRun(ticks, OutputMode.Append,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
+          val sp = batch.sparkSession
+          import sp.implicits._
+          val b = batch.toDF().distinct().localCheckpoint()
+          val prevIds = log.versions().filter(_ < id)
+          // prior state = the handed-off batch snapshot ∪ installed ticks
+          val prevLines = baseLines.unionByName(
+            readAll(sp, prevIds, "lines",
+              sp.emptyDataset[(Long, Long)].toDF("ok", "pk")))
+          val prevEdges = storeEdges.unionByName(
+            readAll(sp, prevIds, "edges",
+              sp.emptyDataset[(Long, Long)].toDF("a", "b")))
+          // an (order, part) re-observed across ticks re-derives pairs
+          // the store already holds — the edge anti-join below removes
+          // them, so no line-level dedup pass against the store is needed
+          // (the rare duplicate line row only re-offers already-present
+          // candidate pairs)
+          val bb = b.as("x")
+            .join(b.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
+            .select($"x.pk".as("a"), $"y.pk".as("b"))
+          // the tick side is microbatch-sized; broadcast it so the line
+          // history is scanned, never shuffled (a checkpointed frame has
+          // no size stats, so the planner won't pick the broadcast itself)
+          val bp = broadcast(b.as("n"))
+            .join(prevLines.as("o"), $"n.ok" === $"o.ok" && $"n.pk" =!= $"o.pk")
+            .select(least($"n.pk", $"o.pk").as("a"),
+              greatest($"n.pk", $"o.pk").as("b"))
+          val delta = bb.unionAll(bp).distinct()
+            .join(prevEdges, Seq("a", "b"), "left_anti")
+            .localCheckpoint()
+          // base index = the CACHED snapshot adjacency, untouched; the
+          // small RECENT index covers installed tick edges (old flags)
+          // and this tick's delta (new flags) — the two merge per scoring
+          // row, never as a table
+          val tickEdges = readAll(sp, prevIds, "edges",
+            sp.emptyDataset[(Long, Long)].toDF("a", "b"))
+          val recent = graft.ops.Graph.adjacencyFlagged(
+            tickEdges.select($"a", $"b", lit(false).as("nw"))
+              .unionByName(delta.select($"a", $"b", lit(true).as("nw"))))
+          val dTri = graft.ops.Graph
+            .triangleDeltaOnAdj(snapAdj, recent, delta)
+          val dCnt = delta.agg(count(lit(1)).as("d_edges"))
+          val census = readAll(sp, prevIds.lastOption.toSeq, "census",
+            storeStats.select($"n_edges", $"n_triangles"))
+            .crossJoin(dCnt).crossJoin(dTri)
+            .select(($"n_edges" + $"d_edges").as("n_edges"),
+              ($"n_triangles" + $"d_triangles").as("n_triangles"))
+          // delta-only install: a multi-table StoreLog commit (temp dir +
+          // ONE atomic move keyed by batch id), so a replayed batch
+          // (derived from the same b<prev> set) overwrites its own
+          // attempt with identical content
+          log.commit(id) { tmp =>
+            b.coalesce(4).write.parquet(s"$tmp/lines")
+            delta.coalesce(4).write.parquet(s"$tmp/edges")
+            census.coalesce(1).write.parquet(s"$tmp/census")
+          }
+        },
+        result = { () =>
+          baseLines.unpersist()
+          val ids = log.versions()
+          require(ids.nonEmpty, "streamTriangles: no sink delta installed")
+          val edges = storeEdges.unionByName(readAll(spark, ids, "edges",
+            spark.emptyDataset[(Long, Long)].toDF("a", "b")))
+          val out = edges.select($"a").unionAll(edges.select($"b"))
+            .agg(count_distinct($"a").as("n_nodes"))
+            .crossJoin(log.readLatest(spark, "census").get)
+            .select($"n_nodes", $"n_edges", $"n_triangles")
+            .localCheckpoint()
+          snapAdj.unpersist()
+          storeEdges.unpersist()
+          out
+        })
+    }
   }
 
   // ---- q315: streaming embedding fold-in ------------------------------
@@ -3471,17 +3236,14 @@ object Streams {
       dim: Int,
       nFiles: Int = 4): DataFrame = {
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"fold_$uuid")
-    val srcDir = root.resolve("src").toString
-    oovContribs.select($"center", $"context", $"w")
-      .repartition(nFiles)
-      .write.parquet(srcDir)
-    val fixed = trained.select($"node".as("context"),
-      graft.ops.Graph.microVec($"embedding").as("ev"))
-      .localCheckpoint()
-    val out = withRocksDbStore(spark) {
+    runStream(spark, "fold", rocksDb = true) { root =>
+      val srcDir = root.resolve("src").toString
+      oovContribs.select($"center", $"context", $"w")
+        .repartition(nFiles)
+        .write.parquet(srcDir)
+      val fixed = trained.select($"node".as("context"),
+        graft.ops.Graph.microVec($"embedding").as("ev"))
+        .localCheckpoint()
       implicit val outEnc = Encoders.product[FoldRow]
       val updates = spark.readStream
         .schema("center LONG, context LONG, w LONG")
@@ -3495,35 +3257,30 @@ object Streams {
         .transformWithState(new FoldInProcessor(dim),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      runToParquet(updates.toDF(), OutputMode.Update)
+      StreamRun(updates.toDF(), OutputMode.Update, { () =>
+        // an all-empty stream (no out-of-vocab nodes at this SF) may never
+        // materialize the sink — fold-in of nothing is the empty table
+        val emitted =
+          if (Files.exists(Paths.get(outDir(root))))
+            spark.read.parquet(outDir(root))
+          else spark.emptyDataset[FoldRow].toDF()
+        emitted
+          .withColumn("rnk", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy($"center").orderBy($"ver".desc)))
+          .filter($"rnk" === 1)
+          .select($"center".as("node"), $"anchors".as("n_anchors"),
+            posexplode(expr("transform(num, x -> x DIV den)"))
+              .as(Seq("dim", "value_micro")))
+          .select($"node", $"n_anchors", $"dim", $"value_micro")
+          .orderBy($"node", $"dim")
+          // pin the (node×dim bounded) result in the block manager so
+          // the WHOLE fold_<uuid> root can be deleted — repeated
+          // bench/verify invocations previously accumulated one sink dir
+          // per call (r16 advice)
+          .localCheckpoint()
+      })
     }
-    // an all-empty stream (no out-of-vocab nodes at this SF) may never
-    // materialize the sink — fold-in of nothing is the empty table
-    val emitted =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-        spark.read.parquet(out)
-      else {
-        implicit val enc = Encoders.product[FoldRow]
-        spark.emptyDataset[FoldRow].toDF()
-      }
-    val folded = emitted
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy($"center").orderBy($"ver".desc)))
-      .filter($"rnk" === 1)
-      .select($"center".as("node"), $"anchors".as("n_anchors"),
-        posexplode(expr("transform(num, x -> x DIV den)"))
-          .as(Seq("dim", "value_micro")))
-      .select($"node", $"n_anchors", $"dim", $"value_micro")
-      .orderBy($"node", $"dim")
-      // pin the (node×dim bounded) result in the block manager so the
-      // WHOLE fold_<uuid> staging root AND the sink dir can be deleted
-      // now — repeated bench/verify invocations previously accumulated
-      // one sink dir per call (r16 advice)
-      .localCheckpoint()
-    deleteStaged(root)
-    deleteStaged(java.nio.file.Paths.get(out))
-    folded
   }
 
   /** q315: STREAMING EMBEDDING FOLD-IN — the online twin of batch
@@ -3571,93 +3328,53 @@ object Streams {
     // stores exist up front; only the pointer changes mid-stream
     graft.ops.Graph.registryIvfStore(spark, dir, 1L)
     graft.ops.Graph.registryIvfStore(spark, dir, 2L)
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"cut_$uuid")
-    val srcDir = root.resolve("src").toString
-    val pointer = new StoreLog(root.resolve("pointer"), "p")
-    val outLog = new StoreLog(root.resolve("out"), "b")
-    // pointer swaps go through the CAS commit: a racing maintenance
-    // writer (q327's compaction is the scenario) loses the rename and
-    // must re-read, never silently clobber a swap it didn't see
-    def setPointer(expect: Option[Long], v: Long): Unit =
-      require(pointer.commitNext(expect)(tmp => Seq(Tuple1(v)).toDF("v")
-          .coalesce(1).write.parquet(tmp.toString)).isDefined,
-        s"pointer CAS lost at expected=$expect — concurrent writer")
-    def stage(phase: Long): Unit =
-      Seq(Tuple1(phase)).toDF("phase").coalesce(1)
-        .write.mode("append").parquet(srcDir)
-    setPointer(None, 1L)
-    stage(0L)
-    val q = spark.readStream
-      .schema("phase LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val sp = batch.sparkSession
-        val phases = batch.collect().map(_.getLong(0)).toSeq.distinct.sorted
-        if (phases.nonEmpty) {
-          // the serving decision each tick: whatever the pointer says NOW
-          val v = pointer.readLatest(sp).get.head.getLong(0)
-          val served = graft.ops.Graph.registryAnnRecall(sp, dir, v)
-            .localCheckpoint()
-          val out = phases.map(p => served
-            .withColumn("phase", lit(p)).withColumn("version", lit(v)))
-            .reduce(_ unionByName _)
-          outLog.commit(id)(tmp =>
-            out.coalesce(1).write.parquet(tmp.toString))
-        }
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      setPointer(Some(1L), 2L) // CUTOVER — the stream is live
-      stage(1L)
-      q.processAllAvailable()
-      setPointer(Some(2L), 1L) // ROLLBACK — still live
-      stage(2L)
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = outLog.readMany(spark, outLog.versions()).get
-      .select($"phase", $"version", $"probe_node", $"n_exact",
-        $"n_hits", $"recall_pct")
-      .orderBy($"phase", $"probe_node")
-      .localCheckpoint()
-    deleteStaged(root)
-    out
-  }
-
-  /** Stage `df` as the `seq`-th SINGLE-FILE arrival batch under
-    * `srcDir`, with a strictly-increasing well-separated mtime so the
-    * file source's `maxFilesPerTrigger=1` trigger order IS the `seq`
-    * order — the deterministic-arrival staging device shared by q304's
-    * time travel and q330's tombstone stream (arrival order must be a
-    * pure function of the data or "before version k" means nothing
-    * cross-engine).
-    */
-  private def stageArrivalBatch(
-      df: DataFrame,
-      root: java.nio.file.Path,
-      srcDir: java.nio.file.Path,
-      seq: Int): Unit = {
-    val tmp = root.resolve(s"stage$seq")
-    df.coalesce(1).write.parquet(tmp.toString)
-    val part = scala.util.Using.resource(
-      java.nio.file.Files.list(tmp)) { fs =>
-      import scala.jdk.CollectionConverters._
-      fs.iterator().asScala.find { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }.get
+    runStream(spark, "cut", statePartitions = None) { root =>
+      val srcDir = root.resolve("src").toString
+      val pointer = new StoreLog(root.resolve("pointer"), "p")
+      val outLog = new StoreLog(root.resolve("out"), "b")
+      // pointer swaps go through the CAS commit: a racing maintenance
+      // writer (q327's compaction is the scenario) loses the rename and
+      // must re-read, never silently clobber a swap it didn't see
+      def setPointer(expect: Option[Long], v: Long): Unit =
+        require(pointer.commitNext(expect)(tmp => Seq(Tuple1(v)).toDF("v")
+            .coalesce(1).write.parquet(tmp.toString)).isDefined,
+          s"pointer CAS lost at expected=$expect — concurrent writer")
+      def stage(phase: Long): Unit =
+        Seq(Tuple1(phase)).toDF("phase").coalesce(1)
+          .write.mode("append").parquet(srcDir)
+      setPointer(None, 1L)
+      stage(0L)
+      StreamRun(
+        spark.readStream
+          .schema("phase LONG")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(srcDir),
+        OutputMode.Append,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
+          val sp = batch.sparkSession
+          val phases = batch.collect().map(_.getLong(0)).toSeq.distinct.sorted
+          if (phases.nonEmpty) {
+            // the serving decision each tick: whatever the pointer says NOW
+            val v = pointer.readLatest(sp).get.head.getLong(0)
+            val served = graft.ops.Graph.registryAnnRecall(sp, dir, v)
+              .localCheckpoint()
+            val out = phases.map(p => served
+              .withColumn("phase", lit(p)).withColumn("version", lit(v)))
+              .reduce(_ unionByName _)
+            outLog.commit(id)(tmp =>
+              out.coalesce(1).write.parquet(tmp.toString))
+          }
+        },
+        steps = Seq(
+          () => { setPointer(Some(1L), 2L); stage(1L) }, // CUTOVER, live
+          () => { setPointer(Some(2L), 1L); stage(2L) }, // ROLLBACK, live
+        ),
+        result = () => outLog.readMany(spark, outLog.versions()).get
+          .select($"phase", $"version", $"probe_node", $"n_exact",
+            $"n_hits", $"recall_pct")
+          .orderBy($"phase", $"probe_node")
+          .localCheckpoint())
     }
-    val dst = srcDir.resolve(s"b$seq.parquet")
-    java.nio.file.Files.move(part, dst)
-    java.nio.file.Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(1000000000000L +
-        seq * 60000L))
-    deleteStaged(tmp)
   }
 
   // ---- q330: streaming state erasure (GDPR tombstones) ------------------
@@ -3739,55 +3456,48 @@ object Streams {
   def streamStateErasure(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val tsLong = eventsTsIsLong(spark, dir)
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"gdpr_$uuid")
-    val srcDir = root.resolve("src")
-    val raw = spark.read.schema(eventsSchema(tsLong))
-      .parquet(s"$dir/events.parquet")
-      .select($"event_id", $"user_id",
-        expr("CAST(ROUND(value * 100) AS LONG)").as("cents"))
-    val maxId = raw.agg(max($"event_id")).as[Long].collect().head
-    val ev = raw.withColumn("bkt",
-      expr(s"least(3L, (event_id * 4) DIV ${maxId + 1}L) + 1L"))
-    java.nio.file.Files.createDirectories(srcDir)
-    def stage(df: DataFrame, seq: Int): Unit =
-      stageArrivalBatch(df, root, srcDir, seq)
-    def quarter(k: Int) = ev.filter($"bkt" === k)
-      .select($"user_id", $"cents", lit(false).as("tomb"))
-    stage(quarter(1), 1)
-    stage(quarter(2), 2)
-    // the erasure command batch: one tombstone per erased user
-    stage(ev.where($"user_id" % 97 === 13)
-      .select($"user_id").distinct()
-      .select($"user_id", lit(0L).as("cents"), lit(true).as("tomb")), 3)
-    stage(quarter(3), 4)
-    stage(quarter(4), 5)
-    withRocksDbStore(spark) { withFewStatePartitions(spark) {
+    runStream(spark, "gdpr", rocksDb = true) { root =>
+      val src = root.resolve("src")
+      val raw = spark.read.schema(eventsSchema(tsLong))
+        .parquet(s"$dir/events.parquet")
+        .select($"event_id", $"user_id",
+          expr("CAST(ROUND(value * 100) AS LONG)").as("cents"))
+      val maxId = raw.agg(max($"event_id")).as[Long].collect().head
+      val ev = raw.withColumn("bkt",
+        expr(s"least(3L, (event_id * 4) DIV ${maxId + 1}L) + 1L"))
+      def stage(df: DataFrame, seq: Int): Unit =
+        stageFile(df, src.resolve(s"b$seq.parquet"), seq)
+      def quarter(k: Int) = ev.filter($"bkt" === k)
+        .select($"user_id", $"cents", lit(false).as("tomb"))
+      stage(quarter(1), 1)
+      stage(quarter(2), 2)
+      // the erasure command batch: one tombstone per erased user
+      stage(ev.where($"user_id" % 97 === 13)
+        .select($"user_id").distinct()
+        .select($"user_id", lit(0L).as("cents"), lit(true).as("tomb")), 3)
+      stage(quarter(3), 4)
+      stage(quarter(4), 5)
       implicit val outEnc = Encoders.product[EraseRow]
       val updates = spark.readStream
         .schema("user_id LONG, cents LONG, tomb BOOLEAN")
         .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
+        .parquet(src.toString)
         .as[(Long, Long, Boolean)]
         .groupByKey(_._1)
         .transformWithState(new EraseStateProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
-      val out = runToParquet(updates.toDF(), OutputMode.Update)
       // snapshot = each user's LAST update; a user fully forgotten
       // (tombstoned with no later events) ends at zero and leaves
-      val fin = spark.read.parquet(out)
-        .groupBy($"user_id")
-        .agg(expr("max_by(n_events, ver)").as("n_events"),
-          expr("max_by(sum_cents, ver)").as("sum_cents"))
-        .filter($"n_events" > 0L)
-        .orderBy($"user_id")
-        .localCheckpoint()
-      deleteStaged(root)
-      deleteStaged(java.nio.file.Paths.get(out))
-      fin
-    } }
+      StreamRun(updates.toDF(), OutputMode.Update, () =>
+        spark.read.parquet(outDir(root))
+          .groupBy($"user_id")
+          .agg(expr("max_by(n_events, ver)").as("n_events"),
+            expr("max_by(sum_cents, ver)").as("sum_cents"))
+          .filter($"n_events" > 0L)
+          .orderBy($"user_id")
+          .localCheckpoint())
+    }
   }
 
   // ---- q327: live index compaction under serving ------------------------
@@ -3813,72 +3523,67 @@ object Streams {
     */
   def streamLiveCompaction(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val root = java.nio.file.Paths.get("target", "graft_stream",
-      s"cmp_$uuid")
-    val frag = root.resolve("frag").toString
-    val tidy = root.resolve("tidy").toString
-    graft.ops.Corpus.fragmentPostingsStore(spark, dir, frag)
-    val srcDir = root.resolve("src").toString
-    val pointer = new StoreLog(root.resolve("pointer"), "p")
-    val outLog = new StoreLog(root.resolve("out"), "b")
-    // pointer swaps go through the CAS commit (see q323): compaction
-    // and cutover racing on one pointer serialize on the rename
-    def setPointer(expect: Option[Long], path: String): Unit =
-      require(pointer.commitNext(expect)(tmp =>
-          Seq(Tuple1(path)).toDF("path")
-            .coalesce(1).write.parquet(tmp.toString)).isDefined,
-        s"pointer CAS lost at expected=$expect — concurrent writer")
-    def stage(phase: Long): Unit =
-      Seq(Tuple1(phase)).toDF("phase").coalesce(1)
-        .write.mode("append").parquet(srcDir)
-    setPointer(None, frag)
-    stage(0L)
-    val q = spark.readStream
-      .schema("phase LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val sp = batch.sparkSession
-        val phases = batch.collect().map(_.getLong(0)).toSeq.distinct.sorted
-        if (phases.nonEmpty) {
-          import sp.implicits._
-          // each tick serves from whatever store the pointer names NOW
-          val path = pointer.readLatest(sp).get.head.getString(0)
-          val served = graft.ops.Corpus.bm25FromPostings(
-            sp.read.parquet(path).select($"term", $"doc_id", $"tf"))
-            .orderBy($"bm25".desc, $"doc_id")
-            .limit(10)
-            .localCheckpoint()
-          val out = phases.map(p => served.withColumn("phase", lit(p)))
-            .reduce(_ unionByName _)
-          outLog.commit(id)(tmp =>
-            out.coalesce(1).write.parquet(tmp.toString))
-        }
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      // MAINTENANCE, live: rewrite into a NEW directory, then publish
-      val (before, after, _) = graft.ops.Corpus.compactPartitionedStore(
-        spark, frag, tidy, "pb", "term", targetBytes = 256L * 1024)
-      require(after.files < before.files,
-        s"q327: compaction did not collapse files " +
-          s"(${before.files} -> ${after.files})")
-      setPointer(Some(1L), tidy) // CUTOVER to the compacted store
-      stage(1L)
-      q.processAllAvailable()
-      setPointer(Some(2L), frag) // ROLLBACK — input store never mutated
-      stage(2L)
-      q.processAllAvailable()
-    } finally q.stop()
-    val out = outLog.readMany(spark, outLog.versions()).get
-      .select($"phase", $"doc_id", $"bm25", $"n_qterms")
-      .orderBy($"phase", $"bm25".desc, $"doc_id")
-      .localCheckpoint()
-    deleteStaged(root)
-    out
+    runStream(spark, "cmp", statePartitions = None) { root =>
+      val frag = root.resolve("frag").toString
+      val tidy = root.resolve("tidy").toString
+      graft.ops.Corpus.fragmentPostingsStore(spark, dir, frag)
+      val srcDir = root.resolve("src").toString
+      val pointer = new StoreLog(root.resolve("pointer"), "p")
+      val outLog = new StoreLog(root.resolve("out"), "b")
+      // pointer swaps go through the CAS commit (see q323): compaction
+      // and cutover racing on one pointer serialize on the rename
+      def setPointer(expect: Option[Long], path: String): Unit =
+        require(pointer.commitNext(expect)(tmp =>
+            Seq(Tuple1(path)).toDF("path")
+              .coalesce(1).write.parquet(tmp.toString)).isDefined,
+          s"pointer CAS lost at expected=$expect — concurrent writer")
+      def stage(phase: Long): Unit =
+        Seq(Tuple1(phase)).toDF("phase").coalesce(1)
+          .write.mode("append").parquet(srcDir)
+      setPointer(None, frag)
+      stage(0L)
+      StreamRun(
+        spark.readStream
+          .schema("phase LONG")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(srcDir),
+        OutputMode.Append,
+        sink = Some { (batch: Dataset[Row], id: Long) =>
+          val sp = batch.sparkSession
+          val phases = batch.collect().map(_.getLong(0)).toSeq.distinct.sorted
+          if (phases.nonEmpty) {
+            import sp.implicits._
+            // each tick serves from whatever store the pointer names NOW
+            val path = pointer.readLatest(sp).get.head.getString(0)
+            val served = graft.ops.Corpus.bm25FromPostings(
+              sp.read.parquet(path).select($"term", $"doc_id", $"tf"))
+              .orderBy($"bm25".desc, $"doc_id")
+              .limit(10)
+              .localCheckpoint()
+            val out = phases.map(p => served.withColumn("phase", lit(p)))
+              .reduce(_ unionByName _)
+            outLog.commit(id)(tmp =>
+              out.coalesce(1).write.parquet(tmp.toString))
+          }
+        },
+        steps = Seq(
+          { () =>
+            // MAINTENANCE, live: rewrite into a NEW directory, then publish
+            val (before, after, _) = graft.ops.Corpus.compactPartitionedStore(
+              spark, frag, tidy, "pb", "term", targetBytes = 256L * 1024)
+            require(after.files < before.files,
+              s"q327: compaction did not collapse files " +
+                s"(${before.files} -> ${after.files})")
+            setPointer(Some(1L), tidy) // CUTOVER to the compacted store
+            stage(1L)
+          },
+          // ROLLBACK — input store never mutated
+          () => { setPointer(Some(2L), frag); stage(2L) },
+        ),
+        result = () => outLog.readMany(spark, outLog.versions()).get
+          .select($"phase", $"doc_id", $"bm25", $"n_qterms")
+          .orderBy($"phase", $"bm25".desc, $"doc_id")
+          .localCheckpoint())
+    }
   }
 }

@@ -59,12 +59,27 @@ class Round5Spec extends AnyFunSuite {
   }
 
   test("streaming + bucketed harnesses leave no tables/views behind") {
+    // ... nor staged sources or checkpoints on disk: a returned query
+    // keeps only what its result reads under target/graft_stream
+    val stream = java.nio.file.Paths.get("target", "graft_stream")
+    def roots(): Set[java.nio.file.Path] =
+      if (!java.nio.file.Files.exists(stream)) Set.empty
+      else scala.util.Using.resource(java.nio.file.Files.list(stream)) { fs =>
+        import scala.jdk.CollectionConverters._
+        fs.iterator().asScala.toSet
+      }
+    val rootsBefore = roots()
     val before = spark.catalog.listTables().collect().map(_.name).toSet
     Seq("q73_stream_hourly", "q85_stream_sessions", "q92_stream_enrich",
       "q94_stream_append", "q95_stream_dedup", "q96_stream_attrib",
-      "q97_stream_sessionw").foreach(q => run(q).collect())
+      "q97_stream_sessionw", "q362_stream_analyze")
+      .foreach(q => run(q).collect())
     val after = spark.catalog.listTables().collect().map(_.name).toSet
     val leaked = (after -- before).filter(_.startsWith("graft_stream"))
     assert(leaked.isEmpty, s"harness leaked catalog entries: $leaked")
+    val leftOnDisk = (roots() -- rootsBefore).toSeq.flatMap { r =>
+      Seq("src", "ck").map(r.resolve).filter(java.nio.file.Files.exists(_))
+    }
+    assert(leftOnDisk.isEmpty, s"harness left staging on disk: $leftOnDisk")
   }
 }
