@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Third-pass re-time in a FRESH child JVM for queries whose
     * in-session min blew past 5× their pinned floor (see the call
@@ -97,22 +96,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // The bench contract is local[32] with shuffle.partitions=32; the
-    // v0 scaffold shipped a default of 4 that rounds 1-7 inherited
-    // unquestioned — the generator and every compute-bound query were
-    // leaving 8× the machine idle (gen_block_10m: 17.3 s at 4 threads,
-    // 3.4 s at 32). Env-overridable for constrained local profiling.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the NTZ ts layout is interpreted in the SESSION time zone — pin
-      // UTC like Verify/SqlRunner/tests, or a non-UTC host JVM would
-      // shift every hour bucket and session bound off the verified
-      // results (the legacy LONG-nanos path was TZ-independent)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The bench contract is local[$SPARK_GRAFT_CPUS] (default 32) with as
+    // many shuffle partitions; the v0 scaffold shipped a default of 4
+    // that rounds 1-7 inherited unquestioned — the generator and every
+    // compute-bound query were leaving 8× the machine idle
+    // (gen_block_10m: 17.3 s at 4 threads, 3.4 s at 32).
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("WARN")
     // Per-query task-metrics attribution (r18 verdict item 1): spill,
     // peak execution memory, executor run/CPU time, task count — the
@@ -435,24 +424,36 @@ object Bench {
     // bench_full.json, a digest of the worst offenders to the LINE
     val met1 = scala.collection.mutable.Map.empty[String, (BenchSnap, Long)]
     val met2 = scala.collection.mutable.Map.empty[String, (BenchSnap, Long)]
-    // Deterministic name order: Map iteration order is arbitrary, and a
-    // run-order change shifts which query absorbs shared lazy costs.
-    val pass1 = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // One timed run of `name`, shared by pass 1 and the retime pass:
+    // drain the bus, reset the peak, snapshot the counters and GC, time
+    // `count()`, record the deltas. Returns the elapsed seconds and the
+    // failure, if any; each pass applies its own failure rule.
+    def timedRun(name: String,
+        gc: scala.collection.mutable.Map[String, Long],
+        met: scala.collection.mutable.Map[String, (BenchSnap, Long)],
+    ): (Double, Option[Throwable]) = {
       drainBus(); bm.resetPeak()
       val s0 = bm.snap()
       val g0 = gcMs()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch {
-        case e: Throwable =>
-          // a failed query must not masquerade as a fast one
-          errors += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
+      val err =
+        try { selected(name)(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e) }
       val sec = (System.nanoTime() - t0) / 1e9
-      gc1(name) = gcMs() - g0
+      gc(name) = gcMs() - g0
       drainBus()
-      met1(name) = (bm.snap().delta(s0), bm.peak.get)
+      met(name) = (bm.snap().delta(s0), bm.peak.get)
+      (sec, err)
+    }
+    // Deterministic name order: Map iteration order is arbitrary, and a
+    // run-order change shifts which query absorbs shared lazy costs.
+    val pass1 = selected.keys.toSeq.sorted.map { name =>
+      val (sec, err) = timedRun(name, gc1, met1)
+      err.foreach { e =>
+        // a failed query must not masquerade as a fast one
+        errors += name
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      }
       name -> sec
     }
     // Second pass over the K slowest: a single-pass bench has no defense
@@ -519,26 +520,13 @@ object Bench {
     val pass2 = pass1.filter(p => retimeSet(p._1)).collect {
       case (name, p1time) if !errors.contains(name) =>
         loadRe(name) = loadAvg()
-        drainBus(); bm.resetPeak()
-        val s0 = bm.snap()
-        val g0 = gcMs()
-        val t0 = System.nanoTime()
-        val t =
-          try {
-            selected(name)(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              // a failed retime must NOT win min() with its
-              // elapsed-to-failure time — report pass 1's real number
-              System.err.println(
-                s"[bench] retime $name FAILED: ${e.getMessage}")
-              p1time
-          }
-        gc2(name) = gcMs() - g0
-        drainBus()
-        met2(name) = (bm.snap().delta(s0), bm.peak.get)
-        name -> t
+        val (sec, err) = timedRun(name, gc2, met2)
+        name -> err.fold(sec) { e =>
+          // a failed retime must NOT win min() with its elapsed-to-failure
+          // time — report pass 1's real number
+          System.err.println(s"[bench] retime $name FAILED: ${e.getMessage}")
+          p1time
+        }
     }.toMap
     val inSession = pass1.map { case (k, v) =>
       k -> math.min(v, pass2.getOrElse(k, v))
@@ -671,63 +659,18 @@ object Bench {
           s""""metrics1":${metJson(met1)},"metrics2":${metJson(met2)}}""")
           .getBytes("UTF-8"))
     }
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    // The driver captures only the LAST 2000 chars of stdout and parses
-    // the JSON line out of that window (round 2's full 68-query map at
-    // 9-decimal precision was ~4 KB → truncated at the front → the
-    // driver recorded parsed:null). The round-8 answer was a top-N map
-    // under a char budget, but that hides the TAIL judges need for
-    // regression adjudication (r8's "q81/q78 regressions" were
-    // invisible-tail artifacts). So: emit the COMPLETE per-query vector
-    // whenever it fits the window, degrading key verbosity first and
-    // completeness only as a last resort —
-    //   1. full names, 3-decimals       (fits up to ~60 queries)
-    //   2. qNN short keys, 2-decimals   (fits ~120;
-    //      "q104" ↔ "q104_ewma_decay" is a lossless rename, gen_*
-    //      names have no number and stay full)
-    //   3. bare-number keys ("105" ↔ "q105_..."; gen_* stay full),
-    //      1-decimal, sf as basename, n_queries dropped from the line
-    //      (it stays in bench_full.json) — the r10 path: the 140-query
-    //      vector + the 8-entry dual-pass retimed map no longer fit at
-    //      2dp; this tier keeps the COMPLETE vector with ~12 queries of
-    //      growth headroom, and the heavy tail stays 2dp in "retimed"
-    //   4. the round-8 top-N budget map (never expected; keeps the
-    //      contract unbreakable if the registry triples)
-    // Cap = 1800 chars for the whole line: the driver's 2000-char tail
-    // minus sbt's trailing "[success]" line and headroom for late WARN
-    // chatter (126 queries measured 1706 chars at 2dp short keys).
-    // target/bench_full.json (above) always has full names at full
-    // precision.
-    // locale-safe 3-decimal rendering (f"%..f" honors the JVM locale and
-    // could emit a comma decimal separator, breaking the JSON)
-    def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    def r2(v: Double): String = (math.round(v * 100) / 100.0).toString
-    // tier-3 space saver: "3.0" → "3", "0.0" → "0" (valid JSON numbers;
-    // ~2 chars × every sub-50 ms query buys ~15 queries of registry
-    // headroom before tier-4 truncation)
-    def r1(v: Double): String = {
-      val x = math.round(v * 10) / 10.0
-      if (x == math.rint(x)) x.toLong.toString else x.toString
-    }
-    val sorted = results.sortBy(-_._2)
-    def shortKey(k: String): String =
-      if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
-    def numKey(k: String): String =
-      if (k.matches("q\\d+_.*")) k.drop(1).takeWhile(_ != '_') else k
     // both passes for the re-timed heavy tail, so a drifting number is
     // visible in the round artifact itself, not just the min. The LINE
-    // carries the 8 slowest pairs (char budget — 16 would overflow the
-    // tier-3 cap); min() still uses all retimeK, and bench_full.json
-    // records every pair. Entries are [pass1 s, pass2 s, pass1 GC ms,
-    // pass2 GC ms] — gc UNCONDITIONALLY (the r17 verdict note: the gc
-    // evidence must live in the round artifact itself, not only in
-    // bench_full.json / the usually-absent SUSPECT line), so a variance
-    // blowout is diagnosable from BENCH_r{N}.json alone.
-    val p1 = pass1.toMap
+    // carries the 8 slowest pairs (char budget); min() still uses all
+    // retimeK, and bench_full.json records every pair. Entries are
+    // [pass1 s, pass2 s, pass1 GC ms, pass2 GC ms] — gc UNCONDITIONALLY
+    // (the r17 verdict note: the gc evidence must live in the round
+    // artifact itself, not only in bench_full.json / the usually-absent
+    // SUSPECT line), so a variance blowout is diagnosable from
+    // BENCH_r{N}.json alone.
     val lineRetimes = pass1.sortBy(-_._2).take(8).map(_._1).toSet
     val retimed = pass2.toSeq.filter(kv => lineRetimes(kv._1)).sortBy(_._1)
-      .map { case (k, v2) => "\"" + shortKey(k) + "\":[" + r2(p1(k)) +
+      .map { case (k, v2) => "\"" + shortKey(k) + "\":[" + r2(p1ByName(k)) +
         "," + r2(v2) + "," + gc1.getOrElse(k, -1L) + "," + gc2(k) + "]" }
       .mkString("{", ",", "}")
     // when a SUSPECT retime fires, the round artifact itself carries
@@ -794,86 +737,73 @@ object Bench {
             else Seq(s""""rest":[${rest.size},${r1(rest.map(_._2).sum)}]"""))
       ",\"warm\":" + ents.mkString("{", ",", "}")
     }
-    val extras = susGc + isoLine + diagLine + calLine + warmLine
-    def line(qs: String, omit: String): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"retimed":$retimed$omit$extras,"errors":$errs,"sf":"$sfDir"}"""
-    // tier-3 frame: every non-load-bearing char dropped so the complete
-    // vector survives registry growth — r10 additions at 166 queries:
-    // gen_* keys lose their "gen_" prefix (lossless — no registered
-    // name collides with a bare suffix), and the in-line dual-pass map
-    // keeps the 4 slowest pairs (all retimeK pairs stay in
-    // bench_full.json)
-    val sfBase = sfDir.split('/').last
-    def numKey3(k: String): String =
-      if (k.startsWith("gen_")) k.drop(4) else numKey(k)
-    val lineRetimes3 = pass1.sortBy(-_._2).take(4).map(_._1).toSet
-    val retimed1 = pass2.toSeq.filter(kv => lineRetimes3(kv._1)).sortBy(_._1)
-      .map { case (k, v2) => "\"" + numKey3(k) + "\":[" + r1(p1(k)) +
-        "," + r1(v2) + "," + gc1.getOrElse(k, -1L) + "," + gc2(k) + "]" }
-      .mkString("{", ",", "}")
-    // "errors" stays in EVERY tier, empty or not — prior rounds always
-    // emitted it and the external driver's parser may require the key
-    def line3(qs: String): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"retimed":$retimed1$extras,"errors":$errs,"sf":"$sfBase"}"""
-    // tier 3b: the COMPLETE vector beats in-line dual timings — when the
-    // registry outgrows tier 3 (166 queries measured 1815 chars), drop
-    // the retimed map from the LINE (every pair stays in
-    // target/bench_full.json) before even thinking about truncating the
-    // vector itself
-    def line3b(qs: String): String =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs$extras,"errors":$errs,"sf":"$sfBase"}"""
-    // tier 3c (180 queries measured 1848 chars at 3b): keep every query
-    // at or above 0.25 s individually and collapse the sub-threshold
-    // tail to {"n","sec"} — a VALUE threshold, not a budget cutoff: a
-    // fast query that regresses crosses the threshold and surfaces by
-    // itself next run, while a 0.2 s row carries no adjudicable signal
-    // at 1-decimal resolution anyway. bench_full.json keeps all pairs.
-    def line3c: String = {
-      val (slow, fast) = sorted.partition(_._2 >= 0.25)
-      val qs = slow.map { case (k, v) => "\"" + numKey3(k) + "\":" + r1(v) }
-        .mkString("{", ",", "}")
-      val fastPart =
-        s""","fast":{"n":${fast.size},"sec":${r3(fast.map(_._2).sum)}}"""
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs$fastPart$extras,"errors":$errs,"sf":"$sfBase"}"""
-    }
-    val cap = 1800
-    val fullMap = sorted
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val shortMap = sorted
-      .map { case (k, v) => "\"" + shortKey(k) + "\":" + r2(v) }
-      .mkString("{", ",", "}")
-    val numMap1 = sorted
-      .map { case (k, v) => "\"" + numKey3(k) + "\":" + r1(v) }
-      .mkString("{", ",", "}")
-    val out =
-      if (line(fullMap, "").length <= cap) line(fullMap, "")
-      else if (line(shortMap, "").length <= cap) line(shortMap, "")
-      else if (line3(numMap1).length <= cap) line3(numMap1)
-      else if (line3b(numMap1).length <= cap) line3b(numMap1)
-      else if (line3c.length <= cap) line3c
-      else {
-        // size the queries budget from what the frame + extras actually
-        // cost, so extras growth (warm ledger, isolated evidence) can
-        // never push the line past the driver's tail window
-        val budget = math.max(400, cap - line("{}",
-          s""","queries_omitted":999,"omitted_sec":9999.999""").length)
-        val kept = scala.collection.mutable.ListBuffer.empty[String]
-        var used = 0
-        var omitted = 0
-        var omittedSec = 0.0
-        sorted.foreach { case (k, v) =>
-          val ent = "\"" + k + "\":" + r3(v)
-          if (used + ent.length + 1 <= budget) {
-            kept += ent; used += ent.length + 1
-          } else { omitted += 1; omittedSec += v }
-        }
-        val omit =
-          if (omitted == 0) ""
-          else s""","queries_omitted":$omitted,"omitted_sec":${r3(omittedSec)}"""
-        line(kept.mkString("{", ",", "}"), omit)
-      }
-    println(out)
+    println(jsonLine(results, retimed,
+      susGc + isoLine + diagLine + calLine + warmLine, errors.toSeq, sfDir))
     spark.stop()
+  }
+
+  // locale-safe fixed-decimal rendering (f"%..f" honors the JVM locale
+  // and could emit a comma decimal separator, breaking the JSON)
+  private def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+  private def r2(v: Double): String = (math.round(v * 100) / 100.0).toString
+  // space saver: "3.0" → "3", "0.0" → "0" (valid JSON numbers)
+  private def r1(v: Double): String = {
+    val x = math.round(v * 10) / 10.0
+    if (x == math.rint(x)) x.toLong.toString else x.toString
+  }
+  // "q104" ↔ "q104_ewma_decay" is a lossless rename; gen_* stay full
+  private def shortKey(k: String): String =
+    if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
+
+  /** The driver's one JSON line. The driver captures only the LAST 2000
+    * chars of stdout and parses the line out of that window (round 2's
+    * full 68-query map at 9-decimal precision was ~4 KB → truncated at
+    * the front → the driver recorded parsed:null). Cap = 1800 chars for
+    * the whole line: the window minus sbt's trailing "[success]" line
+    * and headroom for late WARN chatter. Two tiers:
+    *   1. every query under its full name at 3 decimals, when it fits
+    *      (up to ~60 queries);
+    *   2. the budget map: the slowest queries that fit, full names at 3
+    *      decimals, the rest counted in "queries_omitted"/"omitted_sec".
+    * target/bench_full.json always has every query at full precision.
+    *
+    * `results` is the per-query (name, sec) vector in run order (its sum
+    * is the headline total), `retimed` the rendered dual-pass map and
+    * `extras` the rendered `,"key":value` evidence that rides every line.
+    * "errors" stays in the line, empty or not — the external driver's
+    * parser may require the key.
+    */
+  private[graft] def jsonLine(results: Seq[(String, Double)], retimed: String,
+      extras: String, errors: Seq[String], sfDir: String): String = {
+    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def line(qs: String, omit: String): String =
+      s"""{"metric":"total","value":${r3(results.map(_._2).sum)},"unit":"sec","n_queries":${results.size},"queries":$qs,"retimed":$retimed$omit$extras,"errors":$errs,"sf":"$sfDir"}"""
+    val cap = 1800
+    val sorted = results.sortBy(-_._2)
+    val full = line(sorted
+      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      .mkString("{", ",", "}"), "")
+    if (full.length <= cap) full
+    else {
+      // size the queries budget from what the frame + extras actually
+      // cost, so extras growth (warm ledger, isolated evidence) can
+      // never push the line past the driver's tail window
+      val budget = math.max(400, cap - line("{}",
+        s""","queries_omitted":999,"omitted_sec":9999.999""").length)
+      val kept = scala.collection.mutable.ListBuffer.empty[String]
+      var used = 0
+      var omitted = 0
+      var omittedSec = 0.0
+      sorted.foreach { case (k, v) =>
+        val ent = "\"" + k + "\":" + r3(v)
+        if (used + ent.length + 1 <= budget) {
+          kept += ent; used += ent.length + 1
+        } else { omitted += 1; omittedSec += v }
+      }
+      val omit =
+        if (omitted == 0) ""
+        else s""","queries_omitted":$omitted,"omitted_sec":${r3(omittedSec)}"""
+      line(kept.mkString("{", ",", "}"), omit)
+    }
   }
 }

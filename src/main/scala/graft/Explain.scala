@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan for the named
   * queries (all, if none named) — used to audit pushdown, broadcast
-  * choices, and codegen coverage per SURVEY.md's scale checklist.
+  * choices, and codegen coverage per SURVEY.md's scale checklist. The
+  * plan is the pre-execution one; AQE's runtime decisions show in
+  * `graft.tools.Profile`'s final adaptive plan.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName...]
   */
@@ -13,12 +13,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

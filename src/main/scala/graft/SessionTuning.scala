@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive session tuning shared by the harness entrypoints
-  * (Bench, Verify, TimeQ) so the bench and the oracle plan identically.
+  * (Bench, Verify, Profile, Explain) so the bench, the oracle dump and
+  * the profiler plan identically.
   *
   * The one non-default setting (r21, guide §2.2/§2.4 — measured, see
   * OPTIMIZATION_r21.md):
@@ -49,4 +50,20 @@ object SessionTuning {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     aqeConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The one harness session: `local[$SPARK_GRAFT_CPUS]` (default 32,
+    * the bench contract) with as many shuffle partitions, the AQE
+    * settings above, the UI off, and the session time zone pinned to
+    * UTC — the NTZ `ts` layout is read in the session zone, so a non-UTC
+    * host would shift every hour bucket and session bound off the
+    * verified results.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    apply(SparkSession.builder().master(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
 }

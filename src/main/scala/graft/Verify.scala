@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,9 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    // local[32] to match the machine (and the Bench contract); the
-    // correctness dump is IO-heavy but gen_block_10m is compute-bound
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same scale-adaptive AQE tuning as Bench, so the verified plans
-    // and the timed plans are the same plans
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session (SessionTuning), so the verified plans and the
+    // timed plans are the same plans
+    val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // wipe the previous run's streaming sink dirs (same rationale as

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass primitive kernels for text sketching.
   *
-  * Profiling (tools/ProfileDedup, sf0.1) showed the minhash pipeline's
+  * Profiling (round 2, sf0.1) showed the minhash pipeline's
   * wall-clock is dominated by SKETCH CONSTRUCTION, not by the LSH joins:
   * the higher-order-function formulation (split → transform → concat_ws →
   * xxhash64 → array_distinct, then 32 more interpreted passes for the

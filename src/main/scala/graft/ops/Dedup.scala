@@ -78,7 +78,7 @@ object Dedup {
     // + the verification lookups); without a persist Catalyst recomputes
     // the shingling per branch. Sketching runs through the fused native
     // kernels (bit-identical to the HOF twins above, ~15× less per-row
-    // overhead — see tools/ProfileDedup).
+    // overhead, measured stage by stage at sf0.1 in round 2).
     val sketched = df
       .select(
         col(idCol).as("doc"),
@@ -386,8 +386,6 @@ object Dedup {
       iter += 1
     }
     sym.unpersist()
-    if (sys.env.contains("SPARK_GRAFT_CCPROF"))
-      println(s"[cc] converged in $iter sweeps")
     require(done, s"connectedComponents did not converge in $maxIters")
     labels.select(col("node").as("doc_id"), col("label").as("cluster_root"))
   }

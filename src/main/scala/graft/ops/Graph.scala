@@ -107,7 +107,7 @@ object Graph {
     // `broadcastRanks` forces the ranks side of the sweep join to
     // broadcast — only sound when the node set fits an executor, so the
     // default stays shuffle-based (co-partitioned with the cached edge
-    // table). Measured at sf0.1 (ProfileGraph, 587k edges / 15k nodes):
+    // table). Measured at sf0.1 (round 3, 587k edges / 15k nodes):
     // per-sweep ≈ 0.75 s under EITHER strategy — local-mode job overhead
     // dominates, not data movement, so there is nothing left to claw
     // back at this SF; the knob exists for genuinely small graphs.
@@ -189,7 +189,7 @@ object Graph {
     * as a canonical undirected edge list `(a, b)`, `a < b`, one row per
     * edge, materialized ONCE per source dir and shared by every graph
     * kernel over it (q143 triangles, q273 LPA, q287 k-core, q288 link
-    * prediction, q289 PPR). ProfileKCore showed the derive (bounded
+    * prediction, q289 PPR). Round 14 profiling showed the derive (bounded
     * self-join on the order key + distinct) at ~5.5 s cold at sf0.1 —
     * more than the k-core peel itself — and each kernel was re-paying
     * it; with the store, bench q143 dropped 3.5 → 1.7 s and q287

@@ -2323,8 +2323,8 @@ object Streams {
           // file = ONE scan split, so the per-row-heavy melt + partial
           // aggregation upstream of the first exchange ran on one core
           // while the rest idled (r21, guide §2.5 — the q301/q243
-          // single-split shape inside a microbatch; JOBPROF showed the
-          // two single-task ~0.8 s map jobs per batch). The layout is
+          // single-split shape inside a microbatch; per-job timing showed
+          // the two single-task ~0.8 s map jobs per batch). The layout is
           // known here by construction, so spread explicitly by a
           // high-cardinality key; the partials/sketch are partition-
           // independent (additive aggs + k-smallest-distinct), so the
