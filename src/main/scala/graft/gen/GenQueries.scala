@@ -85,9 +85,10 @@ object GenQueries {
 
   /** Block-parallel 10M-event stream — gen_block_1m at 10× N, as a
     * timed proof of the closed-form schedule's flat scaling (SCALE.md:
-    * `Layout.blockAt` is O(log) per block, so the plan — and the
-    * per-event cost — is the SAME at 10⁶ and 10⁷; only the partition
-    * count grows). The bench row should read ~linear in N with zero
+    * each partition seeks its first block once with
+    * `Layout.blocksFrom`, O(log), then walks the rest in O(1) per block,
+    * so the plan — and the per-event cost — is the SAME at 10⁶ and 10⁷;
+    * only the partition count grows). The bench row should read ~linear in N with zero
     * driver-side materialization: the reference's sequential generator
     * is 9.6 s/M, so this N would cost it ~96 s single-thread.
     */

@@ -41,11 +41,6 @@ object Schedule {
   def targetRandom(totalEvents: Long, randomRatio: Double): Long =
     math.rint(totalEvents * randomRatio).toLong
 
-  /** Lazy block iterator — O(1) state, so exact mode streams it and block
-    * mode materializes it (block count is N·ratio + N/L; for truly
-    * planetary N the same recurrence is expressible in closed form per
-    * block index, see the regularity proven by ScheduleSpec).
-    */
   /** Closed-form random-access view of the same schedule: `blockAt(k)`
     * in O(log #blocks), no iteration, no driver materialization — the
     * planetary-N path (`spark.range(numBlocks)` can map any index to its
@@ -62,8 +57,9 @@ object Schedule {
     *  - tail: the remaining randoms up to targetRandom, then unconditional
     *    pattern instances truncated at N.
     *
-    * Equivalence with `blocks()` is property-tested across ratios,
-    * lengths, and adversarial rounding cases (ScheduleSpec).
+    * Equivalence with the controller's recurrence (`blocksFrom`) is
+    * property-tested across ratios, lengths, and adversarial rounding
+    * cases (ScheduleSpec).
     */
   final case class Layout(
       totalEvents: Long,
@@ -123,56 +119,75 @@ object Schedule {
       lo
     }
 
+    /** Block k: the seek of [[blocksFrom]] and one step of the walk. */
     def blockAt(k: Long): Block = {
       require(k >= 0 && k < numBlocks, s"block $k of $numBlocks")
+      blocksFrom(k).next()
+    }
+
+    /** Lazy block iterator from block k on: the controller's own
+      * recurrence, O(1) state and O(1) per block, started from the state
+      * it has reached at block k — `nRandom = k − patternsBefore(k)`,
+      * `nPattern = patternsBefore(k)·L` (every pattern before the last
+      * block is full length) and whether block k−1 was a pattern. The
+      * seek costs one O(log) `patternsBefore`, so a partition of
+      * contiguous block indices seeks once and then walks. Exact mode
+      * streams `blocksFrom(0)`.
+      */
+    def blocksFrom(k: Long): Iterator[Block] = {
+      require(k >= 0 && k <= numBlocks, s"block $k of $numBlocks")
       val before = patternsBefore(k)
-      val isPat  = before < numPatternBlocks && patternPos(before) == k
-      val prevIsPattern = k > 0 && {
-        val pb = patternsBefore(k - 1)
-        pb < numPatternBlocks && patternPos(pb) == k - 1
+      val prevIsPattern = before > 0 && patternPos(before - 1) == k - 1
+      new Walk(k - before, before * L, prevIsPattern)
+    }
+
+    /** Blocks at a run of block indices: the first index and any index
+      * that does not follow its predecessor seek with [[blocksFrom]],
+      * every other one advances the walk by one block.
+      */
+    def cursor(): Long => Block = new (Long => Block) {
+      private var walk: Iterator[Block] = Iterator.empty
+      private var nextK = -1L
+      def apply(k: Long): Block = {
+        if (k != nextK) walk = blocksFrom(k)
+        nextK = k + 1
+        walk.next()
       }
-      if (isPat) {
-        val seqStart = randomsBefore(before) + before * L
-        val len      = math.min(L, totalEvents - seqStart).toInt
-        Block(seqStart, len, isPattern = true, afterPattern = prevIsPattern)
-      } else {
-        val nRandomBefore = k - before
-        val seqStart      = nRandomBefore + before * L
-        Block(seqStart, 1, isPattern = false, afterPattern = prevIsPattern)
+    }
+
+    private final class Walk(
+        private var nRandom: Long,
+        private var nPattern: Long,
+        private var prevWasPattern: Boolean,
+    ) extends Iterator[Block] {
+      def hasNext: Boolean = nRandom + nPattern < totalEvents
+
+      def next(): Block = {
+        val emitted  = nRandom + nPattern
+        val ratioNow = nRandom.toDouble / math.max(1L, emitted)
+        val insertRandom =
+          (ratioNow < randomRatio || nPattern + patternLen > tP) &&
+            nRandom < tR
+        val b =
+          if (insertRandom) {
+            nRandom += 1
+            Block(emitted, 1, isPattern = false, afterPattern = prevWasPattern)
+          } else {
+            val len = math.min(L, totalEvents - emitted).toInt
+            nPattern += len
+            Block(emitted, len, isPattern = true, afterPattern = prevWasPattern)
+          }
+        prevWasPattern = b.isPattern
+        b
       }
     }
   }
 
+  /** The whole schedule in emission order ≡ `Layout.blocksFrom(0)`. */
   def blocks(
       totalEvents: Long,
       randomRatio: Double,
       patternLen: Int,
-  ): Iterator[Block] = new Iterator[Block] {
-    private val tR = targetRandom(totalEvents, randomRatio)
-    private val tP = totalEvents - tR
-    private var nRandom  = 0L
-    private var nPattern = 0L
-    private var prevWasPattern = false
-
-    def hasNext: Boolean = nRandom + nPattern < totalEvents
-
-    def next(): Block = {
-      val emitted  = nRandom + nPattern
-      val ratioNow = nRandom.toDouble / math.max(1L, emitted)
-      val insertRandom =
-        (ratioNow < randomRatio || nPattern + patternLen > tP) &&
-          nRandom < tR
-      val b =
-        if (insertRandom) {
-          nRandom += 1
-          Block(emitted, 1, isPattern = false, afterPattern = prevWasPattern)
-        } else {
-          val len = math.min(patternLen.toLong, totalEvents - emitted).toInt
-          nPattern += len
-          Block(emitted, len, isPattern = true, afterPattern = prevWasPattern)
-        }
-      prevWasPattern = b.isPattern
-      b
-    }
-  }
+  ): Iterator[Block] =
+    Layout(totalEvents, randomRatio, patternLen).blocksFrom(0)
 }

@@ -52,8 +52,11 @@ final case class StreamSpec(
     case IntervalDist.Uniform   => (randLow + randHigh) / 2.0
   }
 
-  /** Mean gap inside pattern instances (from the gap matrices). */
-  def patternMeanGap: Double = {
+  /** Mean gap inside pattern instances (from the gap matrices). Computed
+    * once per instance, on first use: block mode reads it for every block.
+    * Transient, so neither equality nor the serialized spec changes.
+    */
+  @transient lazy val patternMeanGap: Double = {
     val g = patterns.gaps.flatten
     if (g.isEmpty) 1.0 else g.sum.toDouble / g.length
   }
@@ -61,7 +64,7 @@ final case class StreamSpec(
   /** Mean ticks per event at unit rate (blend of random-event intervals
     * and pattern gaps incl. the zero first-gap and +1 rest).
     */
-  def meanTicksPerEvent: Double = {
+  @transient lazy val meanTicksPerEvent: Double = {
     val l = math.max(2, patterns.length)
     randomRatio * meanBase +
       (1.0 - randomRatio) * ((l - 1) * patternMeanGap + 1.0) / l
@@ -73,6 +76,14 @@ final case class StreamSpec(
     * where the rate is high) without any sequential driver pass: for Sin,
     * F has a closed form and t̂ comes from a few Newton steps on the
     * strictly-increasing F (r ≥ 1e-6). Density None is exact linear.
+    *
+    * Newton runs at most 30 steps. Each step is a pure function of the
+    * iterate, so once an iterate repeats the rest of the sequence is
+    * known: at a fixed point every later step returns it, and in a
+    * 2-cycle step 30 lands on the member of matching parity. Stopping
+    * there returns bit for bit what the 30th step would (GenSpec keeps
+    * the 30-step loop to compare against); most blocks reach a fixed
+    * point within 3–9 steps.
     */
   def expectedClock(s: Long): Double = density match {
     case DensityMode.None => s * meanTicksPerEvent
@@ -82,13 +93,22 @@ final case class StreamSpec(
       val c      = amp * p / (2.0 * math.Pi)
       def bigF(t: Double): Double =
         baseRate * (t + c * (1.0 - math.cos(2.0 * math.Pi * t / p)))
-      var t = target / math.max(1e-6, baseRate) // linear initial guess
-      var i = 0
+      def same(a: Double, b: Double): Boolean =
+        java.lang.Double.doubleToRawLongBits(a) ==
+          java.lang.Double.doubleToRawLongBits(b)
+      var t    = target / math.max(1e-6, baseRate) // linear initial guess
+      var prev = t
+      var i    = 0
       while (i < 30) {
-        val f  = bigF(t) - target
-        val fp = Rng.densityScale(math.rint(t).toLong, density)
-        t -= f / fp
+        val f    = bigF(t) - target
+        val fp   = Rng.densityScale(math.rint(t).toLong, density)
+        val next = t - f / fp
         i += 1
+        if (same(next, t)) return math.max(0.0, t) // fixed point
+        if (i > 1 && same(next, prev)) // 2-cycle: step i landed on next
+          return math.max(0.0, if ((30 - i) % 2 == 0) next else t)
+        prev = t
+        t = next
       }
       math.max(0.0, t)
   }
@@ -218,11 +238,10 @@ object StreamGen {
     val lead = if (b.afterPattern) 1L else 0L
     val out = new Array[(Long, Long, Int, Boolean)](b.len)
     val stepGap = if (b.isPattern) spec.patternMeanGap else spec.meanBase
+    val rateAtStart =
+      Rng.densityScale(math.rint(approxStart).toLong, spec.density)
     def tApprox(localSeq: Long): Long =
-      math.rint(
-        approxStart + localSeq * stepGap /
-          Rng.densityScale(math.rint(approxStart).toLong, spec.density)
-      ).toLong
+      math.rint(approxStart + localSeq * stepGap / rateAtStart).toLong
     if (!b.isPattern) {
       val base = Rng.interval(spec.randIntervalBase, spec.randIntervalDist,
         rng, spec.randLow, spec.randHigh)
@@ -268,11 +287,10 @@ object StreamGen {
     val pat = spec.patterns
     val lead = if (b.afterPattern) 1L else 0L
     val stepGap = if (b.isPattern) spec.patternMeanGap else spec.meanBase
+    val rateAtStart =
+      Rng.densityScale(math.rint(approxStart).toLong, spec.density)
     def tApprox(localSeq: Long): Long =
-      math.rint(
-        approxStart + localSeq * stepGap /
-          Rng.densityScale(math.rint(approxStart).toLong, spec.density)
-      ).toLong
+      math.rint(approxStart + localSeq * stepGap / rateAtStart).toLong
     if (!b.isPattern) {
       val base = Rng.interval(spec.randIntervalBase, spec.randIntervalDist,
         rng, spec.randLow, spec.randHigh)
@@ -297,19 +315,23 @@ object StreamGen {
   /** Block-parallel mode: closed-form schedule → `spark.range` over block
     * indices → parallel fill → two-pass prefix sum. NOTHING is
     * materialized on the driver — any executor maps any block index to
-    * its block (`Schedule.Layout.blockAt`, O(log)) and to its expected
-    * clock (`StreamSpec.expectedClock`, closed form), so the plan is the
-    * same at N=10⁶ and N=10¹². Range partitions are contiguous index
-    * spans, so per-partition running gap sums compose with one tiny
-    * offsets collect (one long per partition).
+    * its block and to its expected clock (`StreamSpec.expectedClock`,
+    * closed form), so the plan is the same at N=10⁶ and N=10¹². Range
+    * partitions are contiguous index spans: each seeks its first block
+    * once (`Schedule.Layout.blocksFrom`, O(log)) and walks the rest with
+    * the controller's O(1) recurrence, and per-partition running gap sums
+    * compose with one tiny offsets collect (one long per partition).
     *
     * Pass 1 is the gap-only [[blockGapSum]] sweep, pass 2 the full fill.
     * MEASURED (sf: 1M events, local[32], 2 runs each): recompute 1.85/1.92 s;
     * persist(MEMORY_AND_DISK_SER) 2.80/3.34 s; persist(MEMORY_AND_DISK)
-    * 2.46/2.52 s — caching the filled tuples LOSES to recomputation at any
-    * scale (the fill is ~10M ev/s/core of pure counter-RNG compute, cheaper
-    * per row than cache serialization/GC), so the two passes stay
-    * persist-free and pass 1 just got lighter instead.
+    * 2.46/2.52 s — caching the filled tuples LOSES to recomputation, so
+    * the two passes stay persist-free. Those runs paid ~7,500 ns of task
+    * CPU per event, most of it two binary searches and 30 Newton steps
+    * per block in each pass; with one seek per partition and Newton's
+    * early stop both passes together cost ~1,300 ns per event (perfbench
+    * gen_stream, 500k events, local[4] on 4 vCPUs), so recomputation only
+    * gained on the cache.
     */
   def block(
       spark: SparkSession,
@@ -330,11 +352,12 @@ object StreamGen {
     // allocation, no type sampling); tiny collect: one long per partition
     val partSums = blockIdx
       .mapPartitionsWithIndex { (i, it) =>
+        val spec  = bcSpec.value
+        val at    = layout.cursor()
         var s = 0L
         it.foreach { k =>
-          val b = layout.blockAt(k)
-          s += blockGapSum(bcSpec.value, b,
-            bcSpec.value.expectedClock(b.seqStart))
+          val b = at(k)
+          s += blockGapSum(spec, b, spec.expectedClock(b.seqStart))
         }
         Iterator((i, s))
       }
@@ -345,10 +368,12 @@ object StreamGen {
 
     // pass 2: full fill + partition-local running sum + broadcast offset
     val events = blockIdx.mapPartitionsWithIndex { (i, it) =>
+      val spec = bcSpec.value
+      val at   = layout.cursor()
       var t = offsets(i)
       it.flatMap { k =>
-        val b = layout.blockAt(k)
-        fillBlock(bcSpec.value, b, bcSpec.value.expectedClock(b.seqStart))
+        val b = at(k)
+        fillBlock(spec, b, spec.expectedClock(b.seqStart))
           .map { case (seq, gap, tpe, isPat) =>
             t += gap
             Event(seq, t, tpe, isPat)
@@ -394,13 +419,22 @@ object StreamGen {
     val b      = layout.numBlocks
     val gaps = spark.sparkContext
       .range(0L, nStreams * b, 1, nPart)
-      .flatMap { g =>
-        val sid   = g / b
-        val blk   = layout.blockAt(g % b)
-        val sSpec = bcSpec.value.copy(
-          seed = Rng.mix64(bcSpec.value.seed ^ (sid + 0x5851F42D4C957F2DL)))
-        fillBlock(sSpec, blk, sSpec.expectedClock(blk.seqStart))
-          .map { case (seq, gap, tpe, isPat) => (sid, seq, gap, tpe, isPat) }
+      .mapPartitions { it =>
+        // block index g % b restarts at 0 on each stream boundary, where
+        // the cursor seeks afresh; the stream's spec is built once
+        val at    = layout.cursor()
+        var sid   = -1L
+        var sSpec = bcSpec.value
+        it.flatMap { g =>
+          if (g / b != sid) {
+            sid = g / b
+            sSpec = bcSpec.value.copy(
+              seed = Rng.mix64(bcSpec.value.seed ^ (sid + 0x5851F42D4C957F2DL)))
+          }
+          val blk = at(g % b)
+          fillBlock(sSpec, blk, sSpec.expectedClock(blk.seqStart))
+            .map { case (seq, gap, tpe, isPat) => (sid, seq, gap, tpe, isPat) }
+        }
       }
     implicit val enc = Encoders.product[KeyedEvent]
     val df = spark.createDataFrame(

@@ -97,6 +97,98 @@ class GenSpec extends AnyFunSuite {
     assert(p4.toVector == ex)
   }
 
+  /** SHA-256 of a stream's rows in seq order, one `seq,ts,type,pattern`
+    * line each.
+    */
+  private def digest(events: Seq[Event]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    events.sortBy(_.seq).foreach { e =>
+      md.update(s"${e.seq},${e.ts},${e.event_type},${e.is_pattern}\n"
+        .getBytes("UTF-8"))
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  private lazy val densityRows: Map[Int, Vector[Event]] =
+    Seq(1, 4, 13).map { p =>
+      p -> StreamGen.block(SparkTestSession.spark, demoSpec(50000), p)
+        .collect().sortBy(_.seq).toVector
+    }.toMap
+
+  test("block mode with Sin density: partition-count independent") {
+    val p1 = densityRows(1)
+    assert(densityRows(4) == p1, "4 partitions differ from 1")
+    assert(densityRows(13) == p1, "13 partitions differ from 1")
+    assert(p1.length == 50000)
+    assert(p1.count(!_.is_pattern) == 35000)
+    assert(p1.sliding(2).forall(p => p(0).ts <= p(1).ts))
+  }
+
+  test("block mode with Sin density: rows match the pinned digest") {
+    // block(demoSpec(50000)) as generated before the schedule walk and
+    // the Newton early stop: both must leave every byte unchanged
+    assert(digest(densityRows(4)) ==
+      "092b622fb0518e3777789797114b5f97d0e2fc057d1c8be3e5339c284cfea34e")
+  }
+
+  /** `expectedClock` as a plain 30-step Newton loop, kept verbatim as
+    * the oracle for the early-stopping one; `iterates` records t after
+    * every step.
+    */
+  private def clock30(spec: StreamSpec, s: Long,
+      iterates: collection.mutable.ArrayBuffer[Double]): Double = {
+    val density = spec.density
+    density match {
+      case DensityMode.None => s * spec.meanTicksPerEvent
+      case DensityMode.Sin(baseRate, period, amp) =>
+        val target = s * spec.meanTicksPerEvent
+        val p      = math.max(1.0, period)
+        val c      = amp * p / (2.0 * math.Pi)
+        def bigF(t: Double): Double =
+          baseRate * (t + c * (1.0 - math.cos(2.0 * math.Pi * t / p)))
+        var t = target / math.max(1e-6, baseRate) // linear initial guess
+        var i = 0
+        while (i < 30) {
+          val f  = bigF(t) - target
+          val fp = Rng.densityScale(math.rint(t).toLong, density)
+          t -= f / fp
+          i += 1
+          iterates += t
+        }
+        math.max(0.0, t)
+    }
+  }
+
+  test("expectedClock ≡ the 30-step Newton loop on every block") {
+    val variants = Seq(
+      demoSpec(500000), // 21% of its blocks end in a 2-cycle
+      demoSpec(40007).copy(
+        density = DensityMode.Sin(baseRate = 1.0, period = 500.0, amp = 0.5)),
+      demoSpec(100000).copy( // 1% repeat no iterate within 30 steps
+        density = DensityMode.Sin(baseRate = 2.5, period = 3000.0, amp = 0.9)),
+    )
+    val bits = java.lang.Double.doubleToRawLongBits _
+    val its  = collection.mutable.ArrayBuffer.empty[Double]
+    var fixed, cycle, neither = 0
+    for (spec <- variants) {
+      Schedule.blocks(spec.totalEvents, spec.randomRatio, spec.patterns.length)
+        .foreach { b =>
+          its.clear()
+          val want = clock30(spec, b.seqStart, its)
+          val got  = spec.expectedClock(b.seqStart)
+          assert(bits(got) == bits(want),
+            s"block at seq ${b.seqStart}: $got vs $want in ${spec.density}")
+          val steps = its.indices.drop(1)
+          if (steps.exists(i => bits(its(i)) == bits(its(i - 1)))) fixed += 1
+          else if (steps.drop(1).exists(i => bits(its(i)) == bits(its(i - 2))))
+            cycle += 1
+          else neither += 1
+        }
+    }
+    // every way out of the loop is exercised: fixed point, 2-cycle, cap
+    assert(fixed > 0 && cycle > 0 && neither > 0, s"$fixed $cycle $neither")
+  }
+
   test("ratio edge cases: 0.0 (all pattern) and 1.0 (all random)") {
     val s0 = demoSpec(1000).copy(randomRatio = 0.0)
     val e0 = StreamGen.exactIterator(s0).toVector

@@ -27,6 +27,35 @@ class ScheduleSpec extends AnyFunSuite {
     }
   }
 
+  test("blocksFrom(k) resumes the recurrence at block k") {
+    // the seek rebuilds the controller's counters from the closed form;
+    // checked where each phase begins and ends, incl. a truncated tail
+    val rnd = new scala.util.Random(4L)
+    var truncatedTails = 0
+    for (r <- ratios; l <- lens; n <- sizes) {
+      val iter   = Schedule.blocks(n, r, l).toVector
+      val layout = Schedule.Layout(n, r, l)
+      val nb     = iter.length.toLong
+      val mFull  = (n - Schedule.targetRandom(n, r)) / l
+      val patIdx = iter.indices.filter(iter(_).isPattern)
+      val firstTail = if (mFull == 0) 0L else patIdx(mFull.toInt - 1) + 1L
+      if (iter.last.isPattern && iter.last.len < l) truncatedTails += 1
+      val ks = (Seq(0L, 1L, firstTail, nb - 1) ++
+        Seq.fill(20)(rnd.nextLong(nb))).filter(k => k >= 0 && k < nb)
+      ks.foreach { k =>
+        assert(layout.blocksFrom(k).toVector == iter.drop(k.toInt),
+          s"n=$n r=$r L=$l from block $k")
+      }
+      assert(layout.blocksFrom(nb).isEmpty)
+      // the cursor walks runs of indices and seeks again on every jump
+      val at = layout.cursor()
+      val run = ((0L until 5L) ++ (nb / 2 until nb / 2 + 5) ++ (2L until 4L))
+        .filter(_ < nb)
+      run.foreach(k => assert(at(k) == iter(k.toInt), s"cursor at $k"))
+    }
+    assert(truncatedTails > 0, "grid must include a truncated last pattern")
+  }
+
   test("randomsBefore returns the MINIMAL satisfying count, incl. huge N") {
     // The closed form estimates a start point and walks the ratio
     // predicate; if the FP estimate ever overshoots, a non-minimal x
