@@ -1,8 +1,8 @@
 package graft
 object Bench {
-  /** Third-pass re-time in a FRESH child JVM for queries whose
-    * in-session min blew past 5× their pinned floor (see the call
-    * site for why). The child is this same main with
+  /** Third-pass re-time in a FRESH child JVM for the queries
+    * `retimes` sends there (in-session min more than 5× its record; see
+    * the call site for why). The child is this same main with
     * `SPARK_GRAFT_ONLY=<names>` + `SPARK_GRAFT_ISOLATED=1` (recursion
     * guard) and writes its full-precision result file to a side path
     * the parent parses. Flags are inherited verbatim from this JVM's
@@ -60,34 +60,18 @@ object Bench {
           s"[bench] isolated child exited ${proc.exitValue()}")
         return Map.empty
       }
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(sidePath)), "UTF-8")
-      // we own the format: {"min":{"name":sec,...},...} — "min" is the
-      // FIRST key and its values are plain numbers, so first-'}' closes
-      // it. Any drift (key moved, missing file contract) must fail
-      // LOUDLY, not dissolve into an empty map that silently drops the
-      // isolation evidence (r19 advice).
-      val minObj = {
-        val i = txt.indexOf("\"min\":{")
-        if (i < 0) {
-          System.err.println(
-            "[bench] isolated child result has no leading \"min\" object " +
-              s"— format drift? head: ${txt.take(160)}")
-          return Map.empty
-        }
-        val j = txt.indexOf("}", i)
-        if (j < 0) {
-          System.err.println(
-            "[bench] isolated child result's \"min\" object is unclosed " +
-              s"— truncated write? tail: ${txt.takeRight(160)}")
-          return Map.empty
-        }
-        txt.substring(i + 7, j)
-      }
-      val ent = """"([^"]+)":([0-9][0-9.eE+-]*)""".r
-      ent.findAllMatchIn(minObj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        .filter { case (k, _) => names.contains(k) }
+      // a missing "min" object must fail LOUDLY, not dissolve into an
+      // empty map that silently drops the isolation evidence (r19 advice);
+      // an unparseable (truncated) file throws into the catch below
+      val min = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(sidePath)).get("min")
+      if (min == null || !min.isObject) {
+        System.err.println(
+          s"[bench] isolated child result $sidePath has no \"min\" object " +
+            "— no isolated numbers this run")
+        Map.empty
+      } else names.flatMap(n =>
+        Option(min.get(n)).filter(_.isNumber).map(n -> _.asDouble)).toMap
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] isolated pass failed: ${e.getMessage}")
@@ -231,7 +215,7 @@ object Bench {
     // gen_block_1m (alphabetically the run-first query) doesn't absorb
     // it — r5 showed it 2× its isolated time purely from run-first
     // position
-    warm("gen_block slice") {
+    warm("generator slice") {
       gen.StreamGen.block(spark, gen.GenQueries.demoSpec(2000L))
         .count(): Unit
     }
@@ -262,17 +246,18 @@ object Bench {
         .attributionRightOuter(spark, srcDir.toString).count(): Unit
     }
     // Persisted derived-artifact stores (walk corpus, LPA labeling,
-    // incremental-triangle snapshot): build-if-absent STORAGE shared
-    // across queries — warming them here makes the timed numbers
-    // measure SERVING, not a build that lands on whichever query runs
-    // first (r14/r15 showed q291 at 7.8 vs 14.6 s and q273 at 0.2 vs
+    // node embeddings, incremental-triangle snapshot): build-if-absent
+    // STORAGE shared across queries — warming them here makes the timed
+    // numbers measure SERVING, not a build that lands on whichever query
+    // runs first (r14/r15 showed q291 at 7.8 vs 14.6 s and q273 at 0.2 vs
     // 5.8 s purely on store warmth). The build cost is still visible:
-    // it is this warm step's own wall time, printed on failure and
-    // attributable in the harness log.
-    warm("derived-artifact stores") {
-      ops.Graph.walkStore(spark, sfDir).count(): Unit
-      ops.Graph.lpaStore(spark, sfDir).count(): Unit
+    // it is each store's own warm step in the ledger.
+    warm("walk corpus store")(ops.Graph.walkStore(spark, sfDir).count(): Unit)
+    warm("LPA label store")(ops.Graph.lpaStore(spark, sfDir).count(): Unit)
+    warm("embedding store") {
       ops.Graph.embeddingStore(spark, sfDir).count(): Unit
+    }
+    warm("incremental-triangle snapshot store") {
       val (edges, stats) = ops.Graph.incTriangleStore(spark, sfDir)
       edges.count(): Unit
       stats.count(): Unit
@@ -318,12 +303,6 @@ object Bench {
     // bench_full.json (r20 verdict item 1).
     warm("erased signature store") {
       graft.ops.Dedup.erasedSigStore(spark, sfDir): Unit
-    }
-    warm("incremental-triangle snapshot store") {
-      graft.ops.Graph.incTriangleStore(spark, sfDir)._1.count(): Unit
-    }
-    warm("walk corpus store") {
-      graft.ops.Graph.walkStore(spark, sfDir).count(): Unit
     }
     // ---- host-contention evidence (r19 verdict item 1) ----------------
     // The r19 record carried ~300 s of inflation the artifact could
@@ -379,26 +358,27 @@ object Bench {
     probePoint()
     // ---- prior-round per-query record (r19 verdict item 2) ------------
     // tools/bench_history.json pins each query's best OFFICIAL record
-    // (elementwise min over the last rounds' artifacts). Any query
-    // whose pass-1 blows 3x its record earns a second pass regardless
-    // of rank — q337 sat at 2.8x its stable record in r19 and escaped
-    // both the top-16 net and the hand-pinned list.
+    // (elementwise min over the last rounds' artifacts); `retimes`
+    // derives every record rule from it.
     val history: Map[String, Double] = {
+      import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(sys.env.getOrElse(
         "SPARK_GRAFT_HISTORY", "tools/bench_history.json"))
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else
+      val (h, why) =
         try {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          """"([^"]+)":([0-9][0-9.eE+-]*)""".r.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
+          val recs = new com.fasterxml.jackson.databind.ObjectMapper()
+            .readTree(p.toFile).properties.asScala
+            .collect { case e if e.getValue.isNumber =>
+              e.getKey -> e.getValue.asDouble }.toMap
+          (recs, "has no numeric records")
         } catch {
           case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[bench] history file unreadable (${e.getMessage}) — " +
-                "record-blown retimes disabled this run")
-            Map.empty
+            (Map.empty[String, Double], s"is unreadable (${e.getMessage})")
         }
+      if (h.isEmpty) System.err.println(
+        s"[bench] history file $p $why — record rules off this run: " +
+          "no record-blown second pass, no fresh-JVM retime")
+      h
     }
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // Optional local-profiling filter (comma-separated names). The driver
@@ -456,68 +436,25 @@ object Bench {
       }
       name -> sec
     }
-    // Second pass over the K slowest: a single-pass bench has no defense
+    // Second pass (see `retimes`): a single-pass bench has no defense
     // against a contended-machine artifact — the r9 snapshot recorded
     // gen_block_10m at 8× its clean time and four other phantom 2-3×
-    // "regressions" that cost a judging session to disprove. Re-time the
-    // heavy tail and report min(pass1, pass2) per query (both passes go
-    // to the JSON for drift visibility): a genuine regression survives
-    // both passes; a noisy neighbor doesn't survive two.
-    // 16 covers the whole heavy tail (a contended host inflates many
-    // queries at once — the 333 s vs 191 s double-run this round was
-    // pass-1 noise across the board, not regressions); the LINE still
-    // shows only the 8 slowest pairs (char budget), bench_full.json all.
-    val retimeK = 16
-    // Pinned watchlist: queries a past round flagged as possible
-    // regressions get BOTH passes regardless of rank, so a one-off
-    // contention spike can never masquerade as a plan regression for a
-    // query that happens to sit outside the top-K (r11's
-    // q95/gen_pattern_detect/q03/q04 scare was exactly this — all four
-    // came back clean once double-passed).
-    val pinned = Set("q95_stream_dedup", "gen_pattern_detect",
-      "q03_topk_orders", "q04_brand_volume",
-      // r13: single-partition fan regression fixed by explicit-count
-      // repartition — watch it stays fixed
-      "q243_bh_fdr",
-      // r13: unbounded-levenshtein cost fixed by factored predicates +
-      // thresholded edit distance — watch it stays fixed (r14 rewrote
-      // the blocking onto the vocabulary grid; keep watching)
-      "q253_entity_resolution",
-      // r13 bench drifted 2.18 → 2.94 s single-passed — pin until a
-      // dual pass settles it
-      "q96_stream_attrib",
-      // r14: the streaming graph-maintenance harness retimes showed
-      // real session-state variance (8.3/17.5 and 9.9/18.6 across
-      // runs) — keep it dual-passed even if it drops out of the top-K
-      "q291_stream_triangles",
-      // r14: sparse+broadcast rewrite measured 6.2 s isolated but
-      // 8.6-8.8 inside full bench sessions — watch the gap
-      "q289_personalized_pagerank",
-      // r14 verdict: 3-9x pass spread on the new graph/streaming
-      // family (q242 11.3->1.2, q267 10.3/8.6) — dual-pass the whole
-      // family so single-pass spikes never read as regressions
-      "q242_mann_whitney",
-      "q267_stream_episode_mining")
-    // record-blown net (r19 verdict item 2): any query whose pass-1
-    // exceeds 3x its best prior-round record gets a second pass. The
-    // 0.75 s absolute floor keeps sub-second noise (a 0.1 -> 0.35 s
-    // wobble) from burning retime budget.
-    val recordBlown = pass1.collect {
-      case (name, t) if t >= 0.75 &&
-        history.get(name).exists(h => t > 3 * h) => name
-    }
-    recordBlown.foreach { n =>
+    // "regressions" that cost a judging session to disprove. Report
+    // min(pass1, pass2) per query (both passes go to the JSON for drift
+    // visibility): a genuine regression survives both passes; a noisy
+    // neighbor doesn't survive two.
+    val plan1 = retimes(pass1, Map.empty, history)
+    val p1ByName = pass1.toMap
+    plan1.recordBlown.foreach { n =>
       System.err.println(f"[bench] RECORD-BLOWN: $n pass1 ${
-        pass1.toMap.apply(n)}%.2f s > 3x record ${history(n)}%.2f s — retiming")
+        p1ByName(n)}%.2f s > 3x record ${history(n)}%.2f s — retiming")
     }
-    val retimeSet = (pass1.sortBy(-_._2).take(retimeK).map(_._1) ++
-      pass1.map(_._1).filter(pinned) ++ recordBlown).toSet
     probePoint() // mid-session: between pass 1 and the retime pass
     // 1-min load average sampled just before each retime: a retime that
     // stays slow UNDER a loadavg >> ncpu is adjudicated contended, one
     // at loadavg ~ ncpu is a real plan/state question
     val loadRe = scala.collection.mutable.Map.empty[String, Double]
-    val pass2 = pass1.filter(p => retimeSet(p._1)).collect {
+    val pass2 = pass1.filter(p => plan1.second(p._1)).collect {
       case (name, p1time) if !errors.contains(name) =>
         loadRe(name) = loadAvg()
         val (sec, err) = timedRun(name, gc2, met2)
@@ -528,6 +465,7 @@ object Bench {
           p1time
         }
     }.toMap
+    val plan2 = retimes(pass1, pass2, history)
     val inSession = pass1.map { case (k, v) =>
       k -> math.min(v, pass2.getOrElse(k, v))
     }
@@ -536,68 +474,29 @@ object Bench {
     // SESSION POLLUTION: r18 recorded q243 at 93.23 s on BOTH passes —
     // identical, deterministic — against a 5.3 s standalone floor
     // re-proven the same day, and that one artifact carried 100 s of
-    // harness state into the official record. So: any query whose
-    // in-session min blows past 5× its pinned historical floor gets a
-    // third timing in a FRESH child JVM (same classpath, same flags,
-    // same sf dir, SPARK_GRAFT_ONLY= filter). The artifact reports
-    // min(in-session, isolated) per query AND the raw pair under
+    // harness state into the official record. So the queries `retimes`
+    // picks get a third timing in a FRESH child JVM (same classpath,
+    // same flags, same sf dir, SPARK_GRAFT_ONLY= filter). The artifact
+    // reports min(in-session, isolated) per query AND the raw pair under
     // "isolated" — the blowup stays visible as evidence, it just stops
-    // polluting the headline number. Floors are deliberately generous
-    // (the trigger is 5×): a genuine 2-3× plan regression still
-    // surfaces through the normal dual-pass numbers and history diffs.
-    val floors = Map(
-      "q243_bh_fdr" -> 6.5, "gen_detect_10m" -> 5.5,
-      // r19: broadcast-deg + every-sweep truncation took q289's steady
-      // state to 3.2 s — floor set above the pass-1 store-warm cost
-      "gen_block_10m" -> 5.0, "q289_personalized_pagerank" -> 5.0,
-      "q291_stream_triangles" -> 15.0, "q281_stream_markov" -> 10.0,
-      "q267_stream_episode_mining" -> 8.0, "q327_live_compaction" -> 9.0,
-      "q301_fuzzy_decontam" -> 5.0, "q253_entity_resolution" -> 5.5,
-      "q03_topk_orders" -> 1.5, "q242_mann_whitney" -> 1.5,
-      "q75_pagerank" -> 6.0, "q287_kcore" -> 6.0)
-    // cap the isolation list at the 6 worst offenders (by blowup
-    // ratio): a fully-contended host could blow every floor at once,
-    // and an unbounded child-JVM budget (300 + 120·N s) must not stall
-    // the round — the remaining blowups stay visible in the dual-pass
-    // numbers and the diag metrics
-    // test/diagnostic override: force-isolate named queries regardless
-    // of floors (exercises the child-JVM path without a real blowup)
-    val forced = sys.env.get("SPARK_GRAFT_FORCE_ISOLATE")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val blown = (inSession.collect {
-      case (k, v) if floors.get(k).exists(f => v > 5 * f) =>
-        (k, v / floors(k))
-    }.sortBy(-_._2).take(6).map(_._1) ++
-      inSession.map(_._1).filter(forced)).distinct.sorted
+    // polluting the headline number.
+    val inSessByName = inSession.toMap
     val isolated: Map[String, Double] =
-      if (blown.isEmpty || sys.env.contains("SPARK_GRAFT_ISOLATED")) Map.empty
+      if (plan2.fresh.isEmpty || sys.env.contains("SPARK_GRAFT_ISOLATED"))
+        Map.empty
       else {
-        blown.foreach(n => System.err.println(
-          s"[bench] ISOLATE: $n (" +
-            (if (forced(n)) "forced via SPARK_GRAFT_FORCE_ISOLATE"
-             else "in-session min > 5x pinned floor") +
-            ") — re-timing in a fresh JVM"))
-        runIsolated(blown, sfDir)
+        plan2.fresh.foreach(n => System.err.println(
+          f"[bench] ISOLATE: $n in-session min ${inSessByName(n)}%.2f s > " +
+            f"5x record ${history(n)}%.2f s — re-timing in a fresh JVM"))
+        runIsolated(plan2.fresh, sfDir)
       }
     probePoint() // session end: after the retime + isolation passes
     val results = inSession.map { case (k, v) =>
       k -> math.min(v, isolated.getOrElse(k, v))
     }
-    // min(pass1, pass2) hides the case the r13 advice flagged: a
-    // PINNED query whose RE-time blows past its first pass by > 2×
-    // (q243 recorded 5.17 → 12.76 that round). That pattern is either
-    // host contention or a state/AQE interaction on the re-run —
-    // either way the pinned "stays fixed" signal is unreliable, so
-    // surface it explicitly instead of letting min() bury it.
-    val p1ByName = pass1.toMap
-    val suspect = pass2.collect {
-      case (name, t2)
-          if pinned(name) && t2 > 2 * p1ByName(name) =>
-        name
-    }.toSeq.sorted
+    val suspect = plan2.suspect
     suspect.foreach(n => System.err.println(
-      s"[bench] SUSPECT retime: pinned $n pass2 > 2x pass1 — " +
+      s"[bench] SUSPECT retime: $n pass2 > 2x pass1 — " +
         "treat this round's min() as unsettled for it"))
     // Full-precision per-query timings to a file for local profiling —
     // NOT stderr: sbt re-echoes stderr as [error] lines on stdout with no
@@ -642,7 +541,7 @@ object Bench {
         .map { case (b, st, t) => s"[$b,$st,$t]" }.mkString("[", ",", "]")
       val loadReJson = loadRe.toSeq.sortBy(_._1)
         .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val blownJson = recordBlown.toSeq.sorted
+      val blownJson = plan2.recordBlown.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       // warm-store ledger, full fidelity: every step's wall time and
       // whether it physically BUILT a store this run (r20 verdict item 1)
@@ -661,8 +560,8 @@ object Bench {
     }
     // both passes for the re-timed heavy tail, so a drifting number is
     // visible in the round artifact itself, not just the min. The LINE
-    // carries the 8 slowest pairs (char budget); min() still uses all
-    // retimeK, and bench_full.json records every pair. Entries are
+    // carries the 8 slowest pairs (char budget); min() still uses every
+    // second pass, and bench_full.json records every pair. Entries are
     // [pass1 s, pass2 s, pass1 GC ms, pass2 GC ms] — gc UNCONDITIONALLY
     // (the r17 verdict note: the gc evidence must live in the round
     // artifact itself, not only in bench_full.json / the usually-absent
@@ -685,7 +584,6 @@ object Bench {
     // isolated-pass evidence IN the round artifact: [in-session min,
     // fresh-JVM sec] per isolated query — the pollution stays visible
     // even though min() adopts the clean number (usually empty)
-    val inSessByName = inSession.toMap
     val isoLine =
       if (isolated.isEmpty) ""
       else "," + "\"isolated\":" + isolated.toSeq.sortBy(_._1)
@@ -718,14 +616,14 @@ object Bench {
       val keyMap = Map(
         "nanosAsLong" -> "nanos", "lineitem scan" -> "li",
         "text kernels" -> "txtk", "vector kernel" -> "veck",
-        "events scan" -> "ev", "gen_block slice" -> "genb",
+        "events scan" -> "ev", "generator slice" -> "genb",
         "stream-stream join" -> "ssj",
-        "derived-artifact stores" -> "deriv",
+        "walk corpus store" -> "walk", "LPA label store" -> "lpa",
+        "embedding store" -> "emb",
+        "incremental-triangle snapshot store" -> "itri",
         "transformWithState slice" -> "tws",
         "bucketed tables" -> "bkt", "co-purchase edge store" -> "copur",
-        "erased signature store" -> "esig",
-        "incremental-triangle snapshot store" -> "itri",
-        "walk corpus store" -> "walk", "calibration probe" -> "calw")
+        "erased signature store" -> "esig", "calibration probe" -> "calw")
       def k(st: String): String = keyMap.getOrElse(st,
         st.replaceAll("[^A-Za-z0-9]+", "_").take(10))
       val (keep, rest) = warmLedger.partition {
@@ -742,6 +640,52 @@ object Bench {
     spark.stop()
   }
 
+  /** Bench's retime choices, all derived from pass 1, pass 2 and the
+    * history records (`tools/bench_history.json`):
+    *   - `recordBlown`: pass 1 blown at ratio 3 (r19 verdict item 2 —
+    *     q337 sat at 2.8× its record in r19 and escaped the rank net);
+    *   - `second`: the 16 slowest pass-1 queries (a contended host
+    *     inflates many at once) plus `recordBlown`;
+    *   - `fresh`: of the queries whose in-session min is blown at
+    *     ratio 5, the 6 worst by t/record, worst first — the child JVM's
+    *     budget (300 + 120·N s) must not stall the round on a host that
+    *     blows every record at once;
+    *   - `suspect`: second-passed queries whose pass 2 took more than 2×
+    *     their pass 1 (r13: q243 5.17 → 12.76 s), which min() would bury.
+    */
+  private[graft] final case class Retimes(recordBlown: Seq[String],
+      second: Set[String], fresh: Seq[String], suspect: Seq[String])
+
+  /** `t` is at least 0.75 s and more than `ratio` × its record; the
+    * floor keeps sub-second noise (a 0.1 → 0.35 s wobble) from burning
+    * retime budget. A query with no record is never blown.
+    */
+  private[graft] def blown(
+      t: Double, record: Option[Double], ratio: Double): Boolean =
+    t >= 0.75 && record.exists(t > ratio * _)
+
+  /** Pure retime policy. `pass1` is in run order; `pass2` holds the
+    * second-pass times run so far — empty when choosing the second pass,
+    * complete when choosing the fresh-JVM and suspect sets.
+    */
+  private[graft] def retimes(pass1: Seq[(String, Double)],
+      pass2: Map[String, Double], history: Map[String, Double]): Retimes = {
+    val recordBlown = pass1.collect {
+      case (n, t) if blown(t, history.get(n), 3) => n
+    }
+    val second = pass1.sortBy(-_._2).take(16).map(_._1).toSet ++ recordBlown
+    val fresh = pass1
+      .map { case (n, t1) => n -> math.min(t1, pass2.getOrElse(n, t1)) }
+      .collect { case (n, t) if blown(t, history.get(n), 5) =>
+        n -> t / history(n) }
+      .sortBy(-_._2).take(6).map(_._1)
+    val p1 = pass1.toMap
+    val suspect = pass2.collect {
+      case (n, t2) if p1.get(n).exists(t2 > 2 * _) => n
+    }.toSeq.sorted
+    Retimes(recordBlown, second, fresh, suspect)
+  }
+
   // locale-safe fixed-decimal rendering (f"%..f" honors the JVM locale
   // and could emit a comma decimal separator, breaking the JSON)
   private def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
@@ -751,7 +695,7 @@ object Bench {
     val x = math.round(v * 10) / 10.0
     if (x == math.rint(x)) x.toLong.toString else x.toString
   }
-  // "q104" ↔ "q104_ewma_decay" is a lossless rename; gen_* stay full
+  // q104_ewma_decay → q104 is a lossless rename; gen_* stay full
   private def shortKey(k: String): String =
     if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
 
