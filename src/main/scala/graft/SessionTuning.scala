@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * (Bench, Verify, Profile, Explain) so the bench, the oracle dump and
   * the profiler plan identically.
   *
-  * The one non-default setting (r21, guide §2.2/§2.4 — measured, see
-  * OPTIMIZATION_r21.md):
+  * Two non-default settings, both measured.
+  *
+  * 1. AQE coalescing (r21, guide §2.2/§2.4, see OPTIMIZATION_r21.md):
   *
   *   - `coalescePartitions.parallelismFirst = false`: with the default
   *     `true`, AQE sizes post-shuffle coalescing to
@@ -35,24 +36,46 @@ import org.apache.spark.sql.SparkSession
   *     recommends (partitions in the 100 MB–1 GB band at TB shuffle
   *     masses); the env knob is that dial.
   *
+  * 2. `spark.sql.artifact.isolation.enabled = false`, fixed: no env var.
+  *    Every streaming query runs in a clone of its session, and each
+  *    clone has a new `sessionUUID`. With isolation on (the default),
+  *    the clone's `ArtifactManager.state` is a
+  *    `JobArtifactState(sessionUUID, replClassURI)`, so its tasks run
+  *    under a per-UUID classloader. `CodeGenerator`'s cache is keyed by
+  *    `(contextClassLoader, code)`, so every stream start missed it and
+  *    compiled its whole-stage and projection classes again, then ran
+  *    them before the JIT had warmed them. Off, `state` is null and
+  *    tasks use the default classloader. graft adds no jars or
+  *    artifacts to a session, so isolation bought nothing. Measured on
+  *    gen_stream's streamed replay (4 vCPUs, warm reps): 14 → 0
+  *    compiles per run, stage-1 task CPU 800–880 → 133–174 ms, the
+  *    whole replay 1.29–1.45 → 0.76–0.81 s, same digest; the
+  *    benchmark's gen_stream `wall_s` fell from a median 2.61 to 1.78 s
+  *    over 10 alternating pairs. `StreamingSpec` pins the zero-compile
+  *    second run.
+  *
   * The initial `spark.sql.shuffle.partitions` stays `$SPARK_GRAFT_CPUS`
-  * per the bench contract — these settings only govern how AQE
+  * per the bench contract — the AQE settings only govern how AQE
   * re-partitions at runtime from OBSERVED sizes, which is exactly the
   * "scale-adaptive rather than a constant" requirement.
   */
 object SessionTuning {
-  def aqeConfigs: Seq[(String, String)] = Seq(
+  val artifactIsolation: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
+
+  def configs: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.coalescePartitions.parallelismFirst" ->
       sys.env.getOrElse("SPARK_GRAFT_AQE_PARFIRST", "false"),
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
       sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "2m"),
+    artifactIsolation,
   )
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    aqeConfigs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 
   /** The one harness session: `local[$SPARK_GRAFT_CPUS]` (default 32,
-    * the bench contract) with as many shuffle partitions, the AQE
+    * the bench contract) with as many shuffle partitions, the two
     * settings above, the UI off, and the session time zone pinned to
     * UTC — the NTZ `ts` layout is read in the session zone, so a non-UTC
     * host would shift every hour bucket and session bound off the

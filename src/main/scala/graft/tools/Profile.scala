@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.BusSync
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -23,9 +24,11 @@ import graft.{SessionTuning, SparkEntry}
   *   - `[batch]` one line per streaming microbatch: batch id, input rows
   *     and the progress event's `durationMs` phases;
   *   - `[rep]` construction time (the query function call — streaming
-  *     harnesses, store builds and collects run here) and execution time
+  *     harnesses, store builds and collects run here), execution time
   *     (the full result written to the `noop` sink; `count()` would let
-  *     Catalyst prune the final projections and aggregates).
+  *     Catalyst prune the final projections and aggregates), and the
+  *     codegen classes compiled over both, with their compile time (a
+  *     warm rep 2 that still compiles is recompiling).
   *
   * Every line carries its `<query> rep<r>` tag; the same tag is each
   * job's description. After the last rep, the final adaptive plan of the
@@ -94,10 +97,18 @@ object Profile {
     spark.streams.addListener(batches)
     spark.listenerManager.register(plans)
     def secs(t0: Long): String = f"${(System.nanoTime() - t0) / 1e9}%.3f s"
+    // the JVM's codegen compiles so far and their summed compile time;
+    // the time sums the histogram's retained samples, which hold every
+    // compile until the JVM has made 1,028 of them
+    def codegen(): (Long, Double) = {
+      val h = CodegenMetrics.METRIC_COMPILATION_TIME
+      (h.getCount, h.getSnapshot.getValues.sum.toDouble)
+    }
     def profile(name: String, fn: (SparkSession, String) => DataFrame): Boolean =
       (1 to 2).forall { r =>
         tag.set(s"$name rep$r")
         sc.setJobDescription(tag.get)
+        val (n0, ms0) = codegen()
         val t0 = System.nanoTime()
         val res = scala.util.Try {
           val df = fn(spark, sfDir)
@@ -106,11 +117,13 @@ object Profile {
           df.write.format("noop").mode("overwrite").save()
           (construct, secs(t1))
         }
+        val (n1, ms1) = codegen()
         BusSync.drain(sc)
         res.fold(
           e => { out(s"[fail] ${tag.get}: $e"); false },
           { case (construct, execute) =>
-            out(s"[rep] ${tag.get} construct=$construct execute=$execute")
+            out(s"[rep] ${tag.get} construct=$construct execute=$execute " +
+              f"compiles=${n1 - n0} compile_ms=${ms1 - ms0}%.0f")
             true
           })
       }

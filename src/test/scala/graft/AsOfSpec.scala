@@ -4,6 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
+  // SessionTuning's artifact-isolation setting, so restarted streams
+  // reuse compiled code as they do under the harness session; not its
+  // AQE settings, which change the plans the plan audits walk
+  private val (isolationKey, isolationValue) = SessionTuning.artifactIsolation
+
   lazy val spark: SparkSession = SparkSession
     .builder()
     .master("local[4]")
@@ -11,6 +16,7 @@ object SparkTestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(isolationKey, isolationValue)
     .getOrCreate()
 }
 

@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Profile
 
-/** `graft.tools.Profile`: two timed reps per query, job and microbatch
-  * lines tagged with their query, one final-plan block per query, and a
-  * failure count that makes an unknown name loud.
+/** `graft.tools.Profile`: two timed reps per query with their codegen
+  * compiles, job and microbatch lines tagged with their query, one
+  * final-plan block per query, and a failure count that makes an
+  * unknown name loud.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -20,7 +21,10 @@ class ProfileSpec extends AnyFunSuite {
     val failed = Profile.run(spark, sf, qs :+ "q_no_such_query",
       l => lines.synchronized { lines += l })
     assert(failed == 1)
-    val rep = """\[rep\] (\S+) rep(\d) construct=[0-9.]+ s execute=[0-9.]+ s""".r
+    // compile_ms sums a sampled histogram, which a JVM past 1,028
+    // compiles (this suite's, by now) no longer holds whole
+    val rep = ("""\[rep\] (\S+) rep(\d) construct=[0-9.]+ s execute=[0-9.]+ s """ +
+      """compiles=\d+ compile_ms=-?\d+""").r
     val reps = lines.toSeq.collect { case rep(q, r) => (q, r.toInt) }
     assert(reps == qs.flatMap(q => Seq(q -> 1, q -> 2)))
     qs.foreach { q =>

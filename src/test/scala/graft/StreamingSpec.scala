@@ -52,6 +52,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(diff.isEmpty, "streamed windows must equal batch windows")
   }
 
+  test("a restarted stream reuses its compiled code under SessionTuning") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.streaming.Trigger
+    val tmp = Files.createTempDirectory("graft_codegen")
+    gen.StreamGen.exact(spark, gen.GenQueries.demoSpec(5000L)).write
+      .parquet(s"$tmp/in")
+    // two runs of one complete-mode replay, each on a fresh checkpoint
+    // (so in a fresh session clone): per run, the classes compiled while
+    // the stream ran, and its rows
+    def twoRuns(label: String,
+        confs: Seq[(String, String)]): Seq[(Long, Seq[Row])] = {
+      val s: SparkSession = spark.newSession()
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      (1 to 2).map { i =>
+        val name = s"codegen_reuse_${label}_$i"
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        Streams.windowedTypeCounts(Streams.replayTicks(s, s"$tmp/in"))
+          .writeStream.outputMode("complete").format("memory")
+          .queryName(name).trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", s"$tmp/ck_$name")
+          .start().awaitTermination()
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+        try (compiled, s.table(name).collect().toSeq.sortBy(_.toString))
+        finally s.catalog.dropTempView(name)
+      }
+    }
+    try {
+      val tuned = twoRuns("tuned", SessionTuning.configs)
+      val Seq((_, rows1), (compiled2, rows2)) = tuned
+      assert(compiled2 == 0, "the second stream start compiled again")
+      assert(rows1 == rows2 && rows1.map(_.getLong(3)).sum == 5000L)
+      // the control: with per-session artifact isolation on, each clone
+      // has its own classloader and misses the codegen cache
+      val isolated = twoRuns("isolated",
+        Seq(SessionTuning.artifactIsolation._1 -> "true"))
+      info(s"compiles per run: tuned ${tuned.map(_._1)}, " +
+        s"isolated ${isolated.map(_._1)}")
+      assert(isolated(1)._1 > 0, "isolated clones shared compiled code")
+      assert(isolated.map(_._2) == Seq(rows1, rows1))
+    } finally Streams.deleteStaged(tmp)
+  }
+
   test("stateful sessionization across microbatches matches batch q20") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft_sess").toString
