@@ -94,22 +94,25 @@ object Analyze {
 
   /** Build-if-absent PERSISTED ANALYZE artifact for a driver table —
     * the production shape of q346: statistics are computed once per
-    * source version ([[StoreGuard.storeRoot]]'s freshness recipe keys
-    * the root to mtime+length+content fingerprint, so a rewritten
-    * table re-ANALYZEs exactly once) and every later planning decision
-    * reads the |columns|-row parquet, never the table.
+    * source version (the store key folds mtime+length+content
+    * fingerprint, so a rewritten table re-ANALYZEs exactly once) and
+    * every later planning decision reads the |columns|-row parquet,
+    * never the table. One declared store per table a registered query
+    * plans from: lineitem (q351, q359, q368, q371) and part (q04).
     */
-  def statsStore(s: SparkSession, d: String, table: String): String = {
-    val root = StoreGuard.storeRoot(s, "target/stage_analyze",
-      s"stats_$table", d, s"$table.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      tableStats(Tables.load(s, d, table))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/stats")
+  private val statsStores =
+    StoreGuard.family("stats", Seq("lineitem", "part")) { table =>
+      StoreGuard.declare("target/stage_analyze", s"stats_$table",
+          s"$table.parquet", payload = Seq("stats")) { (s, d, root) =>
+        tableStats(Tables.load(s, d, table))
+          .coalesce(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .parquet(s"$root/stats")
+      }
     }
-    root
-  }
+
+  def statsStore(s: SparkSession, d: String, table: String): String =
+    statsStores(table).ensure(s, d)
 
   /** Session-lifetime memo of stored table masses, keyed by store root.
     * Sound because the root ENCODES source freshness (mtime + length +
@@ -406,24 +409,24 @@ object Analyze {
     * store re-ANALYZEs the world per source version; this one pays
     * O(delta) + a KB-sized merge at read time).
     */
-  private[graft] def incrStatsStore(s: SparkSession, d: String): String = {
-    val root = StoreGuard.storeRoot(s, "target/stage_analyze",
-      "incrstats_lineitem", d, "lineitem.parquet", extra = s"kmv:$KmvK")
-    StoreGuard.ensureBuilt(s, root) {
-      val li = Tables.lineitem(s, d)
-      for ((b, slice) <- Seq(
-          (0, li.where(col("l_orderkey") % 10 < 8)),
-          (1, li.where(col("l_orderkey") % 10 >= 8)))) {
-        val mode =
-          if (b == 0) org.apache.spark.sql.SaveMode.Overwrite
-          else org.apache.spark.sql.SaveMode.Append
-        val (p, sk) = colPartials(slice, b)
-        p.coalesce(1).write.mode(mode).parquet(s"$root/partials")
-        sk.coalesce(1).write.mode(mode).parquet(s"$root/sketch")
-      }
+  private val incrStats = StoreGuard.declare("target/stage_analyze",
+      "incrstats_lineitem", "lineitem.parquet", extra = s"kmv:$KmvK",
+      payload = Seq("partials", "sketch")) { (s, d, root) =>
+    val li = Tables.lineitem(s, d)
+    for ((b, slice) <- Seq(
+        (0, li.where(col("l_orderkey") % 10 < 8)),
+        (1, li.where(col("l_orderkey") % 10 >= 8)))) {
+      val mode =
+        if (b == 0) org.apache.spark.sql.SaveMode.Overwrite
+        else org.apache.spark.sql.SaveMode.Append
+      val (p, sk) = colPartials(slice, b)
+      p.coalesce(1).write.mode(mode).parquet(s"$root/partials")
+      sk.coalesce(1).write.mode(mode).parquet(s"$root/sketch")
     }
-    root
   }
+
+  private[graft] def incrStatsStore(s: SparkSession, d: String): String =
+    incrStats.ensure(s, d)
 
   /** q359: INCREMENTAL ANALYZE, oracle-gated — the merged readout of
     * the per-batch partial-stats store: exact columns fold additively
@@ -572,11 +575,6 @@ object Analyze {
 
   // ---- q360: incremental quantile store --------------------------------
 
-  /** Pure freshness key of the q360 per-batch histogram store. */
-  private def quantStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/stage_analyze",
-      "incrquant_lineitem", d, "lineitem.parquet")
-
   /** Build-if-absent incremental QUANTILE store: per batch, the
     * cents-grain value histogram of `l_extendedprice` per return flag —
     * the mergeable sufficient statistic for EXACT order statistics
@@ -584,26 +582,27 @@ object Analyze {
     * column a CBO wants next to q359's moments. Each batch costs one
     * scan of its own rows (the q359 delta discipline).
     */
-  private[graft] def quantStore(s: SparkSession, d: String): String = {
-    val root = quantStoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      val li = Tables.lineitem(s, d)
-        .select(col("l_orderkey"), col("l_returnflag").as("rf"),
-          expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"))
-      for ((b, slice) <- Seq(
-          (0, li.where(col("l_orderkey") % 10 < 8)),
-          (1, li.where(col("l_orderkey") % 10 >= 8)))) {
-        val mode =
-          if (b == 0) org.apache.spark.sql.SaveMode.Overwrite
-          else org.apache.spark.sql.SaveMode.Append
-        slice.groupBy(col("rf"), col("cents"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("batch", lit(b.toLong))
-          .coalesce(1).write.mode(mode).parquet(s"$root/hist")
-      }
+  private val incrQuant = StoreGuard.declare("target/stage_analyze",
+      "incrquant_lineitem", "lineitem.parquet",
+      payload = Seq("hist")) { (s, d, root) =>
+    val li = Tables.lineitem(s, d)
+      .select(col("l_orderkey"), col("l_returnflag").as("rf"),
+        expr("CAST(ROUND(l_extendedprice * 100) AS BIGINT)").as("cents"))
+    for ((b, slice) <- Seq(
+        (0, li.where(col("l_orderkey") % 10 < 8)),
+        (1, li.where(col("l_orderkey") % 10 >= 8)))) {
+      val mode =
+        if (b == 0) org.apache.spark.sql.SaveMode.Overwrite
+        else org.apache.spark.sql.SaveMode.Append
+      slice.groupBy(col("rf"), col("cents"))
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("batch", lit(b.toLong))
+        .coalesce(1).write.mode(mode).parquet(s"$root/hist")
     }
-    root
   }
+
+  private[graft] def quantStore(s: SparkSession, d: String): String =
+    incrQuant.ensure(s, d)
 
   /** q360: INCREMENTAL EXACT QUANTILES, oracle-gated — discrete
     * order statistics (p50/p90/p99 as permille ranks) served from the
@@ -932,17 +931,17 @@ object Analyze {
     * q364's statistic): 9 rows per source version, every later
     * selectivity decision a metadata read.
     */
-  private def boundaryStore(s: SparkSession, d: String): String = {
-    val root = StoreGuard.storeRoot(s, "target/stage_analyze",
-      "bounds_lineitem", d, "lineitem.parquet", extra = "depth:8")
-    StoreGuard.ensureBuilt(s, root) {
-      equiDepthBounds(s, d)
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/bounds")
-    }
-    root
+  private val bounds = StoreGuard.declare("target/stage_analyze",
+      "bounds_lineitem", "lineitem.parquet", extra = "depth:8",
+      payload = Seq("bounds")) { (s, d, root) =>
+    equiDepthBounds(s, d)
+      .coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/bounds")
   }
+
+  private def boundaryStore(s: SparkSession, d: String): String =
+    bounds.ensure(s, d)
 
   /** q366: the PERSISTED boundary artifact read back — the same
     * selectivity ledger as q364 served from the stored 9 rows through
@@ -1103,38 +1102,38 @@ object Analyze {
     * (the agg-exchange sizing input). Three metadata-sized parquet
     * frames; every q368 run PLANS from them without re-measuring.
     */
-  private[graft] def cboStore(s: SparkSession, d: String): String = {
-    val root = StoreGuard.storeRoot(s, "target/stage_analyze",
-      "cbo_l_o_p", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      q361(s, d).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/ledger")
-      val dims = Seq(
-        ("orders_first", Tables.orders(s, d)
-          .where(col("o_orderpriority") === "5-LOW")
-          .select(col("o_orderkey"))),
-        ("parts_first", Tables.part(s, d)
-          .where(col("p_brand") === "Brand#13")
-          .select(col("p_partkey"))))
-        .map { case (n, df) =>
-          tableStats(df)
-            .agg(coalesce(sum(col("est_bytes")), lit(0L)).as("est_bytes"))
-            .withColumn("first_join", lit(n))
-        }
-        .reduce(_ unionByName _)
-      dims.coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/dims")
-      s.read.parquet(s"${statsStore(s, d, "lineitem")}/stats")
-        .where(col("col_name") === "l_returnflag")
-        .select(col("col_name"), col("ndv"), col("avg_len"))
-        .coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/groupkey")
-    }
-    root
+  private val cbo = StoreGuard.declare("target/stage_analyze",
+      "cbo_l_o_p", "lineitem.parquet",
+      payload = Seq("ledger", "dims", "groupkey")) { (s, d, root) =>
+    q361(s, d).coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/ledger")
+    val dims = Seq(
+      ("orders_first", Tables.orders(s, d)
+        .where(col("o_orderpriority") === "5-LOW")
+        .select(col("o_orderkey"))),
+      ("parts_first", Tables.part(s, d)
+        .where(col("p_brand") === "Brand#13")
+        .select(col("p_partkey"))))
+      .map { case (n, df) =>
+        tableStats(df)
+          .agg(coalesce(sum(col("est_bytes")), lit(0L)).as("est_bytes"))
+          .withColumn("first_join", lit(n))
+      }
+      .reduce(_ unionByName _)
+    dims.coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/dims")
+    s.read.parquet(s"${statsStore(s, d, "lineitem")}/stats")
+      .where(col("col_name") === "l_returnflag")
+      .select(col("col_name"), col("ndv"), col("avg_len"))
+      .coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/groupkey")
   }
+
+  private[graft] def cboStore(s: SparkSession, d: String): String =
+    cbo.ensure(s, d)
 
   /** q368: STATS-PLANNED JOIN, oracle-gated — the decision loop the
     * r19 verdict called decorative finally CONSUMING its artifacts:
@@ -1248,16 +1247,16 @@ object Analyze {
   /** Build-if-absent persisted q363 skew ledger — the salt decision
     * as an artifact, one metadata read per consuming join.
     */
-  private[graft] def skewStore(s: SparkSession, d: String): String = {
-    val root = StoreGuard.storeRoot(s, "target/stage_analyze",
-      "skew_events_type", d, "events.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      q363(s, d).coalesce(1)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/skew")
-    }
-    root
+  private val skew = StoreGuard.declare("target/stage_analyze",
+      "skew_events_type", "events.parquet",
+      payload = Seq("skew")) { (s, d, root) =>
+    q363(s, d).coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/skew")
   }
+
+  private[graft] def skewStore(s: SparkSession, d: String): String =
+    skew.ensure(s, d)
 
   /** q369: SALTED JOIN FROM STORED ADVICE, oracle-gated — q363's salt
     * factor consumed by a production join: the events⋈type-dim join

@@ -3128,70 +3128,47 @@ object Corpus {
 
   /** Build-if-absent FULL-corpus posting store — the persisted index
     * state q331's erasure filters (hash-distributed by term, the q275
-    * layout; keyed on source freshness through [[StoreGuard]]).
+    * layout; keyed on source freshness). An erasure-family store: a
+    * superseded sibling would RETAIN erased posting rows on disk, so it
+    * sweeps.
     */
-  private[graft] def fullPostingStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/stage_corpus",
-      "fullpostings", d, "documents.parquet")
-
-  private[graft] def fullPostingStore(
-      s: SparkSession, d: String): DataFrame = {
+  private[graft] val fullPostings = StoreGuard.declare("target/stage_corpus",
+      "fullpostings", "documents.parquet", sweep = true,
+      payload = Seq("postings")) { (s, d, root) =>
     import s.implicits._
-    val root = fullPostingStoreRoot(s, d)
-    // erasure-family store: a superseded freshness-tagged sibling would
-    // RETAIN erased posting rows on disk — sweep it, don't orphan it
-    StoreGuard.sweepStaleSiblings(s, "target/stage_corpus",
-      "fullpostings", d, Set(root.split('/').last))
-    StoreGuard.ensureBuilt(s, root) {
-      Tables.documents(s, d)
-        .select($"doc_id", explode(split($"text", " ")).as("term"))
-        .groupBy($"term", $"doc_id")
-        .agg(count(lit(1)).as("tf"))
-        .repartition($"term")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/postings")
-    }
-    s.read.parquet(s"$root/postings")
+    Tables.documents(s, d)
+      .select($"doc_id", explode(split($"text", " ")).as("term"))
+      .groupBy($"term", $"doc_id")
+      .agg(count(lit(1)).as("tf"))
+      .repartition($"term")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/postings")
   }
 
-  /** q331's PHYSICAL erase, through [[StoreGuard.eraseRewrite]]'s
-    * shared transaction: the posting store minus the erased docs' rows
-    * into the predicate-tagged sibling; the superseded pre-erasure
-    * index is vacuumed by the helper (crash-safe order + steady-state
-    * sweep). Round17Spec asserts zero erased rows on disk and the
-    * vacuumed base.
-    */
   /** The ONE spelling of q331's erasure predicate tag (doc_id % 9 == 4
     * is the erased set; the tag names the SURVIVOR predicate).
     */
   private[graft] val PostingErasedTag = "erased_mod9ne4"
 
-  /** q331's erased store root — ensures the erase transaction ran and
-    * returns the predicate-tagged root (q338's audit handle).
+  /** q331's PHYSICAL erase, through the shared erase transaction
+    * ([[StoreGuard.declareErase]]): the posting store minus the erased
+    * docs' rows into the predicate-tagged sibling; the superseded
+    * pre-erasure index is vacuumed by the guard (crash-safe order +
+    * steady-state sweep). Round17Spec asserts zero erased rows on disk
+    * and the vacuumed base.
     */
-  private[graft] def erasedPostingStoreRoot(
-      s: SparkSession, d: String): String = {
-    erasedPostingStore(s, d)
-    s"${fullPostingStoreRoot(s, d)}/$PostingErasedTag"
+  private[graft] val erasedPostings = StoreGuard.declareErase(fullPostings,
+      PostingErasedTag, payload = Seq("postings")) { (s, _, base, out) =>
+    s.read.parquet(s"$base/postings")
+      .where(col("doc_id") % 9 =!= 4)
+      .repartition(col("term"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/postings")
   }
 
   private[graft] def erasedPostingStore(
-      s: SparkSession, d: String): DataFrame = {
-    val root = fullPostingStoreRoot(s, d)
-    // steady-state sweep of superseded freshness-tagged roots: an old
-    // root orphaned by a source rewrite may hold PRE-erase payloads
-    StoreGuard.sweepStaleSiblings(s, "target/stage_corpus",
-      "fullpostings", d, Set(root.split('/').last))
-    val erased = StoreGuard.eraseRewrite(s, root, PostingErasedTag,
-      Seq("postings"))(fullPostingStore(s, d)) { out =>
-      s.read.parquet(s"$root/postings")
-        .where(col("doc_id") % 9 =!= 4)
-        .repartition(col("term"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/postings")
-    }
-    s.read.parquet(s"$erased/postings")
-  }
+      s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${erasedPostings.ensure(s, d)}/postings")
 
   /** q331: RETRIEVAL-INDEX ERASURE — the erasure family (q326 manifest,
     * q329 statistic, q330 stream state) applied to the SEARCH INDEX:
@@ -3314,19 +3291,23 @@ object Corpus {
     * (mtime+length) AND the schedule parameters (seed, epochs,
     * shardSize), so a parameter change builds a fresh manifest.
     */
+  private val schedules = StoreGuard.family("schedule",
+      Seq(("graft", 2, 64L), ("graft", 2, 16L))) {
+    case (seed, epochs, shardSize) =>
+      StoreGuard.declare("target/graft_corpus_store", "sched",
+          "documents.parquet", extra = s"$seed:$epochs:$shardSize",
+          payload = Seq("manifest")) { (s, d, root) =>
+        resumableSchedule(Tables.documents(s, d), seed, epochs)
+          .withColumn("shard", expr(s"step DIV $shardSize"))
+          .write.mode("overwrite").partitionBy("epoch", "shard")
+          .parquet(s"$root/manifest")
+      }
+  }
+
   private[graft] def scheduleStore(
       s: SparkSession, d: String, seed: String, epochs: Int,
-      shardSize: Long): String = {
-    val root = StoreGuard.storeRoot(s, "target/graft_corpus_store",
-      "sched", d, "documents.parquet", s"$seed:$epochs:$shardSize")
-    StoreGuard.ensureBuilt(s, root) {
-      resumableSchedule(Tables.documents(s, d), seed, epochs)
-        .withColumn("shard", expr(s"step DIV $shardSize"))
-        .write.mode("overwrite").partitionBy("epoch", "shard")
-        .parquet(s"$root/manifest")
-    }
-    s"$root/manifest"
-  }
+      shardSize: Long): String =
+    s"${schedules((seed, epochs, shardSize)).ensure(s, d)}/manifest"
 
   private def q319(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

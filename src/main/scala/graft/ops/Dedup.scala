@@ -822,38 +822,32 @@ object Dedup {
       org.apache.spark.sql.types.StructType.fromDDL(
         "doc LONG, sig ARRAY<LONG>"))
 
-  /** Pure key of q337's consolidated signature store (q182's final v2
-    * state under the [[StoreGuard.storeRoot]] freshness recipe, so the
-    * erasure transaction has a build-if-absent base to rewrite).
-    */
-  private[graft] def sigStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/stage_dedup",
-      "sigstore", d, "documents.parquet")
-
   /** The ONE spelling of q337's erasure predicate tag (doc_id % 13 == 6
     * is the erased set; the tag names the SURVIVOR predicate).
     */
   private[graft] val SigErasedTag = "erased_mod13ne6"
 
-  /** Build-if-absent consolidated signature store: q182's two-phase
-    * pipeline (base batch against an empty store, delta against the
-    * base survivors), final kept-doc signatures persisted
-    * hash-distributed by doc.
+  /** Build-if-absent consolidated signature store (q182's final v2
+    * state under a freshness key, so the erasure transaction has a
+    * base to rewrite): q182's two-phase pipeline (base batch against an
+    * empty store, delta against the base survivors), final kept-doc
+    * signatures persisted hash-distributed by doc.
     */
-  private[graft] def sigStore(s: SparkSession, d: String): String = {
-    val root = sigStoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val (_, s1) = incrementalNearDupCore(
-        s, docs.where(col("doc_id") % 10 < 8), emptySigStore(s))
-      val (_, s2) = incrementalNearDupCore(
-        s, docs.where(col("doc_id") % 10 >= 8), s1)
-      s2.repartition(col("doc"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/sigs")
-    }
-    root
+  private[graft] val sigBase = StoreGuard.declare("target/stage_dedup",
+      "sigstore", "documents.parquet",
+      payload = Seq("sigs")) { (s, d, root) =>
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val (_, s1) = incrementalNearDupCore(
+      s, docs.where(col("doc_id") % 10 < 8), emptySigStore(s))
+    val (_, s2) = incrementalNearDupCore(
+      s, docs.where(col("doc_id") % 10 >= 8), s1)
+    s2.repartition(col("doc"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/sigs")
   }
+
+  private[graft] def sigStore(s: SparkSession, d: String): String =
+    sigBase.ensure(s, d)
 
   /** q337's PHYSICAL erase of the MinHash signature store — the fuzzy
     * twin of q336 and the r17 verdict's top item: stored signatures
@@ -877,45 +871,45 @@ object Dedup {
     * persisted beside the store — the post-vacuum world could not
     * otherwise reconstruct "before".
     */
-  private[graft] def erasedSigStore(s: SparkSession, d: String): String = {
-    val root = sigStoreRoot(s, d)
-    // steady-state sweep: an orphaned pre-erase root would RETAIN the
-    // erased docs' signatures on disk
-    StoreGuard.sweepStaleSiblings(s, "target/stage_dedup",
-      "sigstore", d, Set(root.split('/').last))
-    StoreGuard.eraseRewrite(s, root, SigErasedTag,
-      Seq("sigs"))(sigStore(s, d)) { out =>
-      val store = s.read.parquet(s"$root/sigs")
-        .localCheckpoint() // pin: the base payload is vacuumed below
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val keptIds = store.select(col("doc").as("doc_id"))
-      // survivors the store has no signature for: previously dropped
-      def resketched(batch: Column): DataFrame = sketchSigs(
-        docs.where(batch && col("doc_id") % 13 =!= 6)
-          .join(keptIds, Seq("doc_id"), "left_anti"), 32)
-      def fromStore(batch: Column): DataFrame = store
-        .where(batch && col("doc") % 13 =!= 6)
-      val (led1, s1) = nearDupDecideCore(s,
-        fromStore(col("doc") % 10 < 8)
-          .unionByName(resketched(col("doc_id") % 10 < 8)),
-        emptySigStore(s))
-      val (led2, s2) = nearDupDecideCore(s,
-        fromStore(col("doc") % 10 >= 8)
-          .unionByName(resketched(col("doc_id") % 10 >= 8)),
-        s1)
-      s2.repartition(col("doc"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/sigs")
-      led1.unionByName(led2)
-        .select(col("doc_id"), col("kept"))
-        .join(keptIds.withColumn("was_kept", lit(true)),
-          Seq("doc_id"), "left")
-        .na.fill(false, Seq("was_kept"))
-        .repartition(col("doc_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/ledger")
-    }
+  private[graft] val erasedSigs = StoreGuard.declareErase(sigBase,
+      SigErasedTag, payload = Seq("sigs", "ledger")) { (s, d, root, out) =>
+    val store = s.read.parquet(s"$root/sigs")
+      .localCheckpoint() // pin: the base payload is vacuumed below
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val keptIds = store.select(col("doc").as("doc_id"))
+    // survivors the store has no signature for: previously dropped
+    def resketched(batch: Column): DataFrame = sketchSigs(
+      docs.where(batch && col("doc_id") % 13 =!= 6)
+        .join(keptIds, Seq("doc_id"), "left_anti"), 32)
+    def fromStore(batch: Column): DataFrame = store
+      .where(batch && col("doc") % 13 =!= 6)
+    val (led1, s1) = nearDupDecideCore(s,
+      fromStore(col("doc") % 10 < 8)
+        .unionByName(resketched(col("doc_id") % 10 < 8)),
+      emptySigStore(s))
+    val (led2, s2) = nearDupDecideCore(s,
+      fromStore(col("doc") % 10 >= 8)
+        .unionByName(resketched(col("doc_id") % 10 >= 8)),
+      s1)
+    s2.repartition(col("doc"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/sigs")
+    led1.unionByName(led2)
+      .select(col("doc_id"), col("kept"))
+      .join(keptIds.withColumn("was_kept", lit(true)),
+        Seq("doc_id"), "left")
+      .na.fill(false, Seq("was_kept"))
+      .repartition(col("doc_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/ledger")
   }
+
+  /** q337's erase, run if absent; the erased root. The sweep on every
+    * call removes orphaned pre-erase roots, which would RETAIN the
+    * erased docs' signatures on disk.
+    */
+  private[graft] def erasedSigStore(s: SparkSession, d: String): String =
+    erasedSigs.ensure(s, d)
 
   /** q337: SIGNATURE-STORE ERASURE — the per-doc decision ledger of
     * the erased MinHash store: every surviving doc's (kept, was_kept)
@@ -1166,11 +1160,6 @@ object Dedup {
         col("w.doc_id").as("w_doc"), col("w.idx").as("w_idx"),
         col("w.clen").as("clen"))
 
-  /** Pure freshness key of the q348 chunk store. */
-  private[graft] def chunkStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/stage_dedup",
-      "cdcstore", d, "documents.parquet")
-
   /** The ONE spelling of q348's erasure predicate tag (doc_id % 17 == 2
     * is the erased set; the tag names the SURVIVOR predicate).
     */
@@ -1183,22 +1172,23 @@ object Dedup {
     * batch leads the winner key). Rows are (ch, w_batch, w_doc, w_idx,
     * clen): 28 bytes per distinct chunk, the text never persists.
     */
-  private[graft] def chunkStore(s: SparkSession, d: String): String = {
-    val root = chunkStoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val b0 = electChunkWinners(
-        docChunks(s, docs.where(col("doc_id") % 10 < 8), 0))
-      val b1 = electChunkWinners(
-        docChunks(s, docs.where(col("doc_id") % 10 >= 8), 1))
-        .join(b0.select("ch"), Seq("ch"), "left_anti")
-      b0.unionByName(b1)
-        .repartition(8, col("ch"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/chunks")
-    }
-    root
+  private[graft] val chunkBase = StoreGuard.declare("target/stage_dedup",
+      "cdcstore", "documents.parquet",
+      payload = Seq("chunks")) { (s, d, root) =>
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+    val b0 = electChunkWinners(
+      docChunks(s, docs.where(col("doc_id") % 10 < 8), 0))
+    val b1 = electChunkWinners(
+      docChunks(s, docs.where(col("doc_id") % 10 >= 8), 1))
+      .join(b0.select("ch"), Seq("ch"), "left_anti")
+    b0.unionByName(b1)
+      .repartition(8, col("ch"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/chunks")
   }
+
+  private[graft] def chunkStore(s: SparkSession, d: String): String =
+    chunkBase.ensure(s, d)
 
   /** q348's PHYSICAL erase of the CDC chunk store — the first store
     * added AFTER the q338 audit shipped, which is the point: the
@@ -1218,32 +1208,32 @@ object Dedup {
     * erased winner rows in the rewritten files; q338's audit sweeps the
     * store, its vacuumed base, and its stale siblings every run.
     */
-  private[graft] def erasedChunkStore(s: SparkSession, d: String): String = {
-    val root = chunkStoreRoot(s, d)
-    // steady-state sweep: an orphaned pre-erase root would RETAIN the
-    // erased docs' chunk fingerprints on disk
-    StoreGuard.sweepStaleSiblings(s, "target/stage_dedup",
-      "cdcstore", d, Set(root.split('/').last))
-    StoreGuard.eraseRewrite(s, root, ChunkErasedTag,
-      Seq("chunks"))(chunkStore(s, d)) { out =>
-      val store = s.read.parquet(s"$root/chunks")
-        .localCheckpoint() // pin: the base payload is vacuumed below
-      val surviving = store.where(col("w_doc") % 17 =!= 2)
-      val orphaned = store.where(col("w_doc") % 17 === 2).select("ch")
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .where(col("doc_id") % 17 =!= 2)
-      val reElected = electChunkWinners(
-        docChunks(s, docs.where(col("doc_id") % 10 < 8), 0)
-          .unionByName(
-            docChunks(s, docs.where(col("doc_id") % 10 >= 8), 1))
-          .join(broadcast(orphaned), Seq("ch"), "left_semi"))
-      surviving.unionByName(reElected)
-        .repartition(8, col("ch"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/chunks")
-    }
+  private[graft] val erasedChunks = StoreGuard.declareErase(chunkBase,
+      ChunkErasedTag, payload = Seq("chunks")) { (s, d, root, out) =>
+    val store = s.read.parquet(s"$root/chunks")
+      .localCheckpoint() // pin: the base payload is vacuumed below
+    val surviving = store.where(col("w_doc") % 17 =!= 2)
+    val orphaned = store.where(col("w_doc") % 17 === 2).select("ch")
+    val docs = Tables.documents(s, d)
+      .select(col("doc_id"), col("text"))
+      .where(col("doc_id") % 17 =!= 2)
+    val reElected = electChunkWinners(
+      docChunks(s, docs.where(col("doc_id") % 10 < 8), 0)
+        .unionByName(
+          docChunks(s, docs.where(col("doc_id") % 10 >= 8), 1))
+        .join(broadcast(orphaned), Seq("ch"), "left_semi"))
+    surviving.unionByName(reElected)
+      .repartition(8, col("ch"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/chunks")
   }
+
+  /** q348's erase, run if absent; the erased root. The sweep on every
+    * call removes orphaned pre-erase roots, which would RETAIN the
+    * erased docs' chunk fingerprints on disk.
+    */
+  private[graft] def erasedChunkStore(s: SparkSession, d: String): String =
+    erasedChunks.ensure(s, d)
 
   /** q348: INCREMENTAL CDC CHUNK-STORE LEDGER — the byte-grain dedup
     * run as a maintained cross-run pipeline: per batch, the chunk mass

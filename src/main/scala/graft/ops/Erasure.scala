@@ -25,10 +25,9 @@ import graft.QueryDef
   * audit runner over a fixture with one store deliberately un-erased
   * and asserts the ledger goes nonzero (an audit that cannot fail
   * certifies nothing — q142's lesson), and a completeness check
-  * re-greps src/main for `StoreGuard.eraseRewrite` call sites and
-  * fails when the registry's distinct `site` count drifts from the
-  * source — registering the erase verb without registering its store
-  * here breaks the build. The oracle is the constant all-zero ledger:
+  * compares the declared erase stores ([[StoreGuard.all]]) with the
+  * registry's, in both directions — declaring an erase verb without
+  * registering its store here fails the suite. The oracle is the constant all-zero ledger:
   * DuckDB cannot see target/ disk state, so the SQL side pins schema
   * and the zero contract while the Spark side carries the physical
   * evidence (the per-store CONTENT equivalences are each erase verb's
@@ -47,18 +46,16 @@ import graft.QueryDef
   */
 object Erasure {
 
-  /** One audited store: `site` names the eraseRewrite call site (the
+  /** One audited payload: `erased` is the declared erase store (the
     * completeness lock's join key — several payload rows may share
-    * one site), `erasedRoot` ensures the erase transaction ran and
-    * returns the predicate-tagged root, `payload` the parquet dir
-    * under it, `refPred` the "references an erased id" predicate over
-    * that payload's schema, `subjectCols` the erasure-subject columns
-    * that must be part of the store's ROW GRAIN (see below),
-    * `basePayloads` the superseded dirs that must be GONE from the
-    * base root, (`siblingBase`, `siblingPrefix`) the store-root key
-    * prefix whose non-live freshness-tagged siblings must have been
-    * swept, and `grainCheck` an optional store-specific physical proof
-    * that no row AGGREGATES ACROSS subjects.
+    * one store; its base's payload dirs must be GONE from the base
+    * root and its key's non-live freshness-tagged siblings must have
+    * been swept), `payload` the parquet dir under the erased root,
+    * `refPred` the "references an erased id" predicate over that
+    * payload's schema, `subjectCols` the erasure-subject columns that
+    * must be part of the store's ROW GRAIN (see below), and
+    * `grainCheck` an optional store-specific physical proof that no
+    * row AGGREGATES ACROSS subjects.
     *
     * The grain rule (r18 verdict item 4): a row-drop erase is sound
     * only if every persisted cell derives from the row's OWN erasure
@@ -73,75 +70,41 @@ object Erasure {
     * the raw survivor corpus per (subject, type, day).
     */
   private[graft] final case class AuditedStore(
-      site: String,
       store: String,
-      erasedRoot: (SparkSession, String) => String,
+      erased: StoreGuard.Store,
       payload: String,
       refPred: DataFrame => Column,
       subjectCols: Seq[String],
-      basePayloads: Seq[String],
-      siblingBase: String,
-      siblingPrefix: String,
       grainCheck: Option[(SparkSession, String, DataFrame) => Long] = None)
 
-  /** The registry — one row per persisted payload of every erase
-    * site. New erase verbs MUST add their store(s) here; the
-    * Round18Spec completeness lock fails the build otherwise.
+  /** The registry — one row per persisted payload of every declared
+    * erase store. New erase verbs MUST add their store(s) here; the
+    * Round18Spec completeness lock fails otherwise.
     */
   private[graft] val registry: Seq[AuditedStore] = Seq(
-    AuditedStore("mf4", "mf4_econ",
-      (s, d) => { Text.mf4EraseSurvivors(s, d); Text.mf4ErasedRoot(s, d) },
-      "econ", df => df("doc_id") % 7 === 3, Seq("doc_id"),
-      Seq("econ", "pairs"),
-      "target/graft_text_store", "mf4era"),
-    AuditedStore("mf4", "mf4_pairs",
-      (s, d) => { Text.mf4EraseSurvivors(s, d); Text.mf4ErasedRoot(s, d) },
+    AuditedStore("mf4_econ", Text.mf4Erased,
+      "econ", df => df("doc_id") % 7 === 3, Seq("doc_id")),
+    AuditedStore("mf4_pairs", Text.mf4Erased,
       "pairs", df => df("a") % 7 === 3 || df("b") % 7 === 3,
-      Seq("a", "b"),
-      Seq("econ", "pairs"),
-      "target/graft_text_store", "mf4era"),
-    AuditedStore("sppmi", "sppmi_pairs",
-      (s, d) => Graph.erasedPairStoreRoot(s, d),
+      Seq("a", "b")),
+    AuditedStore("sppmi_pairs", Graph.erasedPairs,
       "pairs.parquet",
       df => df("center") % 23 === 7 || df("context") % 23 === 7,
-      Seq("center", "context"),
-      Seq("pairs.parquet"),
-      "target/graft_graph_store", "fullpairs"),
-    AuditedStore("postings", "search_postings",
-      (s, d) => Corpus.erasedPostingStoreRoot(s, d),
-      "postings", df => df("doc_id") % 9 === 4, Seq("doc_id"),
-      Seq("postings"),
-      "target/stage_corpus", "fullpostings"),
-    AuditedStore("passage", "passage_hashes",
-      (s, d) => Text.erasedPassageStore(s, d),
-      "store", df => df("w_doc") % 11 === 5, Seq("w_doc"),
-      Seq("store"),
-      "target/graft_text_store", "pdedup"),
-    AuditedStore("minhash", "minhash_sigs",
-      (s, d) => Dedup.erasedSigStore(s, d),
-      "sigs", df => df("doc") % 13 === 6, Seq("doc"),
-      Seq("sigs"),
-      "target/stage_dedup", "sigstore"),
-    AuditedStore("minhash", "minhash_ledger",
-      (s, d) => Dedup.erasedSigStore(s, d),
-      "ledger", df => df("doc_id") % 13 === 6, Seq("doc_id"),
-      Seq("sigs"),
-      "target/stage_dedup", "sigstore"),
-    AuditedStore("servivf", "serving_index",
-      (s, d) => Graph.erasedServingStore(s, d)._1,
-      "index", df => df("vec_id") % 53 === 7, Seq("vec_id"),
-      Seq("index", "cents"),
-      "target/graft_graph_store", "servivf"),
-    AuditedStore("cdc", "cdc_chunks",
-      (s, d) => Dedup.erasedChunkStore(s, d),
-      "chunks", df => df("w_doc") % 17 === 2, Seq("w_doc"),
-      Seq("chunks"),
-      "target/stage_dedup", "cdcstore"),
-    AuditedStore("tsstore", "ts_series",
-      (s, d) => Events.erasedTsStore(s, d),
+      Seq("center", "context")),
+    AuditedStore("search_postings", Corpus.erasedPostings,
+      "postings", df => df("doc_id") % 9 === 4, Seq("doc_id")),
+    AuditedStore("passage_hashes", Text.erasedPassages,
+      "store", df => df("w_doc") % 11 === 5, Seq("w_doc")),
+    AuditedStore("minhash_sigs", Dedup.erasedSigs,
+      "sigs", df => df("doc") % 13 === 6, Seq("doc")),
+    AuditedStore("minhash_ledger", Dedup.erasedSigs,
+      "ledger", df => df("doc_id") % 13 === 6, Seq("doc_id")),
+    AuditedStore("serving_index", Graph.erasedServing,
+      "index", df => df("vec_id") % 53 === 7, Seq("vec_id")),
+    AuditedStore("cdc_chunks", Dedup.erasedChunks,
+      "chunks", df => df("w_doc") % 17 === 2, Seq("w_doc")),
+    AuditedStore("ts_series", Events.erasedTs,
       "series", df => df("user_id") % 19 === 3, Seq("user_id"),
-      Seq("series"),
-      "target/stage_events", "tsstore",
       // the ONE aggregate-blob store: prove at decode level that each
       // blob holds exactly its own (user, type, day) group's points
       // over the survivor corpus — a blob that absorbed another
@@ -167,49 +130,36 @@ object Erasure {
 
   /** Audit ledger over a registry — factored so Round18Spec can run
     * the identical code path over a fixture whose stores are NOT all
-    * clean and watch the certificate fail.
+    * clean and watch the certificate fail (`erasedRoot` is where the
+    * fixture points the audit at its planted root instead of running
+    * the erase).
     */
   private[graft] def auditFrame(
-      s: SparkSession, d: String,
-      stores: Seq[AuditedStore]): DataFrame = {
+      s: SparkSession, d: String, stores: Seq[AuditedStore],
+      erasedRoot: StoreGuard.Store => String): DataFrame = {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
-    // one erase-transaction run per SITE: multi-payload sites (mf4,
-    // minhash) register several rows sharing one verb — re-running the
-    // verb per row would repeat its sweep + steady-state vacuum I/O
-    val rootBySite = stores.map(_.site).distinct.map { site =>
-      site -> stores.find(_.site == site).get.erasedRoot(s, d)
-    }.toMap
+    // one erase-transaction run per STORE: multi-payload stores (mf4,
+    // minhash) register several rows — re-running the verb per row
+    // would repeat its sweep + steady-state vacuum I/O
+    val roots = stores.map(_.erased).distinct
+      .map(st => st -> erasedRoot(st)).toMap
     val rows = stores.map { a =>
-      val root = rootBySite(a.site)
+      val root = roots(a.erased)
       val payload = s.read.parquet(s"$root/${a.payload}")
       val nRefs = payload.where(a.refPred(payload)).count()
       val base = root.substring(0, root.lastIndexOf('/'))
-      val resident = a.basePayloads.count { p =>
+      val resident = a.erased.erases.toSeq.flatMap(_._1.payload).count { p =>
         val hp = new org.apache.hadoop.fs.Path(s"$base/$p")
         hp.getFileSystem(conf).exists(hp)
       }
-      // superseded freshness-tagged SIBLING roots: a stale sibling is
-      // a retained pre-erase copy — the sweep must have removed it.
-      // r21: scoped to THIS source dir's tag, mirroring the sweep —
-      // a same-prefix sibling keyed to ANOTHER source dir is that SF's
-      // live store, not residue of this one (the old any-sibling rule
-      // is what made SF-alternating runs destroy each other's stores);
-      // pre-migration single-tag roots are unconditionally stale.
-      val liveName = base.substring(base.lastIndexOf('/') + 1)
-      val scoped = s"${a.siblingPrefix}_${StoreGuard.dirTag(d)}_"
-      val oldFormat =
-        s"^${java.util.regex.Pattern.quote(a.siblingPrefix)}_[0-9a-f]+$$".r
-      val bp = new org.apache.hadoop.fs.Path(a.siblingBase)
-      val bfs = bp.getFileSystem(conf)
-      val nStale =
-        if (!bfs.exists(bp)) 0L
-        else bfs.listStatus(bp).count { st =>
-          val n = st.getPath.getName
-          st.isDirectory &&
-            ((n.startsWith(scoped) && n != liveName) ||
-              oldFormat.findFirstIn(n).nonEmpty)
-        }.toLong
+      // superseded freshness-tagged SIBLING roots of this source dir: a
+      // stale sibling is a retained pre-erase copy — the sweep must
+      // have removed it (another source dir's sibling is that SF's
+      // live store, not residue of this one)
+      val nStale = StoreGuard.staleSiblings(s, a.erased.key.base,
+        a.erased.key.prefix, d, base.substring(base.lastIndexOf('/') + 1))
+        .size.toLong
       // subject-grain violations (r18 verdict item 4): rows whose
       // erasure subject is absent from the schema (the whole payload
       // violates — a row-drop erase cannot even express the predicate)
@@ -234,7 +184,7 @@ object Erasure {
   }
 
   private def q338(s: SparkSession, d: String): DataFrame =
-    auditFrame(s, d, registry)
+    auditFrame(s, d, registry, _.ensure(s, d))
 
   private val q338Sql =
     """SELECT t.*, CAST(0 AS BIGINT) AS n_stale_siblings,

@@ -1797,14 +1797,25 @@ object Eval {
       |    CAST(n_a AS DOUBLE), 6) AS diff_adjusted
       |FROM tot""".stripMargin
 
-  /** Per-SF staging root for q260's persisted metric-state store. */
-  private[graft] def q260StoreRoot(d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    s"target/stage_eval/q260_store_v1_$tag"
-  }
+  /** The day q260's persisted histogram ends: history strictly before
+    * it lives in the store, the rest is the run's delta.
+    */
+  private val q260CutUs = 1706140800000000L // 2024-01-25T00:00:00Z
 
-  private def ensureBuilt(s: SparkSession, root: String)(
-      build: => Unit): Unit = StoreGuard.ensureBuilt(s, root)(build)
+  /** q260's persisted metric state: the (hour, cent) → (positives,
+    * total) histogram of the events before [[q260CutUs]], keyed on the
+    * events file's freshness so a rewritten table rebuilds it.
+    */
+  private[graft] val q260Hist = StoreGuard.declare("target/stage_eval",
+      "q260_hist", "events.parquet", payload = Seq("hist")) { (s, d, root) =>
+    import s.implicits._
+    eventsHist(s, d)
+      .filter($"us" < q260CutUs)
+      .groupBy($"hr", $"c")
+      .agg(sum($"p").as("pos"), count(lit(1)).as("tot"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/hist")
+  }
 
   /** q260: INCREMENTAL AUC — metric maintenance as a PIPELINE, the
     * production shape where yesterday's metric state persists and
@@ -1824,19 +1835,9 @@ object Eval {
     */
   private def q260(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.SaveMode
-    val cutUs = 1706140800000000L // 2024-01-25T00:00:00Z
-    val root = q260StoreRoot(d)
-    ensureBuilt(s, root) {
-      eventsHist(s, d)
-        .filter($"us" < cutUs)
-        .groupBy($"hr", $"c")
-        .agg(sum($"p").as("pos"), count(lit(1)).as("tot"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$root/hist")
-    }
-    val store = s.read.parquet(s"$root/hist")
+    val store = s.read.parquet(s"${q260Hist.ensure(s, d)}/hist")
     val delta = eventsHist(s, d)
-      .filter($"us" >= cutUs)
+      .filter($"us" >= q260CutUs)
       .groupBy($"hr", $"c")
       .agg(sum($"p").as("pos"), count(lit(1)).as("tot"))
     aucFromHist(

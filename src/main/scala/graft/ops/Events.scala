@@ -152,27 +152,41 @@ object Events {
     */
   private[graft] def backfillParts(
       s: SparkSession, d: String): (DataFrame, DataFrame, Long) = {
+    val (ev, restatedDay) = backfillEvents(s, d)
+    val store = s.read.parquet(s"${backfill.ensure(s, d)}/rollup.parquet")
+    val corrected = backfillRollup(ev.filter(col("day_id") === restatedDay))
+    (store, corrected, restatedDay)
+  }
+
+  /** q310's events as (event_id, day_id, event_type, cents), and the
+    * restated day (the third day of the table).
+    */
+  private def backfillEvents(
+      s: SparkSession, d: String): (DataFrame, Long) = {
     import s.implicits._
     val ev = Tables.events(s, d)
       .select($"event_id",
         expr("unix_micros(ts) DIV 86400000000").as("day_id"),
         $"event_type",
         expr("CAST(ROUND(value * 100) AS LONG)").as("cents"))
-    val restatedDay = ev.agg(min($"day_id")).as[Long].collect().head + 3
-    def rollup(df: DataFrame): DataFrame = df
-      .groupBy(col("day_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-    val root = StoreGuard.storeRoot(s, "target/stage_events",
-      "backfill", d, "events.parquet", "partial3")
-    StoreGuard.ensureBuilt(s, root) {
-      rollup(ev.filter(!($"day_id" === restatedDay &&
-          $"event_id" % 3 === 0L)))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/rollup.parquet")
-    }
-    val store = s.read.parquet(s"$root/rollup.parquet")
-    val corrected = rollup(ev.filter($"day_id" === restatedDay))
-    (store, corrected, restatedDay)
+    (ev, ev.agg(min($"day_id")).as[Long].collect().head + 3)
+  }
+
+  private def backfillRollup(df: DataFrame): DataFrame = df
+    .groupBy(col("day_id"), col("event_type"))
+    .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
+
+  /** The persisted rollup of the PARTIAL world: a third of the restated
+    * day's events had not arrived when it was built.
+    */
+  private val backfill = StoreGuard.declare("target/stage_events",
+      "backfill", "events.parquet", extra = "partial3",
+      payload = Seq("rollup.parquet")) { (s, d, root) =>
+    val (ev, restatedDay) = backfillEvents(s, d)
+    backfillRollup(ev.filter(!(col("day_id") === restatedDay &&
+        col("event_id") % 3 === 0L)))
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/rollup.parquet")
   }
 
   private def q310(s: SparkSession, d: String): DataFrame = {
@@ -3605,30 +3619,26 @@ object Events {
           expr("transform(pts, p -> p.value)")).as("bin"))
   }
 
-  /** Pure freshness key of the q353 compressed-series store — the
-    * block grain is part of the key, so a layout-recipe change can
-    * never serve blobs blocked under the old grain.
-    */
-  private[graft] def tsStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/stage_events",
-      "tsstore", d, "events.parquet", extra = "blk:86400000000")
-
   /** The ONE spelling of q353's erasure predicate tag (user_id % 19 == 3
     * is the erased set; the tag names the SURVIVOR predicate).
     */
   private[graft] val TsErasedTag = "erased_u19ne3"
 
-  /** Build-if-absent compressed-series store. */
-  private[graft] def tsStore(s: SparkSession, d: String): String = {
-    val root = tsStoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      seriesFrame(s, d)
-        .repartition(8, col("user_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/series")
-    }
-    root
+  /** Build-if-absent compressed-series store. The block grain is part
+    * of the key, so a layout-recipe change can never serve blobs
+    * blocked under the old grain.
+    */
+  private[graft] val tsBase = StoreGuard.declare("target/stage_events",
+      "tsstore", "events.parquet", extra = "blk:86400000000",
+      payload = Seq("series")) { (s, d, root) =>
+    seriesFrame(s, d)
+      .repartition(8, col("user_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/series")
   }
+
+  private[graft] def tsStore(s: SparkSession, d: String): String =
+    tsBase.ensure(s, d)
 
   /** q353's PHYSICAL erase — the codec store joins the erasure family:
     * a user's compressed blobs ARE their event history, so erasing E
@@ -3639,20 +3649,18 @@ object Events {
     * the audit's sibling/base sweeps are what keep a "simple" store
     * honest too).
     */
-  private[graft] def erasedTsStore(s: SparkSession, d: String): String = {
-    val root = tsStoreRoot(s, d)
-    StoreGuard.sweepStaleSiblings(s, "target/stage_events",
-      "tsstore", d, Set(root.split('/').last))
-    StoreGuard.eraseRewrite(s, root, TsErasedTag,
-      Seq("series"))(tsStore(s, d)) { out =>
-      val base = s.read.parquet(s"$root/series")
-        .localCheckpoint() // pin: the base payload is vacuumed below
-      base.where(col("user_id") % 19 =!= 3)
-        .repartition(8, col("user_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/series")
-    }
+  private[graft] val erasedTs = StoreGuard.declareErase(tsBase,
+      TsErasedTag, payload = Seq("series")) { (s, _, root, out) =>
+    val base = s.read.parquet(s"$root/series")
+      .localCheckpoint() // pin: the base payload is vacuumed below
+    base.where(col("user_id") % 19 =!= 3)
+      .repartition(8, col("user_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/series")
   }
+
+  private[graft] def erasedTsStore(s: SparkSession, d: String): String =
+    erasedTs.ensure(s, d)
 
   /** Pruned range read over a compressed-series store root: series
     * whose [ts_min, ts_max] bounds miss the range are NEVER decoded —
@@ -3744,80 +3752,80 @@ object Events {
   /** Build-if-absent MERGED store: base batch persisted, late batch
     * folded in at block grain via decode-merge-encode.
     */
-  private[graft] def mergedTsStore(s: SparkSession, d: String): String = {
+  private val tsMerged = StoreGuard.declare("target/stage_events",
+      "tsmerge", "events.parquet", extra = "blk:86400000000",
+      payload = Seq("base", "series")) { (s, d, root) =>
     import s.implicits._
-    val root = StoreGuard.storeRoot(s, "target/stage_events",
-      "tsmerge", d, "events.parquet", extra = "blk:86400000000")
-    StoreGuard.ensureBuilt(s, root) {
-      val ev = Tables.events(s, d)
-        .select($"user_id", $"event_type",
-          expr("unix_micros(ts)").as("tus"), $"event_id", $"value")
-      // base store: first batch only
-      seriesFrameOf(s, ev.where($"event_id" % 10 < 8))
-        .repartition(8, col("user_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/base")
-      val base = s.read.parquet(s"$root/base")
-      // the late batch, at block grain
-      val delta = ev.where($"event_id" % 10 >= 8)
-        .withColumn("blk", expr("tus DIV 86400000000"))
-      val deltaPts = delta
-        .groupBy($"user_id", $"event_type", $"blk")
-        .agg(collect_list(struct($"tus", $"event_id", $"value")).as("np"))
-      // affected blocks: decode, merge with the new points in
-      // (ts, event_id) order, re-encode — old points come from the
-      // BLOB, never from the raw table
-      val affected = base
-        .join(deltaPts, Seq("user_id", "event_type", "blk"))
-        .withColumn("dec", graft.functions.Gorilla.decode(s, $"bin"))
-        .withColumn("old", expr(
-          "transform(arrays_zip(dec.ts, dec.vs), " +
-            "p -> struct(p.ts AS tus, CAST(-1 AS LONG) AS event_id, " +
-            "p.vs AS value))"))
-        .withColumn("pts", expr(
-          // merge: old points keep their encoded (ts asc) order and
-          // sort_array restores the global (ts, event_id) order over
-          // the union — event_id -1 on decoded points sorts them
-          // FIRST within a tied timestamp, matching their original
-          // position (the base encode already folded their true ids).
-          // CAVEAT (both directions of the tie hazard): two BASE
-          // points tied at the same µs also both carry -1, so the tie
-          // breaks on VALUE, not their original event_id order — the
-          // decoded point MULTISET is exact, but blob-byte identity
-          // with a from-scratch rebuild is guaranteed only per
-          // tie-normalized decode (Round18bSpec compares exactly
-          // that; the aggregate readout is order-free regardless)
-          "sort_array(concat(old, np))"))
-        .select($"user_id", $"event_type", $"blk",
-          expr("pts[0].tus").as("ts_min"),
-          expr("element_at(pts, -1).tus").as("ts_max"),
-          size($"pts").cast("long").as("n"),
-          graft.functions.Gorilla.encode(s,
-            expr("transform(pts, p -> p.tus)"),
-            expr("transform(pts, p -> p.value)")).as("bin"))
-      // brand-new blocks the base never held
-      val fresh = deltaPts
-        .join(base.select($"user_id", $"event_type", $"blk"),
-          Seq("user_id", "event_type", "blk"), "left_anti")
-        .withColumn("pts", sort_array($"np"))
-        .select($"user_id", $"event_type", $"blk",
-          expr("pts[0].tus").as("ts_min"),
-          expr("element_at(pts, -1).tus").as("ts_max"),
-          size($"pts").cast("long").as("n"),
-          graft.functions.Gorilla.encode(s,
-            expr("transform(pts, p -> p.tus)"),
-            expr("transform(pts, p -> p.value)")).as("bin"))
-      // untouched rows carry over row-identical — never re-encoded
-      val untouched = base
-        .join(deltaPts.select($"user_id", $"event_type", $"blk"),
-          Seq("user_id", "event_type", "blk"), "left_anti")
-      untouched.unionByName(affected).unionByName(fresh)
-        .repartition(8, col("user_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/series")
-    }
-    root
+    val ev = Tables.events(s, d)
+      .select($"user_id", $"event_type",
+        expr("unix_micros(ts)").as("tus"), $"event_id", $"value")
+    // base store: first batch only
+    seriesFrameOf(s, ev.where($"event_id" % 10 < 8))
+      .repartition(8, col("user_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/base")
+    val base = s.read.parquet(s"$root/base")
+    // the late batch, at block grain
+    val delta = ev.where($"event_id" % 10 >= 8)
+      .withColumn("blk", expr("tus DIV 86400000000"))
+    val deltaPts = delta
+      .groupBy($"user_id", $"event_type", $"blk")
+      .agg(collect_list(struct($"tus", $"event_id", $"value")).as("np"))
+    // affected blocks: decode, merge with the new points in
+    // (ts, event_id) order, re-encode — old points come from the
+    // BLOB, never from the raw table
+    val affected = base
+      .join(deltaPts, Seq("user_id", "event_type", "blk"))
+      .withColumn("dec", graft.functions.Gorilla.decode(s, $"bin"))
+      .withColumn("old", expr(
+        "transform(arrays_zip(dec.ts, dec.vs), " +
+          "p -> struct(p.ts AS tus, CAST(-1 AS LONG) AS event_id, " +
+          "p.vs AS value))"))
+      .withColumn("pts", expr(
+        // merge: old points keep their encoded (ts asc) order and
+        // sort_array restores the global (ts, event_id) order over
+        // the union — event_id -1 on decoded points sorts them
+        // FIRST within a tied timestamp, matching their original
+        // position (the base encode already folded their true ids).
+        // CAVEAT (both directions of the tie hazard): two BASE
+        // points tied at the same µs also both carry -1, so the tie
+        // breaks on VALUE, not their original event_id order — the
+        // decoded point MULTISET is exact, but blob-byte identity
+        // with a from-scratch rebuild is guaranteed only per
+        // tie-normalized decode (Round18bSpec compares exactly
+        // that; the aggregate readout is order-free regardless)
+        "sort_array(concat(old, np))"))
+      .select($"user_id", $"event_type", $"blk",
+        expr("pts[0].tus").as("ts_min"),
+        expr("element_at(pts, -1).tus").as("ts_max"),
+        size($"pts").cast("long").as("n"),
+        graft.functions.Gorilla.encode(s,
+          expr("transform(pts, p -> p.tus)"),
+          expr("transform(pts, p -> p.value)")).as("bin"))
+    // brand-new blocks the base never held
+    val fresh = deltaPts
+      .join(base.select($"user_id", $"event_type", $"blk"),
+        Seq("user_id", "event_type", "blk"), "left_anti")
+      .withColumn("pts", sort_array($"np"))
+      .select($"user_id", $"event_type", $"blk",
+        expr("pts[0].tus").as("ts_min"),
+        expr("element_at(pts, -1).tus").as("ts_max"),
+        size($"pts").cast("long").as("n"),
+        graft.functions.Gorilla.encode(s,
+          expr("transform(pts, p -> p.tus)"),
+          expr("transform(pts, p -> p.value)")).as("bin"))
+    // untouched rows carry over row-identical — never re-encoded
+    val untouched = base
+      .join(deltaPts.select($"user_id", $"event_type", $"blk"),
+        Seq("user_id", "event_type", "blk"), "left_anti")
+    untouched.unionByName(affected).unionByName(fresh)
+      .repartition(8, col("user_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/series")
   }
+
+  private[graft] def mergedTsStore(s: SparkSession, d: String): String =
+    tsMerged.ensure(s, d)
 
   /** q355: COMPACTION of the compressed store — the remaining verb of
     * the store's lifecycle (build q353 / maintain q354 / serve q353 /
@@ -3851,47 +3859,47 @@ object Events {
   }
 
   /** Build-if-absent week-compacted store over [[mergedTsStore]]. */
-  private[graft] def compactedTsStore(s: SparkSession, d: String): String = {
+  private val tsCompacted = StoreGuard.declare("target/stage_events",
+      "tscompact", "events.parquet", extra = "blk:86400000000:wk:7",
+      payload = Seq("series")) { (s, d, root) =>
     import s.implicits._
-    val root = StoreGuard.storeRoot(s, "target/stage_events",
-      "tscompact", d, "events.parquet", extra = "blk:86400000000:wk:7")
-    StoreGuard.ensureBuilt(s, root) {
-      graft.functions.Gorilla.register(s)
-      val st = s.read
-        .parquet(s"${mergedTsStore(s, d)}/series")
-        .withColumn("wk", expr("blk DIV 7"))
-      val grouped = st
-        .groupBy($"user_id", $"event_type", $"wk")
-        .agg(count(lit(1)).as("nb"),
-          sort_array(collect_list(struct(
-            $"blk", $"ts_min", $"ts_max", $"n", $"bin"))).as("blocks"))
-      // right-sized weeks: the original row carries over byte-for-byte
-      val singles = grouped.where($"nb" === 1)
-        .select($"user_id", $"event_type",
-          expr("blocks[0].blk").as("blk"),
-          expr("blocks[0].ts_min").as("ts_min"),
-          expr("blocks[0].ts_max").as("ts_max"),
-          expr("blocks[0].n").as("n"),
-          expr("blocks[0].bin").as("bin"))
-      // fragmented weeks: decode in day order (disjoint ascending
-      // ranges — concatenation IS the global time order), re-encode
-      val merged = grouped.where($"nb" > 1)
-        .withColumn("decs", expr("transform(blocks, b -> gorilla_decode(b.bin))"))
-        .withColumn("tss", expr("flatten(transform(decs, x -> x.ts))"))
-        .withColumn("vss", expr("flatten(transform(decs, x -> x.vs))"))
-        .select($"user_id", $"event_type",
-          expr("blocks[0].blk").as("blk"),
-          expr("tss[0]").as("ts_min"),
-          expr("element_at(tss, -1)").as("ts_max"),
-          size($"tss").cast("long").as("n"),
-          expr("gorilla_encode(tss, vss)").as("bin"))
-      singles.unionByName(merged)
-        .repartition(8, col("user_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/series")
-    }
-    root
+    graft.functions.Gorilla.register(s)
+    val st = s.read
+      .parquet(s"${mergedTsStore(s, d)}/series")
+      .withColumn("wk", expr("blk DIV 7"))
+    val grouped = st
+      .groupBy($"user_id", $"event_type", $"wk")
+      .agg(count(lit(1)).as("nb"),
+        sort_array(collect_list(struct(
+          $"blk", $"ts_min", $"ts_max", $"n", $"bin"))).as("blocks"))
+    // right-sized weeks: the original row carries over byte-for-byte
+    val singles = grouped.where($"nb" === 1)
+      .select($"user_id", $"event_type",
+        expr("blocks[0].blk").as("blk"),
+        expr("blocks[0].ts_min").as("ts_min"),
+        expr("blocks[0].ts_max").as("ts_max"),
+        expr("blocks[0].n").as("n"),
+        expr("blocks[0].bin").as("bin"))
+    // fragmented weeks: decode in day order (disjoint ascending
+    // ranges — concatenation IS the global time order), re-encode
+    val merged = grouped.where($"nb" > 1)
+      .withColumn("decs", expr("transform(blocks, b -> gorilla_decode(b.bin))"))
+      .withColumn("tss", expr("flatten(transform(decs, x -> x.ts))"))
+      .withColumn("vss", expr("flatten(transform(decs, x -> x.vs))"))
+      .select($"user_id", $"event_type",
+        expr("blocks[0].blk").as("blk"),
+        expr("tss[0]").as("ts_min"),
+        expr("element_at(tss, -1)").as("ts_max"),
+        size($"tss").cast("long").as("n"),
+        expr("gorilla_encode(tss, vss)").as("bin"))
+    singles.unionByName(merged)
+      .repartition(8, col("user_id"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/series")
   }
+
+  private[graft] def compactedTsStore(s: SparkSession, d: String): String =
+    tsCompacted.ensure(s, d)
 
   /** q353: COMPRESSED-SERIES STORE RANGE READ — q349's codec composed
     * into the store lifecycle: build once (freshness-keyed), serve a

@@ -202,33 +202,28 @@ object Graph {
     * crash-safe behind the store-level completion marker
     * ([[StoreGuard]]); readers get a plain partitioned parquet scan.
     */
-  private[graft] def coPurchaseEdges(
-      s: SparkSession, d: String): DataFrame = {
+  private[graft] val coPurchase = StoreGuard.declare(
+      "target/graft_graph_store", "edges", "lineitem.parquet",
+      payload = Seq("und.parquet")) { (s, d, root) =>
     import s.implicits._
-    // the store key folds in the source's (mtime, length, content
-    // fingerprint — StoreGuard's shared recipe, r17 migration) so a
-    // regenerated testdata dir can never serve a stale graph — the
-    // completion marker proves the build finished, the key proves it
-    // was built from THIS source
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "edges", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      val li = Tables
-        .lineitem(s, d)
-        .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
-      li.as("x")
-        .join(li.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
-        .select($"x.pk".as("a"), $"y.pk".as("b"))
-        .distinct()
-        // partition count = the session's shuffle parallelism: an
-        // 8-file layout measured 8.3 s on the LPA sweeps vs 5.8 before
-        // the store — the kernels' scan-side tasks inherit the file
-        // count, so the store must carry the full width
-        .repartition(col("a"))
-        .write.mode("overwrite").parquet(s"$root/und.parquet")
-    }
-    s.read.parquet(s"$root/und.parquet")
+    val li = Tables
+      .lineitem(s, d)
+      .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
+    li.as("x")
+      .join(li.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
+      .select($"x.pk".as("a"), $"y.pk".as("b"))
+      .distinct()
+      // partition count = the session's shuffle parallelism: an
+      // 8-file layout measured 8.3 s on the LPA sweeps vs 5.8 before
+      // the store — the kernels' scan-side tasks inherit the file
+      // count, so the store must carry the full width
+      .repartition(col("a"))
+      .write.mode("overwrite").parquet(s"$root/und.parquet")
   }
+
+  private[graft] def coPurchaseEdges(
+      s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${coPurchase.ensure(s, d)}/und.parquet")
 
   /** q143: TRIANGLE COUNTING over the co-purchase graph (parts that
     * share an order are adjacent) — the third classic distributed graph
@@ -473,24 +468,23 @@ object Graph {
     * makes the store rebuildable: same graph, same labels. Keyed via
     * StoreGuard's shared freshness recipe.
     */
-  private[graft] def lpaStore(s: SparkSession, d: String): DataFrame = {
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "lpa", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      import s.implicits._
-      val und = coPurchaseEdges(s, d)
-      val edges = und
-        .select($"a".as("src"), $"b".as("dst"))
-        .unionAll(und.select($"b".as("src"), $"a".as("dst")))
-      // node-cardinality artifact: hash-distribute the write (the
-      // q177 store discipline) — one task writing the whole labeling
-      // would serialize a 10⁵-node graph's store build
-      labelPropagation(edges, iters = 4)
-        .repartition(8, col("id"))
-        .write.mode("overwrite").parquet(s"$root/labels.parquet")
-    }
-    s.read.parquet(s"$root/labels.parquet")
+  private val lpa = StoreGuard.declare("target/graft_graph_store", "lpa",
+      "lineitem.parquet", payload = Seq("labels.parquet")) { (s, d, root) =>
+    import s.implicits._
+    val und = coPurchaseEdges(s, d)
+    val edges = und
+      .select($"a".as("src"), $"b".as("dst"))
+      .unionAll(und.select($"b".as("src"), $"a".as("dst")))
+    // node-cardinality artifact: hash-distribute the write (the
+    // q177 store discipline) — one task writing the whole labeling
+    // would serialize a 10⁵-node graph's store build
+    labelPropagation(edges, iters = 4)
+      .repartition(8, col("id"))
+      .write.mode("overwrite").parquet(s"$root/labels.parquet")
   }
+
+  private[graft] def lpaStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${lpa.ensure(s, d)}/labels.parquet")
 
   private def q273(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1143,15 +1137,6 @@ object Graph {
       .agg(coalesce(sum($"c"), lit(0L)).as("d_triangles"))
   }
 
-  /** Per-source staging root for q290's persisted graph store; like
-    * [[coPurchaseEdges]] it keys via [[StoreGuard]]'s shared freshness
-    * recipe (mtime, length, content fingerprint) so regenerated
-    * testdata can never serve a stale snapshot.
-    */
-  private def q290StoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "inc", d, "lineitem.parquet", s"$incCut")
-
   /** q290: INCREMENTAL TRIANGLE COUNTING — graph-metric maintenance as
     * a PIPELINE, the q177/q182/q184/q260 incremental-store discipline
     * extended to graph analytics: the co-purchase graph BEFORE the
@@ -1171,12 +1156,6 @@ object Graph {
     * one day of lines instead of re-enumerating every order ever;
     * per-delta-edge work is bounded by the smaller endpoint degree.
     */
-  /** Build-if-absent for q290's graph snapshot store: the pre-cut edge
-    * list and its triangle census. Returns (edges, stats) readers.
-    * Exposed so Bench can warm the one-time build alongside the
-    * bucketed tables and the co-purchase store — storage preparation,
-    * not part of the incremental run it serves.
-    */
   /** The snapshot cut shared by q290 (batch maintenance) and q291 (its
     * streaming twin, which RESUMES from this store): history strictly
     * before this ship date is the bulk-built snapshot, everything at or
@@ -1184,25 +1163,31 @@ object Graph {
     */
   private[graft] val incCut = "2001-09-01 00:00:00"
 
+  /** Build-if-absent for q290's graph snapshot store: the pre-cut edge
+    * list and its triangle census.
+    */
+  private val incTriangle = StoreGuard.declare("target/graft_graph_store",
+      "inc", "lineitem.parquet", extra = incCut,
+      payload = Seq("edges.parquet", "stats.parquet")) { (s, d, root) =>
+    import s.implicits._
+    val cut = lit(incCut).cast("timestamp")
+    val bl = Tables
+      .lineitem(s, d)
+      .filter($"l_shipdate" < cut)
+      .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
+    bl.as("x")
+      .join(bl.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
+      .select($"x.pk".as("a"), $"y.pk".as("b"))
+      .distinct()
+      .repartition(col("a"))
+      .write.mode("overwrite").parquet(s"$root/edges.parquet")
+    triangleCount(s.read.parquet(s"$root/edges.parquet"))
+      .write.mode("overwrite").parquet(s"$root/stats.parquet")
+  }
+
   private[graft] def incTriangleStore(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    import s.implicits._
-    val cut  = lit(incCut).cast("timestamp")
-    val root = q290StoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      val bl = Tables
-        .lineitem(s, d)
-        .filter($"l_shipdate" < cut)
-        .select($"l_orderkey".as("ok"), $"l_partkey".as("pk"))
-      bl.as("x")
-        .join(bl.as("y"), $"x.ok" === $"y.ok" && $"x.pk" < $"y.pk")
-        .select($"x.pk".as("a"), $"y.pk".as("b"))
-        .distinct()
-        .repartition(col("a"))
-        .write.mode("overwrite").parquet(s"$root/edges.parquet")
-      triangleCount(s.read.parquet(s"$root/edges.parquet"))
-        .write.mode("overwrite").parquet(s"$root/stats.parquet")
-    }
+    val root = incTriangle.ensure(s, d)
     (s.read.parquet(s"$root/edges.parquet"),
       s.read.parquet(s"$root/stats.parquet"))
   }
@@ -1597,19 +1582,19 @@ object Graph {
     * rebuildable: same graph, same bytes. Keyed via StoreGuard's
     * shared freshness recipe (mtime, length, content fingerprint).
     */
-  private[graft] def walkStore(s: SparkSession, d: String): DataFrame = {
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "walks", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      randomWalks(coPurchaseEdges(s, d),
-        nSeeds = 64, walksPerSeed = 4, len = 8)
-        // bounded artifact: exactly nSeeds×walksPerSeed = 256 rows by
-        // construction — one output file is the right layout
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/walks.parquet")
-    }
-    s.read.parquet(s"$root/walks.parquet")
+  private val walkCorpus = StoreGuard.declare("target/graft_graph_store",
+      "walks", "lineitem.parquet",
+      payload = Seq("walks.parquet")) { (s, d, root) =>
+    randomWalks(coPurchaseEdges(s, d),
+      nSeeds = 64, walksPerSeed = 4, len = 8)
+      // bounded artifact: exactly nSeeds×walksPerSeed = 256 rows by
+      // construction — one output file is the right layout
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/walks.parquet")
   }
+
+  private[graft] def walkStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${walkCorpus.ensure(s, d)}/walks.parquet")
 
   private def q297(s: SparkSession, d: String): DataFrame =
     walkStore(s, d).orderBy(col("walk_id"))
@@ -1915,18 +1900,18 @@ object Graph {
     * rebuildable: same corpus, same vectors. Keyed via StoreGuard's
     * shared freshness recipe.
     */
-  private[graft] def embeddingStore(s: SparkSession, d: String): DataFrame = {
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "emb", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      nodeEmbeddings(walkStore(s, d), dim = 8)
-        // bounded artifact: ≤ vocabCap rows by the eigensolve's own
-        // `require` bound — one output file is the right layout
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/emb.parquet")
-    }
-    s.read.parquet(s"$root/emb.parquet")
+  private val trainedEmb = StoreGuard.declare("target/graft_graph_store",
+      "emb", "lineitem.parquet",
+      payload = Seq("emb.parquet")) { (s, d, root) =>
+    nodeEmbeddings(walkStore(s, d), dim = 8)
+      // bounded artifact: ≤ vocabCap rows by the eigensolve's own
+      // `require` bound — one output file is the right layout
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/emb.parquet")
   }
+
+  private[graft] def embeddingStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${trainedEmb.ensure(s, d)}/emb.parquet")
 
   private def q300(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2142,19 +2127,19 @@ object Graph {
     * freshness via StoreGuard's shared recipe (the embeddingStore
     * discipline).
     */
-  private[graft] def basePairStore(s: SparkSession, d: String): DataFrame = {
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "basepairs", d, "lineitem.parquet")
-    StoreGuard.ensureBuilt(s, root) {
-      // |V|²-bounded artifact: hash-distribute the write by center
-      // (the q177 store discipline) — one task writing the whole pair
-      // matrix would serialize a 10⁵-node graph's store build
-      skipgramPairs(walkStore(s, d).filter(col("walk_id") % 4 =!= 3))
-        .repartition(8, col("center"))
-        .write.mode("overwrite").parquet(s"$root/pairs.parquet")
-    }
-    s.read.parquet(s"$root/pairs.parquet")
+  private val basePairs = StoreGuard.declare("target/graft_graph_store",
+      "basepairs", "lineitem.parquet",
+      payload = Seq("pairs.parquet")) { (s, d, root) =>
+    // |V|²-bounded artifact: hash-distribute the write by center
+    // (the q177 store discipline) — one task writing the whole pair
+    // matrix would serialize a 10⁵-node graph's store build
+    skipgramPairs(walkStore(s, d).filter(col("walk_id") % 4 =!= 3))
+      .repartition(8, col("center"))
+      .write.mode("overwrite").parquet(s"$root/pairs.parquet")
   }
+
+  private[graft] def basePairStore(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${basePairs.ensure(s, d)}/pairs.parquet")
 
   private def q312(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2192,24 +2177,15 @@ object Graph {
   /** Build-if-absent FULL-corpus pair-count store — the persisted
     * training statistic q329's erasure folds OUT of (the full twin of
     * [[basePairStore]]'s history slice). Hash-distributed by center,
-    * the q177 store discipline.
+    * the q177 store discipline. An erasure-family store: a superseded
+    * sibling would RETAIN erased pair rows on disk, so it sweeps.
     */
-  private[graft] def fullPairStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "fullpairs", d, "lineitem.parquet")
-
-  private[graft] def fullPairStore(s: SparkSession, d: String): DataFrame = {
-    val root = fullPairStoreRoot(s, d)
-    // erasure-family store: a superseded freshness-tagged sibling would
-    // RETAIN erased pair rows on disk — sweep it, don't just orphan it
-    StoreGuard.sweepStaleSiblings(s, "target/graft_graph_store",
-      "fullpairs", d, Set(root.split('/').last))
-    StoreGuard.ensureBuilt(s, root) {
-      skipgramPairs(walkStore(s, d))
-        .repartition(8, col("center"))
-        .write.mode("overwrite").parquet(s"$root/pairs.parquet")
-    }
-    s.read.parquet(s"$root/pairs.parquet")
+  private[graft] val fullPairs = StoreGuard.declare(
+      "target/graft_graph_store", "fullpairs", "lineitem.parquet",
+      sweep = true, payload = Seq("pairs.parquet")) { (s, d, root) =>
+    skipgramPairs(walkStore(s, d))
+      .repartition(8, col("center"))
+      .write.mode("overwrite").parquet(s"$root/pairs.parquet")
   }
 
   /** q329: TRAINING-STATISTIC ERASURE — the q326 erasure obligation
@@ -2234,43 +2210,29 @@ object Graph {
     * Scale: the erase batch reads only the |V|²-bounded store; all
     * arithmetic downstream of the filter is the q299 path.
     */
-  /** q329's PHYSICAL erase, through [[StoreGuard.eraseRewrite]]'s
-    * shared transaction: rewrite the pair store minus every row keyed
-    * by an erased node into the predicate-tagged sibling, vacuuming
-    * the superseded pre-erasure state (crash-safe order and the
-    * steady-state sweep both live in the ONE helper). Round17Spec
-    * asserts zero erased rows on disk AND the vacuumed base.
-    */
   /** The ONE spelling of q329's erasure predicate tag (node % 23 == 7
     * is the erased set; the tag names the SURVIVOR predicate).
     */
   private[graft] val SppmiErasedTag = "erased_mod23ne7"
 
-  /** q329's erased store root — ensures the erase transaction ran and
-    * returns the predicate-tagged root (q338's audit handle).
+  /** q329's PHYSICAL erase, through the shared erase transaction
+    * ([[StoreGuard.declareErase]]): rewrite the pair store minus every
+    * row keyed by an erased node into the predicate-tagged sibling,
+    * vacuuming the superseded pre-erasure state (crash-safe order and
+    * the steady-state sweep both live in the guard). Round17Spec
+    * asserts zero erased rows on disk AND the vacuumed base.
     */
-  private[graft] def erasedPairStoreRoot(
-      s: SparkSession, d: String): String = {
-    erasedPairStore(s, d)
-    s"${fullPairStoreRoot(s, d)}/$SppmiErasedTag"
+  private[graft] val erasedPairs = StoreGuard.declareErase(fullPairs,
+      SppmiErasedTag, payload = Seq("pairs.parquet")) { (s, _, root, out) =>
+    s.read.parquet(s"$root/pairs.parquet")
+      .where(col("center") % 23 =!= 7 && col("context") % 23 =!= 7)
+      .repartition(8, col("center"))
+      .write.mode("overwrite").parquet(s"$out/pairs.parquet")
   }
 
   private[graft] def erasedPairStore(
-      s: SparkSession, d: String): DataFrame = {
-    val root = fullPairStoreRoot(s, d)
-    // steady-state sweep of superseded freshness-tagged roots: an old
-    // root orphaned by a source rewrite may hold PRE-erase payloads
-    StoreGuard.sweepStaleSiblings(s, "target/graft_graph_store",
-      "fullpairs", d, Set(root.split('/').last))
-    val erased = StoreGuard.eraseRewrite(s, root, SppmiErasedTag,
-      Seq("pairs.parquet"))(fullPairStore(s, d)) { out =>
-      s.read.parquet(s"$root/pairs.parquet")
-        .where(col("center") % 23 =!= 7 && col("context") % 23 =!= 7)
-        .repartition(8, col("center"))
-        .write.mode("overwrite").parquet(s"$out/pairs.parquet")
-    }
-    s.read.parquet(s"$erased/pairs.parquet")
-  }
+      s: SparkSession, d: String): DataFrame =
+    s.read.parquet(s"${erasedPairs.ensure(s, d)}/pairs.parquet")
 
   private def q329(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -2325,44 +2287,51 @@ object Graph {
     * q49/q200 serving layout applied to the TRAINED artifact (the plug
     * q307's docstring promised): rows written `partitionBy("cell")` so
     * a probe prunes to its cells at the SCAN, centroids persisted
-    * beside the index. Returns (indexPath, centroids).
+    * beside the index. One declaration per cell count in use.
     */
+  private val IvfPayload = Seq("index", "cents")
+
+  private val trainedIvf = StoreGuard.family("trained IVF", Seq(4)) { n =>
+    StoreGuard.declare("target/graft_graph_store", "trainedivf",
+        "lineitem.parquet", extra = s"$n", payload = IvfPayload) {
+      (s, d, root) => writeIvfAt(s, root, fullCoverageVectors(s, d), n)
+    }
+  }
+
+  /** (indexPath, centroids) of the trained-vector IVF store. */
   private[graft] def trainedIvfStore(
       s: SparkSession, d: String,
       nCells: Int = 4): (String, Array[Double]) =
-    buildIvfAt(s,
-      StoreGuard.storeRoot(s, "target/graft_graph_store",
-        "trainedivf", d, "lineitem.parquet", s"$nCells"),
-      fullCoverageVectors(s, d), nCells)
+    ivfAt(s, trainedIvf(nCells).ensure(s, d))
 
-  /** Build-if-absent IVF layout at `root` over any `(node, vmic, n2)`
-    * vector table — the store body of [[trainedIvfStore]], factored so
-    * q320 can lay out each REGISTRY version the same way. The vector
-    * argument is by-name: an already-built store never evaluates it.
+  /** Write the IVF layout at `root` over any `(node, vmic, n2)` vector
+    * table — the store body of [[trainedIvfStore]], shared so q320 can
+    * lay out each REGISTRY version the same way.
     */
-  private[graft] def buildIvfAt(
-      s: SparkSession, root: String, vecsIn: => DataFrame,
-      nCells: Int): (String, Array[Double]) = {
+  private[graft] def writeIvfAt(
+      s: SparkSession, root: String, vecsIn: DataFrame,
+      nCells: Int): Unit = {
     import s.implicits._
-    StoreGuard.ensureBuilt(s, root) {
-      val vecs = vecsIn.localCheckpoint()
-      val embF = vecs.select($"node".as("vec_id"),
-        expr("transform(vmic, x -> CAST(x / 1000000.0D AS FLOAT))")
-          .as("embedding"))
-      val cents = Vectors.ivfCentroids(embF, nCells, dims = 8)
-      Vectors.ivfIndex(
-        embF.join(vecs.select($"node".as("vec_id"), $"vmic", $"n2"),
-          "vec_id"),
-        cents, nCells, dims = 8)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$root/index")
-      Seq(Tuple1(cents.toSeq)).toDF("cents")
-        .write.mode("overwrite").parquet(s"$root/cents")
-    }
-    val cents = s.read.parquet(s"$root/cents")
-      .head.getSeq[Double](0).toArray
-    (s"$root/index", cents)
+    val vecs = vecsIn.localCheckpoint()
+    val embF = vecs.select($"node".as("vec_id"),
+      expr("transform(vmic, x -> CAST(x / 1000000.0D AS FLOAT))")
+        .as("embedding"))
+    val cents = Vectors.ivfCentroids(embF, nCells, dims = 8)
+    Vectors.ivfIndex(
+      embF.join(vecs.select($"node".as("vec_id"), $"vmic", $"n2"),
+        "vec_id"),
+      cents, nCells, dims = 8)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$root/index")
+    Seq(Tuple1(cents.toSeq)).toDF("cents")
+      .write.mode("overwrite").parquet(s"$root/cents")
   }
+
+  /** (indexPath, centroids) of the IVF layout at `root`. */
+  private[graft] def ivfAt(
+      s: SparkSession, root: String): (String, Array[Double]) =
+    (s"$root/index",
+      s.read.parquet(s"$root/cents").head.getSeq[Double](0).toArray)
 
   /** q313: TRAINED-VECTOR ANN SERVING — the full-corpus serving path
     * q307's brute force deferred: the q300+q308 vectors flow through
@@ -2479,12 +2448,13 @@ object Graph {
     * discipline every serving stack wants, riding the same commit log
     * as q304's time travel.
     */
+  private val embRegistryKey = StoreGuard.key("target/graft_graph_store",
+    "embreg", "lineitem.parquet")
+
   private[graft] def embeddingRegistry(
       s: SparkSession, d: String): graft.streaming.StoreLog = {
-    val root = StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "embreg", d, "lineitem.parquet")
     val log = new graft.streaming.StoreLog(
-      java.nio.file.Paths.get(root), "v")
+      java.nio.file.Paths.get(embRegistryKey.root(s, d)), "v")
     if (log.versions().size < 2) {
       log.commitTable(1L,
         nodeEmbeddingsFromPairs(basePairStore(s, d), dim = 8))
@@ -2528,15 +2498,22 @@ object Graph {
   /** Build-if-absent IVF layout for ONE registry version — the q313
     * store discipline keyed additionally on the version, so serving
     * v1 after a cutover to v2 (rollback) is a store lookup, never a
-    * rebuild.
+    * rebuild. The versions share one prefix and must not sweep each
+    * other.
     */
+  private val registryIvf =
+    StoreGuard.family("registry IVF", Seq((1L, 4), (2L, 4))) {
+      case (v, n) =>
+        StoreGuard.declare("target/graft_graph_store", "regivf",
+            "lineitem.parquet", extra = s"$v:$n", payload = IvfPayload) {
+          (s, d, root) => writeIvfAt(s, root, registryVectors(s, d, v), n)
+        }
+    }
+
   private[graft] def registryIvfStore(
       s: SparkSession, d: String, v: Long,
       nCells: Int = 4): (String, Array[Double]) =
-    buildIvfAt(s,
-      StoreGuard.storeRoot(s, "target/graft_graph_store",
-        "regivf", d, "lineitem.parquet", s"$v:$nCells"),
-      registryVectors(s, d, v), nCells)
+    ivfAt(s, registryIvf((v, nCells)).ensure(s, d))
 
   /** The q313 probe path pointed at a REGISTRY version. */
   private[graft] def registryAnnRecall(
@@ -2570,26 +2547,26 @@ object Graph {
 
   // ---- q342: serving-index erasure --------------------------------------
 
-  /** Pure key of q342's dedicated serving-index store — registry
-    * version 2's IVF layout under its OWN freshness-keyed root: the
-    * erase transaction vacuums its base, so it cannot share the
-    * regivf roots q320/q323 keep serving (their per-version stores
+  /** Build-if-absent serving IVF store (q342's erasure base) —
+    * registry version 2's IVF layout under its OWN freshness-keyed
+    * root: the erase transaction vacuums its base, so it cannot share
+    * the regivf roots q320/q323 keep serving (their per-version stores
     * are rollback state, not erasure bases).
     */
-  private[graft] def servingIvfRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/graft_graph_store",
-      "servivf", d, "lineitem.parquet")
+  private[graft] val servingIvf = StoreGuard.declare(
+      "target/graft_graph_store", "servivf", "lineitem.parquet",
+      payload = IvfPayload) { (s, d, root) =>
+    writeIvfAt(s, root, registryVectors(s, d, 2L), nCells = 4)
+  }
 
   /** The ONE spelling of q342's erasure predicate tag (node % 53 == 7
     * is the erased set; the tag names the SURVIVOR predicate).
     */
   private[graft] val ServingErasedTag = "erased_mod53ne7"
 
-  /** Build-if-absent serving IVF store (q342's erasure base). */
   private[graft] def servingIvfStore(
       s: SparkSession, d: String): (String, Array[Double]) =
-    buildIvfAt(s, servingIvfRoot(s, d), registryVectors(s, d, 2L),
-      nCells = 4)
+    ivfAt(s, servingIvf.ensure(s, d))
 
   /** q342's PHYSICAL erase of the SERVING index — the erasure family
     * reaches the last state-bearing layer (raw → statistic → search
@@ -2612,47 +2589,50 @@ object Graph {
     * can never return an erased node, and the superseded base (which
     * held the erased rows) is vacuumed by the shared transaction.
     */
-  private[graft] def erasedServingStore(
-      s: SparkSession, d: String): (String, Array[Double]) = {
+  private[graft] val erasedServing = StoreGuard.declareErase(servingIvf,
+      ServingErasedTag, payload = IvfPayload) { (s, _, root, out) =>
     import s.implicits._
-    val root = servingIvfRoot(s, d)
-    // steady-state sweep: an orphaned pre-erase root would RETAIN the
-    // erased vectors on disk
-    StoreGuard.sweepStaleSiblings(s, "target/graft_graph_store",
-      "servivf", d, Set(root.split('/').last))
-    val erased = StoreGuard.eraseRewrite(s, root, ServingErasedTag,
-      Seq("index", "cents"))(servingIvfStore(s, d)) { out =>
-      val conf = s.sparkContext.hadoopConfiguration
-      val basePath = new org.apache.hadoop.fs.Path(s"$root/index")
-      val fs = basePath.getFileSystem(conf)
-      val affected = s.read.parquet(s"$root/index")
-        .where($"vec_id" % 53 === 7)
-        .select($"cell").distinct().as[Int].collect().toSet
-      org.apache.hadoop.fs.FileUtil.copy(fs,
-        new org.apache.hadoop.fs.Path(s"$root/cents"), fs,
-        new org.apache.hadoop.fs.Path(s"$out/cents"), false, conf)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$out/index"))
-      fs.listStatus(basePath).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("cell=")) {
-          if (affected(n.stripPrefix("cell=").toInt)) {
-            // the cell dir's files lack the partition column — filter
-            // on vec_id and rewrite just this partition
-            s.read.parquet(st.getPath.toString)
-              .where($"vec_id" % 53 =!= 7)
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$out/index/$n")
-          } else {
-            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-              new org.apache.hadoop.fs.Path(s"$out/index/$n"),
-              false, conf)
-          }
+    val conf = s.sparkContext.hadoopConfiguration
+    val basePath = new org.apache.hadoop.fs.Path(s"$root/index")
+    val fs = basePath.getFileSystem(conf)
+    val affected = s.read.parquet(s"$root/index")
+      .where($"vec_id" % 53 === 7)
+      .select($"cell").distinct().as[Int].collect().toSet
+    // a crashed earlier attempt may have left part of the output:
+    // FileUtil.copy INTO an existing dir nests (`cell=1/cell=1`)
+    Seq("cents", "index").foreach(p =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$out/$p"), true))
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(s"$root/cents"), fs,
+      new org.apache.hadoop.fs.Path(s"$out/cents"), false, conf)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$out/index"))
+    fs.listStatus(basePath).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && n.startsWith("cell=")) {
+        if (affected(n.stripPrefix("cell=").toInt)) {
+          // the cell dir's files lack the partition column — filter
+          // on vec_id and rewrite just this partition
+          s.read.parquet(st.getPath.toString)
+            .where($"vec_id" % 53 =!= 7)
+            .coalesce(1)
+            .write.mode("overwrite").parquet(s"$out/index/$n")
+        } else {
+          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+            new org.apache.hadoop.fs.Path(s"$out/index/$n"),
+            false, conf)
         }
       }
     }
-    val cents = s.read.parquet(s"$erased/cents")
-      .head.getSeq[Double](0).toArray
-    (erased, cents)
+  }
+
+  /** q342's erase, run if absent: (erased root, frozen centroids). The
+    * sweep on every call removes orphaned pre-erase roots, which would
+    * RETAIN the erased vectors on disk.
+    */
+  private[graft] def erasedServingStore(
+      s: SparkSession, d: String): (String, Array[Double]) = {
+    val erased = erasedServing.ensure(s, d)
+    (erased, ivfAt(s, erased)._2)
   }
 
   /** q342: SERVING-INDEX ERASURE — the q313 probe path served from the

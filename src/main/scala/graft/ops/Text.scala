@@ -989,22 +989,20 @@ object Text {
     * and the registry read-back is partition-pruned to the version
     * asked for.
     */
-  /** Freshness key component of the SECOND source (embeddings) for the
-    * manifest-family stores — [[StoreGuard.sourceFreshness]]'s shared
-    * recipe, so a same-length embeddings rewrite can't serve a stale
-    * manifest and a recipe change covers both sources together.
+  /** The manifest-family stores derive from documents AND embeddings,
+    * so both sources' freshness is in their keys: a same-length
+    * embeddings rewrite can't serve a stale manifest.
     */
-  private[graft] def embFreshness(s: SparkSession, d: String): String =
-    StoreGuard.sourceFreshness(s, d, "embeddings.parquet")
+  private val mf4Sources = Seq("embeddings.parquet")
+
+  /** Key of q322's two-version manifest log. */
+  private[graft] val mf4Key = StoreGuard.key("target/graft_text_store",
+    "mf4", "documents.parquet", alsoSources = mf4Sources)
 
   private def q322(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // the manifest derives from documents AND embeddings — fold the
-    // second source's freshness into the store key
-    val root = StoreGuard.storeRoot(s, "target/graft_text_store", "mf4",
-      d, "documents.parquet", embFreshness(s, d))
     val log = new graft.streaming.StoreLog(
-      java.nio.file.Paths.get(root), "mf")
+      java.nio.file.Paths.get(mf4Key.root(s, d)), "mf")
     if (log.versions().size < 2) {
       log.commitTable(1L, manifestV4Version(s, d, semantic = false))
       log.commitTable(2L, manifestV4Version(s, d, semantic = true))
@@ -1057,23 +1055,28 @@ object Text {
     * composed manifest). Scale: delta-sized text scan, delta-blocked
     * pair enumeration, doc-cardinality state merge, two-pass rank.
     */
+  /** q325's persisted base states: yesterday priced the base slice and
+    * recorded which base docs a base-blocked near-dup pair drops.
+    */
+  private[graft] val mf4Incremental = StoreGuard.declare(
+      "target/graft_text_store", "mf4inc", "documents.parquet",
+      alsoSources = mf4Sources, payload = Seq("econ", "drops")) {
+      (s, d, root) =>
+    mf4DocCost(Tables.documents(s, d).where(col("doc_id") % 10 < 8))
+      .write.mode("overwrite").parquet(s"$root/econ")
+    Corpus.blockedNearDupPairs(
+        Tables.embeddings(s, d).where(col("vec_id") % 10 < 8),
+        minCosine = 0.3)
+      .select(col("b").as("doc_id")).distinct()
+      .write.mode("overwrite").parquet(s"$root/drops")
+  }
+
   private def q325(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = StoreGuard.storeRoot(s, "target/graft_text_store",
-      "mf4inc", d, "documents.parquet", embFreshness(s, d))
+    val root = mf4Incremental.ensure(s, d)
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
     val isBase = col("doc_id") % 10 < 8
-    StoreGuard.ensureBuilt(s, root) {
-      // yesterday: price the base slice, and record which base docs a
-      // base-blocked near-dup pair drops
-      mf4DocCost(docs.where(isBase))
-        .write.mode("overwrite").parquet(s"$root/econ")
-      Corpus.blockedNearDupPairs(emb.where(col("vec_id") % 10 < 8),
-          minCosine = 0.3)
-        .select($"b".as("doc_id")).distinct()
-        .write.mode("overwrite").parquet(s"$root/drops")
-    }
     // today: price ONLY the delta...
     val econ = s.read.parquet(s"$root/econ")
       .unionByName(mf4DocCost(docs.where(!isBase)))
@@ -1219,15 +1222,6 @@ object Text {
     * never corpus²); an erasure batch costs two anti-joins against
     * doc-cardinality state plus the two-pass rank over survivors.
     */
-  /** q326's persisted erasure state (build-if-absent): the full-corpus
-    * per-doc economics plus the near-dup pair evidence. Returns the
-    * store root.
-    */
-  /** Pure key of q326's erasure-state store (no side effects). */
-  private[graft] def mf4EraseStateRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/graft_text_store",
-      "mf4era", d, "documents.parquet", embFreshness(s, d))
-
   /** The ONE spelling of q326's erasure predicate tag (the r17-advice
     * fix: q335 used to duplicate the literal when reading the erased
     * pair evidence — a predicate change in one site but not the other
@@ -1235,31 +1229,37 @@ object Text {
     */
   private[graft] val Mf4ErasedTag = "erased_mod7ne3"
 
-  /** Root of the ERASED q326 state — the only path q335-class readers
-    * may read pair evidence from.
+  /** q326's persisted erasure state (build-if-absent): yesterday priced
+    * every doc and kept the near-dup pair EVIDENCE — doc-cardinality
+    * and pair-cardinality state, hash-distributed. An erasure-family store: a superseded sibling
+    * would RETAIN erased econ/pair rows on disk, so it sweeps.
     */
-  private[graft] def mf4ErasedRoot(s: SparkSession, d: String): String =
-    s"${mf4EraseStateRoot(s, d)}/$Mf4ErasedTag"
+  private[graft] val mf4EraseBase = StoreGuard.declare(
+      "target/graft_text_store", "mf4era", "documents.parquet",
+      alsoSources = mf4Sources, sweep = true,
+      payload = Seq("econ", "pairs")) { (s, d, root) =>
+    mf4DocCost(Tables.documents(s, d))
+      .repartition(8, col("doc_id"))
+      .write.mode("overwrite").parquet(s"$root/econ")
+    Corpus.blockedNearDupPairs(Tables.embeddings(s, d), minCosine = 0.3)
+      .select(col("a"), col("b"))
+      .repartition(8, col("b"))
+      .write.mode("overwrite").parquet(s"$root/pairs")
+  }
 
-  private[graft] def mf4ErasureState(s: SparkSession, d: String): String = {
-    import s.implicits._
-    val root = mf4EraseStateRoot(s, d)
-    // erasure-family store: a superseded freshness-tagged sibling would
-    // RETAIN erased econ/pair rows on disk — sweep it, don't orphan it
-    StoreGuard.sweepStaleSiblings(s, "target/graft_text_store",
-      "mf4era", d, Set(root.split('/').last))
-    StoreGuard.ensureBuilt(s, root) {
-      // yesterday: price every doc, and keep the pair EVIDENCE —
-      // doc-cardinality and pair-cardinality state, hash-distributed
-      mf4DocCost(Tables.documents(s, d))
-        .repartition(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$root/econ")
-      Corpus.blockedNearDupPairs(Tables.embeddings(s, d), minCosine = 0.3)
-        .select($"a", $"b")
-        .repartition(8, col("b"))
-        .write.mode("overwrite").parquet(s"$root/pairs")
-    }
-    root
+  /** The ERASED q326 state — the only root q335-class readers may read
+    * pair evidence from.
+    */
+  private[graft] val mf4Erased = StoreGuard.declareErase(mf4EraseBase,
+      Mf4ErasedTag, payload = Seq("econ", "pairs")) { (s, _, root, out) =>
+    s.read.parquet(s"$root/econ")
+      .where(col("doc_id") % 7 =!= 3)
+      .repartition(8, col("doc_id"))
+      .write.mode("overwrite").parquet(s"$out/econ")
+    s.read.parquet(s"$root/pairs")
+      .where(col("a") % 7 =!= 3 && col("b") % 7 =!= 3)
+      .repartition(8, col("b"))
+      .write.mode("overwrite").parquet(s"$out/pairs")
   }
 
   /** q326's erase step — PHYSICAL: the erasure batch (doc_id % 7 == 3)
@@ -1278,22 +1278,7 @@ object Text {
   private[graft] def mf4EraseSurvivors(
       s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = mf4EraseStateRoot(s, d)
-    // steady-state sweep of superseded freshness-tagged roots: an old
-    // root orphaned by a source rewrite may hold PRE-erase payloads
-    StoreGuard.sweepStaleSiblings(s, "target/graft_text_store",
-      "mf4era", d, Set(root.split('/').last))
-    val erased = StoreGuard.eraseRewrite(s, root, Mf4ErasedTag,
-      Seq("econ", "pairs"))(mf4ErasureState(s, d)) { out =>
-      s.read.parquet(s"$root/econ")
-        .where($"doc_id" % 7 =!= 3)
-        .repartition(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$out/econ")
-      s.read.parquet(s"$root/pairs")
-        .where($"a" % 7 =!= 3 && $"b" % 7 =!= 3)
-        .repartition(8, col("b"))
-        .write.mode("overwrite").parquet(s"$out/pairs")
-    }
+    val erased = mf4Erased.ensure(s, d)
     val econ = s.read.parquet(s"$erased/econ")
     val drops = s.read.parquet(s"$erased/pairs")
       .select($"b".as("doc_id")).distinct()
@@ -1362,7 +1347,7 @@ object Text {
     */
   private def q335(s: SparkSession, d: String): DataFrame = {
     val shipped = mf4EraseSurvivors(s, d) // gate ∘ erasure ∘ prune
-    mf5Ledger(shipped, s.read.parquet(s"${mf4ErasedRoot(s, d)}/pairs"))
+    mf5Ledger(shipped, s.read.parquet(s"${mf4Erased.root(s, d)}/pairs"))
   }
 
   /** The v5 tail shared by q335 (pairs from the erased state store)
@@ -1494,29 +1479,35 @@ object Text {
     * Scale: delta-sized text scan, delta-blocked pair join,
     * pair-cardinality state merge, q63's closure, two-pass rank.
     */
+  /** q341's persisted base states over the survivors of q326's erase
+    * predicate (part of the key, so a predicate change orphans the old
+    * state, and the stale sibling is swept).
+    */
+  private val mf5Incremental = StoreGuard.declare(
+      "target/graft_text_store", "mf5inc", "documents.parquet",
+      extra = Mf4ErasedTag, alsoSources = mf4Sources, sweep = true,
+      payload = Seq("econ", "pairs")) { (s, d, root) =>
+    mf4DocCost(Tables.documents(s, d)
+        .where(col("doc_id") % 10 < 8 && col("doc_id") % 7 =!= 3))
+      .repartition(8, col("doc_id"))
+      .write.mode("overwrite").parquet(s"$root/econ")
+    Corpus.blockedNearDupPairs(Tables.embeddings(s, d)
+        .where(col("vec_id") % 10 < 8 && col("vec_id") % 7 =!= 3),
+        minCosine = 0.3)
+      .select(col("a"), col("b"))
+      .repartition(8, col("b"))
+      .write.mode("overwrite").parquet(s"$root/pairs")
+  }
+
   private def q341(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = StoreGuard.storeRoot(s, "target/graft_text_store",
-      "mf5inc", d, "documents.parquet",
-      s"${embFreshness(s, d)}:$Mf4ErasedTag")
-    StoreGuard.sweepStaleSiblings(s, "target/graft_text_store",
-      "mf5inc", d, Set(root.split('/').last))
+    val root = mf5Incremental.ensure(s, d)
     val docs = Tables.documents(s, d)
     val emb = Tables.embeddings(s, d)
     val isBase = col("doc_id") % 10 < 8
     val notE = col("doc_id") % 7 =!= 3
     val isBaseV = col("vec_id") % 10 < 8
     val notEv = col("vec_id") % 7 =!= 3
-    StoreGuard.ensureBuilt(s, root) {
-      mf4DocCost(docs.where(isBase && notE))
-        .repartition(8, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$root/econ")
-      Corpus.blockedNearDupPairs(emb.where(isBaseV && notEv),
-          minCosine = 0.3)
-        .select($"a", $"b")
-        .repartition(8, col("b"))
-        .write.mode("overwrite").parquet(s"$root/pairs")
-    }
     // today: price ONLY the delta...
     val econ = s.read.parquet(s"$root/econ")
       .unionByName(mf4DocCost(docs.where(!isBase && notE)))
@@ -2219,15 +2210,6 @@ object Text {
 
   // ---- q336: cross-run dedup-store erasure ------------------------------
 
-  /** Pure key of q336's consolidated passage-fingerprint store (the
-    * lifelong dedup state a 100 TB pipeline keeps longest — q177's v2
-    * shape under the [[StoreGuard.storeRoot]] freshness recipe so the
-    * erasure transaction has a build-if-absent base to rewrite).
-    */
-  private[graft] def passageStoreRoot(s: SparkSession, d: String): String =
-    StoreGuard.storeRoot(s, "target/graft_text_store",
-      "pdedup", d, "documents.parquet")
-
   /** The ONE spelling of q336's erasure predicate tag (doc_id % 11 == 5
     * is the erased set; the tag names the SURVIVOR predicate).
     */
@@ -2253,21 +2235,23 @@ object Text {
   private def electPassageWinners(docs: DataFrame): DataFrame =
     electChunkWinners(passageChunks(docs))
 
-  /** Build-if-absent consolidated passage store — winner rows
-    * (ph, w_doc, w_chunk), hash-distributed on ph (q177's 24-byte
-    * store discipline; q177 itself proves the incremental path is
-    * indistinguishable from this one-pass election).
+  /** Build-if-absent consolidated passage store (the lifelong dedup
+    * state a 100 TB pipeline keeps longest, and q336's erasure base) —
+    * winner rows (ph, w_doc, w_chunk), hash-distributed on ph (q177's
+    * 24-byte store discipline; q177 itself proves the incremental path
+    * is indistinguishable from this one-pass election).
     */
-  private[graft] def passageStore(s: SparkSession, d: String): String = {
-    val root = passageStoreRoot(s, d)
-    StoreGuard.ensureBuilt(s, root) {
-      electPassageWinners(Tables.documents(s, d))
-        .repartition(8, col("ph"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/store")
-    }
-    root
+  private[graft] val passageBase = StoreGuard.declare(
+      "target/graft_text_store", "pdedup", "documents.parquet",
+      payload = Seq("store")) { (s, d, root) =>
+    electPassageWinners(Tables.documents(s, d))
+      .repartition(8, col("ph"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/store")
   }
+
+  private[graft] def passageStore(s: SparkSession, d: String): String =
+    passageBase.ensure(s, d)
 
   /** q336's PHYSICAL erase of the passage-fingerprint store — the r17
     * verdict's top item: the store persists span fingerprints DERIVED
@@ -2293,32 +2277,33 @@ object Text {
     * resurrection ledger the post-vacuum world could not otherwise
     * reconstruct (the pre-erase store is gone; that is the point).
     */
-  private[graft] def erasedPassageStore(
-      s: SparkSession, d: String): String = {
-    val root = passageStoreRoot(s, d)
-    // steady-state sweep: an orphaned pre-erase root would RETAIN the
-    // erased docs' fingerprints on disk
-    StoreGuard.sweepStaleSiblings(s, "target/graft_text_store",
-      "pdedup", d, Set(root.split('/').last))
-    StoreGuard.eraseRewrite(s, root, PassageErasedTag,
-      Seq("store"))(passageStore(s, d)) { out =>
-      val store = s.read.parquet(s"$root/store")
-      val survivors = store.where(col("w_doc") % 11 =!= 5)
-      val orphanPh = store.where(col("w_doc") % 11 === 5).select("ph")
-      val reelected = electChunkWinners(
-        passageChunks(
-            Tables.documents(s, d).where(col("doc_id") % 11 =!= 5))
-          .join(broadcast(orphanPh), Seq("ph"), "left_semi"))
-        .localCheckpoint()
-      survivors.unionByName(reelected)
-        .repartition(8, col("ph"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/store")
-      reelected.select(col("ph"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$out/inherit")
-    }
+  private[graft] val erasedPassages = StoreGuard.declareErase(passageBase,
+      PassageErasedTag, payload = Seq("store", "inherit")) {
+      (s, d, root, out) =>
+    val store = s.read.parquet(s"$root/store")
+    val survivors = store.where(col("w_doc") % 11 =!= 5)
+    val orphanPh = store.where(col("w_doc") % 11 === 5).select("ph")
+    val reelected = electChunkWinners(
+      passageChunks(
+          Tables.documents(s, d).where(col("doc_id") % 11 =!= 5))
+        .join(broadcast(orphanPh), Seq("ph"), "left_semi"))
+      .localCheckpoint()
+    survivors.unionByName(reelected)
+      .repartition(8, col("ph"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/store")
+    reelected.select(col("ph"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$out/inherit")
   }
+
+  /** q336's erase, run if absent; the erased root. The sweep on every
+    * call removes orphaned pre-erase roots, which would RETAIN the
+    * erased docs' fingerprints on disk.
+    */
+  private[graft] def erasedPassageStore(
+      s: SparkSession, d: String): String =
+    erasedPassages.ensure(s, d)
 
   /** q336: DEDUP-STORE ERASURE — the per-winner-doc ledger of the
     * POST-ERASE passage store: how many fingerprints each surviving

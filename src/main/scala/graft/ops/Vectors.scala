@@ -886,14 +886,9 @@ object Vectors {
     * like this) and every run measures what serving actually pays: the
     * bounded, bucket-pruned walk.
     */
-  private def q181(s: SparkSession, d: String): DataFrame = {
-    val root = q181StoreRoot(d)
-    val emb = Tables.embeddings(s, d)
-    ensureBuilt(s, root) {
-      buildKnnGraphStore(emb, root, queryVecId = 0L)
-    }
-    searchKnnGraphStore(s, root, emb, queryVecId = 0L, k = 10)
-  }
+  private def q181(s: SparkSession, d: String): DataFrame =
+    searchKnnGraphStore(s, knnGraph.ensure(s, d), Tables.embeddings(s, d),
+      queryVecId = 0L, k = 10)
 
   /** q200: ANN STRATEGY COMPARISON — the recall-vs-probe-cost matrix
     * for the serving decision the index family (q40 exact, q49 IVF,
@@ -920,25 +915,13 @@ object Vectors {
     */
   private def q200(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = q200IndexRoot(d)
     val emb = Tables.embeddings(s, d)
     val exact = topKCosine(emb, 0L, 10).collect().map(_.getLong(0))
     val exactIds = exact.toSet
     val corpusN = emb.filter(col("vec_id") =!= 0L).count()
     def hits(ids: Seq[Long]): Long = ids.count(exactIds).toLong
     // IVF: q49's pipeline persisted once, then a pruned probe
-    val ivfRoot = s"$root/ivf"
-    ensureBuilt(s, ivfRoot) {
-      val cents = ivfCentroids(emb, nCells = 16, dims = 64)
-      ivfIndex(emb.filter(col("vec_id") =!= 0L), cents, 16, 64)
-        .select(col("vec_id"), col("label"), col("cell"),
-          col("embedding"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(s"$ivfRoot/index")
-      Seq(Tuple1(cents.toSeq)).toDF("cents")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$ivfRoot/cents")
-    }
+    val ivfRoot = q200Ivf.ensure(s, d)
     val cents = s.read.parquet(s"$ivfRoot/cents")
       .head.getSeq[Double](0).toArray
     val qcells = emb.filter(col("vec_id") === 0L)
@@ -953,16 +936,10 @@ object Vectors {
       16, nProbe = 4, k = 10).collect().map(_.getLong(0)).toSeq
     // graph store first: its bucketed embedding layout doubles as the
     // PQ refine's point-lookup vector store
-    val gRoot = q181StoreRoot(d)
-    ensureBuilt(s, gRoot) {
-      buildKnnGraphStore(emb, gRoot, queryVecId = 0L)
-    }
+    val gRoot = knnGraph.ensure(s, d)
     // IVF-PQ: persisted code table, pruned ADC probe + 50-row refine
     // fetched by bucket point-lookup (not a corpus scan)
-    val pqRoot = s"$root/pq"
-    ensureBuilt(s, pqRoot) {
-      buildIvfPqStore(emb, pqRoot, queryVecId = 0L)
-    }
+    val pqRoot = q200Pq.ensure(s, d)
     val pqIds = probeIvfPqStore(s, pqRoot, emb, 0L, k = 10,
       nProbe = 4, rerank = 50,
       vecStore = Some(s.read.parquet(s"$gRoot/emb")))
@@ -989,16 +966,38 @@ object Vectors {
     s"target/stage_vectors/q184_index_$tag"
   }
 
-  /** Per-SF staging root for q181's persisted graph store. */
-  private[graft] def q181StoreRoot(d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    s"target/stage_vectors/q181_store_v1_$tag"
+  /** q181's k-NN graph store (shared with q200, whose IVF-PQ refine
+    * reads its bucketed embedding layout). The builder is
+    * deterministic, so a present store ≡ a rebuild.
+    */
+  private[graft] val knnGraph = StoreGuard.declare("target/stage_vectors",
+      "q181_graph", "embeddings.parquet",
+      payload = Seq("adj", "emb", "cells", "cents")) { (s, d, root) =>
+    buildKnnGraphStore(Tables.embeddings(s, d), root, queryVecId = 0L)
   }
 
-  /** Per-SF staging root for q200's persisted comparison indexes. */
-  private[graft] def q200IndexRoot(d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    s"target/stage_vectors/q200_index_v1_$tag"
+  /** q200's persisted IVF index: q49's pipeline (16 cells). */
+  private val q200Ivf = StoreGuard.declare("target/stage_vectors",
+      "q200_ivf", "embeddings.parquet",
+      payload = Seq("index", "cents")) { (s, d, root) =>
+    import s.implicits._
+    val emb = Tables.embeddings(s, d)
+    val cents = ivfCentroids(emb, nCells = 16, dims = 64)
+    ivfIndex(emb.filter(col("vec_id") =!= 0L), cents, 16, 64)
+      .select(col("vec_id"), col("label"), col("cell"),
+        col("embedding"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("cell").parquet(s"$root/index")
+    Seq(Tuple1(cents.toSeq)).toDF("cents")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$root/cents")
+  }
+
+  /** q200's persisted IVF-PQ code table. */
+  private val q200Pq = StoreGuard.declare("target/stage_vectors",
+      "q200_pq", "embeddings.parquet",
+      payload = Seq("index", "cents", "cb")) { (s, d, root) =>
+    buildIvfPqStore(Tables.embeddings(s, d), root, queryVecId = 0L)
   }
 
   /** Id-bucket count for the point-lookup layouts. 64 suffices at test
@@ -1034,9 +1033,6 @@ object Vectors {
         .distinct
     store.filter(col("b").isin(buckets: _*) && col(idCol).isin(ids: _*))
   }
-
-  private def ensureBuilt(s: SparkSession, root: String)(
-      build: => Unit): Unit = StoreGuard.ensureBuilt(s, root)(build)
 
   /** Persist [[ivfPqTopK]]'s index half: the `partitionBy(cell)` code
     * table (vec_id, label, cell, codes — raw embeddings dropped, the PQ
@@ -1238,10 +1234,18 @@ object Vectors {
       nProbe = 4, k = 10)
   }
 
-  /** Per-SF staging root for q263's persisted filtered-serving index. */
-  private[graft] def q263IndexRoot(d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-    s"target/stage_vectors/q263_index_$tag"
+  /** q263's persisted filtered-serving index: the q49 layout over the
+    * corpus minus the query vector, under frozen centroids.
+    */
+  private val q263Index = StoreGuard.declare("target/stage_vectors",
+      "q263_index", "embeddings.parquet",
+      payload = Seq("index")) { (s, d, root) =>
+    val base = Tables.embeddings(s, d).filter(col("vec_id") =!= 0L)
+    ivfIndex(base, ivfCentroids(base, 16), 16)
+      .select(col("vec_id"), col("label"), col("cell"),
+        col("embedding"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .partitionBy("cell").parquet(s"$root/index")
   }
 
   /** q263: FILTERED ANN — the serving shape every vector DB ships:
@@ -1265,21 +1269,11 @@ object Vectors {
     * the physical scan really carries both filter classes.
     */
   private def q263(s: SparkSession, d: String): DataFrame = {
-    val root = q263IndexRoot(d)
     val emb = Tables.embeddings(s, d)
     val nCells = 16
-    val base = emb.filter(col("vec_id") =!= 0L)
-    val cents = ivfCentroids(base, nCells)
-    val idx = s"$root/index"
-    StoreGuard.ensureBuilt(s, root) {
-      ivfIndex(base, cents, nCells)
-        .select(col("vec_id"), col("label"), col("cell"),
-          col("embedding"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("cell").parquet(idx)
-    }
-    probeDiskIndex(s, idx, emb, 0L, cents, nCells,
-      nProbe = 4, k = 10, predicate = col("label") === 1)
+    val cents = ivfCentroids(emb.filter(col("vec_id") =!= 0L), nCells)
+    probeDiskIndex(s, s"${q263Index.ensure(s, d)}/index", emb, 0L, cents,
+      nCells, nProbe = 4, k = 10, predicate = col("label") === 1)
   }
 
   /** Semantic deduplication (the SemDeDup shape: cluster the embedding

@@ -917,7 +917,7 @@ class Round12Spec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     // the registered query (re)builds the bucketed store
     SparkEntry.queries("q181_knn_graph_ann")(spark, sf).collect()
-    val root = ops.Vectors.q181StoreRoot(sf)
+    val root = ops.Vectors.knnGraph.root(spark, sf)
     def filesReadVsTotal(path: String, idCol: String, ids: Seq[Long])
         : (Long, Long) = {
       val df = ops.Vectors

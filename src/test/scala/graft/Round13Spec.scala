@@ -547,7 +547,7 @@ class Round13Spec extends AnyFunSuite {
       "store-merge must be integer-identical to the full recompute")
     assert(inc2 == full, "replay must be idempotent")
     val marker = new java.io.File(
-      s"${ops.Eval.q260StoreRoot(sf)}/_GRAFT_STORE_COMPLETE")
+      s"${ops.Eval.q260Hist.root(spark, sf)}/_GRAFT_STORE_COMPLETE")
     assert(marker.exists(), "store-level completion marker missing")
   }
 
@@ -570,27 +570,38 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("store guard self-heals: partial build (sub-_SUCCESS only) rebuilds") {
-    val root = ops.Vectors.q181StoreRoot(sf)
-    val marker = new java.io.File(s"$root/_GRAFT_STORE_COMPLETE")
-    // simulate the r12-advice crash window: adj/emb landed (their own
-    // _SUCCESS present) but the build died before cells/cents
-    SparkEntry.queries("q181_knn_graph_ann")(spark, sf).collect()
-    assert(marker.exists())
-    assert(marker.delete())
-    val cents = new java.io.File(s"$root/cents")
+    // the r12-advice crash window, for EVERY declared store: the build
+    // died after its earlier sub-writes landed (their own _SUCCESS
+    // present) but before the last one and the completion marker. The
+    // next ensure must rebuild (a guard on a sub-store's _SUCCESS would
+    // serve the broken store forever) and read the same rows.
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete()
     }
-    rm(cents)
-    assert(new java.io.File(s"$root/emb/_SUCCESS").exists(),
-      "fixture: the sub-store marker the old guard trusted")
-    // a re-run must rebuild (old guard would serve the broken store)
-    val out = SparkEntry.queries("q181_knn_graph_ann")(spark, sf)
-      .collect()
-    assert(out.nonEmpty)
-    assert(marker.exists(), "rebuild must restore the completion marker")
-    assert(new java.io.File(s"$root/cents").exists())
+    def rows(st: ops.StoreGuard.Store, root: String): Long =
+      st.payload.map(p => spark.read.parquet(s"$root/$p").count()).sum
+    val stores = ops.StoreGuard.all
+    assert(stores.size >= 40, s"only ${stores.size} declared stores")
+    def crashAndHeal(st: ops.StoreGuard.Store): Seq[String] = {
+      val root = st.ensure(spark, sf)
+      val before = rows(st, root)
+      val marker = new java.io.File(s"$root/_GRAFT_STORE_COMPLETE")
+      assert(marker.delete(), s"${st.name}: no marker after ensure")
+      rm(new java.io.File(s"$root/${st.payload.last}"))
+      val again = st.ensure(spark, sf)
+      val after = rows(st, again)
+      val why = Seq(
+        (again != root) -> s"root moved to $again",
+        !marker.exists() -> "marker not restored",
+        (after != before) -> s"rows $after != $before")
+      why.collect { case (true, w) => s"${st.name}: $w" }
+    }
+    val broken = stores.flatMap { st =>
+      try crashAndHeal(st)
+      catch { case e: Exception => Seq(s"${st.name}: $e") }
+    }
+    assert(broken.isEmpty, broken.mkString("\n"))
   }
 
   test("pointLookup pmods negative ids into written buckets") {

@@ -262,8 +262,7 @@ class Round17Spec extends AnyFunSuite {
         s"shard $shard steps not dense: [$lo,$hi] n=$n")
     }
     // registry lineage fired: both versions committed and re-readable
-    val root = ops.StoreGuard.storeRoot(spark, "target/graft_text_store",
-      "mf4", d, "documents.parquet", ops.Text.embFreshness(spark, d))
+    val root = ops.Text.mf4Key.root(spark, d)
     val log = new streaming.StoreLog(java.nio.file.Paths.get(root), "mf")
     assert(log.versions() == Seq(1L, 2L))
     // read-back ≡ a direct recompute of the same version
@@ -284,8 +283,7 @@ class Round17Spec extends AnyFunSuite {
       spark, d).collect().map(_.toSeq)
     // the persisted base states are the BASE slice only — the delta's
     // text was never priced into the store (the incremental claim)
-    val root = ops.StoreGuard.storeRoot(spark, "target/graft_text_store",
-      "mf4inc", d, "documents.parquet", ops.Text.embFreshness(spark, d))
+    val root = ops.Text.mf4Incremental.root(spark, d)
     val econ = spark.read.parquet(s"$root/econ")
     val nBase = Tables.documents(spark, d)
       .where($"doc_id" % 10 < 8).count()
@@ -406,7 +404,8 @@ class Round17Spec extends AnyFunSuite {
         .filter($"n2" > 0L)
       val dir = java.nio.file.Files
         .createTempDirectory(s"r17_direct_v$v").toString
-      val (p, c) = ops.Graph.buildIvfAt(spark, dir, vecs, nCells = 4)
+      ops.Graph.writeIvfAt(spark, dir, vecs, nCells = 4)
+      val (p, c) = ops.Graph.ivfAt(spark, dir)
       val want = ops.Graph.annRecallFromIndex(spark, p, c)
         .collect().map(_.toSeq).toSet
       val got = rows.filter(_.getLong(0) == v)
@@ -483,7 +482,7 @@ class Round17Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding").withColumn("label", lit(0)),
       s"$dir/embeddings.parquet")
     // "yesterday": the pre-request state — every blocking pair recorded
-    val root = ops.Text.mf4ErasureState(spark, dir)
+    val root = ops.Text.mf4EraseBase.ensure(spark, dir)
     val pairs = spark.read.parquet(s"$root/pairs")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 3L), (1L, 9L), (3L, 9L), (3L, 11L)),
@@ -513,7 +512,7 @@ class Round17Spec extends AnyFunSuite {
     // self-heal: with the base marker vacuumed, re-ensuring the base
     // state rebuilds it from source instead of crashing on a missing
     // payload under a stale marker
-    assert(ops.Text.mf4ErasureState(spark, dir) == root)
+    assert(ops.Text.mf4EraseBase.ensure(spark, dir) == root)
     assert(spark.read.parquet(s"$root/econ").count() == 5,
       "vacuumed base store did not self-heal on rebuild")
   }
@@ -521,7 +520,7 @@ class Round17Spec extends AnyFunSuite {
   test("q326: erase path reads only the persisted state, never the corpus") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val d = "/root/testdata/sf0.01"
-    val root = ops.Text.mf4EraseStateRoot(spark, d) // pure key
+    val root = ops.Text.mf4EraseBase.root(spark, d) // pure key
     val frame = ops.Text.mf4EraseSurvivors(spark, d)
     // sparkPlan, not executedPlan: the AQE wrapper hides the scans
     // from collect()
@@ -691,7 +690,7 @@ class Round17Spec extends AnyFunSuite {
     assert(kept.where($"center" % 23 === 7 || $"context" % 23 === 7)
       .count() == 0, "erased nodes still on disk in the pair store")
     // the superseded pre-erasure pair store is vacuumed, marker included
-    val proot = ops.Graph.fullPairStoreRoot(spark, d)
+    val proot = ops.Graph.fullPairs.root(spark, d)
     for (sub <- Seq("pairs.parquet", "_GRAFT_STORE_COMPLETE"))
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$proot/$sub")),
@@ -825,7 +824,7 @@ class Round17Spec extends AnyFunSuite {
     assert(kept.where($"doc_id" % 9 === 4).count() == 0,
       "erased docs still on disk in the posting store")
     // the superseded pre-erasure index is vacuumed, marker included
-    val proot = ops.Corpus.fullPostingStoreRoot(spark, d)
+    val proot = ops.Corpus.fullPostings.root(spark, d)
     for (sub <- Seq("postings", "_GRAFT_STORE_COMPLETE"))
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$proot/$sub")),
@@ -912,7 +911,7 @@ class Round17Spec extends AnyFunSuite {
     assert(survivors.forall(_ % 7 != 3), "erased doc shipped in v5")
     // gate + prune fired: the erased-state econ count strictly exceeds
     // the gated count, which strictly exceeds the shipped count
-    val root = ops.Text.mf4EraseStateRoot(spark, d)
+    val root = ops.Text.mf4EraseBase.root(spark, d)
     val econ = spark.read.parquet(s"$root/erased_mod7ne3/econ")
     val gated = econ.where($"fert_ppm" <= 2000000L).count()
     assert(gated < econ.count(), "fertility gate pruned nothing")

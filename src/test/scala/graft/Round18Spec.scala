@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * family reaches the CROSS-RUN DEDUP STORES (q336 passage
   * fingerprints, q337 MinHash signatures — remove AND re-elect /
   * re-cascade), one composed AUDIT CERTIFICATE sweeps every
-  * eraseRewrite-maintained store (q338 — with the negative fixture and
+  * declared erase store (q338 — with the negative fixture and
   * the source-level completeness lock that keep it honest), the bulk
   * ANN join serves from the persisted registry layout with file-level
   * pruning (q339), token-grain Hamilton apportionment with a
@@ -37,7 +37,7 @@ class Round18Spec extends AnyFunSuite {
     val inherited = spark.read.parquet(s"$erased/inherit").count()
     assert(inherited > 0, "expected re-elected (inherited) fingerprints")
     // the superseded pre-erase base is vacuumed
-    val base = ops.Text.passageStoreRoot(spark, sf)
+    val base = ops.Text.passageBase.root(spark, sf)
     assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$base/store")),
       "pre-erasure passage store not vacuumed")
@@ -116,7 +116,7 @@ class Round18Spec extends AnyFunSuite {
     assert(keptLedger == keptStore,
       "ledger kept set diverges from the stored signatures")
     // the base is vacuumed
-    val baseRoot = ops.Dedup.sigStoreRoot(spark, sf)
+    val baseRoot = ops.Dedup.sigBase.root(spark, sf)
     assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$baseRoot/sigs")),
       "pre-erasure signature store not vacuumed")
@@ -200,11 +200,13 @@ class Round18Spec extends AnyFunSuite {
     Seq(7L).toDF("doc_id").write.parquet(s"$tmp/x_deadbeef00/payload")
     Seq(7L).toDF("doc_id")
       .write.parquet(s"$tmp/x_${otherDir}_cccc/payload")
-    val reg = Seq(ops.Erasure.AuditedStore("x", "x_store",
-      (_, _) => s"$tmp/x_${dt}_aaaa/erased_test", "payload",
-      df => df("doc_id") % 7 === 0, Seq("doc_id"), Seq("payload"),
-      tmp, "x"))
-    val row = ops.Erasure.auditFrame(spark, sf, reg).collect().head
+    val erased = ops.StoreGuard.fixtureErase(tmp, "x", "documents.parquet",
+      basePayload = Seq("payload"), tag = "erased_test")
+    val reg = Seq(ops.Erasure.AuditedStore("x_store", erased, "payload",
+      df => df("doc_id") % 7 === 0, Seq("doc_id")))
+    // the audit reads the planted root; it must not run the erase
+    val row = ops.Erasure.auditFrame(spark, sf, reg,
+      _ => s"$tmp/x_${dt}_aaaa/erased_test").collect().head
     assert(row.getString(0) == "x_store")
     assert(row.getLong(1) == 2L,
       "audit must count the resident erased references (7, 14)")
@@ -219,28 +221,17 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("q338: registry covers every eraseRewrite call site (completeness)") {
-    // grep src/main for StoreGuard.eraseRewrite callers the way the
-    // r17 window audit greps constructors: adding erase verb N+1
-    // without registering its store here must break the build
-    val base = java.nio.file.Paths.get("src/main/scala")
-    var sites = 0
-    java.nio.file.Files.walk(base).forEach { p =>
-      if (p.toString.endsWith(".scala")) {
-        val body = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          .linesIterator
-          .filterNot { l =>
-            val t = l.trim
-            t.startsWith("*") || t.startsWith("//")
-          }
-          .mkString(" ")
-        sites += "StoreGuard\\.eraseRewrite\\(".r.findAllIn(body).size
-      }
-    }
-    val audited = ops.Erasure.registry.map(_.site).distinct.size
-    assert(sites == audited,
-      s"eraseRewrite call sites ($sites) drifted from audited erase " +
-        s"sites ($audited) — register the new store in Erasure.registry")
+    // every declared erase store is audited, and every audited store
+    // is a declared erase store: declaring erase verb N+1 without
+    // registering its store in Erasure.registry fails here
+    val declared = ops.StoreGuard.all.filter(_.erases.nonEmpty)
+      .map(_.name).toSet
+    val audited = ops.Erasure.registry.map(_.erased.name).toSet
+    assert(declared.size >= 8, s"only ${declared.size} erase stores")
+    assert(declared -- audited == Set.empty,
+      s"declared erase stores with no audit row: ${declared -- audited}")
+    assert(audited -- declared == Set.empty,
+      s"audited stores that are not declared: ${audited -- declared}")
   }
 
   test("q338: the real cascade certificate is all-zero") {
@@ -361,7 +352,7 @@ class Round18Spec extends AnyFunSuite {
     import s.implicits._
     // force a FRESH transaction so the byte-copy gate compares within
     // one build (parquet bytes across separate builds are not pinned)
-    val baseRoot = ops.Graph.servingIvfRoot(spark, sf)
+    val baseRoot = ops.Graph.servingIvf.root(spark, sf)
     graft.streaming.Streams.deleteStaged(
       java.nio.file.Paths.get(s"$baseRoot/${ops.Graph.ServingErasedTag}"))
     val (builtIdx, _) = ops.Graph.servingIvfStore(spark, sf)

@@ -251,10 +251,11 @@ class Round18bSpec extends AnyFunSuite {
       val big = ops.Analyze.statsJoin(li, sup, Seq("l_suppkey"), budget = 1L)
       assert(!hasBhj(big), "un-advised join must not broadcast")
       // the PRODUCTION path decides from the persisted artifact (one
-      // metadata read, no ANALYZE pass) and reaches the same plan
+      // metadata read, no ANALYZE pass) and reaches the same plan —
+      // over part, whose stats store q04 declares
       val stored = ops.Analyze.statsJoinStored(spark, sf,
-        li.withColumnRenamed("l_suppkey", "s_suppkey"), "supplier",
-        Seq("s_suppkey"))
+        li.withColumnRenamed("l_partkey", "p_partkey"), "part",
+        Seq("p_partkey"))
       assert(hasBhj(stored), "stored-stats broadcast join missing")
       // store ≡ recompute, row for row (the q260 discipline; the
       // sf0.01 hash gate is q351 sharing q346's oracle verbatim)

@@ -112,7 +112,7 @@ class Round19Spec extends AnyFunSuite {
     val docs = (base ++ dup).toDF("doc_id", "text")
     val tmp = "target/stage_test/q348_fulldup"
     graft.streaming.Streams.deleteStaged(java.nio.file.Paths.get(tmp))
-    // single-FILE staging: StoreGuard.storeRoot edge-fingerprints the
+    // single-FILE staging: the store key edge-fingerprints the
     // named source file (the Round18bSpec pattern)
     val stage = s"$tmp/documents_tmp"
     docs.coalesce(1).write.mode("overwrite").parquet(stage)

@@ -62,31 +62,36 @@ class Round20bSpec extends AnyFunSuite {
   test("sweepStaleSiblings is scoped to the source dir (r21 fix)") {
     // the pre-r21 any-sibling sweep made a verify at sf0.01 destroy the
     // sf0.1 erasure stores (and vice versa): every SF-alternating run
-    // paid a full store rebuild. The sweep must delete (a) same-dir
-    // stale freshness siblings and (b) pre-migration single-tag roots,
-    // and must KEEP other source dirs' live stores.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_sweep20b").toString
-    val d1 = "/root/testdata/sf0.001"
-    val d2 = "/root/testdata/sf0.01"
-    val t1 = ops.StoreGuard.dirTag(d1)
-    val t2 = ops.StoreGuard.dirTag(d2)
-    def mk(name: String): Unit =
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(tmp, name))
-    val live = s"p_${t1}_aaaa"
-    Seq(live, s"p_${t1}_bbbb", s"p_${t2}_cccc", "p_deadbeef01",
-      "q_other").foreach(mk)
-    ops.StoreGuard.sweepStaleSiblings(spark, tmp, "p", d1, Set(live))
-    def exists(n: String): Boolean =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(tmp, n))
-    assert(exists(live), "the live root must survive")
-    assert(!exists(s"p_${t1}_bbbb"), "same-dir stale sibling must die")
-    assert(!exists("p_deadbeef01"), "pre-migration root must die")
-    assert(exists(s"p_${t2}_cccc"),
-      "ANOTHER source dir's live store must survive the sweep")
-    assert(exists("q_other"), "other prefixes untouched")
-    graft.streaming.Streams.deleteStaged(java.nio.file.Paths.get(tmp))
+    // paid a full store rebuild. For every store declared to sweep,
+    // `ensure` must delete (a) same-dir stale freshness siblings and
+    // (b) pre-migration single-tag roots, and must KEEP other source
+    // dirs' live stores and other prefixes' roots.
+    val otherDir = "0" * 16
+    assert(ops.StoreGuard.dirTag(sf) != otherDir)
+    val sweeping = ops.StoreGuard.all.filter(_.sweep)
+    assert(sweeping.size >= 12, s"only ${sweeping.size} sweeping stores")
+    val wrong = sweeping.flatMap { st =>
+      val k = st.key
+      def path(n: String) = java.nio.file.Paths.get(k.base, n)
+      val stale = s"${k.prefix}_${ops.StoreGuard.dirTag(sf)}_0000dead"
+      val preMigration = s"${k.prefix}_deadbeef01"
+      val other = s"${k.prefix}_${otherDir}_0000beef"
+      val otherPrefix = s"${k.prefix}x_${ops.StoreGuard.dirTag(sf)}_0000dead"
+      Seq(stale, preMigration, other, otherPrefix)
+        .foreach(n => java.nio.file.Files.createDirectories(path(n)))
+      val live = st.ensure(spark, sf)
+      val why = Seq(
+        java.nio.file.Files.exists(path(stale)) -> "same-dir stale sibling kept",
+        java.nio.file.Files.exists(path(preMigration)) -> "pre-migration root kept",
+        !java.nio.file.Files.exists(path(other)) -> "other-dir sibling swept",
+        !java.nio.file.Files.exists(path(otherPrefix)) -> "other prefix swept",
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(live)) ->
+          "live root gone")
+      Seq(other, otherPrefix)
+        .foreach(n => graft.streaming.Streams.deleteStaged(path(n)))
+      why.collect { case (true, w) => s"${st.name}: $w" }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 
   test("q132/q264/q301/q343/q344 stay row-identical under the spread") {
