@@ -2446,22 +2446,20 @@ object Graph {
     * Each version is ONE atomic-rename commit, so a crashed build
     * leaves either no version or a complete one — the model-registry
     * discipline every serving stack wants, riding the same commit log
-    * as q304's time travel.
+    * as q304's time travel. The version dirs are the store's payload.
     */
-  private val embRegistryKey = StoreGuard.key("target/graft_graph_store",
-    "embreg", "lineitem.parquet")
+  private val embRegistry = StoreGuard.declare(
+      "target/graft_graph_store", "embreg", "lineitem.parquet",
+      payload = Seq("v1", "v2")) { (s, d, root) =>
+    val log = new graft.streaming.StoreLog(java.nio.file.Paths.get(root), "v")
+    log.commitTable(1L, nodeEmbeddingsFromPairs(basePairStore(s, d), dim = 8))
+    log.commitTable(2L, embeddingStore(s, d))
+  }
 
   private[graft] def embeddingRegistry(
-      s: SparkSession, d: String): graft.streaming.StoreLog = {
-    val log = new graft.streaming.StoreLog(
-      java.nio.file.Paths.get(embRegistryKey.root(s, d)), "v")
-    if (log.versions().size < 2) {
-      log.commitTable(1L,
-        nodeEmbeddingsFromPairs(basePairStore(s, d), dim = 8))
-      log.commitTable(2L, embeddingStore(s, d))
-    }
-    log
-  }
+      s: SparkSession, d: String): graft.streaming.StoreLog =
+    new graft.streaming.StoreLog(
+      java.nio.file.Paths.get(embRegistry.ensure(s, d)), "v")
 
   /** q317: EMBEDDING MODEL REGISTRY — the versioning verb over the
     * trained artifact (q300 trains, q312 refreshes, q317 keeps the

@@ -49,9 +49,7 @@ private[graft] object StoreGuard {
     * tag (the dir, the freshness of `source` and of each of
     * `alsoSources`, and `extra`), so a sweep can tell a superseded
     * sibling of THIS source from the live store of another source dir
-    * (another SF). Exposed on its own for the two StoreLog-backed roots
-    * (q317's embedding registry, q322's manifest log), which commit
-    * versions instead of a marker.
+    * (another SF).
     */
   final class Key private[StoreGuard] (val base: String,
       val prefix: String, val source: String, val extra: String,
@@ -65,7 +63,7 @@ private[graft] object StoreGuard {
     }
   }
 
-  def key(base: String, prefix: String, source: String,
+  private def key(base: String, prefix: String, source: String,
       extra: String = "", alsoSources: Seq[String] = Nil): Key =
     new Key(base, prefix, source, extra, alsoSources)
 

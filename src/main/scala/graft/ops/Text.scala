@@ -995,18 +995,21 @@ object Text {
     */
   private val mf4Sources = Seq("embeddings.parquet")
 
-  /** Key of q322's two-version manifest log. */
-  private[graft] val mf4Key = StoreGuard.key("target/graft_text_store",
-    "mf4", "documents.parquet", alsoSources = mf4Sources)
+  /** q322's two-version manifest log: the builder commits both
+    * [[graft.streaming.StoreLog]] versions, whose dirs are the payload.
+    */
+  private[graft] val mf4Log = StoreGuard.declare("target/graft_text_store",
+      "mf4", "documents.parquet", alsoSources = mf4Sources,
+      payload = Seq("mf1", "mf2")) { (s, d, root) =>
+    val log = new graft.streaming.StoreLog(java.nio.file.Paths.get(root), "mf")
+    log.commitTable(1L, manifestV4Version(s, d, semantic = false))
+    log.commitTable(2L, manifestV4Version(s, d, semantic = true))
+  }
 
   private def q322(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val log = new graft.streaming.StoreLog(
-      java.nio.file.Paths.get(mf4Key.root(s, d)), "mf")
-    if (log.versions().size < 2) {
-      log.commitTable(1L, manifestV4Version(s, d, semantic = false))
-      log.commitTable(2L, manifestV4Version(s, d, semantic = true))
-    }
+      java.nio.file.Paths.get(mf4Log.ensure(s, d)), "mf")
     def ver(v: Long) =
       log.asOf(s, v).get.withColumn("version", lit(v))
     ver(1L).unionByName(ver(2L))

@@ -18,6 +18,25 @@ object SparkTestSession {
     .config("spark.ui.enabled", "false")
     .config(isolationKey, isolationValue)
     .getOrCreate()
+
+  /** Runs `body` with `pairs` set on the session, then restores each
+    * key's previous value (unsetting the ones that had none).
+    */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `body` on the RocksDB streaming state store. */
+  def withRocksDb[T](body: => T): T = withConf(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  )(body)
 }
 
 class AsOfSpec extends AnyFunSuite {

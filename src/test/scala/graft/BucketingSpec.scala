@@ -25,8 +25,7 @@ class BucketingSpec extends AnyFunSuite {
       }
     }
     // small-side autoBroadcast would bypass the point — disable it here
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       Tables.lineitem(spark, "/root/testdata/sf0.001")
         .write.bucketBy(4, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("li_b")
@@ -44,8 +43,6 @@ class BucketingSpec extends AnyFunSuite {
       assert(!joinSection.contains("Exchange hashpartitioning"),
         s"bucketed join must not shuffle its inputs:\n$plan")
       assert(joined.count() == 5) // one row per priority
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     }
   }
 }

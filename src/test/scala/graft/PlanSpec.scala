@@ -10,8 +10,7 @@ class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+  private def plan(q: String): String = RegistryPlans(sf, q).executedPlan
 
   test("q02: predicates and projection reach the parquet scan") {
     val p = plan("q02_selective_scan")
@@ -44,15 +43,13 @@ class PlanSpec extends AnyFunSuite {
     // at this tiny SF the planner rightly prefers broadcast (and skips
     // the bucketed scan); the property under test is the big-big case,
     // so turn auto-broadcast off to see the plan a 100 TB join gets
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = ops.Scale.bucketedJoin(spark, ot, ct)
         .queryExecution.executedPlan.toString
       assert(p.contains("SortMergeJoin"), s"q88 not a sort-merge join:\n$p")
       assert(!p.contains("Exchange"), s"q88 bucketing didn't co-locate:\n$p")
       assert(p.contains("Bucketed: true"), s"q88 bucketed scan unused:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("shuffle-hash hint replaces sort-merge and preserves the result") {
@@ -63,9 +60,7 @@ class PlanSpec extends AnyFunSuite {
     // data and none. Verify the hint takes effect AND the join result is
     // bit-identical to the default plan.
     import org.apache.spark.sql.functions._
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val orders   = Tables.orders(spark, sf)
       val lineitem = Tables.lineitem(spark, sf)
       def agg(li: org.apache.spark.sql.DataFrame) = orders
@@ -86,8 +81,7 @@ class PlanSpec extends AnyFunSuite {
         s"hint did not switch to shuffled hash join:\n$pShj")
       assert(smj.collect().toSeq == shj.collect().toSeq,
         "SHJ result diverges from SMJ")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("r10d queries keep their scale-critical plan shapes") {
@@ -180,122 +174,34 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("no registered batch query degenerates to an unbounded cartesian") {
-    // 1-row-broadcast denominators (scalar subquery shape) legitimately
-    // plan as BroadcastNestedLoopJoin over exactly one row — allow those
-    // q40/q49/q127: broadcast 1-row query vector for the top-k scan
-    // (q127 adds the 1-row query embedding again in the refine re-score)
-    val oneRowBroadcast = Set(
-      "q16_scalar_subquery", "q64_tfidf_terms", "q78_brand_share",
-      "q40_cosine_topk", "q49_ivf_topk", "q127_ivfpq_topk",
-      "q91_hll_merge", // 1-row merged × 1-row direct cross
-      "q143_triangle_count", // 1-row nodes × edges × triangles counts
-      "q167_bm25_search", // 1-row (n_docs, tot_toks) corpus constants
-      "q262_hybrid_rrf", // q167's 1-row corpus constants in the BM25 leg
-      "q169_basket_rules", // 1-row n_orders basket denominator
-      "q176_rfm_segments", // 1-row percentile-threshold broadcast
-      "q184_ivf_incremental", // 1-row query embedding over pruned cells
-      "q263_filtered_ann", // same 1-row query embedding, filtered probe
-      "q201_curriculum_shards", // 1-row difficulty-threshold broadcast
-      "q268_dsir_selection", // 1-row sampling-threshold + quota broadcast
-      "q271_nb_classifier", // class-count-row prior/total broadcast
-      "q272_ir_metrics", // 3-row cutoff dim × 20-row ranked list
-      "q275_incremental_index", // q167's 1-row corpus constants, from postings
-      "q278_feature_matrix", // 1-row max-day broadcast bounds the label window
-      "q279_markov_surprisal", // 1-row vocabulary scalar into the |V|² model
-      "q281_stream_markov", // same surprisal core as q279
-      "q286_prediction_calibration", // q279's 1-row vocab scalar in the trained model
-      "q290_incremental_triangles", // 1-row census × delta-count crosses
-      "q291_stream_triangles", // q290's 1-row census merge, read side
-      "q294_target_encoding", // 1-row global-sum cross into |cats|·|folds| cells
-      "q295_graph_profile", // 1-row node-stats × 1-row edge-stats cross
-      "q296_kmeans_refresh", // 1-row collected codebook crossed per scan
-      "q297_random_walks", // 4-row walks-per-seed fan crossed into seeds
-      "q298_skipgram_pairs", // q297's walk derivation feeds the pair join
-      "q283_changepoints", // 1-row split/total broadcasts over the day grain
-      "q206_kmv_merge", // 1-row n_days × 1-row exact-control cross
-      "q343_corpus_bleu", // 1-row length ledger × 1-row per-n clip cross
-      "q345_epoch_folding", // 1-row (n, S) stats broadcast over the hour grain
-      // DOMAIN-bounded nested loops: the broadcast side is a bounded
-      // dim (deciles, type CDF intervals, coalition masks, death
-      // times, score bands) so per-stream-row cost is O(dim); the
-      // stream side is itself domain-sized except q243's draw fan,
-      // where the 5-row CDF lookup is the per-draw assignment step
-      "q241_gains_table", // 10-row decile dim ≤-joins the cent cum
-      "q252_qini_uplift", // same 10-row decile dim as q241
-      "q254_ljung_box", // 7-row lag dim crossed with the daily series
-      "q243_bh_fdr", // 5-row type-interval CDF lookup per draw
-      "q244_shapley_attribution", // 16-row coalition ⊆-joins (bitmask)
-      "q245_logrank_test", // death-time grid × duration histogram
-      "q247_isotonic_calibration", // band i ≤ j interval self-join
-      // vocabCap²-bounded brute force BY DESIGN (the cap is the scale
-      // device — q300's eigensolve input); a corpus-sized serving path
-      // plugs the same vectors into the q49 IVF family instead
-      "q307_embedding_neighbors",
-      // cold-start back-off: the |V|-row type marginal broadcast into
-      // the (rare) context-less users — a bounded dim (the constant
-      // equi-key folds away, so the planner shows BNLJ)
-      "q311_next_event_serving",
-      // sppmi's grand total is a broadcast 1-row aggregate (the q78
-      // device that replaced the r15-flagged single-partition global
-      // window) — every sppmi consumer inherits the 1-row cross
-      "q299_shifted_ppmi", "q300_node_embeddings",
-      "q308_embedding_foldin", "q312_embedding_refresh",
-      "q318_refresh_sppmi", "q329_sppmi_erasure",
-      // q313 additionally broadcasts the 8-row probe set against the
-      // cell-pruned index scan (array_contains join — bounded dim);
-      // q342 serves the same probe path from the ERASED index
-      "q313_trained_ann_serving", "q342_serving_erasure",
-      // q316's Cramer solve lives on a broadcast 1-row normal-equation
-      // aggregate crossed into the scoring — the q78 device again
-      "q316_crossmodal_alignment",
-      // q319's 2-row epoch dim crossed into the corpus — bounded dim
-      "q319_resumable_order",
-      // r17: broadcast 1-row aggregates replacing global windows (the
-      // q299 device generalized) — bitemporal cuts, core stats, PMI
-      // totals; q320 inherits q313's 8-row probe broadcast per version
-      "q164_asof_dimension", "q210_bitemporal_asof", "q287_kcore",
-      "q258_pmi_collocations", "q320_registry_serving",
-      // q321 serves q275's BM25 (same 1-row corpus-stats cross) from
-      // the compacted store; q331 serves it from the erasure-filtered
-      // posting store
-      "q321_index_compaction", "q331_index_erasure",
-      // q334's 1-row total/extra broadcasts over the |langs| histogram
-      "q334_budget_apportion",
-      // q340 inherits q334's 1-row total/extra broadcasts (the fill's
-      // corpus-sized cumulation is Rank.runningSum, checkpointed)
-      "q340_token_apportion",
-      // r19: the CBO advice ledgers cross a broadcast 1-row aggregate
-      // (best estimate / histogram grand total) into a |keys|-row or
-      // 2-row ledger — the q78 device on metadata-sized frames; q364
-      // crosses the 9-row boundary dim into the 3-row range dim
-      "q361_join_order_advice", "q363_skew_salt_advice",
-      "q364_range_selectivity", "q366_boundary_store",
-      // q367 crosses three broadcast 1-row decrements + the 1-row bound
-      "q367_heavy_hitters_mg")
-    // streaming/generator entries build side effects or stream plans —
-    // plan text is checked by their own specs. q315 RUNS a complete
-    // streaming query (staging, RocksDB state, retrain) at
-    // plan-construction time; its batch tail is covered by Round16Spec
-    val skip = Set("q73_stream_hourly", "q92_stream_enrich",
-      "q315_stream_foldin",
-      // q323/q327 likewise RUN their streaming harnesses at
-      // construction; their batch tails (RDD scans of the committed
-      // servings) are gated by Round17Spec
-      "q323_serving_cutover", "q327_live_compaction",
-      "q330_stream_erasure",
-      // r19: the compaction drills rewrite their store and q362 runs a
-      // complete stream AT CONSTRUCTION; their batch tails are trivial
-      // store-readout aggregates gated by Round19Spec
-      "q356_passage_store_compaction", "q357_sig_store_compaction",
-      "q358_chunk_store_compaction", "q362_stream_analyze")
-    SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.startsWith("gen_")).filterNot(skip).foreach { q =>
-        val p = plan(q)
-        assert(!p.contains("CartesianProduct"), s"$q: cartesian:\n$p")
-        if (!oneRowBroadcast(q))
-          assert(!p.contains("BroadcastNestedLoopJoin"),
-            s"$q: nested-loop join:\n$p")
-      }
+    import PlanSpec.oneRowBroadcast
+    val plans = RegistryPlans.all(sf).map { case (q, p) => q -> p.executedPlan }
+    plans.foreach { case (q, p) =>
+      assert(!p.contains("CartesianProduct"), s"$q: cartesian:\n$p")
+      if (!oneRowBroadcast(q))
+        assert(!p.contains("BroadcastNestedLoopJoin"),
+          s"$q: nested-loop join:\n$p")
+    }
+    // exact: an exemption whose query no longer plans a nested loop fails
+    val stale = oneRowBroadcast --
+      plans.collect { case (q, p) if p.contains("BroadcastNestedLoopJoin") => q }
+    assert(stale.isEmpty, s"allowlisted without a nested-loop join: $stale")
+  }
+
+  test("plan audits construct each registered query once") {
+    RegistryPlans.all(sf)
+    assert(RegistryPlans.constructions == RegistryPlans.names.size)
+  }
+
+  test("every skipped or allowlisted name is a registered query") {
+    val lists = Map(
+      "RegistryPlans.skip" -> RegistryPlans.skip.keySet,
+      "PlanSpec.oneRowBroadcast" -> PlanSpec.oneRowBroadcast,
+      "Round17Spec.globalWindows" -> Round17Spec.globalWindows)
+    val unknown = lists.map { case (list, qs) =>
+      list -> (qs -- SparkEntry.queries.keySet)
+    }.filter(_._2.nonEmpty)
+    assert(unknown.isEmpty, s"names with no registered query: $unknown")
   }
 
   test("q171/q180 profilers plan with NO Expand") {
@@ -365,16 +271,12 @@ class PlanSpec extends AnyFunSuite {
         .groupBy($"c_name").agg(count(lit(1)))
         .queryExecution.executedPlan.toString
     }
-    val saved = Seq(
-      "spark.sql.cbo.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-    ).map(k => k -> spark.conf.getOption(k))
-    try {
-      // threshold between the CBO post-filter estimate (~10 rows) and
-      // the stats-free estimate (filter inherits the scan's file-size
-      // based estimate — tens of KB at sf0.01)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "2048")
-      spark.conf.set("spark.sql.cbo.enabled", "false")
+    // threshold between the CBO post-filter estimate (~10 rows) and
+    // the stats-free estimate (filter inherits the scan's file-size
+    // based estimate — tens of KB at sf0.01)
+    try SparkTestSession.withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "2048",
+        "spark.sql.cbo.enabled" -> "false") {
       val before = joinPlan()
       assert(before.contains("SortMergeJoin") ||
         before.contains("ShuffledHashJoin"),
@@ -386,13 +288,7 @@ class PlanSpec extends AnyFunSuite {
       assert(after.contains("BroadcastHashJoin"),
         s"column stats + CBO must estimate the filter selective " +
           s"and broadcast:\n$after")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      spark.sql("DROP TABLE IF EXISTS cbo_dim")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS cbo_dim")
   }
 
   test("AQE splits a skewed sort-merge-join partition at runtime") {
@@ -407,24 +303,13 @@ class PlanSpec extends AnyFunSuite {
         $"id".as("v"))
     val right = spark.range(0, 1000).select($"id".as("k"),
       ($"id" * 2).as("w"))
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-    ).map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "64KB")
-      spark.conf.set(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-      spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.enabled", "false")
+    SparkTestSession.withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    ) {
       val joined = left.join(right, "k")
       // execute THIS QueryExecution (a .count() would build its own):
       // AQE finalizes a plan only after its own adaptive run
@@ -433,9 +318,90 @@ class PlanSpec extends AnyFunSuite {
       val p = qe.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not mark/split the skewed partition:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
+}
+
+object PlanSpec {
+  // 1-row-broadcast denominators (scalar subquery shape) legitimately
+  // plan as BroadcastNestedLoopJoin over exactly one row — allow those
+  // q40/q49/q127: broadcast 1-row query vector for the top-k scan
+  // (q127 adds the 1-row query embedding again in the refine re-score)
+  val oneRowBroadcast = Set(
+    "q16_scalar_subquery", "q64_tfidf_terms", "q78_brand_share",
+    "q40_cosine_topk", "q49_ivf_topk", "q127_ivfpq_topk",
+    "q91_hll_merge", // 1-row merged × 1-row direct cross
+    "q143_triangle_count", // 1-row nodes × edges × triangles counts
+    "q167_bm25_search", // 1-row (n_docs, tot_toks) corpus constants
+    "q262_hybrid_rrf", // q167's 1-row corpus constants in the BM25 leg
+    "q169_basket_rules", // 1-row n_orders basket denominator
+    "q176_rfm_segments", // 1-row percentile-threshold broadcast
+    "q184_ivf_incremental", // 1-row query embedding over pruned cells
+    "q263_filtered_ann", // same 1-row query embedding, filtered probe
+    "q201_curriculum_shards", // 1-row difficulty-threshold broadcast
+    "q268_dsir_selection", // 1-row sampling-threshold + quota broadcast
+    "q271_nb_classifier", // class-count-row prior/total broadcast
+    "q272_ir_metrics", // 3-row cutoff dim × 20-row ranked list
+    "q275_incremental_index", // q167's 1-row corpus constants, from postings
+    "q278_feature_matrix", // 1-row max-day broadcast bounds the label window
+    "q279_markov_surprisal", // 1-row vocabulary scalar into the |V|² model
+    "q281_stream_markov", // same surprisal core as q279
+    "q286_prediction_calibration", // q279's 1-row vocab scalar in the trained model
+    "q290_incremental_triangles", // 1-row census × delta-count crosses
+    "q294_target_encoding", // 1-row global-sum cross into |cats|·|folds| cells
+    "q295_graph_profile", // 1-row node-stats × 1-row edge-stats cross
+    "q296_kmeans_refresh", // 1-row collected codebook crossed per scan
+    "q283_changepoints", // 1-row split/total broadcasts over the day grain
+    "q206_kmv_merge", // 1-row n_days × 1-row exact-control cross
+    "q343_corpus_bleu", // 1-row length ledger × 1-row per-n clip cross
+    "q345_epoch_folding", // 1-row (n, S) stats broadcast over the hour grain
+    // DOMAIN-bounded nested loops: the broadcast side is a bounded
+    // dim (deciles, type CDF intervals, coalition masks, death
+    // times, score bands) so per-stream-row cost is O(dim); the
+    // stream side is itself domain-sized except q243's draw fan,
+    // where the 5-row CDF lookup is the per-draw assignment step
+    "q241_gains_table", // 10-row decile dim ≤-joins the cent cum
+    "q252_qini_uplift", // same 10-row decile dim as q241
+    "q254_ljung_box", // 7-row lag dim crossed with the daily series
+    "q243_bh_fdr", // 5-row type-interval CDF lookup per draw
+    "q244_shapley_attribution", // 16-row coalition ⊆-joins (bitmask)
+    "q245_logrank_test", // death-time grid × duration histogram
+    "q247_isotonic_calibration", // band i ≤ j interval self-join
+    // vocabCap²-bounded brute force BY DESIGN (the cap is the scale
+    // device — q300's eigensolve input); a corpus-sized serving path
+    // plugs the same vectors into the q49 IVF family instead
+    "q307_embedding_neighbors",
+    // cold-start back-off: the |V|-row type marginal broadcast into
+    // the (rare) context-less users — a bounded dim (the constant
+    // equi-key folds away, so the planner shows BNLJ)
+    "q311_next_event_serving",
+    // sppmi's grand total is a broadcast 1-row aggregate (the q78
+    // device that replaced the r15-flagged single-partition global
+    // window) — every sppmi consumer inherits the 1-row cross
+    "q299_shifted_ppmi", "q308_embedding_foldin", "q312_embedding_refresh",
+    "q318_refresh_sppmi", "q329_sppmi_erasure",
+    // q313 additionally broadcasts the 8-row probe set against the
+    // cell-pruned index scan (array_contains join — bounded dim);
+    // q342 serves the same probe path from the ERASED index
+    "q313_trained_ann_serving", "q342_serving_erasure",
+    // q316's Cramer solve lives on a broadcast 1-row normal-equation
+    // aggregate crossed into the scoring — the q78 device again
+    "q316_crossmodal_alignment",
+    // r17: broadcast 1-row aggregates replacing global windows (the
+    // q299 device generalized) — bitemporal cuts, core stats, PMI
+    // totals; q320 inherits q313's 8-row probe broadcast per version
+    "q164_asof_dimension", "q210_bitemporal_asof", "q287_kcore",
+    "q258_pmi_collocations", "q320_registry_serving",
+    // q321 serves q275's BM25 (same 1-row corpus-stats cross) from
+    // the compacted store; q331 serves it from the erasure-filtered
+    // posting store
+    "q321_index_compaction", "q331_index_erasure",
+    // r19: the CBO advice ledgers cross a broadcast 1-row aggregate
+    // (best estimate / histogram grand total) into a |keys|-row or
+    // 2-row ledger — the q78 device on metadata-sized frames; q364
+    // crosses the 9-row boundary dim into the 3-row range dim
+    "q361_join_order_advice", "q363_skew_salt_advice",
+    "q364_range_selectivity", "q366_boundary_store",
+    // q367 crosses three broadcast 1-row decrements + the 1-row bound
+    "q367_heavy_hitters_mg")
 }

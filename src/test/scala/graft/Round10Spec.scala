@@ -15,17 +15,7 @@ class Round10Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  import SparkTestSession.withRocksDb
 
   test("tombstoneMerge deletes, replays idempotently, and reinserts") {
     import spark.implicits._
@@ -405,15 +395,7 @@ class Round10Spec extends AnyFunSuite {
       .repartition(8)
     val dim = keys.map(k => (k, s"name_$k")).toDF("key", "name")
       .repartition(4)
-    def withConf[T](pairs: (String, String)*)(body: => T): T = {
-      val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
+    import SparkTestSession.withConf
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -589,25 +571,18 @@ class Round10Spec extends AnyFunSuite {
     // aggregatePushDown, a filterless COUNT/MIN/MAX aggregate is
     // answered from row-group STATISTICS (footer metadata) — the scan
     // ships one pre-aggregated row per file, never the rows themselves.
-    val conf = spark.conf
-    val saved = Seq("spark.sql.sources.useV1SourceList",
-      "spark.sql.parquet.aggregatePushdown").map(k => k -> conf.getOption(k))
-    conf.set("spark.sql.sources.useV1SourceList", "") // parquet via DSv2
-    conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    val pushed =
-      try {
-        val df = spark.read.parquet(s"$sf/lineitem.parquet")
-          .selectExpr("count(*) AS n", "min(l_quantity) AS mn",
-            "max(l_quantity) AS mx")
-        val rows = df.collect().toSeq.map(_.toSeq)
-        val p = df.queryExecution.executedPlan.toString
-        assert(p.contains("PushedAggregation: [COUNT(*)"),
-          s"aggregate not pushed to the scan:\n$p")
-        rows
-      } finally saved.foreach {
-        case (k, Some(v)) => conf.set(k, v)
-        case (k, None)    => conf.unset(k)
-      }
+    val pushed = SparkTestSession.withConf(
+      "spark.sql.sources.useV1SourceList" -> "", // parquet via DSv2
+      "spark.sql.parquet.aggregatePushdown" -> "true") {
+      val df = spark.read.parquet(s"$sf/lineitem.parquet")
+        .selectExpr("count(*) AS n", "min(l_quantity) AS mn",
+          "max(l_quantity) AS mx")
+      val rows = df.collect().toSeq.map(_.toSeq)
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("PushedAggregation: [COUNT(*)"),
+        s"aggregate not pushed to the scan:\n$p")
+      rows
+    }
     // control: the row-scanning (v1, no-pushdown) answer must be equal —
     // footer statistics are an OPTIMIZATION, never a semantics change
     val ctrl = spark.read.parquet(s"$sf/lineitem.parquet")
@@ -631,10 +606,8 @@ class Round10Spec extends AnyFunSuite {
     // the planner auto-disables bucketed scans that feed no
     // distribution-requiring operator (DisableUnnecessaryBucketedScan);
     // a bare point lookup must opt back in to claim the pruning
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+    SparkTestSession.withConf(
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val probe = spark.table(ot).filter($"o_custkey" === 7L)
       val p = probe.queryExecution.executedPlan.toString
       assert(p.contains("SelectedBucketsCount: 1 out of 16"),
@@ -642,9 +615,6 @@ class Round10Spec extends AnyFunSuite {
       // and the pruned read returns exactly the full-scan answer
       val want = Tables.orders(spark, sf).filter($"o_custkey" === 7L).count()
       assert(probe.count() == want)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

@@ -301,15 +301,13 @@ class Round11Spec extends AnyFunSuite {
     import org.apache.spark.sql.types.StringType
     // AQE wraps stages and hides Exchange nodes from a tree collect;
     // the property under test is the static plan's shuffle payload
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
     val exchanges =
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      SparkTestSession.withConf("spark.sql.adaptive.enabled" -> "false") {
         SparkEntry.queries("q174_source_overlap")(spark, sf)
           .queryExecution.executedPlan.collect {
             case e: ShuffleExchangeExec => e
           }
-      } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+      }
     assert(exchanges.nonEmpty)
     // the only string allowed across ANY exchange is the tiny `source`
     // label; the 4-token span must have died inside its scan task

@@ -18,8 +18,7 @@ class Round16Spec extends AnyFunSuite {
   // ---- verdict item 2: no single-partition window in sppmi -----------
 
   test("q299 sppmi plans no global window (total is a broadcast 1-row agg)") {
-    val p = SparkEntry.queries("q299_shifted_ppmi")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = RegistryPlans(sf, "q299_shifted_ppmi").executedPlan
     // a partition-less window prints `windowspecdefinition(specified-
     // windowframe...` with no leading partition column — that shape
     // funnels the whole |V|² pair matrix through ONE task. The benign
@@ -400,8 +399,7 @@ class Round16Spec extends AnyFunSuite {
     assert(sched(0) != sched(1))
     // and the resume plan is a top-k over a PARTITION-PRUNED manifest
     // read — pre-checkpoint shards of epoch 0 are never scanned
-    val p = SparkEntry.queries("q319_resumable_order")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = RegistryPlans(sf, "q319_resumable_order").executedPlan
     assert(p.contains("TakeOrderedAndProject"), s"no top-k pushdown:\n$p")
     // the shard predicate must appear INSIDE the PartitionFilters
     // bracket — Spark prints `PartitionFilters: []` on every scan, so

@@ -106,61 +106,18 @@ class Round17Spec extends AnyFunSuite {
 
   test("plan audit: no registered query plans an unaudited global WindowExec") {
     import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    // Queries whose final plans legitimately carry a partition-less
-    // WindowExec — each traced to a source-audit site above and
-    // bounded by a DOMAIN (types, langs, hours/days, price cents,
-    // top-K, doc-length), never the corpus. (A bounded global window
-    // that runs EAGERLY behind a localCheckpoint never shows in the
-    // final plan; the source audit above is the layer covering those.)
-    val allow = Set(
-      "q148_temp_mixture",      // |langs|-row temperature histogram
-      "q151_pareto_skyline",    // per-x frontier: doc-length DOMAIN
-      "q157_dynamic_prune",     // |types|-row totals (Filter, for DPP)
-      "q194_cuped",             // variant-pair covariance rows
-      "q195_chi2_srm",          // 5-type histogram
-      "q204_interval_overlap",  // hourly incident table
-      "q241_gains_table",       // cents-histogram CDF (price domain)
-      "q243_bh_fdr",            // 5 p-values
-      "q247_isotonic_calibration", // score bins (2^40-key bounded)
-      "q252_qini_uplift",       // treated/control cents histogram
-      "q262_hybrid_rrf",        // two top-K (K=20) rank lists
-      "q272_ir_metrics",        // top-K system/ideal rank lists
-      "q283_changepoints",      // per-day series
-      "q284_periodicity",       // per-hour series + maxLag
-      "q345_epoch_folding",     // 47-row candidate-period grid
-      "q311_next_event_serving", // 5-row type marginal back-off
-      "q364_range_selectivity", // value-grain histogram walk + 9-row
-                                // boundary lead (see the source audit)
-      "q366_boundary_store",    // the same 9-row boundary lead, served
-                                // from the persisted artifact
-      "q367_heavy_hitters_mg",  // MG ranks over 17-row limited frames
-      // (q334's |langs|-row remainder rank runs EAGERLY behind its
-      // localCheckpoint, so it never reaches the final plan — the
-      // SOURCE audit above is the layer covering it)
-    )
-    // same skips as PlanSpec's cartesian audit: streaming entries whose
-    // construction RUNS a query (q315/q323 run complete streaming
-    // pipelines at plan time — their batch tails are their own gates),
-    // and the gen_ generator family (locked by GenSpec/ScheduleSpec +
-    // the source audit above)
-    val skip = Set("q73_stream_hourly", "q92_stream_enrich",
-      "q315_stream_foldin", "q323_serving_cutover",
-      "q327_live_compaction", "q330_stream_erasure")
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(_.startsWith("gen_")).filterNot(skip)
-      .flatMap { q =>
-        val plan = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
-        // main-plan walk; subquery plans are still LOGICAL at this
-        // stage so they can't be walked for WindowExec here — the
-        // SOURCE audit above is the layer that covers window
-        // construction everywhere, including inside subqueries
-        val global = plan.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w.nodeName
-          case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
-            w.nodeName
-        }
-        if (global.nonEmpty) Some(q) else None
-      }.toSet
+    val allow = Round17Spec.globalWindows
+    val offenders = RegistryPlans.all(sf).filter { case (_, p) =>
+      // main-plan walk; subquery plans are still LOGICAL at this
+      // stage so they can't be walked for WindowExec here — the
+      // SOURCE audit above is the layer that covers window
+      // construction everywhere, including inside subqueries
+      p.sparkPlan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w.nodeName
+        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+          w.nodeName
+      }.nonEmpty
+    }.map(_._1).toSet
     assert(offenders == allow,
       "partition-less WindowExec set drifted from the audited " +
         s"allowlist:\nfound = $offenders\nallow = $allow")
@@ -172,7 +129,7 @@ class Round17Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.window.WindowExec
     for (q <- Seq("q306_clip_collation", "q314_crossmodal_recall",
         "q316_crossmodal_alignment")) {
-      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
+      val plan = RegistryPlans(sf, q).sparkPlan
       val bad = plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }
@@ -262,7 +219,7 @@ class Round17Spec extends AnyFunSuite {
         s"shard $shard steps not dense: [$lo,$hi] n=$n")
     }
     // registry lineage fired: both versions committed and re-readable
-    val root = ops.Text.mf4Key.root(spark, d)
+    val root = ops.Text.mf4Log.ensure(spark, d)
     val log = new streaming.StoreLog(java.nio.file.Paths.get(root), "mf")
     assert(log.versions() == Seq(1L, 2L))
     // read-back ≡ a direct recompute of the same version
@@ -950,4 +907,39 @@ class Round17Spec extends AnyFunSuite {
       .select($"k", $"cum")
     assert(got.collect().toSet == want.collect().toSet)
   }
+}
+
+object Round17Spec {
+  // Queries whose final plans legitimately carry a partition-less
+  // WindowExec — each traced to a site of the class's source audit and
+  // bounded by a DOMAIN (types, langs, hours/days, price cents,
+  // top-K, doc-length), never the corpus. (A bounded global window
+  // that runs EAGERLY behind a localCheckpoint never shows in the
+  // final plan; the source audit is the layer covering those.)
+  val globalWindows = Set(
+    "q148_temp_mixture",      // |langs|-row temperature histogram
+    "q151_pareto_skyline",    // per-x frontier: doc-length DOMAIN
+    "q157_dynamic_prune",     // |types|-row totals (Filter, for DPP)
+    "q194_cuped",             // variant-pair covariance rows
+    "q195_chi2_srm",          // 5-type histogram
+    "q204_interval_overlap",  // hourly incident table
+    "q241_gains_table",       // cents-histogram CDF (price domain)
+    "q243_bh_fdr",            // 5 p-values
+    "q247_isotonic_calibration", // score bins (2^40-key bounded)
+    "q252_qini_uplift",       // treated/control cents histogram
+    "q262_hybrid_rrf",        // two top-K (K=20) rank lists
+    "q272_ir_metrics",        // top-K system/ideal rank lists
+    "q283_changepoints",      // per-day series
+    "q284_periodicity",       // per-hour series + maxLag
+    "q345_epoch_folding",     // 47-row candidate-period grid
+    "q311_next_event_serving", // 5-row type marginal back-off
+    "q364_range_selectivity", // value-grain histogram walk + 9-row
+                              // boundary lead (see the source audit)
+    "q366_boundary_store",    // the same 9-row boundary lead, served
+                              // from the persisted artifact
+    "q367_heavy_hitters_mg",  // MG ranks over 17-row limited frames
+    // (q334's |langs|-row remainder rank runs EAGERLY behind its
+    // localCheckpoint, so it never reaches the final plan — the
+    // SOURCE audit is the layer covering it)
+  )
 }

@@ -50,8 +50,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("q336: registered plan reads ONLY the rewritten store") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val frame = SparkEntry.queries("q336_dedup_store_erasure")(spark, sf)
-    val scans = frame.queryExecution.sparkPlan.collect {
+    val scans = RegistryPlans(sf, "q336_dedup_store_erasure").sparkPlan.collect {
       case f: FileSourceScanExec =>
         f.relation.location.rootPaths.mkString(",")
     }
@@ -288,8 +287,7 @@ class Round18Spec extends AnyFunSuite {
   test("q339: plan locks — pruned scan, WindowGroupLimit, no nested loop") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
-    val frame = SparkEntry.queries("q339_ann_join_served")(spark, sf)
-    val plan = frame.queryExecution.sparkPlan
+    val plan = RegistryPlans(sf, "q339_ann_join_served").sparkPlan
     val prunedScans = plan.collect {
       case f: FileSourceScanExec if f.partitionFilters.nonEmpty => f
     }

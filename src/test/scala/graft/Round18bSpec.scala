@@ -226,9 +226,7 @@ class Round18bSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, sf)
       val sup = Tables.supplier(spark, sf)
         .withColumnRenamed("s_suppkey", "l_suppkey")
@@ -264,8 +262,6 @@ class Round18bSpec extends AnyFunSuite {
         s"${ops.Analyze.statsStore(spark, sf, "lineitem")}/stats")
       assert(viaStore.except(direct).isEmpty &&
         direct.except(viaStore).isEmpty)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 

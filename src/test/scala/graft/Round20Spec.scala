@@ -134,36 +134,28 @@ class Round20Spec extends AnyFunSuite {
 
   test("q04: the stored ANALYZE artifact decides its broadcast, both ways") {
     import spark.implicits._
-    val sizeOff = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    sizeOff.foreach { case (k, v) =>
-      val old = spark.conf.get(k)
-      spark.conf.set(k, v)
-      try {
-        // advised branch: part's measured mass fits the budget -> the
-        // query's plan must carry the broadcast WITHOUT any
-        // size-estimate help
-        val hinted = SparkEntry.queries("q04_brand_volume")(spark, sf)
-          .queryExecution.executedPlan.toString
-        assert(hinted.contains("BroadcastHashJoin"),
-          "stored advice did not materialize as a broadcast join")
-        // refused branch: a zero budget must yield a shuffle join from
-        // the SAME artifact read
-        val refused = ops.Analyze.statsJoinStoredOn(spark, sf,
-          Tables.lineitem(spark, sf), "part",
-          $"l_partkey" === $"p_partkey", budget = 0L)
-          .groupBy($"p_brand").agg(count(lit(1)).as("n"))
-          .queryExecution.executedPlan.toString
-        assert(!refused.contains("BroadcastHashJoin"),
-          "zero budget still broadcast — the artifact is decorative")
-      } finally spark.conf.set(k, old)
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // advised branch: part's measured mass fits the budget -> the
+      // query's plan must carry the broadcast WITHOUT any
+      // size-estimate help
+      val hinted = SparkEntry.queries("q04_brand_volume")(spark, sf)
+        .queryExecution.executedPlan.toString
+      assert(hinted.contains("BroadcastHashJoin"),
+        "stored advice did not materialize as a broadcast join")
+      // refused branch: a zero budget must yield a shuffle join from
+      // the SAME artifact read
+      val refused = ops.Analyze.statsJoinStoredOn(spark, sf,
+        Tables.lineitem(spark, sf), "part",
+        $"l_partkey" === $"p_partkey", budget = 0L)
+        .groupBy($"p_brand").agg(count(lit(1)).as("n"))
+        .queryExecution.executedPlan.toString
+      assert(!refused.contains("BroadcastHashJoin"),
+        "zero budget still broadcast — the artifact is decorative")
     }
   }
 
   test("q371: the selectivity estimate decides the join strategy, both ways") {
-    val k = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.get(k)
-    spark.conf.set(k, "-1")
-    try {
+    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // fired arm: the head-band's estimated mass fits -> broadcast,
       // proven by q371's own in-plan require (it ran green above the
       // size-estimate machinery, which is disabled here)
@@ -178,7 +170,7 @@ class Round20Spec extends AnyFunSuite {
           "not the decision input")
       assert(refused.collect().toSeq == fired.collect().toSeq,
         "join strategy changed the ANSWER")
-    } finally spark.conf.set(k, old)
+    }
   }
 
   // ---- q362: replay-idempotent partials store (r19 advice) ------------

@@ -29,18 +29,15 @@ class Round20bSpec extends AnyFunSuite {
   }
 
   test("spreadIfNarrow is the identity when the scan already has enough splits") {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.get(key)
-    try {
-      // shrink the split size so even the tiny test file counts as
-      // >= cores splits — the helper must then return the frame AS IS
-      spark.conf.set(key, "1024")
+    // shrink the split size so even the tiny test file counts as
+    // >= cores splits — the helper must then return the frame AS IS
+    SparkTestSession.withConf("spark.sql.files.maxPartitionBytes" -> "1024") {
       val docs = Tables.documents(spark, sf)
       val spread = ops.Scale.spreadIfNarrow(docs, col("doc_id"))
       assert(spread eq docs,
         "spread fired on a wide layout — at production split counts " +
           "this would add a payload-sized exchange")
-    } finally spark.conf.set(key, saved)
+    }
   }
 
   test("spreadIfNarrow is the identity on a non-file source (ExistingRDD)") {
@@ -100,17 +97,15 @@ class Round20bSpec extends AnyFunSuite {
     // (wide-layout conf), row multiset equality
     val names = Seq("q132_top_ngram", "q264_dup_spans",
       "q301_fuzzy_decontam", "q343_corpus_bleu", "q344_rouge_n")
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.get(key)
     for (n <- names) {
       val withSpread = SparkEntry.queries(n)(spark, sf).collect()
         .map(_.toString).sorted.toSeq
-      val without =
-        try {
-          spark.conf.set(key, "1024") // helper sees a wide layout -> no-op
-          SparkEntry.queries(n)(spark, sf).collect()
-            .map(_.toString).sorted.toSeq
-        } finally spark.conf.set(key, saved)
+      // helper sees a wide layout -> no-op
+      val without = SparkTestSession.withConf(
+          "spark.sql.files.maxPartitionBytes" -> "1024") {
+        SparkEntry.queries(n)(spark, sf).collect()
+          .map(_.toString).sorted.toSeq
+      }
       assert(withSpread == without, s"$n rows changed under the spread")
     }
   }

@@ -23,8 +23,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("q98 plans as Expand + partial hash-agg, not a window join") {
-    val p = SparkEntry.queries("q98_sliding_windows")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = RegistryPlans(sf, "q98_sliding_windows").executedPlan
     assert(p.contains("Expand"), s"hopping windows lost the Expand:\n$p")
     assert(p.contains("partial_count") || p.contains("partial_sum"),
       s"hopping-window rollup lost its map-side combine:\n$p")
@@ -52,8 +51,7 @@ class Round7Spec extends AnyFunSuite {
   }
 
   test("q100 is one hash-agg: no window sort in the compaction plan") {
-    val p = SparkEntry.queries("q100_latest_compact")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = RegistryPlans(sf, "q100_latest_compact").executedPlan
     assert(!p.contains("Window"), s"compaction fell back to a window sort:\n$p")
     assert(p.contains("partial_max_by"),
       s"compaction lost its map-side max_by combine:\n$p")
@@ -115,20 +113,14 @@ class Round7Spec extends AnyFunSuite {
     // it. Thresholds are lowered so a test-sized build (one key holding
     // ~95% of rows) crosses them.
     import spark.implicits._
-    val keys = Seq(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-    )
-    val saved = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set(keys(0), "16KB")
-      spark.conf.set(keys(1), "64KB")
-      spark.conf.set(keys(2), "2")
-      spark.conf.set(keys(3), "-1") // force SMJ; broadcast would hide skew
-      spark.conf.set(keys(4), "false")
+    SparkTestSession.withConf(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      // force SMJ; broadcast would hide skew
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    ) {
       val left = spark.range(200000)
         .select(when($"id" < 190000, 7L).otherwise($"id").as("k"),
           $"id".as("v"))
@@ -141,9 +133,6 @@ class Round7Spec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true") || plan.contains("skewed"),
         s"AQE did not split the skewed partition:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

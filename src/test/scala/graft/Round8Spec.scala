@@ -246,19 +246,12 @@ class Round8Spec extends AnyFunSuite {
     // GC); this locks that our streaming queries produce IDENTICAL
     // results under it, i.e. nothing in the harnesses or aggregates
     // depends on the default provider's semantics.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
+    SparkTestSession.withRocksDb {
       val streamed = SparkEntry.queries("q73_stream_hourly")(spark, sf)
         .collect().map(_.toSeq).toSeq
       val batch = SparkEntry.queries("q22_hourly_windows")(spark, sf)
         .collect().map(_.toSeq).toSeq
       assert(streamed.nonEmpty && streamed == batch)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 
@@ -287,12 +280,8 @@ class Round8Spec extends AnyFunSuite {
     // processAllAvailable runs after the last data batch) passes its
     // 10060s expiry; user 3's expiry is BEYOND the final watermark, so
     // it stays open and must NOT be emitted.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
     val tmp = java.nio.file.Files.createTempDirectory("graft_timer").toString
-    try {
+    SparkTestSession.withRocksDb {
       def writeBatch(rows: Seq[(Long, Long)]): Unit =
         rows.toDF("user_id", "us").coalesce(1)
           .write.mode("append").parquet(s"$tmp/src")
@@ -333,17 +322,11 @@ class Round8Spec extends AnyFunSuite {
         (2L, 5000000L, 5000000L, 1L), // closed by the event-time TIMER
         (1L, 10000000000L, 10000000000L, 1L), // timer, final watermark
       ))
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
     }
   }
 
   test("q104 plans as exchange + local sort + mapPartitions, no collect_list") {
-    val qe = SparkEntry.queries("q104_ewma_decay")(spark, sf).queryExecution
-    val p = qe.executedPlan.toString
+    val p = RegistryPlans(sf, "q104_ewma_decay").executedPlan
     assert(!p.contains("collect_list"),
       s"q104 regressed to array materialization:\n$p")
     assert(p.contains("MapPartitions"), s"q104 lost its streaming fold:\n$p")
