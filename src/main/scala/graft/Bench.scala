@@ -87,14 +87,13 @@ object Bench {
     // (gen_block_10m: 17.3 s at 4 threads, 3.4 s at 32).
     val spark = SessionTuning.session()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-query task-metrics attribution (r18 verdict item 1): spill,
-    // peak execution memory, executor run/CPU time, task count — the
-    // evidence that lets a q243-style in-session blowup be read as
-    // "starved for slots" vs "plan doing more work" vs "spilling"
-    // straight from the round artifact.
-    val bm = new BenchMetricsListener
-    spark.sparkContext.addSparkListener(bm)
-    def drainBus(): Unit = org.apache.spark.graft.BusSync.drain(spark.sparkContext)
+    // Per-query attribution (r18 verdict item 1): every timed run is a
+    // trace window, and its record carries the jobs, the task metrics
+    // (spill, peak execution memory, executor run/CPU time, task count),
+    // the microbatches and the planning time — the evidence that lets a
+    // q243-style in-session blowup be read as "starved for slots" vs
+    // "plan doing more work" vs "spilling" straight from the artifact.
+    val trace = new graft.tools.Trace(spark)
     // Streaming-harness scratch space: staged sources are deleted by the
     // harnesses themselves, but sink dirs outlive their query (the
     // returned DataFrame reads them lazily), so each RUN starts by
@@ -118,73 +117,36 @@ object Bench {
     // never ran, so q88's timed number still paid the one-time write.
     // A warm-up failure must cost only its own step, and must be loud.
     //
-    // r20 verdict item 1: the warm steps are where the build-if-absent
-    // store family pays its one-time builds, and `warm()` used to time
-    // nothing — the erase transaction q337 serves from was invisible in
-    // the artifact. Every step is now WALL-TIMED and flagged
-    // built-vs-found: `built` = the step's body physically completed at
-    // least one store this run, detected as a NEW `_GRAFT_STORE_COMPLETE`
-    // marker PATH under the store bases (plus the marker-less bucketed
-    // catalog tables under the warehouse dir) — a path SET difference,
-    // not a count delta: a build that also sweeps superseded roots can
-    // remove more markers than it adds, and the count heuristic read
-    // such a step as found (observed on the store-rename migration run).
-    // The full ledger rides bench_full.json; the JSON line carries the
-    // attributable entries (see the emit site).
-    def storeMarkers(): Option[Set[String]] =
-      try {
-        val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-          spark.sparkContext.hadoopConfiguration)
-        val tgt = new org.apache.hadoop.fs.Path(
-          new java.io.File("target").getAbsolutePath)
-        val bases =
-          if (!fs.exists(tgt)) Seq.empty
-          else fs.listStatus(tgt).toSeq.filter(st => st.isDirectory && {
-            val n = st.getPath.getName
-            n.startsWith("stage_") || n.startsWith("graft_")
-          }).map(_.getPath)
-        def subdirs(p: org.apache.hadoop.fs.Path) =
-          fs.listStatus(p).iterator.filter(_.isDirectory).map(_.getPath)
-        // store roots under each base, and the erase stores one level
-        // below them (`<base root>/<erase tag>`)
-        val markers = bases.iterator.flatMap(subdirs)
-          .flatMap(r => Iterator(r) ++ subdirs(r))
-          .filter(d => fs.exists(new org.apache.hadoop.fs.Path(
-            d, "_GRAFT_STORE_COMPLETE")))
-          .map(_.toString).toSet
-        val wh = new org.apache.hadoop.fs.Path(new java.net.URI(
-          spark.conf.get("spark.sql.warehouse.dir")).getPath)
-        val tables =
-          if (!fs.exists(wh)) Set.empty[String]
-          else fs.listStatus(wh).iterator
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("graft_bk_"))
-            .map(_.getPath.toString).toSet
-        Some(markers ++ tables)
-      } catch { case scala.util.control.NonFatal(_) => None }
+    // The warm steps are where the build-if-absent stores pay their
+    // one-time builds (r20 verdict item 1), so every step is WALL-TIMED
+    // and flagged `built` when the store layer recorded a build during
+    // it (`ops.StoreGuard.builds`) or its body reports one (the bucketed
+    // catalog tables, which are no store). The full ledger rides
+    // bench_full.json; the JSON line carries the attributable entries
+    // (see the emit site).
     val warmLedger =
       scala.collection.mutable.ListBuffer.empty[(String, Double, Boolean)]
-    def warm(stage: String)(body: => Unit): Unit = {
-      val m0 = storeMarkers()
+    // `body` returns true when it built something outside the store layer
+    def warm(stage: String)(body: => Boolean): Unit = {
+      val n0 = ops.StoreGuard.builds.size
       val t0 = System.nanoTime()
-      try body
-      catch {
-        case e: Throwable =>
-          System.err.println(
-            s"[bench] warm-up step '$stage' failed: ${e.getMessage}")
-      } finally {
-        val sec = (System.nanoTime() - t0) / 1e9
-        val built = (for (a <- m0; b <- storeMarkers())
-          yield (b -- a).nonEmpty).getOrElse(false)
-        warmLedger += ((stage, sec, built))
-      }
+      val bodyBuilt =
+        try body
+        catch {
+          case e: Throwable =>
+            System.err.println(
+              s"[bench] warm-up step '$stage' failed: ${e.getMessage}")
+            false
+        }
+      val sec = (System.nanoTime() - t0) / 1e9
+      warmLedger += ((stage, sec, bodyBuilt || ops.StoreGuard.builds.size > n0))
     }
     // first: the session-wide nanos contract, so the events read below
     // (and every streaming query's file source) sees LONG, not an
     // illegal µs-precision TIMESTAMP(NANOS)
-    warm("nanosAsLong")(graft.Tables.ensureNanosAsLong(spark))
+    warm("nanosAsLong") { graft.Tables.ensureNanosAsLong(spark); false }
     warm("lineitem scan") {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count(): Unit
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count(); false
     }
     warm("text kernels") {
       val doc2 = spark.read.parquet(s"$sfDir/documents.parquet").limit(2)
@@ -193,12 +155,13 @@ object Bench {
         graft.functions.TextHashExprs.minhashSig(spark,
           graft.functions.TextHashExprs.shingleHashes(spark, doc2("text"), 3),
           16),
-      ).count(): Unit
+      ).count(); false
     }
     warm("vector kernel") {
       val emb2 = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(2)
       emb2.select(graft.functions.VectorExprs
-        .vecCosine(spark, emb2("embedding"), emb2("embedding"))).count(): Unit
+        .vecCosine(spark, emb2("embedding"), emb2("embedding"))).count()
+      false
     }
     // a 2-row `events.parquet` (a click, then `second`) staged as the
     // literal FILE the streaming harnesses read, under
@@ -213,14 +176,14 @@ object Bench {
         srcDir.resolve("events.parquet"), 0)
       srcDir
     }
-    warm("events scan")(graft.Tables.events(spark, sfDir).count(): Unit)
+    warm("events scan") { graft.Tables.events(spark, sfDir).count(); false }
     // tiny block-mode generate: compiles the generator's codegen path so
     // gen_block_1m (alphabetically the run-first query) doesn't absorb
     // it — r5 showed it 2× its isolated time purely from run-first
     // position
     warm("generator slice") {
       gen.StreamGen.block(spark, gen.GenQueries.demoSpec(2000L))
-        .count(): Unit
+        .count(); false
     }
     // 2-row stream-stream join: the symmetric-hash-join machinery
     // (state-store formats, per-side key/index stores, codegen) loads on
@@ -246,7 +209,7 @@ object Bench {
         .attributionFullOuter(spark, srcDir.toString).count(): Unit
       // right-outer's own operator wiring (q178 is its only query)
       graft.streaming.Streams
-        .attributionRightOuter(spark, srcDir.toString).count(): Unit
+        .attributionRightOuter(spark, srcDir.toString).count(); false
     }
     // Every declared build-if-absent store, in declaration order: a
     // store is STORAGE shared across queries (and, for the erase
@@ -259,7 +222,7 @@ object Bench {
     // visible: each store is its own step in the ledger, and
     // `pass1_built` lists any store pass 1 still built.
     val stores = ops.StoreGuard.all
-    stores.foreach(st => warm(st.name)(st.ensure(spark, sfDir): Unit))
+    stores.foreach(st => warm(st.name) { st.ensure(spark, sfDir); false })
     val storeSteps = stores.map(_.name).toSet
     // 2-row transformWithState run: q112 is the only query on the new
     // stateful API, and its first use loads the RocksDB native library
@@ -277,15 +240,13 @@ object Bench {
         .closedSessions(spark, srcDir.toString).count(): Unit
       // and through the MapState column family (q118 is its only user)
       graft.streaming.Streams
-        .typeCountsTws(spark, srcDir.toString).count(): Unit
+        .typeCountsTws(spark, srcDir.toString).count(); false
     }
     // q88's bucketed tables are one-time storage PREPARATION (the
     // pattern is "pay the shuffle at write time, join exchange-free
     // forever after") — build them here so q88's timed number is the
     // join the query demonstrates, not setup+join
-    warm("bucketed tables") {
-      graft.ops.Scale.ensureBucketedTables(spark, sfDir): Unit
-    }
+    warm("bucketed tables")(graft.ops.Scale.ensureBucketedTables(spark, sfDir))
     // ---- host-contention evidence (r19 verdict item 1) ----------------
     // The r19 record carried ~300 s of inflation the artifact could
     // localize (wall >> run/32, zero GC, zero spill) but not PROVE was
@@ -336,7 +297,7 @@ object Bench {
       loads += loadAvg(); jiff += cpuJiffies(); calib += calibProbe()
     }
     // warm the probe's codegen once so point 1 isn't charged compile time
-    warm("calibration probe")(calibProbe(): Unit)
+    warm("calibration probe") { calibProbe(); false }
     probePoint()
     // ---- prior-round per-query record (r19 verdict item 2) ------------
     // tools/bench_history.json pins each query's best OFFICIAL record
@@ -380,41 +341,43 @@ object Bench {
       java.lang.management.ManagementFactory
         .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     }
-    val gc1 = scala.collection.mutable.Map.empty[String, Long]
-    val gc2 = scala.collection.mutable.Map.empty[String, Long]
-    // pass → name → (counterDelta, peakBytes); full fidelity goes to
-    // bench_full.json, a digest of the worst offenders to the LINE
-    val met1 = scala.collection.mutable.Map.empty[String, (BenchSnap, Long)]
-    val met2 = scala.collection.mutable.Map.empty[String, (BenchSnap, Long)]
-    // One timed run of `name`, shared by pass 1 and the retime pass:
-    // drain the bus, reset the peak, snapshot the counters and GC, time
-    // `count()`, record the deltas. Returns the elapsed seconds and the
-    // failure, if any; each pass applies its own failure rule.
-    def timedRun(name: String,
-        gc: scala.collection.mutable.Map[String, Long],
-        met: scala.collection.mutable.Map[String, (BenchSnap, Long)],
-    ): (Double, Option[Throwable]) = {
-      drainBus(); bm.resetPeak()
-      val s0 = bm.snap()
-      val g0 = gcMs()
-      val t0 = System.nanoTime()
-      val err =
-        try { selected(name)(spark, sfDir).count(); None }
-        catch { case e: Throwable => Some(e) }
-      val sec = (System.nanoTime() - t0) / 1e9
-      gc(name) = gcMs() - g0
-      drainBus()
-      met(name) = (bm.snap().delta(s0), bm.peak.get)
+    // (name, pass) → that timed run; bench_full.json reads every run,
+    // the LINE a digest of the worst offenders
+    val runs = scala.collection.mutable.Map.empty[(String, Int), Run]
+    // One timed run of `name`, shared by pass 1 and the retime pass: a
+    // trace window around GC, the query function call and `count()`.
+    // Returns the elapsed seconds and the failure, if any; each pass
+    // applies its own failure rule.
+    def timedRun(name: String, pass: Int): (Double, Option[Throwable]) = {
+      val load = loadAvg()
+      val tag = s"$name pass$pass"
+      val (err, construct, sec, gc) = trace.tagged(tag) {
+        val g0 = gcMs()
+        val t0 = System.nanoTime()
+        var t1 = -1L
+        val err =
+          try {
+            val df = selected(name)(spark, sfDir)
+            t1 = System.nanoTime()
+            df.count(); None
+          } catch { case e: Throwable => Some(e) }
+        val t2 = System.nanoTime()
+        (err, ((if (t1 < 0) t2 else t1) - t0) / 1e9, (t2 - t0) / 1e9,
+          gcMs() - g0)
+      }
+      // without its plan, which would pin the run's broadcast relations
+      runs((name, pass)) = Run(gc, load, construct, sec - construct,
+        trace.take(tag).copy(plan = None))
       (sec, err)
     }
     // Deterministic name order: Map iteration order is arbitrary, and a
     // run-order change shifts which query absorbs shared lazy costs.
-    // The marker set difference across pass 1 names every store a timed
+    // The store builds recorded across pass 1 name every store a timed
     // query still built (an erase store vacuums its base, so a query
     // reading that base directly rebuilds it).
-    val markers0 = storeMarkers()
+    val builds0 = ops.StoreGuard.builds.size
     val pass1 = selected.keys.toSeq.sorted.map { name =>
-      val (sec, err) = timedRun(name, gc1, met1)
+      val (sec, err) = timedRun(name, 1)
       err.foreach { e =>
         // a failed query must not masquerade as a fast one
         errors += name
@@ -422,8 +385,7 @@ object Bench {
       }
       name -> sec
     }
-    val pass1Built = (for (a <- markers0; b <- storeMarkers())
-      yield (b -- a).toSeq.sorted).getOrElse(Nil)
+    val pass1Built = ops.StoreGuard.builds.drop(builds0).distinct.sorted
     // Second pass (see `retimes`): a single-pass bench has no defense
     // against a contended-machine artifact — the r9 snapshot recorded
     // gen_block_10m at 8× its clean time and four other phantom 2-3×
@@ -438,14 +400,12 @@ object Bench {
         p1ByName(n)}%.2f s > 3x record ${history(n)}%.2f s — retiming")
     }
     probePoint() // mid-session: between pass 1 and the retime pass
-    // 1-min load average sampled just before each retime: a retime that
-    // stays slow UNDER a loadavg >> ncpu is adjudicated contended, one
-    // at loadavg ~ ncpu is a real plan/state question
-    val loadRe = scala.collection.mutable.Map.empty[String, Double]
+    // each run's 1-min load average is sampled just before it: a retime
+    // that stays slow UNDER a loadavg >> ncpu is adjudicated contended,
+    // one at loadavg ~ ncpu is a real plan/state question
     val pass2 = pass1.filter(p => plan1.second(p._1)).collect {
       case (name, p1time) if !errors.contains(name) =>
-        loadRe(name) = loadAvg()
-        val (sec, err) = timedRun(name, gc2, met2)
+        val (sec, err) = timedRun(name, 2)
         name -> err.fold(sec) { e =>
           // a failed retime must NOT win min() with its elapsed-to-failure
           // time — report pass 1's real number
@@ -490,105 +450,78 @@ object Bench {
     // NOT stderr: sbt re-echoes stderr as [error] lines on stdout with no
     // flush-order guarantee vs our JSON line, and anything printed after
     // it would push it out of the driver's 2000-char tail window.
+    def gcOf(k: String, pass: Int): Long = runs.get((k, pass)).fold(-1L)(_.gcMs)
+    // one field of every run of `pass`, by query name
+    def perQuery(pass: Int)(f: Run => String): String = obj(runs.toSeq
+      .collect { case ((k, `pass`), r) => k -> f(r) }.sortBy(_._1))
     locally {
-      val full = results.sortBy(-_._2)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val p1 = pass1.toMap
-      val both = pass2.toSeq.sortBy(_._1)
-        .map { case (k, v2) => s""""$k":[${p1(k)},$v2]""" }
-        .mkString("{", ",", "}")
       val p = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_FULL_PATH", "target/bench_full.json"))
       java.nio.file.Files.createDirectories(p.getParent)
-      val sus = suspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // per-pass GC evidence for every retimed query (r16 verdict
-      // item 6): a retime that blows out WITH a matching GC blowout is
-      // memory pressure, one WITHOUT is a plan/state question — the
-      // next SUSPECT carries its diagnosis instead of a narrative
-      val gcPairs = pass2.keys.toSeq.sorted
-        .map(k => s""""$k":[${gc1.getOrElse(k, -1L)},${gc2(k)}]""")
-        .mkString("{", ",", "}")
-      // full task-metrics attribution for every query, both passes:
-      // [spillMemMB, spillDiskMB, peakMB, runMs, cpuMs, tasks,
-      //  shufWriteMB, shufReadMB] (r18 verdict item 1)
-      def metJson(m: scala.collection.Map[String, (BenchSnap, Long)]) =
-        m.toSeq.sortBy(_._1)
-          .map { case (k, (d, pk)) => s""""$k":${d.json(pk)}""" }
-          .mkString("{", ",", "}")
-      val iso = isolated.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":[${p1.getOrElse(k, -1.0)},$v]""" }
-        .mkString("{", ",", "}")
-      // contention evidence, full fidelity: the three probe readings,
-      // loadavg triple, machine-wide (busy, steal, total) jiffies at
-      // each point, per-retime loadavg, and which queries blew their
-      // prior-round record
-      val calibJson = calib.map(v => (math.round(v * 1000) / 1000.0)
-        .toString).mkString("[", ",", "]")
-      val loadJson = loads.map(_.toString).mkString("[", ",", "]")
-      val jiffJson = jiff
-        .map { case (b, st, t) => s"[$b,$st,$t]" }.mkString("[", ",", "]")
-      val loadReJson = loadRe.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      val blownJson = plan2.recordBlown.sorted
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-      // warm-store ledger, full fidelity: every step's wall time and
-      // whether it physically BUILT a store this run (r20 verdict item 1)
-      val warmFull = warmLedger
-        .map { case (st, sec, b) =>
-          s""""$st":[${(math.round(sec * 1000) / 1000.0)},${if (b) 1 else 0}]"""
-        }.mkString("{", ",", "}")
-      java.nio.file.Files.write(p,
-        (s"""{"min":$full,"retimed_passes":$both,"suspect":$sus,""" +
-          s""""gc_ms":$gcPairs,"isolated":$iso,""" +
-          s""""calib":$calibJson,"load":$loadJson,""" +
-          s""""cpu_jiffies":$jiffJson,"load_retime":$loadReJson,""" +
-          s""""record_blown":$blownJson,"warm":$warmFull,""" +
-          s""""pass1_built":${pass1Built.map("\"" + _ + "\"")
-            .mkString("[", ",", "]")},""" +
-          s""""metrics1":${metJson(met1)},"metrics2":${metJson(met2)}}""")
-          .getBytes("UTF-8"))
+      java.nio.file.Files.write(p, obj(Seq(
+        "min" -> obj(results.sortBy(-_._2)),
+        "retimed_passes" -> obj(pass2.toSeq.sortBy(_._1)
+          .map { case (k, v2) => k -> s"[${p1ByName(k)},$v2]" }),
+        "suspect" -> strs(suspect),
+        // per-pass GC evidence for every retimed query (r16 verdict
+        // item 6): a retime that blows out WITH a matching GC blowout is
+        // memory pressure, one WITHOUT is a plan/state question
+        "gc_ms" -> obj(pass2.keys.toSeq.sorted
+          .map(k => k -> s"[${gcOf(k, 1)},${gcOf(k, 2)}]")),
+        "isolated" -> obj(isolated.toSeq.sortBy(_._1)
+          .map { case (k, v) => k -> s"[${p1ByName.getOrElse(k, -1.0)},$v]" }),
+        // contention evidence, full fidelity: the three probe readings,
+        // loadavg triple, machine-wide (busy, steal, total) jiffies at
+        // each point, per-retime loadavg, and which queries blew their
+        // prior-round record
+        "calib" -> calib.map(r3).mkString("[", ",", "]"),
+        "load" -> loads.mkString("[", ",", "]"),
+        "cpu_jiffies" -> jiff.map { case (b, st, t) => s"[$b,$st,$t]" }
+          .mkString("[", ",", "]"),
+        "load_retime" -> perQuery(2)(_.load.toString),
+        "record_blown" -> strs(plan2.recordBlown.sorted),
+        // warm-store ledger, full fidelity: every step's wall time and
+        // whether it built a store this run (r20 verdict item 1)
+        "warm" -> obj(warmLedger.map { case (st, sec, b) =>
+          st -> s"[${r3(sec)},${if (b) 1 else 0}]" }),
+        "pass1_built" -> strs(pass1Built),
+        // task-metrics attribution for every query, both passes (r18
+        // verdict item 1), and pass 1's layers
+        "metrics1" -> perQuery(1)(r => metricsJson(r.trace.tasks)),
+        "metrics2" -> perQuery(2)(r => metricsJson(r.trace.tasks)),
+        "layers1" -> perQuery(1)(layersJson),
+      )).getBytes("UTF-8"))
     }
+    // [pass1 s, pass2 s, pass1 GC ms, pass2 GC ms] of a retimed query
+    def passes(k: String): String =
+      s"[${r2(p1ByName(k))},${r2(pass2(k))},${gcOf(k, 1)},${gcOf(k, 2)}]"
     // both passes for the re-timed heavy tail, so a drifting number is
     // visible in the round artifact itself, not just the min. The LINE
     // carries the 8 slowest pairs (char budget); min() still uses every
-    // second pass, and bench_full.json records every pair. Entries are
-    // [pass1 s, pass2 s, pass1 GC ms, pass2 GC ms] — gc UNCONDITIONALLY
-    // (the r17 verdict note: the gc evidence must live in the round
-    // artifact itself, not only in bench_full.json / the usually-absent
-    // SUSPECT line), so a variance blowout is diagnosable from
-    // BENCH_r{N}.json alone.
+    // second pass, and bench_full.json records every pair. GC rides
+    // UNCONDITIONALLY (r17 verdict note), so a variance blowout is
+    // diagnosable from BENCH_r{N}.json alone.
     val lineRetimes = pass1.sortBy(-_._2).take(8).map(_._1).toSet
-    val retimed = pass2.toSeq.filter(kv => lineRetimes(kv._1)).sortBy(_._1)
-      .map { case (k, v2) => "\"" + shortKey(k) + "\":[" + r2(p1ByName(k)) +
-        "," + r2(v2) + "," + gc1.getOrElse(k, -1L) + "," + gc2(k) + "]" }
-      .mkString("{", ",", "}")
+    val retimed = obj(pass2.keys.toSeq.filter(lineRetimes).sorted
+      .map(k => shortKey(k) -> passes(k)))
     // when a SUSPECT retime fires, the round artifact itself carries
-    // the evidence: [pass1 sec, pass2 sec, pass1 GC ms, pass2 GC ms]
-    // per suspect. Usually empty — zero line-budget cost.
+    // its passes. Usually empty — zero line-budget cost.
     val susGc =
       if (suspect.isEmpty) ""
-      else ","  + "\"suspect_gc\":" + suspect.map { n =>
-        "\"" + n + "\":[" + r2(p1ByName(n)) + "," + r2(pass2(n)) + "," +
-          gc1.getOrElse(n, -1L) + "," + gc2(n) + "]"
-      }.mkString("{", ",", "}")
+      else ",\"suspect_gc\":" + obj(suspect.map(n => n -> passes(n)))
     // isolated-pass evidence IN the round artifact: [in-session min,
     // fresh-JVM sec] per isolated query — the pollution stays visible
     // even though min() adopts the clean number (usually empty)
     val isoLine =
       if (isolated.isEmpty) ""
-      else "," + "\"isolated\":" + isolated.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          "\"" + shortKey(k) + "\":[" + r2(inSessByName(k)) + "," +
-            r2(v) + "]" }
-        .mkString("{", ",", "}")
+      else ",\"isolated\":" + obj(isolated.toSeq.sortBy(_._1).map {
+        case (k, v) => shortKey(k) -> s"[${r2(inSessByName(k))},${r2(v)}]" })
     // task-metrics digest for the 4 slowest pass-1 queries (r18
-    // verdict item 1): [spillMemMB, spillDiskMB, peakMB, runMs, cpuMs,
-    // tasks, shufWriteMB, shufReadMB] — full map in bench_full.json
-    val diagLine = "," + "\"diag\":" + pass1.sortBy(-_._2).take(4)
+    // verdict item 1) — full map in bench_full.json
+    val diagLine = ",\"diag\":" + obj(pass1.sortBy(-_._2).take(4)
       .map(_._1).sorted
-      .flatMap(k => met1.get(k).map { case (d, pk) =>
-        "\"" + shortKey(k) + "\":" + d.json(pk) })
-      .mkString("{", ",", "}")
+      .flatMap(k => runs.get((k, 1)).map(r =>
+        shortKey(k) -> metricsJson(r.trace.tasks))))
     // contention evidence in the LINE itself (r19 verdict item 1): the
     // pinned-probe triple and the loadavg triple — ~55 chars that let a
     // judge read "externally slow session" off BENCH_r{N}.json alone
@@ -618,16 +551,48 @@ object Bench {
         case (_, sec, built) => built || sec >= 0.1
       }
       val ents = keep.map { case (st, sec, b) =>
-        "\"" + k(st) + "\":[" + r1(sec) + "," + (if (b) 1 else 0) + "]"
-      } ++ Seq(s""""stores":[${stores.count(_._3)},${
-            r1(stores.map(_._2).sum)}]""") ++
+        k(st) -> s"[${r1(sec)},${if (b) 1 else 0}]"
+      } ++ Seq("stores" ->
+          s"[${stores.count(_._3)},${r1(stores.map(_._2).sum)}]") ++
         (if (rest.isEmpty) Nil
-         else Seq(s""""rest":[${rest.size},${r1(rest.map(_._2).sum)}]"""))
-      ",\"warm\":" + ents.mkString("{", ",", "}")
+         else Seq("rest" -> s"[${rest.size},${r1(rest.map(_._2).sum)}]"))
+      ",\"warm\":" + obj(ents)
     }
     println(jsonLine(results, retimed,
       susGc + isoLine + diagLine + calLine + warmLine, errors.toSeq, sfDir))
     spark.stop()
+  }
+
+  /** One timed run of one query in one pass, as both artifact writers
+    * read it: GC ms over the run, the 1-min load average sampled just
+    * before it, the query function call and `count()` seconds, and the
+    * run's trace record.
+    */
+  private final case class Run(gcMs: Long, load: Double,
+      constructSec: Double, executeSec: Double, trace: graft.tools.Trace.Rec)
+
+  /** A run's task metrics as the compact 8-column array (MB / ms /
+    * count grain — full precision is not load-bearing for a diagnosis
+    * that reads in orders of magnitude): [spillMemMB, spillDiskMB,
+    * peakMB, runMs, cpuMs, tasks, shufWriteMB, shufReadMB].
+    */
+  private def metricsJson(t: graft.tools.Trace.Tasks): String = {
+    def mb(b: Long): Long = b >> 20
+    s"[${mb(t.memSpill)},${mb(t.diskSpill)},${mb(t.peakBytes)},${t.runMs}," +
+      s"${t.cpuNs / 1000000L},${t.tasks},${mb(t.shufWrite)},${mb(t.shufRead)}]"
+  }
+
+  /** A run's layers: construction and execution seconds, its jobs, its
+    * planning ms, and for a streaming run its microbatches and their
+    * summed state-commit ms.
+    */
+  private def layersJson(r: Run): String = {
+    val t = r.trace
+    obj(Seq("construct_s" -> r3(r.constructSec), "execute_s" -> r3(r.executeSec),
+      "jobs" -> t.jobs.size, "plan_ms" -> t.planningMs) ++
+      (if (t.batches.isEmpty) Nil
+       else Seq("batches" -> t.batches.size,
+         "commit_ms" -> t.batches.map(_.commitMs).sum)))
   }
 
   /** Bench's retime choices, all derived from pass 1, pass 2 and the
@@ -685,6 +650,11 @@ object Bench {
     val x = math.round(v * 10) / 10.0
     if (x == math.rint(x)) x.toLong.toString else x.toString
   }
+  // `{"k":v,...}` from rendered values, and `["s",...]` from strings
+  private def obj(kv: Iterable[(String, Any)]): String =
+    kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  private def strs(xs: Iterable[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
   // q104_ewma_decay → q104 is a lossless rename; gen_* stay full
   private def shortKey(k: String): String =
     if (k.matches("q\\d+_.*")) k.takeWhile(_ != '_') else k
@@ -709,14 +679,12 @@ object Bench {
     */
   private[graft] def jsonLine(results: Seq[(String, Double)], retimed: String,
       extras: String, errors: Seq[String], sfDir: String): String = {
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errs = strs(errors)
     def line(qs: String, omit: String): String =
       s"""{"metric":"total","value":${r3(results.map(_._2).sum)},"unit":"sec","n_queries":${results.size},"queries":$qs,"retimed":$retimed$omit$extras,"errors":$errs,"sf":"$sfDir"}"""
     val cap = 1800
     val sorted = results.sortBy(-_._2)
-    val full = line(sorted
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}"), "")
+    val full = line(obj(sorted.map { case (k, v) => k -> r3(v) }), "")
     if (full.length <= cap) full
     else {
       // size the queries budget from what the frame + extras actually

@@ -193,7 +193,8 @@ object Scale {
     */
   private def q88(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (ot, ct) = ensureBucketedTables(s, d)
+    ensureBucketedTables(s, d)
+    val (ot, ct) = bucketedTables(d)
     bucketedJoin(s, ot, ct)
       .groupBy($"c_mktsegment")
       .agg(
@@ -210,18 +211,21 @@ object Scale {
   def bucketTag(d: String): String = java.lang.Long.toHexString(
     d.getBytes("UTF-8").foldLeft(17L)(31L * _ + _))
 
-  /** Idempotently (re)build the bucketed copies of orders/customer for
-    * source dir `d`; returns their catalog names. Called by q88 and by
-    * the bench warm-up — the write is one-time table PREPARATION, not
-    * part of the join pattern q88 demonstrates, so the bench pre-builds
-    * here to keep the timed body join-only.
+  /** Catalog names of the bucketed copies of orders/customer for `d`. */
+  def bucketedTables(d: String): (String, String) =
+    (s"graft_bk_orders_${bucketTag(d)}", s"graft_bk_customer_${bucketTag(d)}")
+
+  /** Idempotently (re)build the [[bucketedTables]] for source dir `d`;
+    * true when the catalog lacked them and they were built. Called by
+    * q88 and by the bench warm-up — the write is one-time table
+    * PREPARATION, not part of the join pattern q88 demonstrates, so the
+    * bench pre-builds here to keep the timed body join-only.
     */
-  def ensureBucketedTables(s: SparkSession, d: String): (String, String) = {
+  def ensureBucketedTables(s: SparkSession, d: String): Boolean = {
     import s.implicits._
-    val tag = bucketTag(d)
-    val ot = s"graft_bk_orders_$tag"
-    val ct = s"graft_bk_customer_$tag"
-    if (!s.catalog.tableExists(ot) || !s.catalog.tableExists(ct)) {
+    val (ot, ct) = bucketedTables(d)
+    val absent = !s.catalog.tableExists(ot) || !s.catalog.tableExists(ct)
+    if (absent) {
       // the warehouse dir outlives the in-memory catalog (a fresh JVM
       // forgets the table but its files remain), and CTAS refuses a
       // managed-table location that already exists — clear both
@@ -241,7 +245,7 @@ object Scale {
         .write.bucketBy(16, "c_custkey").sortBy("c_custkey")
         .mode("overwrite").saveAsTable(ct)
     }
-    (ot, ct)
+    absent
   }
 
   /** The exchange-free join of the two bucketed tables (factored out so

@@ -90,10 +90,10 @@ private[graft] object StoreGuard {
         keyRoot.substring(keyRoot.lastIndexOf('/') + 1))
       erases match {
         case None =>
-          ensureBuilt(s, keyRoot)(build(s, d, keyRoot))
+          ensureBuilt(s, keyRoot, name)(build(s, d, keyRoot))
           keyRoot
         case Some((b, tag)) =>
-          eraseRewrite(s, keyRoot, tag, b.payload)(b.ensure(s, d))(
+          eraseRewrite(s, keyRoot, tag, b.payload, name)(b.ensure(s, d))(
             build(s, d, _))
       }
     }
@@ -152,6 +152,12 @@ private[graft] object StoreGuard {
       Some((new Store(k, sweep = false, basePayload, None, none), tag)), none)
   }
 
+  private val built = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  /** The name of every store whose `ensure` ran its builder in this
+    * JVM, once per build, in build order. */
+  def builds: Seq[String] = built.synchronized(built.toList)
+
   /** Every declared store, in declaration order. */
   def all: Seq[Store] = {
     graft.SparkEntry.queries
@@ -202,12 +208,14 @@ private[graft] object StoreGuard {
       s"${edgeFingerprint(fs, p, st.getLen)}"
   }
 
-  private def ensureBuilt(s: SparkSession, root: String)(build: => Unit): Unit = {
+  private def ensureBuilt(s: SparkSession, root: String, name: String)(
+      build: => Unit): Unit = {
     val p = new org.apache.hadoop.fs.Path(root, "_GRAFT_STORE_COMPLETE")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
       build
       fs.create(p, true).close()
+      built.synchronized(built += name)
     }
   }
 
@@ -270,10 +278,10 @@ private[graft] object StoreGuard {
     */
   private def eraseRewrite(
       s: SparkSession, baseRoot: String, erasedTag: String,
-      payloads: Seq[String])(ensureBase: => Any)(
+      payloads: Seq[String], name: String)(ensureBase: => Any)(
       rewrite: String => Unit): String = {
     val erased = s"$baseRoot/$erasedTag"
-    ensureBuilt(s, erased) {
+    ensureBuilt(s, erased, name) {
       ensureBase
       rewrite(erased)
       vacuumStore(s, baseRoot, payloads)

@@ -2,16 +2,16 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** Listener-bus drain hook for the bench harness.
+/** Listener-bus drain hook for [[graft.tools.Trace]].
   *
   * `LiveListenerBus.waitUntilEmpty()` is `private[spark]`, so the one
-  * call the per-query metrics attribution needs (flush queued task-end
-  * events BEFORE snapshotting the counters, or a heavy query's spill
-  * bytes land on the next query's row) lives in this two-line shim
-  * inside the `org.apache.spark` namespace. Nothing else of Spark's
-  * internals is touched; a bus that cannot drain within the timeout is
-  * reported as a warning, never an abort — metrics attribution degrades
-  * to "±the queued tail", the timings themselves are unaffected.
+  * call the trace needs (deliver a window's queued job, task, progress
+  * and plan events BEFORE its record is read, or a heavy query's tasks
+  * land in the next query's record) lives in this two-line shim inside
+  * the `org.apache.spark` namespace. Nothing else of Spark's internals
+  * is touched; a bus that cannot drain within the timeout is reported
+  * as a warning, never an abort — the record degrades to "±the queued
+  * tail", the timings themselves are unaffected.
   */
 object BusSync {
   def drain(sc: SparkContext): Unit =

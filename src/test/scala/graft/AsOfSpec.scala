@@ -32,6 +32,25 @@ object SparkTestSession {
     }
   }
 
+  /** `body`'s result and the task ends of every job it ran, tagged or
+    * not, counted by a plain listener over the drained bus. */
+  def taskEnds[T](body: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.graft.BusSync.drain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val res = body
+      org.apache.spark.graft.BusSync.drain(sc)
+      (res, n.get)
+    } finally sc.removeSparkListener(counter)
+  }
+
   /** Runs `body` on the RocksDB streaming state store. */
   def withRocksDb[T](body: => T): T = withConf(
     "spark.sql.streaming.stateStore.providerClass" ->

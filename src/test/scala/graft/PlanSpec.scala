@@ -37,9 +37,7 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries("q88_bucketed_join")(spark, sf).collect()
     // exact names via the dir-hash tag — a prefix scan of the shared
     // catalog could pick up another spec's tables for a different dir
-    val tag = ops.Scale.bucketTag(sf)
-    val ot = s"graft_bk_orders_$tag"
-    val ct = s"graft_bk_customer_$tag"
+    val (ot, ct) = ops.Scale.bucketedTables(sf)
     // at this tiny SF the planner rightly prefers broadcast (and skips
     // the bucketed scan); the property under test is the big-big case,
     // so turn auto-broadcast off to see the plan a 100 TB join gets

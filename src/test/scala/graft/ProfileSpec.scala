@@ -8,8 +8,9 @@ import graft.tools.Profile
 
 /** `graft.tools.Profile`: two timed reps per query with their codegen
   * compiles, job and microbatch lines tagged with their query, one
-  * final-plan block per query, and a failure count that makes an
-  * unknown name loud.
+  * final-plan block per query, a failure count that makes an unknown
+  * name loud, and `[job] tasks=` counts that add up to the tasks that
+  * ran.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -18,8 +19,9 @@ class ProfileSpec extends AnyFunSuite {
   test("Profile prints reps, job and batch lines, one plan per query") {
     val qs = Seq("q73_stream_hourly", "q05_star_revenue")
     val lines = ListBuffer.empty[String]
-    val failed = Profile.run(spark, sf, qs :+ "q_no_such_query",
-      l => lines.synchronized { lines += l })
+    val (failed, ended) = SparkTestSession.taskEnds(
+      Profile.run(spark, sf, qs :+ "q_no_such_query",
+        l => lines.synchronized { lines += l }))
     assert(failed == 1)
     // compile_ms sums a sampled histogram, which a JVM past 1,028
     // compiles (this suite's, by now) no longer holds whole
@@ -35,6 +37,10 @@ class ProfileSpec extends AnyFunSuite {
     assert(lines.exists(_.matches(
       """\[batch\] q73_stream_hourly rep\d id=\d+ rows=\d+ durationMs=.*""")))
     assert(lines.contains("[fail] q_no_such_query: unknown query"))
+    // the tasks that ran, not the planned tasks of skipped stages
+    val jobTasks = """\[job\] .* tasks=(\d+) site=.*""".r
+    val printed = lines.toSeq.collect { case jobTasks(n) => n.toLong }.sum
+    assert(printed == ended, s"[job] tasks= sum $printed, task ends $ended")
     assert(!lines.exists(_.contains("q_no_such_query final adaptive plan")))
   }
 }

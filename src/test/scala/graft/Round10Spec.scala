@@ -602,7 +602,8 @@ class Round10Spec extends AnyFunSuite {
     // joins; the SAME layout also prunes POINT LOOKUPS — hashing the
     // literal selects one bucket's files, so a key probe on a 100 TB
     // bucketed fact touches 1/16th of the data before any row filter.
-    val (ot, _) = graft.ops.Scale.ensureBucketedTables(spark, sf)
+    graft.ops.Scale.ensureBucketedTables(spark, sf)
+    val (ot, _) = graft.ops.Scale.bucketedTables(sf)
     // the planner auto-disables bucketed scans that feed no
     // distribution-requiring operator (DisableUnnecessaryBucketedScan);
     // a bare point lookup must opt back in to claim the pruning

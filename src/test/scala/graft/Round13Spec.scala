@@ -574,7 +574,8 @@ class Round13Spec extends AnyFunSuite {
     // died after its earlier sub-writes landed (their own _SUCCESS
     // present) but before the last one and the completion marker. The
     // next ensure must rebuild (a guard on a sub-store's _SUCCESS would
-    // serve the broken store forever) and read the same rows.
+    // serve the broken store forever), record that build and read the
+    // same rows.
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete()
@@ -589,12 +590,19 @@ class Round13Spec extends AnyFunSuite {
       val marker = new java.io.File(s"$root/_GRAFT_STORE_COMPLETE")
       assert(marker.delete(), s"${st.name}: no marker after ensure")
       rm(new java.io.File(s"$root/${st.payload.last}"))
+      val b0 = ops.StoreGuard.builds.size
       val again = st.ensure(spark, sf)
+      val healed = ops.StoreGuard.builds.drop(b0)
       val after = rows(st, again)
+      // the store layer reports the rebuild, and a found call nothing
+      val b1 = ops.StoreGuard.builds.size
+      st.ensure(spark, sf)
       val why = Seq(
         (again != root) -> s"root moved to $again",
         !marker.exists() -> "marker not restored",
-        (after != before) -> s"rows $after != $before")
+        (after != before) -> s"rows $after != $before",
+        !healed.contains(st.name) -> s"rebuild not recorded: $healed",
+        (ops.StoreGuard.builds.size != b1) -> "a found call recorded a build")
       why.collect { case (true, w) => s"${st.name}: $w" }
     }
     val broken = stores.flatMap { st =>
