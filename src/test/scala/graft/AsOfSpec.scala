@@ -5,18 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   // SessionTuning's artifact-isolation setting, so restarted streams
-  // reuse compiled code as they do under the harness session; not its
-  // AQE settings, which change the plans the plan audits walk
-  private val (isolationKey, isolationValue) = SessionTuning.artifactIsolation
+  // reuse compiled code as they do under the harness session, and its
+  // fork-free local filesystem, so checkpoints and stores are written as
+  // the harness writes them; not its AQE settings, which change the
+  // plans the plan audits walk
+  private val harness = SessionTuning.artifactIsolation +: SessionTuning.localFileSystem
 
-  lazy val spark: SparkSession = SparkSession
+  lazy val spark: SparkSession = harness.foldLeft(SparkSession
     .builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(isolationKey, isolationValue)
+    .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
     .getOrCreate()
 
   /** Runs `body` with `pairs` set on the session, then restores each
