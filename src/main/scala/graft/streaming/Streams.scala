@@ -17,6 +17,10 @@ import scala.util.Using
   */
 object Streams {
 
+  // eventsTsIsLong's answers, per (qualified path, mtime, length)
+  private val tsLayouts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Boolean]
+
   /** The driver's `events.parquet` has shipped with TWO physical `ts`
     * types across testdata generations: parquet TIMESTAMP(NANOS)
     * (readable only as LONG under the `nanosAsLong` flag) and plain µs
@@ -24,12 +28,19 @@ object Streams {
     * explicit schema, so every harness detects the layout from the file
     * footer ONCE (one cheap metadata read) and goes through the helpers
     * below — the engine absorbs this source-schema drift without a code
-    * change, the way a long-lived 100 TB pipeline must.
+    * change, the way a long-lived 100 TB pipeline must. The answer is
+    * memoized per file version (qualified path, mtime, length, as
+    * `StoreGuard` keys freshness), since the footer read is a Spark job.
     */
-  private def eventsTsIsLong(spark: SparkSession, dir: String): Boolean = {
+  private[graft] def eventsTsIsLong(spark: SparkSession, dir: String): Boolean = {
     graft.Tables.ensureNanosAsLong(spark)
-    graft.Tables.load(spark, dir, "events").schema("ts").dataType ==
-      org.apache.spark.sql.types.LongType
+    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    tsLayouts.computeIfAbsent(
+      (st.getPath.toString, st.getModificationTime, st.getLen),
+      _ => graft.Tables.load(spark, dir, "events").schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
   }
 
   private def eventsSchema(tsLong: Boolean) =
@@ -117,6 +128,19 @@ object Streams {
   /** The default sink dir of the run rooted at `root`. */
   private def outDir(root: Path): String = root.resolve("out").toString
 
+  /** The schema the default sink wrote, per live run root. */
+  private val sinkSchemas =
+    new java.util.concurrent.ConcurrentHashMap[Path, org.apache.spark.sql.types.StructType]
+
+  /** The default sink's output of the run rooted at `root`, read with
+    * the schema its batches were written with, so no inference job
+    * reads a footer. A run with a custom sink recorded none: inferred.
+    */
+  private[graft] def readOut(spark: SparkSession, root: Path): DataFrame = {
+    val r = spark.read
+    Option(sinkSchemas.get(root)).fold(r)(r.schema).parquet(outDir(root))
+  }
+
   /** THE streaming harness: stage a source, run the query to completion,
     * read its sink. `plan` gets a fresh root `target/graft_stream/<tag>_
     * <uuid>`, stages its sources under it (by convention `root/src`) and
@@ -168,6 +192,7 @@ object Streams {
           // each emitted batch is a small rollup/delta; one file per
           // batch beats shuffle.partitions near-empty files per batch
           batch.coalesce(1).write.mode(saveMode).parquet(outDir(root))
+          sinkSchemas.put(root, batch.schema): Unit
         }
         pinned {
           val q = r.query.writeStream
@@ -186,6 +211,7 @@ object Streams {
       result = Some(run.result())
       result.get
     } finally {
+      sinkSchemas.remove(root)
       val abs = root.toAbsolutePath.normalize
       val read = result.toSeq.flatMap(_.inputFiles)
         .map(f => Paths.get(new org.apache.hadoop.fs.Path(f).toUri.getPath))
@@ -337,7 +363,7 @@ object Streams {
       )
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
     runStream(spark, "hourly")(root => StreamRun(agg, OutputMode.Complete,
-      () => spark.read.parquet(outDir(root))
+      () => readOut(spark, root)
         .orderBy(col("hour_us"), col("event_type"))))
   }
 
@@ -400,7 +426,7 @@ object Streams {
       // emits every finalized real window under the batch-0 watermark
       StreamRun(agg, OutputMode.Append,
         steps = Seq(() => writeSentinel(far + 1000000000L)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter(col("event_type") =!= "__sentinel__")
           .orderBy(col("hour_us"), col("event_type")))
     }
@@ -461,7 +487,7 @@ object Streams {
         )
       StreamRun(agg, OutputMode.Append,
         steps = Seq(() => writeSentinel(-2L, far + 1000000000L)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter(col("event_type") =!= "__sentinel__")
           .orderBy(col("hour_us"), col("event_type")))
     }
@@ -499,7 +525,7 @@ object Streams {
         sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"),
       )
     runStream(spark, "enrich")(root => StreamRun(agg, OutputMode.Complete,
-      () => spark.read.parquet(outDir(root)).orderBy(col("n_name"))))
+      () => readOut(spark, root).orderBy(col("n_name"))))
   }
 
   /** Stream-static LEFT ANTI join under the driver's oracle gate (q165)
@@ -530,7 +556,7 @@ object Streams {
         sum(expr("CAST(ROUND(value * 100) AS LONG)")).as("value_cents"),
       )
     runStream(spark, "anti")(root => StreamRun(clean, OutputMode.Complete,
-      () => spark.read.parquet(outDir(root)).orderBy(col("event_type"))))
+      () => readOut(spark, root).orderBy(col("event_type"))))
   }
 
   /** Built-in session windows (dynamic-gap session_window aggregation):
@@ -628,7 +654,7 @@ object Streams {
       .withColumn("wts", timestamp_seconds(lit(1000000000L)))
     val survivors = dedupStream(docs).select(col("fp"))
     runStream(spark, "dedup")(root => StreamRun(survivors, OutputMode.Append,
-      () => spark.read.parquet(outDir(root))
+      () => readOut(spark, root)
         .groupBy(col("fp"))
         .agg(count(lit(1)).as("n_rows"))
         .orderBy(col("fp"))))
@@ -695,7 +721,7 @@ object Streams {
       // remove without replacing the built-in stream-stream join this
       // query exists to exercise.
       StreamRun(pairs, OutputMode.Append, () =>
-        spark.read.parquet(outDir(root))
+        readOut(spark, root)
           .groupBy(col("luser").as("user_id"))
           .agg(count(lit(1)).as("n_pairs"),
             countDistinct(col("revent")).as("n_purchases"))
@@ -732,7 +758,7 @@ object Streams {
           Seq((-1L, sentUs, -1L, "click"), (-2L, sentUs, -1L, "purchase"))
             .toDF("event_id", "ts_us", "user_id", "event_type")
             .coalesce(1).write.mode("append").parquet(src.toString)),
-        result = () => read(spark.read.parquet(outDir(root))))
+        result = () => read(readOut(spark, root)))
     }
 
   /** Keyed upsert of an update-mode delta into a snapshot: delete-and-
@@ -1130,7 +1156,7 @@ object Streams {
       val (clicks, buys) = attributionFeed(spark, dir, root.resolve("src"))
       StreamRun(intervalJoin(clicks, buys, joinType = "leftSemi"),
         OutputMode.Append, () =>
-          spark.read.parquet(outDir(root))
+          readOut(spark, root)
             .groupBy(col("luser").as("user_id"))
             .agg(count(lit(1)).as("n_matched"),
               countDistinct(col("levent")).as("n_distinct"))
@@ -1208,7 +1234,7 @@ object Streams {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
       StreamRun(updates.toDF(), OutputMode.Update, () =>
-        spark.read.parquet(outDir(root))
+        readOut(spark, root)
           .groupBy($"user_id", $"event_type")
           .agg(max($"n").as("n"))
           .orderBy($"user_id", $"event_type"))
@@ -1243,7 +1269,7 @@ object Streams {
         col("session_events"),
       )
     runStream(spark, "sessw")(root => StreamRun(sessions, OutputMode.Complete,
-      () => spark.read.parquet(outDir(root))
+      () => readOut(spark, root)
         .orderBy(col("user_id"), col("s_start_us"))))
   }
 
@@ -1366,7 +1392,7 @@ object Streams {
             SessStatRow(user, st.sessions, st.events, st.maxEvents))
       }
     runStream(spark, "sessions")(root => StreamRun(updates.toDF(),
-      OutputMode.Update, () => maxSessionStats(spark.read.parquet(outDir(root)))))
+      OutputMode.Update, () => maxSessionStats(readOut(spark, root))))
   }
 
   /** The q85/q112 read side: every emitted measure is monotone
@@ -1621,7 +1647,7 @@ object Streams {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
       StreamRun(updates.toDF(), OutputMode.Update,
-        () => maxSessionStats(spark.read.parquet(outDir(root))))
+        () => maxSessionStats(readOut(spark, root)))
     }
   }
 
@@ -1680,7 +1706,7 @@ object Streams {
         steps = Seq(() => Seq((-1L, hi + gapUs + delayUs + 2000000L))
           .toDF("user_id", "us")
           .coalesce(1).write.mode("append").parquet(src.toString)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter($"user_id" >= 0L) // sentinel key never emits; belt-and-braces
           .orderBy($"user_id", $"s_start_us"))
     }
@@ -1875,7 +1901,7 @@ object Streams {
           -1L, "none"))
           .toDF("user_id", "us", "event_id", "event_type")
           .coalesce(1).write.mode("append").parquet(src.toString)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter($"user_id" >= 0L)
           .select($"user_id", $"start_us", $"end_us",
             $"n_plus".as(plusAlias))
@@ -2017,7 +2043,7 @@ object Streams {
         steps = Seq(() => Seq(("__sentinel__", hi + 4800L * 1000000L, 0L))
           .toDF("event_type", "us", "cents")
           .coalesce(1).write.mode("append").parquet(src.toString)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter($"event_type" =!= "__sentinel__")
           .groupBy($"event_type")
           .agg(
@@ -2222,7 +2248,7 @@ object Streams {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
       StreamRun(updates.toDF(), OutputMode.Update, { () =>
-        val emitted = spark.read.parquet(outDir(root))
+        val emitted = readOut(spark, root)
         val last = emitted.agg(max($"ver")).as[Long].collect().head
         val docs = graft.Tables.documents(spark, dir)
           .select($"doc_id", $"lang",
@@ -2267,7 +2293,7 @@ object Streams {
             s"${math.pow(16, 8 - i).toLong}L")
         .mkString(" + ")
       StreamRun(updates.toDF(), OutputMode.Update, () =>
-        spark.read.parquet(outDir(root))
+        readOut(spark, root)
           .groupBy($"event_type")
           .agg(
             expr("max_by(n_sketch, ver)").as("n_sketch"),
@@ -2515,7 +2541,7 @@ object Streams {
           Seq(("__sentinel__", hi + 2L * 86400000000L, true, 0L))
             .toDF("event_type", "us", "arm_a", "cents")
             .coalesce(1).write.mode("append").parquet(src.toString)),
-        result = () => spark.read.parquet(outDir(root))
+        result = () => readOut(spark, root)
           .filter($"event_type" =!= "__sentinel__")
           // each (type, day) is emitted once; the aggregate is replay
           // armor only (identical values if a batch ever re-runs)
@@ -2730,7 +2756,7 @@ object Streams {
           .toDF("user_id", "us", "event_id", "event_type")
           .coalesce(1).write.mode("append").parquet(src.toString)),
         result = () =>
-          spark.read.parquet(outDir(root)).filter($"user_id" =!= -1L))
+          readOut(spark, root).filter($"user_id" =!= -1L))
     }
   }
 
@@ -2825,7 +2851,7 @@ object Streams {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
       StreamRun(updates.toDF(), OutputMode.Update, { () =>
-        val cands = spark.read.parquet(outDir(root))
+        val cands = readOut(spark, root)
           .groupBy($"bucket")
           .agg(expr("max_by(toks, ver)").as("toks"))
           .select(explode(split($"toks", "\u0001")).as("tok"))
@@ -2936,7 +2962,7 @@ object Streams {
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Update())
       StreamRun(updates.toDF(), OutputMode.Update, () =>
-        graft.ops.Eval.psiFromBinned(spark.read.parquet(outDir(root))
+        graft.ops.Eval.psiFromBinned(readOut(spark, root)
           .groupBy($"event_type", $"bin")
           .agg(
             expr("max_by(a, ver)").as("a"),
@@ -3262,7 +3288,7 @@ object Streams {
         // materialize the sink — fold-in of nothing is the empty table
         val emitted =
           if (Files.exists(Paths.get(outDir(root))))
-            spark.read.parquet(outDir(root))
+            readOut(spark, root)
           else spark.emptyDataset[FoldRow].toDF()
         emitted
           .withColumn("rnk", row_number().over(
@@ -3490,7 +3516,7 @@ object Streams {
       // snapshot = each user's LAST update; a user fully forgotten
       // (tombstoned with no later events) ends at zero and leaves
       StreamRun(updates.toDF(), OutputMode.Update, () =>
-        spark.read.parquet(outDir(root))
+        readOut(spark, root)
           .groupBy($"user_id")
           .agg(expr("max_by(n_events, ver)").as("n_events"),
             expr("max_by(sum_cents, ver)").as("sum_cents"))

@@ -5,11 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   // SessionTuning's artifact-isolation setting, so restarted streams
-  // reuse compiled code as they do under the harness session, and its
+  // reuse compiled code as they do under the harness session, its
   // fork-free local filesystem, so checkpoints and stores are written as
-  // the harness writes them; not its AQE settings, which change the
+  // the harness writes them, and its Hadoop conf trim, so tasks get the
+  // conf the harness ships; not its AQE settings, which change the
   // plans the plan audits walk
-  private val harness = SessionTuning.artifactIsolation +: SessionTuning.localFileSystem
+  private val harness = (SessionTuning.artifactIsolation +:
+    SessionTuning.localFileSystem) :+ SessionTuning.hadoopConfTrim
 
   lazy val spark: SparkSession = harness.foldLeft(SparkSession
     .builder()

@@ -62,4 +62,23 @@ class StoreKeySpec extends AnyFunSuite {
       graft.streaming.Streams.deleteStaged(dir)
     }
   }
+
+  test("the events layout probe runs one job per events file version") {
+    val dir = copyOfSmall()
+    val t = new tools.Trace(spark)
+    def jobs(tag: String): Int = {
+      t.tagged(tag)(graft.streaming.Streams.eventsTsIsLong(spark, dir.toString))
+      t.take(tag).jobs.size
+    }
+    try {
+      assert(jobs("first") == 1)
+      assert(jobs("again") == 0, "the layout probe ran again")
+      replace(dir, "events.parquet")
+      assert(jobs("replaced") == 1, "the probe served the old file's layout")
+      assert(jobs("replaced, again") == 0)
+    } finally {
+      t.close()
+      graft.streaming.Streams.deleteStaged(dir)
+    }
+  }
 }

@@ -98,4 +98,40 @@ class StreamHarnessSpec extends AnyFunSuite {
       }
     } finally Streams.deleteStaged(tmp)
   }
+
+  test("the default sink's output reads back with its written schema, no job") {
+    import spark.implicits._
+    val tagged = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("graft", "kept").build()
+    val t = new tools.Trace(spark)
+    var root: Path = null
+    var readJobs = -1
+    var inferred: org.apache.spark.sql.types.StructType = null
+    try {
+      val res = Streams.runStream(spark, "readout") { r =>
+        root = r
+        val src = r.resolve("src").toString
+        Seq((1L, 2.0), (1L, 3.0), (2L, 1.0)).toDF("k", "v").write.parquet(src)
+        Streams.StreamRun(
+          spark.readStream.schema("k LONG, v DOUBLE").parquet(src)
+            .groupBy($"k")
+            .agg(count(lit(1)).as("n"), sum($"v").as("s", tagged)),
+          OutputMode.Complete,
+          result = { () =>
+            val df = t.tagged("readOut")(Streams.readOut(spark, r))
+            readJobs = t.take("readOut").jobs.size
+            inferred = spark.read.parquet(r.resolve("out").toString).schema
+            df
+          })
+      }
+      assert(readJobs == 0, "reading the sink inferred its schema")
+      assert(res.schema == inferred)
+      assert(res.schema("s").metadata == tagged)
+      assert(res.as[(Long, Long, Double)].collect().toSet ==
+        Set((1L, 2L, 5.0), (2L, 1L, 1.0)))
+    } finally {
+      t.close()
+      if (root != null) Streams.deleteStaged(root)
+    }
+  }
 }
